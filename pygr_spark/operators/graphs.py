@@ -1,10 +1,18 @@
 """Graph layer: edge-DataFrame utilities (J4/J5/U6/U8), splice-graph
-construction (J11), and iterative analytics (PageRank, connected
-components) — the "GraphX for analytics" directive of BASELINE.json
-realized as DataFrame iterations (no GraphFrames dependency in this
-container; the algorithms are the standard Pregel-style message
-rounds expressed as join+groupBy, which is exactly what GraphX
-compiles to).
+construction (J11), and iterative analytics — the "GraphX for
+analytics" directive of BASELINE.json realized as DataFrame
+iterations (no GraphFrames dependency in this container; the
+algorithms are the standard Pregel-style message rounds expressed as
+join+groupBy, which is exactly what GraphX compiles to):
+
+  - ``pagerank_exact``: integer PageRank, optionally personalized;
+  - ``connected_components``: min-label propagation with pointer
+    jumping;
+  - ``relax_k``: one frontier-relaxation loop for every k-hop path
+    query — BFS levels (min-plus, unit weights), cheapest path
+    (min-plus) and longest chain (max-plus);
+  - ``kcore_peel`` / ``ktruss_peel``: bounded synchronized peels with
+    a driver-side finish for the small tail.
 
 Reference mapping:
   - graph[src][dst] = edge over dict/shelve/SQL (mapping.py:137-195,
@@ -69,53 +77,6 @@ def nodes_of(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_ranks: bool = False,
-) -> DataFrame:
-    """Power-iteration PageRank: rank_{t+1}(v) = (1-d) + d·Σ
-    rank_t(u)/out_deg(u) over in-edges. One edge scan + node-sized
-    exchange per round with ``broadcast_ranks`` (see pagerank_exact);
-    flip off for the co-partitioned shuffle form when the node table
-    outgrows the driver. Sparse lineage cuts."""
-    e = edges.select(src, dst).distinct()
-    out_deg = e.groupBy(src).agg(F.count(F.lit(1)).alias("_deg"))
-    # edges feed every iteration: materialize once instead of
-    # replaying scan+distinct per round
-    e = e.join(out_deg, src).localCheckpoint(eager=False)
-    nodes = nodes_of(e, src, dst)
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    # zero rows unioned into the aggregate replace the nodes LEFT
-    # JOIN — one less exchange per round (see pagerank_exact)
-    zero_rows = nodes.select("node", F.lit(0.0).alias("_c"))
-    for i in range(n_iter):
-        # broadcast the node-sized rank vector: the edge table is
-        # never shuffled — per round one edge scan + partial agg
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contribs = (
-            e.join(rank_side, e[src] == rank_side["node"])
-            .select(F.col(dst).alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .unionByName(zero_rows)
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_sum"))
-        )
-        ranks = contribs.select(
-            "node",
-            (F.lit(1 - damping) + damping * F.col("_sum")).alias("rank"),
-        )
-        # sparse lineage cuts: a checkpoint materialization splits the
-        # run into extra jobs, pure overhead at small n_iter — a
-        # 16-join plan is still cheap for Catalyst (measured -25% at
-        # sf0.1 for the 6-round entry)
-        if (i + 1) % 8 == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
-
-
 def pagerank_exact(
     edges: DataFrame,
     n_iter: int = 6,
@@ -124,8 +85,6 @@ def pagerank_exact(
     scale: int = 10**12,
     src: str = "src",
     dst: str = "dst",
-    seeds: DataFrame | None = None,
-    broadcast_ranks: bool = False,
     seed_expr: str | None = None,
 ) -> DataFrame:
     """PageRank in exact scaled-integer arithmetic: ranks are bigints
@@ -133,80 +92,51 @@ def pagerank_exact(
     division (``rank DIV deg``), and the damping mix is
     ``((den-num)*scale) DIV den + (num·Σcontrib) DIV den``. Every
     operation is order-independent integer math, so the result is
-    bit-identical on any engine — this is the oracle-checkable form of
-    :func:`pagerank` (same shuffle structure: one join+groupBy per
-    round, sparse lineage cuts).
+    bit-identical on any engine and checkable against a SQL unroll:
+    rank_{t+1}(v) = (1-d) + d·Σ rank_t(u)/out_deg(u) over in-edges,
+    one join + groupBy per round, sparse lineage cuts.
 
     Bounds: total rank mass ≤ n·scale; with n ≤ 2000 and scale=1e12
     the ``num·Σ`` intermediate stays < 2e17, inside int64.
 
-    ``seeds``: optional DataFrame with a ``node`` column —
+    ``seed_expr``: optional SQL boolean expression over ``node`` —
     personalized PageRank: the teleport mass (the base term) and the
-    initial rank go ONLY to seed nodes, so rank measures proximity
-    to the seed set rather than global centrality.
-
-    ``seed_expr`` (r12, guide §2.4): when seed membership is a pure
-    function of the node id (ppr_seeds: ``node % 37 = 0``), pass it
-    as a SQL boolean expression instead of a ``seeds`` frame — the
-    flag becomes a projection on the node table, skipping the
-    caller's extra edge scan + distinct + the membership join
-    (identical _is_seed column by construction). Mutually exclusive
-    with ``seeds``.
-
-    ``broadcast_ranks`` (default False): broadcast the node-sized
-    rank vector into each iteration's edge join instead of shuffling
-    the edge table. Measured at 16x this LOSES on local[32] — each
-    broadcast build is a serialized driver job, chained through the
-    iteration lineage (15.9s first run vs 4.9s for the shuffle form,
-    which AQE already plans well) — but it is the right shape when
-    the edge table is too large to re-exchange per round on a real
-    cluster and the node table still fits a broadcast.
+    initial rank go ONLY to nodes where it holds, so rank measures
+    proximity to the seed set rather than global centrality. The
+    seed flag is a projection on the node table (ppr_seeds:
+    ``node % 37 = 0``), not a membership join.
     """
     base = ((damping_den - damping_num) * scale) // damping_den
     e = edges.select(src, dst).distinct()
     out_deg = e.groupBy(src).agg(F.count(F.lit(1)).alias("_deg"))
     e = e.join(out_deg, src).localCheckpoint(eager=False)
     nodes = nodes_of(e, src, dst)
-    if seed_expr is not None:
-        assert seeds is None, "pass seeds OR seed_expr, not both"
-        nodes = nodes.select(
-            "node", F.expr(seed_expr).cast("int").alias("_is_seed")
-        )
-        seeds = nodes  # non-None: selects the seeded arithmetic below
-    elif seeds is not None:
-        # personalized PageRank: teleport mass (the base term) and the
-        # initial rank go ONLY to seed nodes — the standard seeded
-        # relevance-propagation variant, same integer arithmetic
-        nodes = nodes.join(
-            seeds.select("node").distinct().withColumn("_is_seed", F.lit(1)),
-            "node",
-            "left",
-        ).select("node", F.coalesce("_is_seed", F.lit(0)).alias("_is_seed"))
-    if seeds is not None:
-        ranks = nodes.select(
-            "node", (F.col("_is_seed") * scale).cast("long").alias("rank")
-        )
-    else:
-        ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
+    seeded = seed_expr is not None
     # per-iteration zero rows for every node: unioned INTO the
     # contribution aggregate (below) instead of a nodes LEFT JOIN
     # after it — same semantics (a node with no in-edges sums to 0,
     # exactly what coalesce(_sum, 0) produced), one less exchange +
     # join stage per round (r11 job-floor cut: the 6-round entries
     # ran ~3 exchanges/round; this removes the node-sized one)
-    if seeds is not None:
+    if seeded:
+        nodes = nodes.select(
+            "node", F.expr(seed_expr).cast("int").alias("_is_seed")
+        )
+        ranks = nodes.select(
+            "node", (F.col("_is_seed") * scale).cast("long").alias("rank")
+        )
         zero_rows = nodes.select(
             "node", "_is_seed", F.lit(0).cast("long").alias("_c")
         )
     else:
+        ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
         zero_rows = nodes.select("node", F.lit(0).cast("long").alias("_c"))
     for i in range(n_iter):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        edge_c = e.join(rank_side, e[src] == rank_side["node"]).select(
+        edge_c = e.join(ranks, e[src] == ranks["node"]).select(
             F.col(dst).alias("node"),
             F.expr("rank DIV _deg").alias("_c"),
         )
-        if seeds is not None:
+        if seeded:
             # _is_seed rides the zero rows only (one exact row per
             # node); max() recovers it after the union — edge rows
             # carry NULL there and never override
@@ -385,173 +315,113 @@ def splice_graph(
     }
 
 
-def bfs_levels(
+def relax_k(
     edges: DataFrame,
-    sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_depth: int = 20,
-) -> DataFrame:
-    """BFS shortest-hop levels from a source node set — the graph
-    traversal the reference walks per-object through dict lookups
-    (mapping.py:688-750 ``g[src]`` chains), done level-synchronously:
-    each round joins the frontier against the edge table and anti-
-    joins already-visited nodes. Converges in O(diameter) rounds with
-    early stop on an empty frontier.
-
-    Returns (node, level) with the minimal hop count <= max_depth.
-
-    Scale shape: per round one equi-join on the frontier (broadcast
-    while small) + one anti-join on the visited set; lineage is cut
-    every round (localCheckpoint) so plans stay flat — the same
-    iterative-DataFrame discipline as pagerank/connected_components.
-    """
-    visited = sources.select(
-        F.col(sources.columns[0]).cast("long").alias("node")
-    ).distinct().withColumn("level", F.lit(0).cast("long"))
-    visited = visited.localCheckpoint()
-    frontier = visited
-    # the distinct edge table is re-joined every level: cut its
-    # lineage once instead of re-running the edge build per round
-    e = edges.select(
-        F.col(src).cast("long").alias("_s"), F.col(dst).cast("long").alias("_d")
-    ).distinct().localCheckpoint(eager=False)
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier.node == e._s)
-            .select(F.col("_d").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("level", F.lit(depth).cast("long"))
-        )
-        nxt = nxt.localCheckpoint()
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
-
-
-def bellman_ford_k(
-    edges: DataFrame,
-    sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    k: int = 6,
+    init: DataFrame,
+    k: int,
+    better: str = "min",
     broadcast_frontier: bool | None = None,
 ) -> DataFrame:
-    """Cheapest path cost within <= ``k`` hops from a source set —
-    level-synchronous Bellman-Ford (the weighted sibling of
-    ``bfs_levels``; the reference walks weighted edge dicts
-    per-object, mapping.py:688-750).
+    """Best path value per node within <= ``k`` hops: level-synchronous
+    relaxation over the (min,+) or (max,+) semiring — the frontier walk
+    the reference does per-object through weighted edge dicts
+    (mapping.py:688-750 ``g[src]`` chains).
 
-    Each round relaxes every edge once: frontier ⋈ edges, then a
-    min-aggregate per node merged with the standing distances. Only
-    nodes that IMPROVED stay on the frontier, so rounds shrink as the
-    graph converges; k bounds the rounds for the oracle (a recursive
-    CTE with a depth bound), not the algorithm. Integer weights keep
-    the gate exact.
+    ``edges(src, dst, w)`` and ``init(node, value)`` in, ``(node,
+    value)`` out. Each round relaxes every frontier edge once (a
+    candidate ``value(src) + w`` per dst) and keeps the ``better`` of
+    candidate and standing value: "min" is cheapest path, or BFS level
+    with unit weights; "max" is longest chain, only safe on a DAG or
+    with a bound k. Only IMPROVED nodes stay on the frontier; k bounds
+    the rounds for the oracle (a depth-bounded recursive CTE). Integer
+    weights keep the gate exact.
 
-    Scale shape (r11, the pagerank union-agg discipline): per round
-    the node-sized frontier BROADCASTS into the edge scan (edges are
-    never shuffled), and the standing distances ride the SAME
-    union-aggregate as the relax candidates — ONE exchange per round
-    (map-side partial agg) where the previous frontier⋈edges shuffle
-    + groupBy + full_outer merge ran four (r11 job audit:
-    transcript_chain 44 → 22 jobs / 4.5 → 4.1s, cheapest_path
-    26 → 18 / 2.4 → 1.9s at sf0.1).
+    Scale shape (r11, the pagerank union-agg discipline): the
+    node-sized frontier BROADCASTS into the edge scan (edges are never
+    shuffled) and the standing values ride the SAME union-aggregate as
+    the candidates — ONE exchange per round where frontier⋈edges +
+    groupBy + full_outer merge ran four (r11 job audit:
+    transcript_chain 44 → 22 jobs, cheapest_path 26 → 18 at sf0.1).
 
-    ``broadcast_frontier=None`` (default, r12 judge item 4) picks the
-    side from a measured bound instead of a comment: the exact
-    materialized byte size of the checkpointed frontier
-    (tuning.materialized_bytes — a driver-side block-registry lookup,
-    no job) against the conf'd ``spark.pygr.broadcastSide.maxBytes``
-    (default 256 MB, guide §3.1's safe-broadcast band). The bound is
-    re-read at every probe round (the frontier grows toward the
-    node-table size as the wave spreads), and once it crosses the
-    threshold the loop flips PERMANENTLY to the keyed-join form —
-    same semantics, the union-agg stays, the frontier is exchanged
-    instead of shipped whole to every executor. Explicit True/False
-    still force one form (tests, known-shape callers).
+    ``broadcast_frontier=None`` (default) picks the side from a
+    measured bound: the exact materialized bytes of the checkpointed
+    frontier (tuning.materialized_bytes — a driver-side block lookup,
+    no job) against ``spark.pygr.broadcastSide.maxBytes`` (default
+    256 MB). ``init`` is checkpointed eagerly so its size is known
+    before round 0 ships it; the bound is re-read at every probe round,
+    and once crossed the loop flips PERMANENTLY to the keyed join (same
+    semantics, the frontier is exchanged instead of shipped to every
+    executor). True/False force one form.
     """
     from pygr_spark.tuning import broadcast_bytes_threshold, materialized_bytes
 
+    if better == "min":
+        agg, pick, worst = F.min, F.least, F.lit(2**62)
+        gains = F.col("_cand") < F.col("_old")
+    elif better == "max":
+        agg, pick, worst = F.max, F.greatest, F.lit(-(2**62))
+        gains = F.col("_cand") > F.col("_old")
+    else:
+        raise ValueError(f"better must be 'min' or 'max', not {better!r}")
     auto = broadcast_frontier is None
     use_broadcast = True if auto else broadcast_frontier
-    dist = (
-        sources.select(F.col(sources.columns[0]).cast("long").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint()
-    )
+    dist = init.select(
+        F.col("node").cast("long").alias("node"),
+        F.col("value").cast("long").alias("value"),
+    ).localCheckpoint()
     if auto:
-        limit = broadcast_bytes_threshold(sources.sparkSession)
+        limit = broadcast_bytes_threshold(init.sparkSession)
         b0 = materialized_bytes(dist)
         if b0 is not None and b0 > limit:
             use_broadcast = False
     # edge list is consumed once per round: cut its lineage so the
     # caller's edge-build plan runs once, not once per round
     e = edges.select(
-        F.col(src).cast("long").alias("_s"),
-        F.col(dst).cast("long").alias("_d"),
-        F.col(weight).cast("long").alias("_w"),
+        F.col("src").cast("long").alias("_s"),
+        F.col("dst").cast("long").alias("_d"),
+        F.col("w").cast("long").alias("_w"),
     ).localCheckpoint(eager=False)
     frontier = dist
     for r in range(k):
-        # relax candidates: broadcast the node-sized frontier into the
-        # edge scan — edges stay un-shuffled (leg 1); the standing
-        # distances ride the same aggregate (leg 0), replacing the
-        # separate groupBy + full_outer merge with ONE map-side-
-        # combinable exchange.
+        # relax candidates (leg 1) and standing values (leg 0) meet
+        # in ONE map-side-combinable exchange
         f_side = F.broadcast(frontier) if use_broadcast else frontier
         cand_rows = (
             e.join(f_side, e._s == frontier.node)
             .select(
                 F.col("_d").alias("node"),
-                (F.col("dist") + F.col("_w")).alias("_v"),
+                (F.col("value") + F.col("_w")).alias("_v"),
                 F.lit(1).alias("_leg"),
             )
         )
         merged = (
-            dist.select("node", F.col("dist").alias("_v"), F.lit(0).alias("_leg"))
+            dist.select("node", F.col("value").alias("_v"), F.lit(0).alias("_leg"))
             .unionByName(cand_rows)
             .groupBy("node")
             .agg(
-                F.min(F.when(F.col("_leg") == 0, F.col("_v"))).alias("_old"),
-                F.min(F.when(F.col("_leg") == 1, F.col("_v"))).alias("_cand"),
+                agg(F.when(F.col("_leg") == 0, F.col("_v"))).alias("_old"),
+                agg(F.when(F.col("_leg") == 1, F.col("_v"))).alias("_cand"),
             )
             .select(
                 "node",
-                F.least(
-                    F.coalesce(F.col("_old"), F.lit(2**62)),
-                    F.coalesce(F.col("_cand"), F.lit(2**62)),
-                ).alias("dist"),
-                (
-                    F.col("_old").isNull()
-                    | (F.col("_cand") < F.col("_old"))
-                ).alias("_improved"),
+                pick(
+                    F.coalesce(F.col("_old"), worst),
+                    F.coalesce(F.col("_cand"), worst),
+                ).alias("value"),
+                (F.col("_old").isNull() | gains).alias("_improved"),
             )
         )
-        # Probe every OTHER round (kcore discipline) ON THE BROADCAST
-        # PATH: on probe rounds the any-improved FULL-scan aggregate
-        # materializes the lazy checkpoint; on non-probe rounds the
-        # NEXT round's broadcast build of `frontier` is itself a full
-        # scan of merged and does the materializing — either way
+        # Probe every OTHER round on the BROADCAST path: a probe's
+        # full-scan aggregate materializes the lazy checkpoint, and on
+        # the other rounds the next round's broadcast build does —
         # exactly one action lands the blocks before the dist leg
-        # reuses them. On the KEYED path no broadcast build exists to
-        # do that, so the probe fires EVERY round (r11 advice: the
-        # alternation invariant only holds when the frontier is
-        # broadcast) — keyed rounds are network-scale work anyway,
-        # one probe action per round is noise there. The skipped
-        # probe only delays early exit past a no-op round (relaxing a
-        # converged graph changes nothing), so the result is
-        # IDENTICAL to the per-round-probe unroll. (The r10 shape —
-        # eager checkpoint + isEmpty every round — paid 2 actions per
-        # round for the same scan.)
+        # reuses them. The KEYED path has no broadcast build, so it
+        # probes EVERY round. A skipped probe only delays early exit
+        # past a no-op round (relaxing a converged graph changes
+        # nothing), so the result equals the per-round-probe unroll.
         merged = merged.localCheckpoint(eager=False)
-        frontier = merged.filter(F.col("_improved")).select("node", "dist")
-        dist = merged.select("node", "dist")
+        frontier = merged.filter(F.col("_improved")).select("node", "value")
+        dist = merged.select("node", "value")
         if (not use_broadcast) or r % 2 == 1 or r == k - 1:
             any_improved = merged.agg(
                 F.max(F.col("_improved").cast("int")).alias("i")
@@ -562,105 +432,6 @@ def bellman_ford_k(
                 # the probe just materialized merged: its exact bytes
                 # are now registered — flip to the keyed form the
                 # moment the frontier outgrows the safe-broadcast band
-                bm = materialized_bytes(merged)
-                if bm is not None and bm > limit:
-                    use_broadcast = False
-    return dist
-
-
-def max_chain_k(
-    edges: DataFrame,
-    node_weights: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    node: str = "node",
-    node_w: str = "w",
-    k: int = 6,
-    broadcast_frontier: bool | None = None,
-) -> DataFrame:
-    """Max-weight chain score per node within <= ``k`` edges — the
-    max-plus sibling of ``bellman_ford_k`` (longest path, only safe
-    because callers hand in a DAG or bound k; this is pygr's
-    transcript-chaining shape, the best exon chain ending at each exon
-    — reference sqlgraph.py splice walks done per-object).
-
-    ``node_weights`` seeds every node with its own weight (a chain of
-    one); each round extends the best known chains across ``edges``
-    (whose ``weight`` is the DST node's weight), keeping per-node max.
-    Only improved nodes re-propagate. Same r11 scale shape as
-    ``bellman_ford_k``: broadcast frontier into the edge scan, ONE
-    union-aggregate exchange per round, lineage cut per round.
-    ``broadcast_frontier=None`` (default) auto-flips to the
-    keyed-join form when the materialized frontier outgrows the
-    conf'd safe-broadcast byte bound — same mechanism and rationale
-    as ``bellman_ford_k`` (the bound is checked at probe rounds,
-    where the checkpoint blocks are freshly registered).
-    """
-    from pygr_spark.tuning import broadcast_bytes_threshold, materialized_bytes
-
-    auto = broadcast_frontier is None
-    use_broadcast = True if auto else broadcast_frontier
-    if auto:
-        limit = broadcast_bytes_threshold(node_weights.sparkSession)
-    dist = node_weights.select(
-        F.col(node).cast("long").alias("node"),
-        F.col(node_w).cast("long").alias("score"),
-    ).localCheckpoint(eager=False)
-    # edge list is consumed once per round: cut its lineage so the
-    # caller's edge-build plan (often an explode + join) runs once,
-    # not once per relaxation round
-    e = edges.select(
-        F.col(src).cast("long").alias("_s"),
-        F.col(dst).cast("long").alias("_d"),
-        F.col(weight).cast("long").alias("_w"),
-    ).localCheckpoint(eager=False)
-    frontier = dist
-    for r in range(k):
-        f_side = F.broadcast(frontier) if use_broadcast else frontier
-        cand_rows = (
-            e.join(f_side, e._s == frontier.node)
-            .select(
-                F.col("_d").alias("node"),
-                (F.col("score") + F.col("_w")).alias("_v"),
-                F.lit(1).alias("_leg"),
-            )
-        )
-        merged = (
-            dist.select(
-                "node", F.col("score").alias("_v"), F.lit(0).alias("_leg")
-            )
-            .unionByName(cand_rows)
-            .groupBy("node")
-            .agg(
-                F.max(F.when(F.col("_leg") == 0, F.col("_v"))).alias("_old"),
-                F.max(F.when(F.col("_leg") == 1, F.col("_v"))).alias("_cand"),
-            )
-            .select(
-                "node",
-                F.greatest(
-                    F.coalesce(F.col("_old"), F.lit(-(2**62))),
-                    F.coalesce(F.col("_cand"), F.lit(-(2**62))),
-                ).alias("score"),
-                (
-                    F.col("_old").isNull()
-                    | (F.col("_cand") > F.col("_old"))
-                ).alias("_improved"),
-            )
-        )
-        # Probe every OTHER round on the broadcast path, every round
-        # on the keyed path — same alternation + materialization +
-        # auto-flip argument as bellman_ford_k above.
-        merged = merged.localCheckpoint(eager=False)
-        frontier = merged.filter(F.col("_improved")).select("node", "score")
-        dist = merged.select("node", "score")
-        if (not use_broadcast) or r % 2 == 1 or r == k - 1:
-            any_improved = merged.agg(
-                F.max(F.col("_improved").cast("int")).alias("i")
-            ).first()[0]
-            if not any_improved:
-                break
-            if auto and use_broadcast:
                 bm = materialized_bytes(merged)
                 if bm is not None and bm > limit:
                     use_broadcast = False
@@ -782,104 +553,6 @@ def kcore_peel(
     return e
 
 
-def kcore_degrees(
-    pairs: DataFrame,
-    k: int = 2,
-    max_rounds: int = 8,
-    src: str = "u",
-    dst: str = "v",
-) -> DataFrame:
-    """In-core degrees after a bounded k-core peel, by INCREMENTAL
-    DEGREE MAINTENANCE (r12, judge item: subtract removed endpoints)
-    over an UNDIRECTED u<v pair list. Returns (node, core_degree) for
-    every surviving node with >= 1 surviving edge — exactly
-    ``kcore_peel(both_directions).groupBy(u).count()`` for the same
-    ``k``/``max_rounds`` budget (tests/test_peel_knobs.py pins the
-    equivalence, including pre-fixpoint budgets), derived as follows:
-    peeling only REMOVES nodes, so the edge set after round r is the
-    original edges restricted to the round-r alive set, and the
-    degree of an alive node needs only the original degree minus its
-    edges into each round's newly-removed set.
-
-    Scale shape (guide §2.4/§5): the loop's state is the NODE-sized
-    degree table (lazy-checkpointed per round), never the edge set —
-    kcore_peel rematerialized the shrinking edge list every round
-    (the dominant per-round bytes). The directed both-ways edge list
-    is checkpointed ONCE; each round is ONE broadcast of the newly
-    removed node set into that scan (an edge n→m decrements n iff m
-    was removed this round; a both-removed edge's decrement rows are
-    dropped because n has no base row) and ONE node-sized
-    union-aggregate that applies the decrements to the surviving
-    degrees (the pagerank r11 zero-rows discipline: no dec broadcast,
-    no left join — base rows and −1 rows meet in one map-side
-    combinable exchange). The early-exit probe fires every OTHER
-    round (kcore_peel's alternation: the off round's broadcast build
-    materializes the lazy degree checkpoint; a post-fixpoint round
-    removes nothing, so the late exit computes identical state)."""
-    e0 = (
-        pairs.select(F.col(src).alias("n"), F.col(dst).alias("m"))
-        .union(pairs.select(F.col(dst).alias("n"), F.col(src).alias("m")))
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e0.groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .localCheckpoint(eager=False)
-    )
-    for r in range(max_rounds):
-        removed = deg.filter(F.col("d") < k).select("n")
-        if r % 2 == 1 or r == max_rounds - 1:
-            # full count (not limit-1): the probe doubles as the
-            # action that materializes this round's lazy degree
-            # checkpoint in one pass
-            if removed.count() == 0:
-                break
-        hits = e0.join(
-            F.broadcast(removed.select(F.col("n").alias("m"))), "m"
-        ).select(
-            "n",
-            F.lit(-1).cast("long").alias("d"),
-            F.lit(0).alias("_b"),
-        )
-        if r % 2 == 1:
-            # SHRINK the edge state at probe rounds (after this
-            # round's hits are taken from the pre-shrink blocks): on
-            # fast-collapsing graphs (this catalog's co-purchase
-            # graph loses most nodes in round 1) the constant-size
-            # e0 rescan dominates — dropping edges whose endpoint
-            # was removed bounds later rounds by the surviving set,
-            # at half the materializations of the kcore_peel form.
-            # Edges into PREVIOUSLY removed nodes contribute nothing
-            # either way (their m cannot re-enter `removed`; their
-            # n-side decrements are dropped for lack of a base row),
-            # so delayed shrinking never changes a decrement.
-            e0 = (
-                e0.join(F.broadcast(removed), "n", "left_anti")
-                .join(
-                    F.broadcast(removed.select(F.col("n").alias("m"))),
-                    "m",
-                    "left_anti",
-                )
-                .localCheckpoint(eager=False)
-            )
-        deg = (
-            deg.filter(F.col("d") >= k)
-            .select("n", "d", F.lit(1).alias("_b"))
-            .unionByName(hits)
-            .groupBy("n")
-            .agg(
-                F.sum("d").cast("long").alias("d"),
-                F.max("_b").alias("_b"),
-            )
-            .filter(F.col("_b") == 1)
-            .select("n", "d")
-            .localCheckpoint(eager=False)
-        )
-    return deg.filter(F.col("d") > 0).select(
-        F.col("n").alias("node"), F.col("d").alias("core_degree")
-    )
-
-
 def _truss_support(edges: DataFrame) -> DataFrame:
     """Per-edge triangle support on a u<v oriented edge set: wedge
     (a,b)+(b,c) joined against the closing edge (a,c), each triangle
@@ -924,10 +597,10 @@ def ktruss_peel(
     dst: str = "v",
     driver_finish_max_rows: int | None = None,
 ) -> DataFrame:
-    """Bounded synchronized k-truss peel on a u<v ORIENTED edge list:
-    an edge survives iff it participates in >= k-2 triangles among
-    surviving edges. Returns the surviving oriented edges WITH their
-    in-truss support column.
+    """Bounded synchronized k-truss peel on a u<v ORIENTED edge list
+    (duplicate rows count once): an edge survives iff it participates
+    in >= k-2 triangles among surviving edges. Returns the surviving
+    oriented edges WITH their in-truss support column.
 
     Same round-budget contract as :func:`kcore_peel`: at most
     ``max_rounds`` rounds, early exit at fixpoint, pre-fixpoint
@@ -968,9 +641,14 @@ def ktruss_peel(
         driver_finish_max_rows = int(
             spark.conf.get("spark.pygr.truss.driverFinishMaxRows", "50000")
         )
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=False)
+    # duplicate rows would each count toward support on the
+    # distributed path while the driver finish sees a set: dedupe once
+    # so both paths peel the same edge set
+    e = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
     n_edges = e.count()
     for r in range(max_rounds):
         if 0 < n_edges <= driver_finish_max_rows:

@@ -167,10 +167,14 @@ def pava_isotonic(
     collect. Same IEEE double division, min and max over the same
     set of values, so the result is bit-identical to the join form
     (and to the oracle's SQL mirror); above the bound the join form
-    still runs. Collection happens at CALL time (the kmeans-centroid
-    build-time-execution convention)."""
+    still runs; 0 disables the driver path, as the peel knobs do.
+    Collection happens at CALL time (the kmeans-centroid
+    build-time-execution convention).
+
+    A bin range with zero total cnt has no mean: its average is NULL
+    (``try_divide``) and drops out of the min/max on both paths."""
     collected = None
-    if driver_max_rows >= 0:
+    if driver_max_rows > 0:
         # one action: take(bound+1) — the extra row is only the
         # over-bound signal, so the small-summary contract costs a
         # single job, not a count + a collect
@@ -202,10 +206,13 @@ def pava_isotonic(
             for j in range(i + 1):
                 mn = None
                 for k in range(i, n):
-                    avg = float(tp[k] - tp0[j]) / float(cp[k] - cp0[j])
+                    den = cp[k] - cp0[j]
+                    if den == 0:
+                        continue
+                    avg = float(tp[k] - tp0[j]) / float(den)
                     if mn is None or avg < mn:
                         mn = avg
-                if best is None or mn > best:
+                if mn is not None and (best is None or mn > best):
                     best = mn
             out.append((rows[i][0], rows[i][1], best))
         schema = StructType(
@@ -237,9 +244,9 @@ def pava_isotonic(
     pairs = lo.join(hi, F.col("j") <= F.col("k")).select(
         "j",
         "k",
-        (
-            (F.col("tpk") - F.col("tp0")).cast("double")
-            / (F.col("cpk") - F.col("cp0")).cast("double")
+        F.try_divide(
+            (F.col("tpk") - F.col("tp0")).cast("double"),
+            (F.col("cpk") - F.col("cp0")).cast("double"),
         ).alias("avg"),
     )
     i_bins = pre.select(F.col("bin").alias("i"), "cnt")

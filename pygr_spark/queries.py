@@ -2323,7 +2323,7 @@ def _pagerank_oracle_sql(
     per iteration, truncating integer division throughout (positive
     operands, so DuckDB's floor-div == Spark's DIV). With ``seeded``,
     the teleport term and r0 apply only to node % 37 == 0 (mirrors
-    pagerank_exact(seeds=...)) and zero-rank rows are dropped —
+    pagerank_exact(seed_expr=...)) and zero-rank rows are dropped —
     ONE generator serves both entries so the arithmetic can never
     drift between them."""
     base = ((den - num) * scale) // den
@@ -4738,12 +4738,13 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_viewed,
 
 def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Level-synchronous BFS from a seed set over the orders-derived
-    graph: minimal hop count per reachable node, one frontier join +
-    visited anti-join per round with early stop — the engine's answer
-    to the reference's per-object ``g[src]`` traversal chains
+    graph: minimal hop count (<= 8) per reachable node, run as min-plus
+    relaxation with unit weights (graphs.relax_k) — one frontier
+    union-aggregate per round with early stop, the engine's answer to
+    the reference's per-object ``g[src]`` traversal chains
     (mapping.py:688-750). Oracle is DuckDB's recursive CTE (UNION
     dedup bounds the state at nodes × depth)."""
-    from pygr_spark.operators.graphs import bfs_levels
+    from pygr_spark.operators.graphs import relax_k
 
     orders = _t(spark, sf_dir, "orders")
     edges = (
@@ -4755,10 +4756,15 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    sources = edges.filter(F.col("src") % 211 == 0).select("src").distinct()
-    return bfs_levels(edges, sources, max_depth=8).select(
+    sources = (
+        edges.filter(F.col("src") % 211 == 0)
+        .select(F.col("src").alias("node"), F.lit(0).alias("value"))
+        .distinct()
+    )
+    out = relax_k(edges.withColumn("w", F.lit(1)), sources, k=8)
+    return out.select(
         F.col("node").cast("long").alias("node"),
-        F.col("level").cast("long").alias("level"),
+        F.col("value").cast("long").alias("level"),
     )
 
 
@@ -6078,12 +6084,12 @@ WHERE a.w = 'slow' AND b.w = 'hash' AND c.w = 'batch'
 
 def q_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cheapest weighted path cost within <= 6 hops over the
-    orders-derived graph (operators/graphs.py bellman_ford_k) —
-    level-synchronous Bellman-Ford where each round is one keyed join
-    + one keyed min-aggregate and only improved nodes re-propagate.
+    orders-derived graph — level-synchronous Bellman-Ford as min-plus
+    relaxation (graphs.relax_k): each round is one frontier join +
+    one min union-aggregate and only improved nodes re-propagate.
     Oracle is DuckDB's depth-bounded recursive CTE (UNION dedups the
     (node, dist, depth) state space)."""
-    from pygr_spark.operators.graphs import bellman_ford_k
+    from pygr_spark.operators.graphs import relax_k
 
     orders = _t(spark, sf_dir, "orders")
     raw = orders.select(
@@ -6096,11 +6102,15 @@ def q_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("w").alias("w"))
         .localCheckpoint(eager=False)
     )
-    sources = edges.filter(F.col("src") % 211 == 0).select("src").distinct()
-    out = bellman_ford_k(edges, sources, k=6)
+    sources = (
+        edges.filter(F.col("src") % 211 == 0)
+        .select(F.col("src").alias("node"), F.lit(0).alias("value"))
+        .distinct()
+    )
+    out = relax_k(edges, sources, k=6)
     return out.select(
         F.col("node").cast("long").alias("node"),
-        F.col("dist").cast("long").alias("dist"),
+        F.col("value").cast("long").alias("dist"),
     )
 
 
@@ -6429,14 +6439,15 @@ FROM sized WHERE rn = 1
 
 
 def q_transcript_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best exon chain ending at each exon (graphs.max_chain_k — the
-    max-plus sibling of Bellman-Ford; pygr walks splice successors
-    per-object, sqlgraph.py). The chain graph is a DAG by
+    """Best exon chain ending at each exon: max-plus relaxation
+    (graphs.relax_k, better="max") seeded with each exon's own weight,
+    edges weighted by the dst exon; pygr walks splice successors
+    per-object, sqlgraph.py. The chain graph is a DAG by
     construction (edges only run forward in genomic time), built as an
     EQUI-join: each exon's end day exploded over the 0..2-day
     tolerance, joined on (cluster, day) — never a per-cluster
     quadratic theta join."""
-    from pygr_spark.operators.graphs import max_chain_k
+    from pygr_spark.operators.graphs import relax_k
 
     orders = _t(spark, sf_dir, "orders")
     day = F.datediff(
@@ -6463,11 +6474,13 @@ def q_transcript_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = a.join(b, ["cluster_id", "day"]).filter(
         F.col("src") != F.col("dst")
     ).select("src", "dst", "w")
-    nodes = exons.select(F.col("exon_id").alias("node"), "w")
-    out = max_chain_k(edges, nodes, k=6)
+    nodes = exons.select(
+        F.col("exon_id").alias("node"), F.col("w").alias("value")
+    )
+    out = relax_k(edges, nodes, k=6, better="max")
     return out.select(
         F.col("node").cast("long").alias("node"),
-        F.col("score").cast("long").alias("score"),
+        F.col("value").cast("long").alias("score"),
     )
 
 
@@ -12664,13 +12677,11 @@ def q_kcore_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes with their in-core degree. Scale shape: each round is one
     semi-join + partial-agg degree count on the shrinking edge set —
     the Spark loop localCheckpoints every other round to cut lineage.
-    (r12 negative result, measurements in OPTIMIZATION_r12: the
-    judge-suggested incremental-degree form — graphs.kcore_degrees,
-    node-sized state, 41→23 jobs, parity-tested — measured ×1.1–1.5
-    SLOWER at the gated 16× because this co-purchase graph collapses
-    almost entirely in round 1, so kcore_peel's shrinking-set rescans
-    beat any fixed-size e0 rescan schedule; the operator stays in the
-    library for deep-peeling graphs where rounds ≫ collapse rate.)"""
+    (r12 negative result, measurements in OPTIMIZATION_r12: an
+    incremental-degree form with node-sized state, 41→23 jobs,
+    measured ×1.1–1.5 SLOWER at the gated 16× because this co-purchase
+    graph collapses almost entirely in round 1, so kcore_peel's
+    shrinking-set rescans beat any fixed-size edge rescan schedule.)"""
     from pygr_spark.operators.graphs import kcore_peel
 
     # shared frequent-pair build (same graph as ktruss_edges; the

@@ -1,10 +1,8 @@
 """Golden tests for bigram transitions, positional phrase search
-(operators/textstats.py) and K-hop Bellman-Ford
-(operators/graphs.py bellman_ford_k)."""
+(operators/textstats.py) and K-hop min-plus / max-plus relaxation
+(operators/graphs.py relax_k)."""
 
-from pyspark.sql import functions as F
-
-from pygr_spark.operators.graphs import bellman_ford_k
+from pygr_spark.operators.graphs import relax_k
 from pygr_spark.operators.textstats import bigram_transitions, phrase_search
 
 
@@ -65,61 +63,52 @@ class TestPhraseSearch:
         assert phrase_search(df, ["slow", "hash", "batch"]).count() == 1
 
 
+def _relax(spark, edges, init, k, better="min"):
+    e = spark.createDataFrame(edges, "src long, dst long, w long")
+    i = spark.createDataFrame(init, "node long, value long")
+    return {r.node: r.value for r in relax_k(e, i, k, better=better).collect()}
+
+
 class TestBellmanFordK:
-    def _e(self, spark, rows):
-        return spark.createDataFrame(rows, "src long, dst long, w long")
-
-    def _s(self, spark, nodes):
-        return spark.createDataFrame([(n,) for n in nodes], "src long")
-
     def test_cheaper_longer_path_wins(self, spark):
         # 0->2 direct cost 10; 0->1->2 cost 2+3=5
-        e = self._e(spark, [(0, 2, 10), (0, 1, 2), (1, 2, 3)])
-        out = {r.node: r.dist for r in bellman_ford_k(e, self._s(spark, [0]), k=6).collect()}
+        out = _relax(spark, [(0, 2, 10), (0, 1, 2), (1, 2, 3)], [(0, 0)], 6)
         assert out == {0: 0, 1: 2, 2: 5}
 
     def test_hop_bound(self, spark):
         # chain 0->1->2->3, k=2 reaches only depth 2
-        e = self._e(spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1)])
-        out = {r.node: r.dist for r in bellman_ford_k(e, self._s(spark, [0]), k=2).collect()}
+        out = _relax(spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1)], [(0, 0)], 2)
         assert out == {0: 0, 1: 1, 2: 2}
 
     def test_cycle_terminates(self, spark):
-        e = self._e(spark, [(0, 1, 1), (1, 0, 1)])
-        out = {r.node: r.dist for r in bellman_ford_k(e, self._s(spark, [0]), k=8).collect()}
+        out = _relax(spark, [(0, 1, 1), (1, 0, 1)], [(0, 0)], 8)
         assert out == {0: 0, 1: 1}
 
     def test_multi_source_min(self, spark):
         # node 2 reachable from both seeds; min wins
-        e = self._e(spark, [(0, 2, 9), (5, 2, 1)])
-        out = {r.node: r.dist for r in bellman_ford_k(e, self._s(spark, [0, 5]), k=3).collect()}
+        out = _relax(spark, [(0, 2, 9), (5, 2, 1)], [(0, 0), (5, 0)], 3)
         assert out == {0: 0, 5: 0, 2: 1}
 
 
 class TestMaxChainK:
-    def _run(self, spark, edges, nodes, k=6):
-        from pygr_spark.operators.graphs import max_chain_k
-
-        e = spark.createDataFrame(edges, "src long, dst long, w long")
-        n = spark.createDataFrame(nodes, "node long, w long")
-        return {r.node: r.score for r in max_chain_k(e, n, k=k).collect()}
+    # seeds carry each node's own weight, edges the DST node's weight
 
     def test_chain_accumulates_dst_weights(self, spark):
         # 1(w=5) -> 2(w=3) -> 3(w=4): best ending at 3 is 5+3+4
-        edges = [(1, 2, 3), (2, 3, 4)]
-        nodes = [(1, 5), (2, 3), (3, 4)]
-        assert self._run(spark, edges, nodes) == {1: 5, 2: 8, 3: 12}
+        out = _relax(
+            spark, [(1, 2, 3), (2, 3, 4)], [(1, 5), (2, 3), (3, 4)], 6, "max"
+        )
+        assert out == {1: 5, 2: 8, 3: 12}
 
     def test_diamond_takes_max(self, spark):
         # 1->2->4 (5+1+2) vs 1->3->4 (5+9+2): max path wins at 4
         edges = [(1, 2, 1), (1, 3, 9), (2, 4, 2), (3, 4, 2)]
         nodes = [(1, 5), (2, 1), (3, 9), (4, 2)]
-        out = self._run(spark, edges, nodes)
-        assert out[4] == 16
+        assert _relax(spark, edges, nodes, 6, "max")[4] == 16
 
     def test_hop_bound_caps_chain(self, spark):
         edges = [(1, 2, 1), (2, 3, 1), (3, 4, 1)]
         nodes = [(1, 1), (2, 1), (3, 1), (4, 1)]
-        out = self._run(spark, edges, nodes, k=1)
+        out = _relax(spark, edges, nodes, 1, "max")
         # k=1: at most one extension — node 4's best is 3's seed + 1
         assert out == {1: 1, 2: 2, 3: 2, 4: 2}

@@ -5,23 +5,6 @@ checkpointed small side against spark.pygr.broadcastSide.maxBytes —
 past the bound the keyed shuffle-hash form engages, below it the
 broadcast form (the gated-bench default) is unchanged."""
 
-import pytest
-from pyspark.sql import functions as F
-
-BOUND_KEY = "spark.pygr.broadcastSide.maxBytes"
-
-
-@pytest.fixture()
-def tiny_bound(spark):
-    old = spark.conf.get(BOUND_KEY, None)
-    spark.conf.set(BOUND_KEY, "1")  # 1 byte: everything is "too big"
-    yield spark
-    if old is None:
-        spark.conf.unset(BOUND_KEY)
-    else:
-        spark.conf.set(BOUND_KEY, old)
-
-
 def test_materialized_bytes_reads_checkpoint_blocks(spark):
     from pygr_spark.tuning import materialized_bytes
 
@@ -73,38 +56,38 @@ def _graph(spark):
         [(0, 1, 4), (1, 2, 1), (0, 2, 10), (2, 3, 2)],
         "src long, dst long, w long",
     )
-    s = spark.createDataFrame([(0,)], "node long")
+    s = spark.createDataFrame([(0, 0)], "node long, value long")
     return e, s
 
 
 def test_bellman_auto_flips_to_keyed_past_bound(spark, tiny_bound):
-    from pygr_spark.operators.graphs import bellman_ford_k
+    from pygr_spark.operators.graphs import relax_k
 
     e, s = _graph(spark)
     # auto path under a 1-byte bound: the eagerly-checkpointed source
     # frontier is already over it, so every round runs keyed
-    got = {r.node: r.dist for r in bellman_ford_k(e, s, k=4).collect()}
+    got = {r.node: r.value for r in relax_k(e, s, 4).collect()}
     want = {
-        r.node: r.dist
-        for r in bellman_ford_k(e, s, k=4, broadcast_frontier=True).collect()
+        r.node: r.value
+        for r in relax_k(e, s, 4, broadcast_frontier=True).collect()
     }
     assert got == want == {0: 0, 1: 4, 2: 5, 3: 7}
 
 
 def test_max_chain_auto_parity_under_tiny_bound(spark, tiny_bound):
-    from pygr_spark.operators.graphs import max_chain_k
+    from pygr_spark.operators.graphs import relax_k
 
     e = spark.createDataFrame(
         [(0, 1, 5), (1, 2, 3), (0, 2, 3)], "src long, dst long, w long"
     )
     n = spark.createDataFrame(
-        [(0, 2), (1, 5), (2, 3)], "node long, w long"
+        [(0, 2), (1, 5), (2, 3)], "node long, value long"
     )
-    got = {r.node: r.score for r in max_chain_k(e, n, k=3).collect()}
+    got = {r.node: r.value for r in relax_k(e, n, 3, better="max").collect()}
     want = {
-        r.node: r.score
-        for r in max_chain_k(
-            e, n, k=3, broadcast_frontier=False
+        r.node: r.value
+        for r in relax_k(
+            e, n, 3, better="max", broadcast_frontier=False
         ).collect()
     }
     assert got == want

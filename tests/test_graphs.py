@@ -1,9 +1,12 @@
+import pytest
+
 from pygr_spark.operators.graphs import (
     connected_components,
     degrees,
     foreign_key_graph,
     invert,
-    pagerank,
+    pagerank_exact,
+    relax_k,
     splice_graph,
 )
 
@@ -34,12 +37,16 @@ def test_foreign_key_graph(spark):
 
 
 def test_pagerank_star(spark):
-    # everyone points at node 0 → node 0 has the max rank
+    # everyone points at node 0 → node 0 has the max rank; ranks are
+    # integers in units of 1e-12: base 0.15, node 0 at 0.15 + 0.85·3·0.15
     e = _edges(spark, [(1, 0), (2, 0), (3, 0)])
-    ranks = {r.node: r.rank for r in pagerank(e, n_iter=8).collect()}
-    assert max(ranks, key=ranks.get) == 0
-    assert abs(ranks[0] - (0.15 + 0.85 * 3 * 0.15)) < 1e-9
-    assert all(abs(ranks[n] - 0.15) < 1e-9 for n in (1, 2, 3))
+    ranks = {r.node: r.rank for r in pagerank_exact(e, n_iter=8).collect()}
+    assert ranks == {
+        0: 532_500_000_000,
+        1: 150_000_000_000,
+        2: 150_000_000_000,
+        3: 150_000_000_000,
+    }
 
 
 def test_connected_components(spark):
@@ -90,45 +97,86 @@ def test_splice_graph(spark):
     assert g["alt3"].count() == 0
 
 
-def test_bfs_levels_golden(spark):
-    from pygr_spark.operators.graphs import bfs_levels
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (4, 1)], ["src", "dst"]
-    )
-    srcs = spark.createDataFrame([(1,)], ["node"])
-    got = {r.node: r.level for r in bfs_levels(edges, srcs).collect()}
-    # cycle back to 1 does not lower its level; 10/11 unreachable
-    assert got == {1: 0, 2: 1, 3: 2, 4: 3}
+def _unit(pairs):
+    return [(a, b, 1) for a, b in pairs]
 
 
-def test_bfs_levels_max_depth_truncates(spark):
-    from pygr_spark.operators.graphs import bfs_levels
+# name → (edges (src, dst, w), init (node, value), k, golden for "min")
+RELAX_CASES = {
+    "cheaper_longer_path": ([(0, 2, 10), (0, 1, 2), (1, 2, 3)], [(0, 0)], 6, None),
+    "hop_bound": ([(0, 1, 1), (1, 2, 1), (2, 3, 1)], [(0, 0)], 2, None),
+    "two_cycle": ([(0, 1, 1), (1, 0, 1)], [(0, 0)], 8, None),
+    "multi_source": ([(0, 2, 9), (5, 2, 1)], [(0, 0), (5, 0)], 3, None),
+    "bounds_graph": (
+        [(0, 1, 4), (1, 2, 1), (0, 2, 10), (2, 3, 2)], [(0, 0)], 4, None,
+    ),
+    "chain_dst_weights": (
+        [(1, 2, 3), (2, 3, 4)], [(1, 5), (2, 3), (3, 4)], 6, None,
+    ),
+    "diamond": (
+        [(1, 2, 1), (1, 3, 9), (2, 4, 2), (3, 4, 2)],
+        [(1, 5), (2, 1), (3, 9), (4, 2)], 6, None,
+    ),
+    "chain_k1": (
+        [(1, 2, 1), (2, 3, 1), (3, 4, 1)], [(n, 1) for n in range(1, 5)], 1,
+        None,
+    ),
+    "triangle_seeded": (
+        [(0, 1, 5), (1, 2, 3), (0, 2, 3)], [(0, 2), (1, 5), (2, 3)], 3, None,
+    ),
+    # BFS levels: min-plus with unit weights; the back edge 4→1 does
+    # not lower 1's level and 10/11 stay unreachable
+    "bfs_golden": (
+        _unit([(1, 2), (2, 3), (3, 4), (10, 11), (4, 1)]), [(1, 0)], 8,
+        {1: 0, 2: 1, 3: 2, 4: 3},
+    ),
+    "bfs_depth_truncates": (
+        _unit([(i, i + 1) for i in range(6)]), [(0, 0)], 3,
+        {0: 0, 1: 1, 2: 2, 3: 3},
+    ),
+    "empty_init": ([(0, 1, 1)], [], 3, {}),
+    "duplicate_edges": (
+        [(0, 1, 2), (0, 1, 2), (0, 1, 5), (1, 2, 1), (1, 2, 1)], [(0, 0)], 3,
+        None,
+    ),
+    "cycle_k_below_diameter": (
+        [(i, (i + 1) % 8, i + 1) for i in range(8)], [(0, 0)], 3, None,
+    ),
+}
 
-    chain = spark.createDataFrame([(i, i + 1) for i in range(6)], ["src", "dst"])
-    srcs = spark.createDataFrame([(0,)], ["node"])
-    got = {r.node: r.level for r in bfs_levels(chain, srcs, max_depth=3).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+
+def _relax_reference(edges, init, k, better):
+    """k synchronous rounds relaxing EVERY edge (no frontier)."""
+    pick = min if better == "min" else max
+    val = {}
+    for n, v in init:
+        val[n] = pick(val[n], v) if n in val else v
+    for _ in range(k):
+        nxt = dict(val)
+        for s, d, w in edges:
+            if s in val:
+                nxt[d] = pick(nxt[d], val[s] + w) if d in nxt else val[s] + w
+        val = nxt
+    return val
 
 
-def test_pagerank_exact_broadcast_knob_parity(spark):
-    """broadcast_ranks=True (the cluster shape: node vector broadcast,
-    edges never re-shuffled) must be bit-identical to the default
-    shuffle form — the arithmetic is order-independent integer math,
-    so only the exchange strategy may differ."""
-    from pygr_spark.operators.graphs import pagerank_exact
-
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(12) for b in range(12)
-         if a != b and (a * 7 + b) % 3 == 0],
-        "src long, dst long",
-    )
-    base = {
-        (r.node, r.rank)
-        for r in pagerank_exact(edges, n_iter=4).collect()
+@pytest.mark.parametrize("mode", ["broadcast", "keyed", "auto_tiny_bound"])
+@pytest.mark.parametrize("better", ["min", "max"])
+@pytest.mark.parametrize("case", sorted(RELAX_CASES))
+def test_relax_k_matches_reference(spark, request, case, better, mode):
+    """Every broadcast mode of relax_k, both semirings, equals a plain
+    k-round Python relaxation; under a 1-byte bound the auto mode runs
+    keyed from round 0."""
+    edges, init, k, golden = RELAX_CASES[case]
+    if mode == "auto_tiny_bound":
+        request.getfixturevalue("tiny_bound")
+    flag = {"broadcast": True, "keyed": False, "auto_tiny_bound": None}[mode]
+    e = spark.createDataFrame(edges, "src long, dst long, w long")
+    i = spark.createDataFrame(init, "node long, value long")
+    got = {
+        r.node: r.value
+        for r in relax_k(e, i, k, better=better, broadcast_frontier=flag).collect()
     }
-    bc = {
-        (r.node, r.rank)
-        for r in pagerank_exact(edges, n_iter=4, broadcast_ranks=True).collect()
-    }
-    assert base == bc and base
+    assert got == _relax_reference(edges, init, k, better)
+    if golden is not None and better == "min":
+        assert got == golden

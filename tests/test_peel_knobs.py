@@ -156,7 +156,7 @@ def test_ktruss_strip_bounded_unroll_equivalence(spark):
 def test_ktruss_driver_finish_parity(spark):
     """r12 size-triggered driver finish == pure distributed truss
     peel, every budget, including the budget-exhausted trailing
-    support pass."""
+    support pass; duplicate input rows count once on both paths."""
     pairs = [
         (0, 1), (0, 2), (1, 2),
         (1, 3), (2, 3),
@@ -164,24 +164,26 @@ def test_ktruss_driver_finish_parity(spark):
         (4, 5),
         (5, 6), (5, 7), (6, 7),  # detached triangle, survives alone
     ]
-    for budget in (1, 2, 3, 4):
-        dist = {
-            (r.u, r.v): r.support
-            for r in ktruss_peel(
-                spark.createDataFrame(pairs, ["u", "v"]), k=3,
-                max_rounds=budget, driver_finish_max_rows=0,
-            ).collect()
-        }
-        drv = {
-            (r.u, r.v): r.support
-            for r in ktruss_peel(
-                spark.createDataFrame(pairs, ["u", "v"]), k=3,
-                max_rounds=budget, driver_finish_max_rows=10**9,
-            ).collect()
-        }
-        assert dist == drv == _py_ktruss_rounds(pairs, 3, budget), (
-            f"budget={budget}"
-        )
+    duplicated = pairs + [(1, 3), (4, 5), (4, 5), (6, 7)]
+    for rows in (pairs, duplicated):
+        for budget in (1, 2, 3, 4):
+            dist = {
+                (r.u, r.v): r.support
+                for r in ktruss_peel(
+                    spark.createDataFrame(rows, ["u", "v"]), k=3,
+                    max_rounds=budget, driver_finish_max_rows=0,
+                ).collect()
+            }
+            drv = {
+                (r.u, r.v): r.support
+                for r in ktruss_peel(
+                    spark.createDataFrame(rows, ["u", "v"]), k=3,
+                    max_rounds=budget, driver_finish_max_rows=10**9,
+                ).collect()
+            }
+            assert dist == drv == _py_ktruss_rounds(pairs, 3, budget), (
+                f"rows={rows} budget={budget}"
+            )
 
 
 def test_catalog_budgets_reach_fixpoint_at_test_scale(spark, sf_dir):
@@ -225,46 +227,3 @@ def test_catalog_budgets_reach_fixpoint_at_test_scale(spark, sf_dir):
         ).collect()
     )
     assert t_at == t_beyond
-
-
-def test_kcore_degrees_matches_peel_unroll(spark):
-    """r12 incremental-degree form == kcore_peel + groupBy degree at
-    EVERY budget (pre-fixpoint included), on the depth-adversarial
-    path graph and on a mixed graph with a core + dangling tree."""
-    from pygr_spark.operators.graphs import kcore_degrees
-
-    cases = [
-        [(i, i + 1) for i in range(11)],                      # P_12
-        [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (2, 5),      # K3+tail
-         (5, 6), (5, 7), (6, 7)],                             # + K3
-    ]
-    for pairs in cases:
-        df = spark.createDataFrame(pairs, ["u", "v"])
-        for budget in (1, 2, 3, 6, 8):
-            via_peel = {
-                (r.u, r.core_degree)
-                for r in kcore_peel(
-                    _both_dirs(spark, pairs), k=2, max_rounds=budget
-                )
-                .groupBy("u")
-                .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-                .collect()
-            }
-            via_deg = {
-                (r.node, r.core_degree)
-                for r in kcore_degrees(df, k=2, max_rounds=budget).collect()
-            }
-            assert via_deg == via_peel, f"pairs={pairs} budget={budget}"
-
-
-def test_kcore_degrees_cycle_immediate_fixpoint(spark):
-    from pygr_spark.operators.graphs import kcore_degrees
-
-    pairs = [(i, (i + 1) % 8) for i in range(8)]
-    got = {
-        (r.node, r.core_degree)
-        for r in kcore_degrees(
-            spark.createDataFrame(pairs, ["u", "v"]), k=2, max_rounds=1
-        ).collect()
-    }
-    assert got == {(i, 2) for i in range(8)}
