@@ -18,7 +18,7 @@ import time
 from pyspark.sql import functions as F
 
 from pygr_spark.queries import QUERIES
-from pygr_spark.session import get_spark
+from pygr_spark.session import DRIVER_TABLES, get_spark
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -329,11 +329,7 @@ def main() -> None:
             # this the gate measures cold parquet IO, not plan cost —
             # the DuckDB oracle pass runs AFTER Spark and would read
             # warm pages, skewing the ratio against Spark)
-            for t in (
-                "region", "nation", "customer", "supplier", "part",
-                "orders", "lineitem", "events", "documents",
-                "embeddings",
-            ):
+            for t in DRIVER_TABLES:
                 p = os.path.join(dir16, f"{t}.parquet")
                 if os.path.exists(p):
                     spark.read.parquet(p).count()
@@ -497,11 +493,7 @@ def _oracle_pass(sf_dir: str, names: list[str]) -> float | None:
     from pygr_spark.queries import ORACLES
 
     con = duckdb.connect()
-    tables = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    for t in tables:
+    for t in DRIVER_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if not os.path.exists(p):
             continue

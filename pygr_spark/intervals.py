@@ -48,30 +48,6 @@ def signed_strand(start: Column) -> Column:
     return F.when(start < 0, F.lit(-1)).otherwise(F.lit(1))
 
 
-def normalize_signed(
-    df: DataFrame, start: str, stop: str, out_prefix: str = ""
-) -> DataFrame:
-    """Add ``{p}start, {p}stop, {p}strand`` normalized columns."""
-    s, e = F.col(start), F.col(stop)
-    p = out_prefix
-    return (
-        df.withColumn(f"{p}strand", signed_strand(s))
-        .withColumn(f"{p}start_n", signed_start(s, e))
-        .withColumn(f"{p}stop_n", signed_stop(s, e))
-        .withColumnRenamed(f"{p}start_n", f"{p}start" if p else "start_n")
-        .withColumnRenamed(f"{p}stop_n", f"{p}stop" if p else "stop_n")
-    )
-
-
-def to_signed_start(start: Column, stop: Column, strand: Column) -> Column:
-    """Normalized (start, stop, strand) -> sign-convention start."""
-    return F.when(strand < 0, -stop).otherwise(start)
-
-
-def to_signed_stop(start: Column, stop: Column, strand: Column) -> Column:
-    return F.when(strand < 0, -start).otherwise(stop)
-
-
 # ---------------------------------------------------------------------------
 # predicates (reference sequence.py:405-424)
 # ---------------------------------------------------------------------------
@@ -98,16 +74,6 @@ def intersect_start(start1: Column, start2: Column) -> Column:
 
 def intersect_stop(stop1: Column, stop2: Column) -> Column:
     return F.least(stop1, stop2)
-
-
-def intersect_struct(
-    start1: Column, stop1: Column, start2: Column, stop2: Column
-) -> Column:
-    """``struct(start, stop)`` of the intersection, NULL if disjoint
-    (reference ``ival1 * ival2`` -> None, sequence.py:426-442)."""
-    s = intersect_start(start1, start2)
-    e = intersect_stop(stop1, stop2)
-    return F.when(s < e, F.struct(s.alias("start"), e.alias("stop")))
 
 
 def span_union_start(start1: Column, start2: Column) -> Column:
@@ -164,12 +130,3 @@ def xform_int(
     num = ((x - src_start) * (dst_stop - dst_start)).cast("double")
     den = (src_stop - src_start).cast("double")
     return (dst_start + F.floor(num / den)).cast("long")
-
-
-def before_stop(start: Column) -> Column:
-    """Complement helper: ``before()`` is [0, start) (sequence.py:497-505)."""
-    return start
-
-
-def after_start(stop: Column) -> Column:
-    return stop

@@ -52,17 +52,6 @@ from pygr_spark.operators.dedup import md5_hash60
 from pygr_spark.operators.similarity import quantized, sqnorm
 
 
-def _dot_literal_sql(qvec: str, cvec: list[int]) -> str:
-    """Integer dot of column ``qvec`` against a LITERAL centroid as one
-    SQL string (codegen'd; the Column-API build would pay a py4j
-    round-trip per term — same rationale as similarity.dot_unrolled)."""
-    terms = " ".join(
-        ("+" if c >= 0 else "-") + f" {abs(c)} * element_at({qvec}, {i + 1})"
-        for i, c in enumerate(cvec)
-    )
-    return f"(0 {terms})"
-
-
 def _assign(v: DataFrame, cents: list[tuple[int, list[int], int]]) -> DataFrame:
     """Add (cluster_id, cos_center) by argmax cosine over literal
     centroids; ties break to the smaller cluster_id (max of

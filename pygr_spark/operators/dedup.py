@@ -123,16 +123,6 @@ def shingle_rows(
     ).dropDuplicates(["_id", "_s"])
 
 
-def _sharded_shingles(df: DataFrame, id_col: str, text: str, n: int) -> DataFrame:
-    """(_id, _sh) shingle-set arrays, built from the codegen'd row form
-    (rows are already distinct → collect_list is a set)."""
-    return (
-        shingle_rows(df, id_col, text, n)
-        .groupBy("_id")
-        .agg(F.collect_list("_s").alias("_sh"))
-    )
-
-
 def exact_dedup(
     df: DataFrame, text: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -209,30 +199,11 @@ def _perm_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    num_perm: int = 32,
-    seed: int = 42,
-    hash_fn=F.xxhash64,
-) -> DataFrame:
-    """(id, sig: array<long>[num_perm], n_shingles). Pure column
-    expressions: shingles → hash → per-perm min of (a·x+b) mod p.
-    ``hash_fn`` defaults to xxhash64 (fastest); pass ``md5_hash60``
-    for the engine-portable, oracle-checkable variant.
-    """
-    return _signatures_from_rows(
-        shingle_rows(df, id_col, text, n), id_col, num_perm, seed, hash_fn
-    )
-
-
 def _perm_min_aggs(num_perm: int, seed: int) -> list:
     """The per-permutation ``min((a·_h + b) mod p)`` aggregate columns
-    — THE single source of truth for the signature scheme, shared by
-    :func:`_signatures_from_rows` and the fused one-pass aggregation
-    in :func:`minhash_near_dups` (scalar min() aggregates are
+    — THE single source of truth for the signature scheme, used by
+    the fused one-pass aggregation in :func:`minhash_near_dups`
+    (scalar min() aggregates are
     whole-stage-codegen'd, ~10× faster than interpreted
     array_min(transform(...)) higher-order expressions)."""
     return [
@@ -250,21 +221,6 @@ def _sig_select(id_col: str, num_perm: int) -> list:
         F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig"),
         F.col("_n").alias("n_shingles"),
     ]
-
-
-def _signatures_from_rows(
-    rows: DataFrame, id_col: str, num_perm: int, seed: int, hash_fn=F.xxhash64
-) -> DataFrame:
-    """Signatures from prepared (_id, _s) shingle rows — lets pipelines
-    that also need the raw shingle sets (candidate verification)
-    compute the expensive shingling exactly once."""
-    ex = rows.select(
-        "_id", F.pmod(hash_fn(F.col("_s")), F.lit(MERSENNE_P)).alias("_h")
-    )
-    mins = ex.groupBy("_id").agg(
-        F.count(F.lit(1)).alias("_n"), *_perm_min_aggs(num_perm, seed)
-    )
-    return mins.select(*_sig_select(id_col, num_perm))
 
 
 def lsh_candidate_pairs(

@@ -320,7 +320,6 @@ def relax_k(
     init: DataFrame,
     k: int,
     better: str = "min",
-    broadcast_frontier: bool | None = None,
 ) -> DataFrame:
     """Best path value per node within <= ``k`` hops: level-synchronous
     relaxation over the (min,+) or (max,+) semiring — the frontier walk
@@ -334,7 +333,8 @@ def relax_k(
     with unit weights; "max" is longest chain, only safe on a DAG or
     with a bound k. Only IMPROVED nodes stay on the frontier; k bounds
     the rounds for the oracle (a depth-bounded recursive CTE). Integer
-    weights keep the gate exact.
+    weights keep the gate exact. Edges with a null src, dst or w and
+    init rows with a null node or value carry no path and are dropped.
 
     Scale shape (r11, the pagerank union-agg discipline): the
     node-sized frontier BROADCASTS into the edge scan (edges are never
@@ -343,17 +343,17 @@ def relax_k(
     groupBy + full_outer merge ran four (r11 job audit:
     transcript_chain 44 → 22 jobs, cheapest_path 26 → 18 at sf0.1).
 
-    ``broadcast_frontier=None`` (default) picks the side from a
-    measured bound: the exact materialized bytes of the checkpointed
-    frontier (tuning.materialized_bytes — a driver-side block lookup,
-    no job) against ``spark.pygr.broadcastSide.maxBytes`` (default
-    256 MB). ``init`` is checkpointed eagerly so its size is known
-    before round 0 ships it; the bound is re-read at every probe round,
-    and once crossed the loop flips PERMANENTLY to the keyed join (same
-    semantics, the frontier is exchanged instead of shipped to every
-    executor). True/False force one form.
+    Size switch ``spark.pygr.smallPath.broadcastBytes``
+    (tuning.small_path): the frontier broadcasts while the exact
+    materialized bytes of the checkpointed frontier
+    (tuning.materialized_bytes — a driver-side block lookup, no job)
+    stay within the bound. ``init`` is checkpointed eagerly so its size
+    is known before round 0 ships it; the size is re-read at every
+    probe round, and once over the bound the loop flips PERMANENTLY to
+    the keyed join (same semantics, the frontier is exchanged instead
+    of shipped to every executor).
     """
-    from pygr_spark.tuning import broadcast_bytes_threshold, materialized_bytes
+    from pygr_spark.tuning import materialized_bytes, small_path
 
     if better == "min":
         agg, pick, worst = F.min, F.least, F.lit(2**62)
@@ -363,24 +363,27 @@ def relax_k(
         gains = F.col("_cand") > F.col("_old")
     else:
         raise ValueError(f"better must be 'min' or 'max', not {better!r}")
-    auto = broadcast_frontier is None
-    use_broadcast = True if auto else broadcast_frontier
-    dist = init.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("value").cast("long").alias("value"),
-    ).localCheckpoint()
-    if auto:
-        limit = broadcast_bytes_threshold(init.sparkSession)
-        b0 = materialized_bytes(dist)
-        if b0 is not None and b0 > limit:
-            use_broadcast = False
+    spark = init.sparkSession
+    dist = (
+        init.select(
+            F.col("node").cast("long").alias("node"),
+            F.col("value").cast("long").alias("value"),
+        )
+        .dropna()
+        .localCheckpoint()
+    )
+    use_broadcast = small_path(spark, "broadcastBytes", materialized_bytes(dist))
     # edge list is consumed once per round: cut its lineage so the
     # caller's edge-build plan runs once, not once per round
-    e = edges.select(
-        F.col("src").cast("long").alias("_s"),
-        F.col("dst").cast("long").alias("_d"),
-        F.col("w").cast("long").alias("_w"),
-    ).localCheckpoint(eager=False)
+    e = (
+        edges.select(
+            F.col("src").cast("long").alias("_s"),
+            F.col("dst").cast("long").alias("_d"),
+            F.col("w").cast("long").alias("_w"),
+        )
+        .dropna()
+        .localCheckpoint(eager=False)
+    )
     frontier = dist
     for r in range(k):
         # relax candidates (leg 1) and standing values (leg 0) meet
@@ -428,13 +431,13 @@ def relax_k(
             ).first()[0]
             if not any_improved:
                 break
-            if auto and use_broadcast:
+            if use_broadcast:
                 # the probe just materialized merged: its exact bytes
                 # are now registered — flip to the keyed form the
                 # moment the frontier outgrows the safe-broadcast band
-                bm = materialized_bytes(merged)
-                if bm is not None and bm > limit:
-                    use_broadcast = False
+                use_broadcast = small_path(
+                    spark, "broadcastBytes", materialized_bytes(merged)
+                )
     return dist
 
 
@@ -444,12 +447,12 @@ def kcore_peel(
     max_rounds: int = 8,
     src: str = "u",
     dst: str = "v",
-    driver_finish_max_rows: int | None = None,
 ) -> DataFrame:
     """Bounded synchronized k-core peel: repeatedly drop nodes with
     degree < ``k`` from an undirected graph given as a DIRECTED edge
     list containing both (u,v) and (v,u) rows. Returns the surviving
     directed edge rows (u, v) — group on ``u`` for in-core degrees.
+    Edges with a null endpoint name no node and are dropped.
 
     Round-budget contract (the knob the oracle unroll mirrors): the
     loop runs at most ``max_rounds`` synchronized rounds with early
@@ -469,28 +472,28 @@ def kcore_peel(
     stay flat (reference analog: pygr prunes per-object through dict
     degree lookups, mapping.py:688-750).
 
-    ``driver_finish_max_rows`` (r12, guide §5 job-floor): peeling
-    typically collapses the graph in the first round or two and then
-    trickles through a long tail of near-empty rounds — each a fixed
-    ~4-5 Spark jobs (degree agg + probe + two broadcast-built
-    semi-joins) on a few hundred surviving rows. When a probe sees
-    the surviving DIRECTED edge count at or below this bound (None →
-    conf ``spark.pygr.peel.driverFinishMaxRows``, default 200000 ≈ a
-    few MB; 0 disables), the remaining rounds of the SAME bounded
-    unroll run on the driver over the collected edge list — identical
-    early-exit rule, identical final edge set (pinned by
-    tests/test_peel_knobs.py parity across forced-on/forced-off
-    bounds). Size-triggered like the broadcast bounds: at scales
-    where the core never shrinks below the bound, every round stays
-    distributed."""
+    Size switch ``spark.pygr.smallPath.peelRows`` (tuning.small_path,
+    r12 guide §5 job-floor): peeling typically collapses the graph in
+    the first round or two and then trickles through a long tail of
+    near-empty rounds — each a fixed ~4-5 Spark jobs (degree agg +
+    probe + two broadcast-built semi-joins) on a few hundred surviving
+    rows. When a probe sees the surviving DIRECTED edge count within
+    the bound, the remaining rounds of the SAME bounded unroll run on
+    the driver over the collected edge list — identical early-exit
+    rule, identical final edge set (tests/test_size_switches.py forces
+    both paths). At scales where the core never shrinks below the
+    bound, every round stays distributed."""
+    from pygr_spark.tuning import small_path
+
     spark = edges.sparkSession
-    if driver_finish_max_rows is None:
-        driver_finish_max_rows = int(
-            spark.conf.get("spark.pygr.peel.driverFinishMaxRows", "200000")
-        )
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    # null endpoints drop AFTER the checkpoint: pushed into the input
+    # plan, the filter splits the reused exchange of a self-union
+    # input (q_kcore_decomp's both-directions edge list: +1 job)
+    e = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .localCheckpoint(eager=True)
+        .dropna()
+    )
     for r in range(max_rounds):
         # deg is lazily checkpointed and materialized by the
         # min-degree probe action (its ONLY consumer at that point,
@@ -526,7 +529,7 @@ def kcore_peel(
             # bounded unroll on the driver — rounds r..max_rounds-1,
             # same every-round early exit (checking more often than
             # the distributed alternation only skips no-op rounds)
-            if 0 < n_rows <= driver_finish_max_rows:
+            if small_path(spark, "peelRows", n_rows):
                 from collections import Counter
 
                 local = [(row[0], row[1]) for row in e.collect()]
@@ -595,12 +598,13 @@ def ktruss_peel(
     max_rounds: int = 4,
     src: str = "u",
     dst: str = "v",
-    driver_finish_max_rows: int | None = None,
 ) -> DataFrame:
     """Bounded synchronized k-truss peel on a u<v ORIENTED edge list
-    (duplicate rows count once): an edge survives iff it participates
+    (duplicate rows count once, edges with a null endpoint are
+    dropped): an edge survives iff it participates
     in >= k-2 triangles among surviving edges. Returns the surviving
-    oriented edges WITH their in-truss support column.
+    oriented edges WITH their in-truss support column. ``k`` must be
+    at least 3 (ValueError otherwise).
 
     Same round-budget contract as :func:`kcore_peel`: at most
     ``max_rounds`` rounds, early exit at fixpoint, pre-fixpoint
@@ -625,33 +629,34 @@ def ktruss_peel(
     budget-exhausted-pre-fixpoint path, where the oracle's trailing
     sup_f pass genuinely requires it.
 
-    ``driver_finish_max_rows`` (r12, guide §5 — same size-triggered
-    discipline as kcore_peel): the per-round count action already
-    knows the surviving edge count for free; at or below the bound
-    (None → conf ``spark.pygr.truss.driverFinishMaxRows``, default
-    50000 — lower than the core peel's because the per-edge driver
-    work is a neighbor-set intersection, not a counter; 0 disables)
+    Size switch ``spark.pygr.smallPath.trussRows`` (tuning.small_path,
+    the same discipline as kcore_peel): the per-round count action
+    already knows the surviving edge count for free; within the bound
     the remaining rounds of the identical bounded unroll run on the
     driver. Each distributed truss round is two self-joins + an agg
     (~6-8 fixed jobs) regardless of how few edges survive — the tail
     rounds are where the entry's job floor lives."""
+    from pygr_spark.tuning import small_path
+
+    if k < 3:
+        # support joins keep only edges IN a triangle, so a k whose
+        # bound admits zero-support edges has no distributed form
+        raise ValueError(f"ktruss_peel: k must be >= 3, not {k}")
     t = k - 2
     spark = edges.sparkSession
-    if driver_finish_max_rows is None:
-        driver_finish_max_rows = int(
-            spark.conf.get("spark.pygr.truss.driverFinishMaxRows", "50000")
-        )
     # duplicate rows would each count toward support on the
-    # distributed path while the driver finish sees a set: dedupe once
-    # so both paths peel the same edge set
+    # distributed path while the driver finish sees a set, and a null
+    # endpoint never joins but does sit in a set: drop both once so
+    # both paths peel the same edge set
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .dropna()
         .distinct()
         .localCheckpoint(eager=False)
     )
     n_edges = e.count()
     for r in range(max_rounds):
-        if 0 < n_edges <= driver_finish_max_rows:
+        if small_path(spark, "trussRows", n_edges):
             local = {(row[0], row[1]) for row in e.collect()}
             for _ in range(r, max_rounds):
                 sup = _local_truss_support(local)

@@ -21,9 +21,6 @@ Replaces the Nested Containment List engine (reference intervaldb.c:319-443
     shuffle key ``(id, bin)`` spreads a single hot sequence across
     many partitions, which the plain id-keyed range join cannot do.
 
-``auto``
-    Binned when both sides are plain scans of unknown size, else range.
-
 The O(log n + k) NCList query bound becomes O(n/p) per partition with
 p = number of (id, bin) partitions; Parquet min/max row-group stats on
 (id, start) replace the on-disk IntervalIndex (intervaldb.c:589-666).

@@ -150,86 +150,101 @@ def pava_isotonic(
     bin_col: str = "bin",
     tot_col: str = "tot",
     cnt_col: str = "cnt",
-    driver_max_rows: int = 512,
 ) -> DataFrame:
     """Isotonic (non-decreasing) weighted least-squares fit of
     tot/cnt on bin order via the closed-form minimax
     y*ᵢ = max_{j≤i} min_{k≥i} (T[j..k]/C[j..k]) — equivalent to
     pool-adjacent-violators but expressed over prefix sums, so it
     needs no sequential PAVA pass. Intended for SMALL bin summaries
-    (cost O(bins³)); reduce raw rows to bins first. Returns
-    (bin, cnt, y_star).
+    (the join form is O(bins³)); reduce raw rows to bins first.
+    Returns (bin, cnt, y_star), one row per bin.
 
-    r12 (guide §5 job-floor): at or below ``driver_max_rows`` bins
-    the minimax runs on the driver over the collected summary — the
-    checkpoint + inequality joins + two aggregates (≈10 fixed jobs
-    for a ≤50-row table in the isotonic_fit entry) become one
-    collect. Same IEEE double division, min and max over the same
-    set of values, so the result is bit-identical to the join form
-    (and to the oracle's SQL mirror); above the bound the join form
-    still runs; 0 disables the driver path, as the peel knobs do.
-    Collection happens at CALL time (the kmeans-centroid
-    build-time-execution convention).
+    Rows of one bin pool (their cnt and tot add up), a null cnt or tot
+    adds nothing, and a row with a null bin has no place in the order
+    and is dropped. A bin range with zero total cnt has no mean: its
+    average is NULL (``try_divide``) and drops out of the min/max.
 
-    A bin range with zero total cnt has no mean: its average is NULL
-    (``try_divide``) and drops out of the min/max on both paths."""
-    collected = None
-    if driver_max_rows > 0:
-        # one action: take(bound+1) — the extra row is only the
-        # over-bound signal, so the small-summary contract costs a
-        # single job, not a count + a collect
-        collected = bins.select(bin_col, cnt_col, tot_col).take(
-            driver_max_rows + 1
-        )
-        if len(collected) > driver_max_rows:
-            collected = None
-    if collected is not None:
+    Size switch ``spark.pygr.smallPath.pavaRows`` (tuning.small_path,
+    r12 guide §5 job-floor): when the input has at most that many rows
+    (one ``take(bound+1)`` — the extra row is only the over-bound
+    signal) the minimax runs on the driver over the collected summary
+    in O(bins²) — the checkpoint + inequality joins + two aggregates
+    (≈10 fixed jobs for a ≤50-row table in the isotonic_fit entry)
+    become one collect. Same IEEE double division, min and max over
+    the same set of values, so the result is bit-identical to the join
+    form (and to the oracle's SQL mirror). Collection happens at CALL
+    time (the kmeans-centroid build-time-execution convention)."""
+    from pygr_spark.tuning import small_path, small_path_bound
+
+    spark = bins.sparkSession
+    field = {f.name: f for f in bins.schema.fields}
+    cnt_type = field[cnt_col].dataType
+    # Spark's limit is an Int: fetch at most 2^31-2 (+1) rows, and a
+    # full fetch past that counts as unmeasured (the join form)
+    cap = min(small_path_bound(spark, "pavaRows"), (1 << 31) - 2)
+    collected = (
+        bins.select(bin_col, cnt_col, tot_col).take(cap + 1) if cap > 0 else []
+    )
+    size = len(collected) if len(collected) <= cap else None
+    if small_path(spark, "pavaRows", size):
         from pyspark.sql.types import DoubleType, StructField, StructType
 
-        field = {f.name: f for f in bins.schema.fields}
-        rows = sorted(
-            ((r[0], r[1], r[2]) for r in collected), key=lambda x: x[0]
-        )
+        by_bin: dict = {}
+        for b, c, t in collected:
+            if b is not None:
+                pc, pt = by_bin.get(b, (0, 0))
+                by_bin[b] = (pc + (c or 0), pt + (t or 0))
+        rows = sorted(by_bin.items())
         n = len(rows)
         cp, tp = [], []
         ac = at = 0
-        for _, c, t in rows:
+        for _, (c, t) in rows:
             ac += c
             at += t
             cp.append(ac)
             tp.append(at)
-        cp0 = [cp[i] - rows[i][1] for i in range(n)]
-        tp0 = [tp[i] - rows[i][2] for i in range(n)]
-        out = []
-        for i in range(n):
-            best = None
-            for j in range(i + 1):
-                mn = None
-                for k in range(i, n):
-                    den = cp[k] - cp0[j]
-                    if den == 0:
-                        continue
+        cp0 = [cp[i] - rows[i][1][0] for i in range(n)]
+        tp0 = [tp[i] - rows[i][1][1] for i in range(n)]
+        # best[i] = max_{j≤i} min_{k≥i} avg(j..k): for each j, scan k
+        # downward keeping the running min over k..n-1, and fold it
+        # into best[k]. Ties keep the lowest k (<=) and the lowest j
+        # (>), the same picks as the ascending triple loop this
+        # replaces, so even a -0.0/0.0 tie is bit-identical.
+        best = [None] * n
+        for j in range(n):
+            mn = None
+            for k in range(n - 1, j - 1, -1):
+                den = cp[k] - cp0[j]
+                if den != 0:
                     avg = float(tp[k] - tp0[j]) / float(den)
-                    if mn is None or avg < mn:
+                    if mn is None or avg <= mn:
                         mn = avg
-                if mn is not None and (best is None or mn > best):
-                    best = mn
-            out.append((rows[i][0], rows[i][1], best))
+                if mn is not None and (best[k] is None or mn > best[k]):
+                    best[k] = mn
+        out = [(rows[i][0], rows[i][1][0], best[i]) for i in range(n)]
         schema = StructType(
             [
                 StructField("bin", field[bin_col].dataType, True),
-                StructField("cnt", field[cnt_col].dataType, True),
+                StructField("cnt", cnt_type, True),
                 StructField("y_star", DoubleType(), True),
             ]
         )
-        return bins.sparkSession.createDataFrame(out, schema=schema)
-    w = Window.orderBy(bin_col)
-    pre = bins.select(
-        F.col(bin_col).alias("bin"),
-        F.col(cnt_col).alias("cnt"),
-        F.col(tot_col).alias("tot"),
-        F.sum(cnt_col).over(w).alias("cp"),
-        F.sum(tot_col).over(w).alias("tp"),
+        return spark.createDataFrame(out, schema=schema)
+    w = Window.orderBy("bin")
+    pooled = (
+        bins.filter(F.col(bin_col).isNotNull())
+        .groupBy(F.col(bin_col).alias("bin"))
+        .agg(
+            F.coalesce(F.sum(cnt_col), F.lit(0)).cast(cnt_type).alias("cnt"),
+            F.coalesce(F.sum(tot_col), F.lit(0)).alias("tot"),
+        )
+    )
+    pre = pooled.select(
+        "bin",
+        "cnt",
+        "tot",
+        F.sum("cnt").over(w).alias("cp"),
+        F.sum("tot").over(w).alias("tp"),
     ).localCheckpoint(eager=True)
     lo = pre.select(
         F.col("bin").alias("j"),

@@ -12095,16 +12095,13 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16×; the same edge-checkpoint discipline as bfs/bellman-ford).
     # r12 (guide §3.1): the join exists only to map orderkey→custkey —
     # BROADCAST the 2-column orders projection into the lineitem scan
-    # when Catalyst's column-width-scaled size estimate fits the
-    # conf'd safe-broadcast band, so neither big table is shuffled
-    # for the join (the only remaining exchange is the distinct's
-    # map-side-deduped (c, s) pairs); past the bound — orders at a
-    # scale where even two columns outgrow broadcast — fall back to
-    # the shuffle-hash form.
-    from pygr_spark.tuning import (
-        broadcast_bytes_threshold,
-        plan_bytes_estimate,
-    )
+    # when Catalyst's column-width-scaled size estimate is within size
+    # switch spark.pygr.smallPath.broadcastBytes, so neither big table
+    # is shuffled for the join (the only remaining exchange is the
+    # distinct's map-side-deduped (c, s) pairs); past the bound —
+    # orders at a scale where even two columns outgrow broadcast —
+    # fall back to the shuffle-hash form.
+    from pygr_spark.tuning import plan_bytes_estimate, small_path
 
     ok = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey"), F.col("o_custkey")
@@ -12112,8 +12109,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey"), F.col("l_suppkey")
     )
-    est = plan_bytes_estimate(ok)
-    if est is not None and est <= broadcast_bytes_threshold(spark):
+    if small_path(spark, "broadcastBytes", plan_bytes_estimate(ok)):
         joined = li.join(
             F.broadcast(ok), F.col("o_orderkey") == F.col("l_orderkey")
         )
@@ -12930,8 +12926,9 @@ def q_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressible as joins over the ≤50-row bin summary — no sequential
     pass). Averages compare as IEEE doubles (one division each, exact
     bigint carriers), result rounded to 6. Scale shape: raw rows are
-    touched once for the bin rollup; the O(bins³) minimax runs on the
-    tiny summary — bins, not rows, bound it."""
+    touched once for the bin rollup; the minimax (O(bins²) on the
+    driver, O(bins³) as joins) runs on the tiny summary — bins, not
+    rows, bound it."""
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.expr(

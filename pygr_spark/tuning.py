@@ -19,6 +19,10 @@ follow the class, not a global default.
 `SHUFFLE_CLASS` records the measured class per heavy entry —
 tests/test_tuning.py asserts every 256×-probed entry declares one, so
 a new heavy entry cannot ship without stating which rule it follows.
+
+The module also holds the size signals (:func:`materialized_bytes`,
+:func:`plan_bytes_estimate`) and the one rule, :func:`small_path`, by
+which every two-path operator picks its path from them.
 """
 
 from __future__ import annotations
@@ -119,21 +123,44 @@ def plan_bytes_estimate(df) -> int | None:
     return v
 
 
-def broadcast_bytes_threshold(
-    spark: SparkSession,
-    key: str = "spark.pygr.broadcastSide.maxBytes",
-    default: int = 256 << 20,
-) -> int:
-    """Conf'd byte bound for a deliberately-broadcast build side
-    (guide §3.1: a few hundred MB is fine, multiple GB risks the
-    driver; the hard cap is 8 GB / 512M rows). Parameterised so a
-    real cluster tunes it per driver/executor memory; the local
-    default keeps every bench plan unchanged (all gated-scale
-    broadcast sides measure well under 256 MB)."""
-    try:
-        return int(spark.conf.get(key, str(default)))
-    except Exception:
-        return default
+#: Default bound of every size switch: an operator with two physical
+#: paths takes the SMALL one (broadcast build side, driver-side finish)
+#: when its measured size is at or below the bound. Each bound is
+#: settable as ``spark.pygr.smallPath.<switch>``; 0 means never take
+#: the small path.
+SMALL_PATH_BOUNDS: dict[str, int] = {
+    # materialized/estimated bytes of a deliberately-broadcast side:
+    # relax_k's frontier, fm_count's probe state, hits_scores' orders
+    # projection (guide §3.1: a few hundred MB is fine, multiple GB
+    # risks the driver; every gated-scale side measures well under)
+    "broadcastBytes": 256 << 20,
+    # kcore_peel surviving directed edges -> driver-side finish (a few MB)
+    "peelRows": 200_000,
+    # ktruss_peel surviving edges -> driver-side finish; lower than the
+    # core peel's because the per-edge driver work is a neighbor-set
+    # intersection, not a counter
+    "trussRows": 50_000,
+    # pava_isotonic input rows -> driver-side O(n²) minimax
+    "pavaRows": 512,
+}
+
+
+def small_path_bound(spark: SparkSession, switch: str) -> int:
+    """The bound of size switch ``switch``: conf
+    ``spark.pygr.smallPath.<switch>``, else its SMALL_PATH_BOUNDS
+    default. Sites that measure by fetching at most bound+1 rows read
+    it here; every decision goes through :func:`small_path`."""
+    default = str(SMALL_PATH_BOUNDS[switch])
+    return int(spark.conf.get(f"spark.pygr.smallPath.{switch}", default))
+
+
+def small_path(spark: SparkSession, switch: str, size: int | None) -> bool:
+    """True when the operator should take its small path: ``size`` was
+    measured (not None) and is at or below the switch's bound, and the
+    bound is not 0. An unmeasured size takes the large path, which is
+    correct at every scale."""
+    bound = small_path_bound(spark, switch)
+    return bound > 0 and size is not None and size <= bound
 
 
 def sort_scaled_partitions(

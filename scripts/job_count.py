@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pygr_spark.queries import QUERIES  # noqa: E402
-from pygr_spark.session import get_spark  # noqa: E402
+from pygr_spark.session import DRIVER_TABLES, get_spark  # noqa: E402
 
 
 def _job_ids(spark) -> int:
@@ -48,10 +48,7 @@ def main() -> None:
 
         names = bench.HEADLINE
     spark = get_spark("job_count")
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    for t in DRIVER_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             spark.read.parquet(p).count()

@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from pygr_spark.session import get_spark
+from pygr_spark.session import DRIVER_TABLES, get_spark
 
 STRIDE = 10_000_000
 
@@ -38,11 +38,6 @@ KEYS = {
     "embeddings": ["vec_id"],
 }
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 4
@@ -51,7 +46,7 @@ def main() -> None:
     spark = get_spark("make_scaled")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     os.makedirs(dst, exist_ok=True)
-    for t in TABLES:
+    for t in DRIVER_TABLES:
         p = os.path.join(src, f"{t}.parquet")
         if not os.path.exists(p):
             continue

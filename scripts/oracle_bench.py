@@ -17,17 +17,14 @@ import duckdb  # noqa: E402
 
 from bench import HEADLINE  # noqa: E402
 from pygr_spark.queries import ORACLES  # noqa: E402
+from pygr_spark.session import DRIVER_TABLES  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> None:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in DRIVER_TABLES:
         p = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

@@ -44,6 +44,10 @@ import sys
 
 import duckdb
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pygr_spark.session import DRIVER_TABLES  # noqa: E402
+
 I64 = 2**63 - 1
 
 #: (entry, carrier, growth_exponent, probe SQL returning one BIGINT-able
@@ -180,8 +184,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     con = duckdb.connect()
     con.execute("SET threads TO 8")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
+    for t in DRIVER_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             src = f"{p}/*.parquet" if os.path.isdir(p) else p

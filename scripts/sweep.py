@@ -28,11 +28,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from pygr_spark.session import DRIVER_TABLES  # noqa: E402
+
 SF_DIR = os.environ.get("SWEEP_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def digest(df) -> tuple[int, int]:
@@ -138,7 +136,7 @@ def main() -> int:
     import duckdb
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in DRIVER_TABLES:
         p = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(p):
             # Spark-written replicas (the 16x/64x scale fixtures) are

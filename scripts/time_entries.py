@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pygr_spark.queries import QUERIES  # noqa: E402
-from pygr_spark.session import get_spark  # noqa: E402
+from pygr_spark.session import DRIVER_TABLES, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -26,10 +26,7 @@ def main() -> None:
     passes = int(sys.argv[2])
     names = sys.argv[3:]
     spark = get_spark("time_entries")
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    for t in DRIVER_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             spark.read.parquet(p).count()

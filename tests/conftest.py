@@ -18,15 +18,26 @@ def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+#: Bounds that force a size switch (tuning.small_path) one way.
+SMALL = 1 << 62  # every measured size fits: the small path
+LARGE = 0  # the "never" sentinel: the large path
+
+
 @pytest.fixture()
-def tiny_bound(spark):
-    """Sets the broadcast-side byte bound to 1 byte, so every size
-    probe finds its side "too big" and takes the keyed form."""
-    key = "spark.pygr.broadcastSide.maxBytes"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "1")
-    yield spark
-    if old is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, old)
+def switch_bound(spark):
+    """``switch_bound(switch, bound)`` sets conf
+    ``spark.pygr.smallPath.<switch>`` for the test and restores it at
+    teardown. Pass SMALL (1 << 62) or LARGE (0) to force one path."""
+    saved = {}
+
+    def set_bound(switch, bound):
+        key = f"spark.pygr.smallPath.{switch}"
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, str(bound))
+
+    yield set_bound
+    for key, old in saved.items():
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

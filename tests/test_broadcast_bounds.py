@@ -1,9 +1,11 @@
 """Broadcast-vs-keyed side selection is wired to a measured bound
-(judge r11 item 4): fm_count's probe side and the BF/chain frontier
+(judge r11 item 4): fm_count's probe side and relax_k's frontier
 pick their join form from the EXACT materialized size of the
-checkpointed small side against spark.pygr.broadcastSide.maxBytes —
-past the bound the keyed shuffle-hash form engages, below it the
-broadcast form (the gated-bench default) is unchanged."""
+checkpointed small side against size switch
+spark.pygr.smallPath.broadcastBytes — past the bound the keyed
+shuffle-hash form engages, below it the broadcast form (the
+gated-bench default) is unchanged. tests/test_size_switches.py forces
+both forms on degenerate inputs."""
 
 def test_materialized_bytes_reads_checkpoint_blocks(spark):
     from pygr_spark.tuning import materialized_bytes
@@ -22,19 +24,15 @@ def _fm_docs(spark):
     )
 
 
-def test_fm_count_keyed_path_engages_past_bound(spark, tiny_bound):
+def test_fm_count_keyed_path_engages_past_bound(spark, switch_bound):
     from pygr_spark.operators.fmindex import fm_count
 
-    docs = _fm_docs(spark)
-    keyed = fm_count(docs, "acg")  # auto: 1-byte bound -> keyed
+    switch_bound("broadcastBytes", 1)
+    keyed = fm_count(_fm_docs(spark), "acg")  # 1-byte bound -> keyed
     plan = keyed._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan
     got = {r.doc_id: r.n_occ for r in keyed.collect()}
-    want = {
-        r.doc_id: r.n_occ
-        for r in fm_count(docs, "acg", probe_broadcast=True).collect()
-    }
-    assert got == want == {0: 2, 1: 0, 2: 0, 3: 0}
+    assert got == {0: 2, 1: 0, 2: 0, 3: 0}
 
 
 def test_fm_count_broadcast_below_bound(spark):
@@ -60,34 +58,12 @@ def _graph(spark):
     return e, s
 
 
-def test_bellman_auto_flips_to_keyed_past_bound(spark, tiny_bound):
+def test_bellman_auto_flips_to_keyed_past_bound(spark, switch_bound):
     from pygr_spark.operators.graphs import relax_k
 
     e, s = _graph(spark)
-    # auto path under a 1-byte bound: the eagerly-checkpointed source
-    # frontier is already over it, so every round runs keyed
+    # under a 1-byte bound the eagerly-checkpointed source frontier is
+    # already over it, so every round runs keyed
+    switch_bound("broadcastBytes", 1)
     got = {r.node: r.value for r in relax_k(e, s, 4).collect()}
-    want = {
-        r.node: r.value
-        for r in relax_k(e, s, 4, broadcast_frontier=True).collect()
-    }
-    assert got == want == {0: 0, 1: 4, 2: 5, 3: 7}
-
-
-def test_max_chain_auto_parity_under_tiny_bound(spark, tiny_bound):
-    from pygr_spark.operators.graphs import relax_k
-
-    e = spark.createDataFrame(
-        [(0, 1, 5), (1, 2, 3), (0, 2, 3)], "src long, dst long, w long"
-    )
-    n = spark.createDataFrame(
-        [(0, 2), (1, 5), (2, 3)], "node long, value long"
-    )
-    got = {r.node: r.value for r in relax_k(e, n, 3, better="max").collect()}
-    want = {
-        r.node: r.value
-        for r in relax_k(
-            e, n, 3, better="max", broadcast_frontier=False
-        ).collect()
-    }
-    assert got == want
+    assert got == {0: 0, 1: 4, 2: 5, 3: 7}

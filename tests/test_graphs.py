@@ -1,4 +1,5 @@
 import pytest
+from conftest import LARGE, SMALL
 
 from pygr_spark.operators.graphs import (
     connected_components,
@@ -142,15 +143,24 @@ RELAX_CASES = {
     "cycle_k_below_diameter": (
         [(i, (i + 1) % 8, i + 1) for i in range(8)], [(0, 0)], 3, None,
     ),
+    # a null field carries no path: the ±2^62 "worst" sentinel must not
+    # surface as node 2's value
+    "null_fields": (
+        [(0, 1, 3), (1, 2, None), (None, 2, 1), (1, None, 1)],
+        [(0, 0), (None, 1), (2, None)], 3, {0: 0, 1: 3},
+    ),
 }
 
 
 def _relax_reference(edges, init, k, better):
-    """k synchronous rounds relaxing EVERY edge (no frontier)."""
+    """k synchronous rounds relaxing EVERY edge (no frontier); rows
+    with a null field carry no path."""
     pick = min if better == "min" else max
+    edges = [e for e in edges if None not in e]
     val = {}
     for n, v in init:
-        val[n] = pick(val[n], v) if n in val else v
+        if n is not None and v is not None:
+            val[n] = pick(val[n], v) if n in val else v
     for _ in range(k):
         nxt = dict(val)
         for s, d, w in edges:
@@ -163,20 +173,16 @@ def _relax_reference(edges, init, k, better):
 @pytest.mark.parametrize("mode", ["broadcast", "keyed", "auto_tiny_bound"])
 @pytest.mark.parametrize("better", ["min", "max"])
 @pytest.mark.parametrize("case", sorted(RELAX_CASES))
-def test_relax_k_matches_reference(spark, request, case, better, mode):
-    """Every broadcast mode of relax_k, both semirings, equals a plain
-    k-round Python relaxation; under a 1-byte bound the auto mode runs
-    keyed from round 0."""
+def test_relax_k_matches_reference(spark, switch_bound, case, better, mode):
+    """Both frontier join forms of relax_k, both semirings, equal a
+    plain k-round Python relaxation; under a 1-byte bound the measured
+    frontier runs keyed from round 0."""
     edges, init, k, golden = RELAX_CASES[case]
-    if mode == "auto_tiny_bound":
-        request.getfixturevalue("tiny_bound")
-    flag = {"broadcast": True, "keyed": False, "auto_tiny_bound": None}[mode]
+    bound = {"broadcast": SMALL, "keyed": LARGE, "auto_tiny_bound": 1}[mode]
+    switch_bound("broadcastBytes", bound)
     e = spark.createDataFrame(edges, "src long, dst long, w long")
     i = spark.createDataFrame(init, "node long, value long")
-    got = {
-        r.node: r.value
-        for r in relax_k(e, i, k, better=better, broadcast_frontier=flag).collect()
-    }
+    got = {r.node: r.value for r in relax_k(e, i, k, better=better).collect()}
     assert got == _relax_reference(edges, init, k, better)
     if golden is not None and better == "min":
         assert got == golden

@@ -93,36 +93,6 @@ def test_kcore_path_graph_bounded_unroll_equivalence(spark):
     assert survivors > 0  # 6 rounds strip 12 of 20 nodes, 8 remain
 
 
-def test_kcore_driver_finish_parity(spark):
-    """r12 size-triggered driver finish == pure distributed peel for
-    every budget, on the adversarial path graph (driver path engages
-    at the first probe) and on a mixed graph with a surviving core."""
-    mixed = (
-        [(i, i + 1) for i in range(9)]          # path tail, peels away
-        + [(100 + i, 100 + (i + 1) % 5) for i in range(5)]  # 5-cycle core
-        + [(100, 5)]                             # bridge
-    )
-    for pairs in ([(i, i + 1) for i in range(11)], mixed):
-        for budget in (1, 2, 3, 6, 8):
-            dist = sorted(
-                (r.u, r.v)
-                for r in kcore_peel(
-                    _both_dirs(spark, pairs), k=2, max_rounds=budget,
-                    driver_finish_max_rows=0,
-                ).collect()
-            )
-            drv = sorted(
-                (r.u, r.v)
-                for r in kcore_peel(
-                    _both_dirs(spark, pairs), k=2, max_rounds=budget,
-                    driver_finish_max_rows=10**9,
-                ).collect()
-            )
-            assert dist == drv == sorted(
-                _py_kcore_rounds(pairs, 2, budget)
-            ), f"pairs={len(pairs)} budget={budget}"
-
-
 def test_kcore_cycle_is_immediate_fixpoint(spark):
     # every node of a cycle has degree 2: round 1's early-exit probe
     # fires and the graph survives intact under ANY budget
@@ -151,39 +121,6 @@ def test_ktruss_strip_bounded_unroll_equivalence(spark):
         }
         expect = _py_ktruss_rounds(pairs, 3, budget)
         assert got == expect, f"budget={budget}"
-
-
-def test_ktruss_driver_finish_parity(spark):
-    """r12 size-triggered driver finish == pure distributed truss
-    peel, every budget, including the budget-exhausted trailing
-    support pass; duplicate input rows count once on both paths."""
-    pairs = [
-        (0, 1), (0, 2), (1, 2),
-        (1, 3), (2, 3),
-        (2, 4), (3, 4),
-        (4, 5),
-        (5, 6), (5, 7), (6, 7),  # detached triangle, survives alone
-    ]
-    duplicated = pairs + [(1, 3), (4, 5), (4, 5), (6, 7)]
-    for rows in (pairs, duplicated):
-        for budget in (1, 2, 3, 4):
-            dist = {
-                (r.u, r.v): r.support
-                for r in ktruss_peel(
-                    spark.createDataFrame(rows, ["u", "v"]), k=3,
-                    max_rounds=budget, driver_finish_max_rows=0,
-                ).collect()
-            }
-            drv = {
-                (r.u, r.v): r.support
-                for r in ktruss_peel(
-                    spark.createDataFrame(rows, ["u", "v"]), k=3,
-                    max_rounds=budget, driver_finish_max_rows=10**9,
-                ).collect()
-            }
-            assert dist == drv == _py_ktruss_rounds(pairs, 3, budget), (
-                f"rows={rows} budget={budget}"
-            )
 
 
 def test_catalog_budgets_reach_fixpoint_at_test_scale(spark, sf_dir):

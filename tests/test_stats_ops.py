@@ -50,29 +50,6 @@ def test_pava_isotonic_known_fixture(spark):
     assert got == {1: 1.0, 2: 2.5, 3: 2.5, 4: 4.0}
 
 
-def test_pava_isotonic_driver_matches_join_form(spark):
-    """r12 driver fast path == the distributed join form, bit-exact
-    (same IEEE divisions, same min/max set), on an adversarial
-    mixed-violation fixture with non-contiguous bins, and on bins with
-    cnt=0 (zero-cnt ranges have no mean on either path)."""
-    from pygr_spark.operators.stats import pava_isotonic
-
-    for data in (
-        [(1, 5, 2), (3, 1, 1), (4, 9, 3), (7, 2, 1), (9, 8, 2)],
-        [(1, 5, 2), (2, 3, 0), (3, 1, 1), (5, 0, 0)],
-    ):
-        bins = spark.createDataFrame(data, ["bin", "tot", "cnt"])
-        drv = {
-            r.bin: (r.cnt, r.y_star)
-            for r in pava_isotonic(bins, driver_max_rows=512).collect()
-        }
-        dist = {
-            r.bin: (r.cnt, r.y_star)
-            for r in pava_isotonic(bins, driver_max_rows=0).collect()
-        }
-        assert drv == dist and len(drv) == len(data)
-
-
 def test_pava_isotonic_weighted_pooling(spark):
     from pygr_spark.operators.stats import pava_isotonic
 
