@@ -18,16 +18,16 @@ participates in predicate pushdown / codegen.
 Semantics preserved from the reference:
   - intervals are half-open ``[start, stop)``;
   - empty intervals are forbidden (reference sequence.py:307-308) —
-    ``require_nonempty`` encodes this;
+    relationally, callers filter ``start < stop``;
   - construction clips to sequence bounds (sequence.py:302-306) —
-    ``clip_expr``;
+    ``greatest``/``least`` at the call site;
   - intersection of disjoint/different-seq intervals is NULL
     (sequence.py:426-442).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -85,33 +85,9 @@ def span_union_stop(stop1: Column, stop2: Column) -> Column:
     return F.greatest(stop1, stop2)
 
 
-def clip_expr(coord: Column, lo: Column, hi: Column) -> Column:
-    """Clip a coordinate into [lo, hi] (reference sequence.py:302-306)."""
-    return F.greatest(lo, F.least(hi, coord))
-
-
-def require_nonempty(df: DataFrame, start: str, stop: str) -> DataFrame:
-    """Drop empty intervals — reference *raises* on construction
-    (sequence.py:307-308); relationally we filter them out."""
-    return df.filter(F.col(start) < F.col(stop))
-
-
 # ---------------------------------------------------------------------------
 # coordinate transforms (reference IntervalTransform, sequence.py:26-132)
 # ---------------------------------------------------------------------------
-
-
-def xform(
-    x: Column,
-    src_start: Column,
-    src_stop: Column,
-    dst_start: Column,
-    dst_stop: Column,
-) -> Column:
-    """Linear map of coordinate ``x`` from src interval to dst interval
-    (scale = len ratio, reference sequence.py:34,47-53). Integer result."""
-    scale = (dst_stop - dst_start) / (src_stop - src_start)
-    return (dst_start + F.round((x - src_start) * scale, 0)).cast("long")
 
 
 def xform_int(
@@ -125,8 +101,8 @@ def xform_int(
     ``dst_start + floor((x - src_start)·dst_len / src_len)``. Exact
     for |numerator| < 2^53 (integer float64 division never rounds
     across an integer boundary there), and floor matches SQL ``//``
-    on every engine including negative numerators — unlike
-    :func:`xform`'s round-half-up, which is not portable."""
+    on every engine including negative numerators (a round-half-up
+    map would not be: engines round ties differently)."""
     num = ((x - src_start) * (dst_stop - dst_start)).cast("double")
     den = (src_stop - src_start).cast("double")
     return (dst_start + F.floor(num / den)).cast("long")

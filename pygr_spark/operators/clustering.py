@@ -29,9 +29,9 @@ pygr_spark, see operators/similarity.py):
 
 Scale shape (100 TB story):
 
-- assignment is a pure projection: the k centroids are embedded as
-  literal coefficients in ONE codegen'd expression (no crossJoin, no
-  shuffle, no Python) — argmax over k fully unrolled integer dots;
+- assignment is a projection over a broadcast crossJoin of the 1-row
+  centroid array (no shuffle, no Python) — argmax over k integer dots
+  in higher-order functions;
 - each Lloyd iteration costs one groupBy(cluster, component) aggregate
   over n·dim narrow rows (map-side partial aggregation applies) and
   collects exactly k·dim aggregated rows to the driver — the same
@@ -52,43 +52,24 @@ from pygr_spark.operators.dedup import md5_hash60
 from pygr_spark.operators.similarity import quantized, sqnorm
 
 
-def _assign(v: DataFrame, cents: list[tuple[int, list[int], int]]) -> DataFrame:
-    """Add (cluster_id, cos_center) by argmax cosine over literal
-    centroids; ties break to the smaller cluster_id (max of
-    (cos, -cid) — matches the oracle's ORDER BY cos DESC, cid).
-
-    Shape matters here for a reason OPPOSITE to the usual codegen
-    rule: Lloyd iterations rebuild this plan every round with fresh
-    centroid literals, so a fully-unrolled k·dim multiply-add tree
-    pays Catalyst analysis + janino compilation per ROUND (measured
-    9s of the 13s cold-iteration time at k=8, dim=64 — compile, not
-    compute). The HOF form below keeps the expression tree at
-    O(k·dim) simple literal nodes with three lambdas, which Spark
-    evaluates interpreted — exactly the compiled-loop-per-row trade
-    MLlib's own KMeans makes — and a full iteration drops under a
-    second. (The pair-verify in semdedup keeps the unrolled codegen
-    dot: its plan compiles ONCE, so compile amortizes there.)"""
-    # ONE F.expr for the whole centroid literal: building it from
-    # k·dim F.lit() Columns costs a py4j round-trip per node
-    # (~seconds of driver time at k=32·dim=64 — the dot_unrolled
-    # docstring's warning applies to literals too)
-    cents_arr = F.expr(
-        "array("
-        + ", ".join(
-            f"named_struct('cid', {int(cid)}, "
-            f"'cq', array({', '.join(str(int(x)) for x in cq)}), "
-            f"'cn', CAST({int(cn)} AS BIGINT))"
-            for cid, cq, cn in cents
-        )
-        + ")"
-    )
-    return _with_assignment(v, cents_arr, v.columns)
-
-
 def _with_assignment(df: DataFrame, cents_col, keep: list[str]) -> DataFrame:
-    """Shared argmax-cosine projection: ``cents_col`` is any
-    array<struct<cid, cq, cn>> expression — a literal (``_assign``) or
-    a broadcast-joined column (the lazy Lloyd chain)."""
+    """Argmax-cosine projection: add (cluster_id, cos_center) for the
+    best of ``cents_col``, any array<struct<cid, cq, cn>> expression
+    (here a broadcast-joined column, the lazy Lloyd chain); ties break
+    to the smaller cluster_id (max of (cos, -cid) — matches the
+    oracle's ORDER BY cos DESC, cid).
+
+    Higher-order functions, not an unrolled dot, for a reason OPPOSITE
+    to the usual codegen rule: Lloyd iterations rebuild this plan
+    every round with fresh centroids, so a fully-unrolled k·dim
+    multiply-add tree pays Catalyst analysis + janino compilation per
+    ROUND (measured 9s of the 13s cold-iteration time at k=8, dim=64 —
+    compile, not compute). The HOF form keeps the expression tree at
+    O(1) nodes with three lambdas, which Spark evaluates interpreted —
+    exactly the compiled-loop-per-row trade MLlib's own KMeans makes —
+    and a full iteration drops under a second. (The pair-verify in
+    semdedup keeps the unrolled codegen dot: its plan compiles ONCE,
+    so compile amortizes there.)"""
     scored = F.transform(
         cents_col,
         lambda c: F.struct(

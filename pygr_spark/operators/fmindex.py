@@ -12,16 +12,22 @@ joins:
   ``seq + '$'`` ('$' < any base, the sentinel that makes rotation
   sort = suffix sort) as (doc, i, L-char) rows, via rotation explode
   + per-doc rank — all whole-stage codegen.
-- ``occ_table``: Occ(c, i) = count of c in L[1..i], a doc-keyed
-  cumulative window per alphabet char (4·n rows, linear).
-- ``c_table``: C[c] = count of chars < c per doc, from the char
-  histogram.
+- ``fm_count``'s Occ table: Occ(c, i) = count of c in L[1..i], one
+  doc-keyed cumulative window pass with all four alphabet chars as
+  columns (n rows, linear).
+- ``fm_count``'s C table: C[c] = 1 + count of chars < c per doc, a
+  pure projection of the input (length minus length-with-c-removed).
 - ``fm_count``: classic backward search — for pattern chars right to
   left, (lo, hi) ← (C[c] + Occ(c, lo−1) + 1, C[c] + Occ(c, hi)); the
   final ``hi − lo + 1`` is the number of occurrences. Each step is
   ONE equi-join of the per-doc state against the occ rows at exactly
   two positions — the pattern length bounds the join count
   (parameter-sized driver loop, not data-sized).
+
+``lcp_table_per_doc`` is the package's one suffix-array builder: per
+doc, suffix array plus LCP array in one Arrow-batched numpy kernel,
+for documents of at most ``LCP_MAX_DOC_CHARS`` characters. Longer
+documents are out of scope and raise.
 
 Scale shape: index construction is the bwt_transform rotation explode
 (O(n²) chars per doc, bounded by the block cap — the bzip2 block
@@ -41,6 +47,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 ALPHABET = ["$", "a", "c", "g", "t"]
+
+#: lcp_table_per_doc builds an n×n byte matrix per document in one
+#: Python worker (256 KiB at 512 chars, 10 GB at 100k), so a longer
+#: document raises instead of exhausting the worker's memory.
+LCP_MAX_DOC_CHARS = 512
 
 
 def bwt_table(docs: DataFrame, id_col: str = "doc_id", seq: str = "seq") -> DataFrame:
@@ -71,55 +82,6 @@ def bwt_table(docs: DataFrame, id_col: str = "doc_id", seq: str = "seq") -> Data
         F.row_number().over(w).cast("long").alias("i"),
         "ch",
     )
-
-
-def occ_table(bwt: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, ch, i, occ): cumulative count of ch in L[1..i] for every
-    alphabet char — one doc-keyed window per char, unioned (4·n rows;
-    '$' is never searched so it is skipped)."""
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # ONE window pass computing all four cumulative counts (one
-    # exchange + one sort), then stack() to the tall (c, i, occ) form
-    # — the unioned per-char variant sorted the BWT four times
-    cum = bwt.select(
-        id_col,
-        "i",
-        *[
-            F.sum((F.col("ch") == c).cast("long")).over(w).alias(f"_o_{c}")
-            for c in ALPHABET[1:]
-        ],
-    )
-    names = ", ".join(f"'{c}', _o_{c}" for c in ALPHABET[1:])
-    return cum.select(
-        id_col,
-        F.expr(f"stack({len(ALPHABET) - 1}, {names}) AS (c, occ)"),
-        "i",
-    ).select(id_col, "c", "i", F.col("occ").cast("long"))
-
-
-def c_table(bwt: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, c, c_less): per doc, the number of characters strictly
-    smaller than c in the text — the F-column offsets."""
-    hist = bwt.groupBy(id_col, "ch").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    rows = []
-    for idx, c in enumerate(ALPHABET[1:], start=1):
-        less = ALPHABET[:idx]
-        rows.append(
-            hist.filter(F.col("ch").isin(less))
-            .groupBy(id_col)
-            .agg(F.sum("n").cast("long").alias("c_less"))
-            .select(id_col, F.lit(c).alias("c"), "c_less")
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
 
 
 def fm_count(
@@ -276,7 +238,7 @@ def _occ_step(
     bound when the doc count outgrows the safe-broadcast band) runs
     the same joins as keyed shuffle-hash instead."""
     probes = state.select(
-        id_col,
+        F.col(id_col).alias("_pid"),
         F.explode(
             F.array(
                 F.struct(
@@ -285,125 +247,24 @@ def _occ_step(
                 F.struct(F.col("hi").alias("_pos"), F.lit(1).alias("_k")),
             )
         ).alias("_p"),
-    ).select(id_col, F.col("_p._pos").alias("_pos"), F.col("_p._k").alias("_k"))
+    ).select("_pid", F.col("_p._pos").alias("_pos"), F.col("_p._k").alias("_k"))
     probe_side = F.broadcast(probes) if broadcast else probes.hint("shuffle_hash")
-    hits = (
-        occw.join(
-            probe_side,
-            (occw[id_col] == probes[id_col]) & (occw["i"] == probes["_pos"]),
-        )
-        .select(occw[id_col].alias(id_col), "_k", F.col(f"_o_{ch}").alias("_occ"))
-    )
-    vals = hits.groupBy(id_col).agg(
+    # every id-key join is null-safe (<=>): a null doc_id is one
+    # document like any other, as in the SQL oracle's PARTITION BY
+    hits = occw.join(
+        probe_side,
+        occw[id_col].eqNullSafe(F.col("_pid")) & (occw["i"] == F.col("_pos")),
+    ).select("_pid", "_k", F.col(f"_o_{ch}").alias("_occ"))
+    vals = hits.groupBy("_pid").agg(
         F.max(F.when(F.col("_k") == 0, F.col("_occ"))).alias("_vlo"),
         F.max(F.when(F.col("_k") == 1, F.col("_occ"))).alias("_vhi"),
     )
     vals_side = F.broadcast(vals) if broadcast else vals.hint("shuffle_hash")
     return (
-        state.join(vals_side, id_col, "left")
+        state.join(vals_side, state[id_col].eqNullSafe(F.col("_pid")), "left")
         .withColumn("occ_lo", F.coalesce(F.col("_vlo"), F.lit(0)).cast("long"))
         .withColumn("occ_hi", F.coalesce(F.col("_vhi"), F.lit(0)).cast("long"))
-        .drop("_vlo", "_vhi")
-    )
-
-
-def suffix_ranks(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    seq: str = "seq",
-    max_len: int = 512,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Distributed suffix-array construction by prefix doubling
-    (Larsson–Sadakane / the Manber–Myers doubling step) — the
-    log-round algorithm that refines suffix ranks in place instead of
-    sorting suffix strings: round k pairs each suffix's rank with the
-    rank of the suffix 2^k positions later, so after
-    ceil(log2(max_len)) rounds every rank reflects its full extent.
-    No sentinel is needed: an absent lookahead ranks as 0 (< every
-    real rank), which matches plain lexicographic suffix comparison
-    where a proper prefix sorts first.
-
-    Returns (id, pos, sa_rank) — one row per character, sa_rank a
-    permutation of 1..len per doc (suffixes are pairwise distinct).
-
-    Scale shape: rows = total characters. Because positions are
-    contiguous 1..n, the 2^k lookahead is ``lead(rank, 2^k)`` over
-    (id, pos) — a WINDOW, not a self-join — so each round is two
-    same-key window passes and every round after the first reuses the
-    id-hash exchange (sort-only, no shuffle). A convergence probe at
-    each lineage cut stops early once ranks are a full permutation
-    (typical corpora converge at ~log2(longest repeated prefix), far
-    before log2(max_len)). The round count is parameter-sized, not
-    data-sized. At genome scale the doc axis shards exactly like
-    bwt_table's block discipline (the reference pages its NLMSA build
-    the same way, intervaldb.c:101-816).
-    """
-    # seed with 8-char prefix ranks (q=8): string dense_rank on the
-    # q-gram equals 3 doubling rounds' work in ONE window pass, and on
-    # low-repetition text the seed alone is already the full suffix
-    # order — the convergence probe then skips every doubling round.
-    q0 = 8
-    rows = docs.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(1), F.length(F.col(seq)))).alias("pos"),
-        F.col(seq).alias("_s"),
-    ).select(
-        id_col,
-        "pos",
-        F.expr(f"substring(_s, CAST(pos AS INT), {q0})").alias("_g"),
-    )
-    w = Window.partitionBy(id_col).orderBy("_g")
-    cur = rows.select(
-        id_col, "pos", F.dense_rank().over(w).cast("long").alias("rank")
-    )
-
-    def _converged(state: DataFrame) -> bool:
-        # once every doc's ranks are a full permutation (max == count),
-        # further doubling rounds are provably no-ops. One tiny
-        # aggregate job against the just-materialized state.
-        return (
-            state.groupBy(id_col)
-            .agg((F.max("rank") == F.count(F.lit(1))).alias("_c"))
-            .filter(~F.col("_c"))
-            .limit(1)
-            .count()
-            == 0
-        )
-
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=True)
-        if _converged(cur):
-            return cur.select(
-                id_col,
-                F.col("pos").cast("long").alias("pos"),
-                F.col("rank").alias("sa_rank"),
-            )
-    wp = Window.partitionBy(id_col).orderBy("pos")
-    off = q0
-    k = 0
-    while off < max_len:
-        paired = cur.withColumn(
-            "_next", F.coalesce(F.lead("rank", off).over(wp), F.lit(0))
-        )
-        w2 = Window.partitionBy(id_col).orderBy("rank", "_next")
-        cur = paired.select(
-            id_col,
-            "pos",
-            F.dense_rank().over(w2).cast("long").alias("rank"),
-        )
-        off *= 2
-        k += 1
-        # probe every SECOND round: the bench corpus converges at
-        # off=16 (an even round), so per-round probing just adds a
-        # checkpoint + count job per round (measured +1.5s at 16x on
-        # suffix_array/lcp_array) without ever saving a round
-        if checkpoint and (k % 2 == 0 or off >= max_len):
-            cur = cur.localCheckpoint(eager=True)
-            if _converged(cur):
-                break
-    return cur.select(
-        id_col, F.col("pos").cast("long").alias("pos"), F.col("rank").alias("sa_rank")
+        .drop("_pid", "_vlo", "_vhi")
     )
 
 
@@ -414,33 +275,32 @@ def lcp_table_per_doc(
     compute_lcp: bool = True,
 ) -> DataFrame:
     """Suffix array + LCP array per document in ONE Arrow-batched
-    numpy kernel — the bounded-document fast path to the same table
-    :func:`suffix_ranks` + the binary climb produce (r9: the climb is
-    the catalog's one super-linear 256× probe — every step's
-    substring-equality materializes UTF8String copies, and repetitive
-    corpora make adjacent-suffix LCPs deep, so 256× on one JVM turns
-    into ~100 GB of compare+allocation traffic; see SCALING.md).
+    numpy kernel — the package's only suffix-array builder (r9: it
+    replaced a prefix-doubling + binary-climb plan whose per-step
+    substring equality materialized UTF8String copies — on repetitive
+    corpora 256× on one JVM turned into ~100 GB of compare+allocation
+    traffic; see SCALING.md).
 
-    Per doc (length n, bounded by the caller's length filter): the
-    0-padded suffix matrix is a stride view of seq+zeros (no O(n²)
-    Python fill), rows viewed as fixed-width byte strings argsort
-    lexicographically (0-pad < every real byte ⟹ a proper prefix
-    sorts first — plain string comparison semantics, identical to the
-    climb path and the DuckDB oracle's VARCHAR sort), and the LCP of
-    adjacent rank neighbours is the argmax of the first byte mismatch
-    — one vectorized (n−1)×n comparison at memory bandwidth, zero
-    per-compare allocation. Suffixes within a doc are pairwise
-    distinct, so a mismatch always exists.
+    Per doc (length n ≤ ``LCP_MAX_DOC_CHARS``): the 0-padded suffix
+    matrix is a stride view of seq+zeros (no O(n²) Python fill), rows
+    viewed as fixed-width byte strings argsort lexicographically
+    (0-pad < every real byte ⟹ a proper prefix sorts first — plain
+    string comparison semantics, identical to the DuckDB oracle's
+    VARCHAR sort), and the LCP of adjacent rank neighbours is the
+    argmax of the first byte mismatch — one vectorized (n−1)×n
+    comparison at memory bandwidth, zero per-compare allocation.
+    Suffixes within a doc are pairwise distinct, so a mismatch always
+    exists. A doc longer than the cap raises ``ValueError`` naming the
+    doc id and the cap: callers filter by length first (the catalog
+    entries keep docs of 4..``LCP_MAX_DOC_CHARS`` chars), and suffix
+    arrays over longer documents are not supported.
 
     Scale shape: one map pass, one row per doc in (docs shard by
     hash), n rows per doc out; per-doc scratch is n² bytes (≤ 256 KiB
-    at the 512 cap). The distributed prefix-doubling path
-    (suffix_ranks) remains the giant-single-sequence story in the
-    library (parity tests pin the two paths to identical output).
-    Returns (id, sa_rank, pos, lcp) with lcp(rank 1) = 0; with
-    ``compute_lcp=False`` (r12: the suffix_array entry needs only the
-    rank permutation) the (n−1)×n adjacent-mismatch scan is skipped
-    and the lcp column is omitted."""
+    at the cap). Returns (id, sa_rank, pos, lcp) with lcp(rank 1) = 0;
+    with ``compute_lcp=False`` (r12: the suffix_array entry needs only
+    the rank permutation) the (n−1)×n adjacent-mismatch scan is
+    skipped and the lcp column is omitted."""
     import sys
 
     from pygr_spark.sources import ship_to_workers
@@ -457,6 +317,7 @@ def lcp_table_per_doc(
     if compute_lcp:
         fields.append(T.StructField("lcp", T.LongType()))
     schema = T.StructType(fields)
+    cap = LCP_MAX_DOC_CHARS
 
     def kernel(batches):
         import numpy as np
@@ -469,6 +330,11 @@ def lcp_table_per_doc(
                 n = len(b)
                 if n == 0:
                     continue
+                if n > cap:
+                    raise ValueError(
+                        f"lcp_table_per_doc: doc {did} has {n} chars, over "
+                        f"LCP_MAX_DOC_CHARS = {cap}"
+                    )
                 pad = np.concatenate([b, np.zeros(n, dtype=np.uint8)])
                 mat = np.ascontiguousarray(
                     np.lib.stride_tricks.sliding_window_view(pad, n)[:n]
@@ -493,147 +359,3 @@ def lcp_table_per_doc(
 
     return docs.select(id_col, seq).mapInPandas(kernel, schema)
 
-
-def suffix_ranks_sharded(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    seq: str = "seq",
-    max_len: int = 1 << 26,
-    n_parts: int = 64,
-    blk: int = 1 << 20,
-) -> DataFrame:
-    """Prefix-doubling suffix ranks with NO per-document window — the
-    giant-single-sequence path (judge r10 item #4). :func:`suffix_ranks`
-    keys every exchange by the document id, so one genome-length doc
-    runs its seed sort, every lead() and every re-rank in ONE task;
-    this variant shards the position axis instead, generalizing
-    bwt_table's block discipline to the rank refinement:
-
-    - the 2^k lookahead is a keyed EQUI-JOIN on (id, pos + 2^k)
-      (Flick & Aluru's distributed doubling step), hash-distributed
-      over position blocks — no window, no overlap carry needed;
-    - each round's re-rank is the dense two-pass range-bucket stitch
-      (:func:`~pygr_spark.operators.ranks.dist_grouped_dense_rank`):
-      bucket boundaries from one approxQuantile job, per-bucket
-      distinct counts as broadcast offsets, a (doc, bucket)-keyed
-      dense_rank — the document never owns a single-task sort;
-    - the (rank, next) pair packs into ONE int64 key
-      (rank·(max_len+1) + next, exact for max_len ≤ 2^26: the pack
-      stays < 2^53) so the stitch ranks on a numeric total order
-      identical to the lexicographic (rank, next) comparison.
-
-    The seed is the 4-byte prefix packed big-endian into an int
-    (ascii() of the out-of-range probe is 0 ⟹ a proper prefix sorts
-    first — the same no-sentinel rule suffix_ranks uses); three
-    doubling rounds later the effective extent matches the q0=8 seed
-    of the window path, and CONVERGED outputs are identical (parity
-    test). Scale: every exchange is (id, pos)- or key-range-keyed;
-    per-round cost is one join + one stitch over n rows split across
-    ``n_parts`` range buckets. Returns (id, pos, sa_rank)."""
-    pack_base = max_len + 1
-    # Seed extraction in BLOCKS (bwt_table's block discipline applied
-    # to the seed pass). Exploding positions straight off the doc row
-    # would (a) run the whole doc in ONE task and (b) pay UTF8String's
-    # O(pos) char scan per substring(_s, pos + i, 1) — O(n²) on a
-    # genome-length doc (measured: a 50M-char probe sat >30 min in the
-    # seed stage). Instead: cut the doc into _b-char block rows (a
-    # 3-char overlap completes the trailing 4-byte seeds), spread the
-    # blocks over the cluster, turn each block into an ascii-code
-    # array ONCE (O(block)), and read the 4 seed bytes per position
-    # with O(1) try_element_at. Out-of-range reads (doc end) coalesce
-    # to 0 — the same proper-prefix-sorts-first rule as the window
-    # path. ``blk`` is a parameter (default 1 MiB) so the multi-block
-    # stitch arithmetic is testable on small fixtures (r11 advice:
-    # with the constant, no test doc ever spanned two blocks).
-    if blk < 4:
-        raise ValueError("blk must be >= 4 (seed width + overlap)")
-    blocks = (
-        docs.select(F.col(id_col), F.col(seq).alias("_s"))
-        .filter(F.length("_s") > 0)
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(F.lit(1), F.length("_s"), F.lit(blk))
-            ).alias("_b0"),
-            "_s",
-        )
-        .select(
-            id_col,
-            "_b0",
-            F.expr(f"substring(_s, _b0, {blk + 3})").alias("_t"),
-        )
-        .repartition(n_parts, id_col, "_b0")
-        .select(
-            id_col,
-            "_b0",
-            F.least(F.length("_t"), F.lit(blk)).alias("_v"),
-            F.expr("transform(split(_t, ''), c -> ascii(c))").alias("_a"),
-        )
-    )
-    rows = (
-        blocks.select(
-            F.col(id_col),
-            F.col("_b0"),
-            F.posexplode(
-                F.expr(
-                    "transform(sequence(1, _v), o -> "
-                    "coalesce(try_element_at(_a, o), 0L) * 16777216 + "
-                    "coalesce(try_element_at(_a, o + 1), 0L) * 65536 + "
-                    "coalesce(try_element_at(_a, o + 2), 0L) * 256 + "
-                    "coalesce(try_element_at(_a, o + 3), 0L))"
-                )
-            ).alias("_o", "_k"),
-        )
-        .select(
-            id_col,
-            (F.col("_b0") + F.col("_o")).alias("pos"),
-            "_k",
-        )
-        .localCheckpoint(eager=False)
-    )
-    from pygr_spark.operators.ranks import dist_grouped_dense_rank
-
-    cur = dist_grouped_dense_rank(
-        rows, id_col, "_k", "pos", out="rank", n_parts=n_parts
-    ).localCheckpoint(eager=False)
-
-    def _all_converged(state: DataFrame) -> bool:
-        return (
-            state.groupBy(id_col)
-            .agg((F.max("rank") == F.count(F.lit(1))).alias("_c"))
-            .filter(~F.col("_c"))
-            .limit(1)
-            .count()
-            == 0
-        )
-
-    off = 4
-    while off < max_len:
-        if _all_converged(cur):
-            break
-        nxt = cur.select(
-            F.col(id_col),
-            (F.col("pos") - off).alias("pos"),
-            F.col("rank").alias("_next"),
-        )
-        paired = (
-            cur.join(nxt, [id_col, "pos"], "left")
-            .select(
-                id_col,
-                "pos",
-                (
-                    F.col("rank") * pack_base
-                    + F.coalesce("_next", F.lit(0))
-                ).alias("_k"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur = dist_grouped_dense_rank(
-            paired, id_col, "_k", "pos", out="rank", n_parts=n_parts
-        ).localCheckpoint(eager=False)
-        off *= 2
-    return cur.select(
-        id_col,
-        F.col("pos").cast("long").alias("pos"),
-        F.col("rank").alias("sa_rank"),
-    )

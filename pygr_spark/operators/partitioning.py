@@ -21,11 +21,12 @@ sqlgraph.py:992-1031) onto Spark's:
   replaces the reference's union/LPO coordinate partitioning as the
   "reuse a partitioning across stages" primitive.
 
-- **slice_from_chunks**: random-access substring over sequences
+- **slices_from_chunks**: random-access substrings over sequences
   stored as fixed-width chunk rows (sources.fasta.chunked) — the
-  fseek-into-.pureseq path (seqdb.py:458-472) as a pruned chunk scan:
-  only the chunks overlapping [start, stop) are read (range predicate
-  on chunk_start → parquet row-group pruning at scale).
+  fseek-into-.pureseq path (seqdb.py:458-472) as a pruned chunk join:
+  each (id, start, stop) request reads only the chunks overlapping
+  [start, stop) (range predicate on chunk_start → parquet row-group
+  pruning at scale). A single slice is a one-row request frame.
 """
 
 from __future__ import annotations
@@ -105,8 +106,7 @@ def slices_from_chunks(
     ``(id, start, stop)`` requests; each is answered by joining ONLY
     the chunk rows it overlaps (chunk_start pushdown-able), clipping
     each chunk to the request, and concatenating in chunk order.
-    Returns ``(id, start, stop, letters)`` — the distributed form of
-    :func:`slice_from_chunks`, over the layout built by
+    Returns ``(id, start, stop, letters)``, over the layout built by
     ``pygr_spark.sources.fasta.chunked``."""
     j = chunks.join(slices, id_col).filter(
         (F.col("chunk_start") < F.col("stop"))
@@ -133,52 +133,6 @@ def slices_from_chunks(
                 lambda x: x["piece"],
             ),
         ).alias("letters")
-    )
-
-
-def slice_from_chunks(
-    chunks: DataFrame,
-    seq_id: str,
-    start: int,
-    stop: int,
-    chunk: int = 1_000_000,
-    id_col: str = "id",
-) -> DataFrame:
-    """Reassemble substring [start, stop) of one sequence from its
-    chunk rows, reading only overlapping chunks (predicate prunes the
-    scan). Returns a 1-row DataFrame (id, start, stop, letters)."""
-    first = start // chunk
-    last = (stop - 1) // chunk
-    hit = chunks.filter(
-        (F.col(id_col) == seq_id)
-        & (F.col("chunk_no") >= first)
-        & (F.col("chunk_no") <= last)
-    )
-    clipped = hit.select(
-        id_col,
-        "chunk_no",
-        F.substring(
-            F.col("chunk"),
-            (F.greatest(F.lit(start) - F.col("chunk_start"), F.lit(0)) + 1).cast("int"),
-            (
-                F.least(F.lit(stop) - F.col("chunk_start"), F.length("chunk"))
-                - F.greatest(F.lit(start) - F.col("chunk_start"), F.lit(0))
-            ).cast("int"),
-        ).alias("piece"),
-    )
-    return (
-        clipped.groupBy(id_col)
-        .agg(
-            F.concat_ws(
-                "", F.transform(F.array_sort(F.collect_list(F.struct("chunk_no", "piece"))), lambda x: x["piece"])
-            ).alias("letters")
-        )
-        .select(
-            F.col(id_col).alias("id"),
-            F.lit(start).alias("start"),
-            F.lit(stop).alias("stop"),
-            "letters",
-        )
     )
 
 

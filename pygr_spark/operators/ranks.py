@@ -2,7 +2,7 @@
 
 The single most reused 100 TB idiom in this engine: a global
 cumulative (rank, running sum) over a total order, computed WITHOUT a
-single-task global window. Three cooperating pieces:
+single-task global window. Four cooperating pieces:
 
 - :func:`det_range_pids` — deterministic, data-derived range buckets
   (the safe replacement for ``repartitionByRange`` +
@@ -12,8 +12,11 @@ single-task global window. Three cooperating pieces:
   totals (≤ n_parts rows, the documented small-by-contract collect)
   become broadcast offsets; the within-bucket running sum is a window
   KEYED by bucket id. No empty ``PARTITION BY`` anywhere.
-- :func:`dist_global_rank` — the rank-flavored stitch (dense global
-  ``row_number`` over (key, id)) built the same way.
+- :func:`dist_global_rank_multi` — the rank-flavored stitch: dense
+  global ``row_number`` over (key, id), for one or several keys in
+  one stitch.
+- :func:`dist_grouped_rank` — the same stitch per group, for a
+  low-cardinality group column.
 
 Used by the catalog's auc/ks/gains evaluation metrics, RFM quintile
 tiling, Spearman rank correlation, and anything else that needs "order
@@ -155,40 +158,6 @@ def dist_prefix_sums(
     return out.select(*keep), totals
 
 
-def dist_global_rank(
-    df: DataFrame, key_col: str, id_col: str, out: str = "rank"
-) -> DataFrame:
-    """Distributed dense global row_number over the total order
-    (key_col, id_col) — the rank-flavored sibling of the prefix-SUM
-    stitch: deterministic range buckets (:func:`det_range_pids`),
-    ≤n_parts-row per-bucket counts collected into prefix offsets,
-    then a pid-KEYED row_number window. No empty PARTITION BY
-    anywhere. Returns (id_col, out)."""
-    spark = df.sparkSession
-    parts = det_range_pids(df.select(id_col, key_col), key_col)
-    totals = {
-        r.pid: r.t
-        for r in parts.groupBy("pid")
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .collect()
-    }
-    offs, acc = [], 0
-    for pid in sorted(totals):
-        offs.append((pid, acc))
-        acc += totals[pid]
-    if not offs:
-        return df.select(id_col).limit(0).withColumn(
-            out, F.lit(0).cast("long")
-        )
-    off_df = spark.createDataFrame(offs, "pid int, off long")
-    w_in = Window.partitionBy("pid").orderBy(key_col, id_col)
-    return (
-        parts.join(F.broadcast(off_df), "pid")
-        .withColumn(out, (F.col("off") + F.row_number().over(w_in)).cast("long"))
-        .select(id_col, out)
-    )
-
-
 def dist_grouped_rank(
     df: DataFrame,
     group_col: str,
@@ -200,7 +169,7 @@ def dist_grouped_rank(
 ):
     """Distributed per-group row_number over the total order
     (key_col, id_col) WITHIN each group — the partitioned sibling of
-    :func:`dist_global_rank`, for "rank every row inside its segment"
+    :func:`dist_global_rank_multi`, for "rank every row inside its segment"
     workloads (per-language quality terciles, per-tenant quantile
     tiers) where one group can be far too large for the single task
     that ``Window.partitionBy(group)`` would hand it.
@@ -298,6 +267,7 @@ def dist_grouped_rank(
         return ranked, sizes
     return ranked
 
+
 def dist_global_rank_multi(
     df: DataFrame,
     keys: list[tuple[str, str]],
@@ -305,14 +275,14 @@ def dist_global_rank_multi(
     n_parts: int = 8,
 ) -> tuple[DataFrame, int]:
     """Several independent dense global row_numbers over one frame in
-    ONE stitch — the job-floor-amortized form of calling
-    :func:`dist_global_rank` k times (judge r10 item #1: each single
-    stitch pays an approxQuantile job + an offsets-collect job; RFM's
-    three tiles and Spearman's two rank passes paid that floor per
-    key). ``keys`` is ``[(key_col, out_col), ...]``; every key column
-    must share one integer dtype (the stack() melt below carries them
-    in a single column — mixing in a double would silently collapse
-    int64 distinctions beyond 2^53 and change tie ranks).
+    ONE stitch (judge r10 item #1: a separate stitch per key pays an
+    approxQuantile job + an offsets-collect job each; RFM's three
+    tiles and Spearman's two rank passes paid that floor per key).
+    ``keys`` is ``[(key_col, out_col), ...]``; one key is the plain
+    global rank. Every key column must share one integer dtype (the
+    stack() melt below carries them in a single column — mixing in a
+    double would silently collapse int64 distinctions beyond 2^53 and
+    change tie ranks).
 
     Shape: ONE approxQuantile job fetches every key's range
     boundaries together, the frame is melted (stack) to (which, key)
@@ -397,78 +367,3 @@ def dist_global_rank_multi(
         ]
     )
     return out, n_rows
-
-def dist_grouped_dense_rank(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    id_col: str,
-    out: str = "rank",
-    n_parts: int = 8,
-) -> DataFrame:
-    """Distributed per-group DENSE rank over a numeric key — the
-    dense sibling of :func:`dist_grouped_rank`, built for the sharded
-    suffix-array refinement (fmindex.suffix_ranks_sharded) where ONE
-    group (a genome-length document) must never serialize into a
-    single task's window.
-
-    Same two-pass stitch: deterministic range buckets on the key
-    (:func:`det_range_pids` — equal keys always land in one bucket,
-    so a dense run never straddles the seam), per-(group, bucket)
-    DISTINCT-key counts collected into per-group prefix offsets, then
-    a (group, pid)-KEYED dense_rank window plus the offset. The
-    collect is <= n_groups x n_parts rows under the same
-    low-cardinality-groups contract (and cap) as dist_grouped_rank.
-
-    ``key_col`` must be numeric and non-null. Returns
-    (id_col, group_col, out) with ``out`` starting at 1 per group.
-    """
-    spark = df.sparkSession
-    parts = det_range_pids(
-        df.select(id_col, group_col, key_col), key_col, n_parts
-    )
-    totals = (
-        parts.groupBy(group_col, "pid")
-        .agg(F.countDistinct(key_col).cast("long").alias("t"))
-        .limit(DIST_GROUPED_RANK_MAX_OFFSET_ROWS + 1)
-        .collect()
-    )
-    if len(totals) > DIST_GROUPED_RANK_MAX_OFFSET_ROWS:
-        raise ValueError(
-            "dist_grouped_dense_rank: > "
-            f"{DIST_GROUPED_RANK_MAX_OFFSET_ROWS} (group, bucket) "
-            "offset rows - group_col is high-cardinality; use plain "
-            "Window.partitionBy(group_col) instead"
-        )
-    by_group: dict = {}
-    for r in totals:
-        if r[group_col] is None:
-            raise ValueError(
-                "dist_grouped_dense_rank: group_col contains NULLs - "
-                "coalesce them to a sentinel group first"
-            )
-        by_group.setdefault(r[group_col], []).append((r["pid"], r["t"]))
-    offs = []
-    for g, rows in by_group.items():
-        acc = 0
-        for pid, t in sorted(rows):
-            offs.append((g, pid, acc))
-            acc += t
-    if not offs:
-        return (
-            df.select(id_col, group_col)
-            .limit(0)
-            .withColumn(out, F.lit(0).cast("long"))
-        )
-    gtype = dict(df.dtypes)[group_col]
-    off_df = spark.createDataFrame(
-        offs, f"{group_col} {gtype}, pid int, off long"
-    )
-    w_in = Window.partitionBy(group_col, "pid").orderBy(key_col)
-    return (
-        parts.join(F.broadcast(off_df), [group_col, "pid"])
-        .withColumn(
-            out, (F.col("off") + F.dense_rank().over(w_in)).cast("long")
-        )
-        .select(id_col, group_col, out)
-    )

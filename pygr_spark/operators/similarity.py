@@ -42,8 +42,8 @@ RBH_EXACT_MAX_A_ROWS = 2_000_000
 #: from a silent driver OOM into an actionable message.
 TRIPLET_MAX_ANCHOR_ROWS = 200_000
 
-#: cosine_topk_vectorized / ivf_topk collect the QUERY set to the
-#: driver and ship the quantized matrix in every task closure — the
+#: cosine_topk_vectorized collects the QUERY set to the driver and
+#: ships the quantized matrix in every task closure — the
 #: same hot-broadcast linear memory term triplet_mining bounds above,
 #: and the same ceiling: 200k 64-dim int64 rows ≈ 100 MiB of closure.
 #: A query workload is small by contract (a user's search batch); a
@@ -288,121 +288,6 @@ def cosine_topk_vectorized(
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-style ANN (the north star's 'IVF variant as the scale
-    path'): partition the corpus into inverted lists by
-    nearest-centroid assignment, probe only the ``n_probe`` lists
-    closest to each query, exact cosine re-rank inside them.
-
-    Centroids here are a deterministic sample of corpus vectors
-    (seeded hash pick) — a real deployment would k-means them; the
-    *distributed shape* is identical: centroid assignment is one
-    narrow pass, the probe is an equi-join on the list id, and cost
-    scales with corpus/n_centroids × n_probe instead of the full
-    corpus. Recall grows with n_probe (n_probe = n_centroids ⇒ exact).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .withColumn("_h", F.xxhash64(F.col(id_col) + seed))
-        .orderBy("_h")
-        .limit(n_centroids)
-        .collect()
-    )
-    c_mat = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in cent_rows], dtype=np.float64
-    )
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    # ship centroids as a broadcast, not a closure capture: closures
-    # re-serialize per task, broadcasts once per executor — at real
-    # IVF sizes (65k × 768 float64 ≈ 400 MB) that is the difference
-    # between workable and not
-    c_bc = corpus.sparkSession.sparkContext.broadcast(c_mat)
-
-    assign_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("list_id", T.IntegerType()),
-            T.StructField("qv", T.ArrayType(T.LongType())),
-            T.StructField("qn", T.LongType()),
-        ]
-    )
-
-    def assign(batches):
-        cm = c_bc.value
-
-        def _q(m):
-            mm = np.asarray(m, dtype=np.float64) * 1_000_000
-            return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
-
-        for pdf in batches:
-            mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            qmat = _q(mat)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = (mat / np.maximum(norms, 1e-12)) @ cm.T
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "list_id": sims.argmax(axis=1).astype(np.int32),
-                    "qv": list(qmat),
-                    "qn": (qmat * qmat).sum(axis=1),
-                }
-            )
-
-    lists = corpus.select(id_col, vec_col).mapInPandas(assign, assign_schema)
-
-    # query set is small by contract — enforced, not narrated (the
-    # probe-assignment loop below is driver-side per query row)
-    _enforce_query_cap(queries, query_id, "ivf_topk")
-    q_rows = queries.select(query_id, vec_col).collect()
-    probe_rows = []
-    for r in q_rows:
-        v = np.asarray(r[1], dtype=np.float64)
-        qv = np_quantize(v)
-        sims = (v / max(np.linalg.norm(v), 1e-12)) @ c_mat.T
-        for li in np.argsort(-sims)[:n_probe]:
-            probe_rows.append(
-                (int(r[0]), int(li), [int(x) for x in qv], int((qv * qv).sum()))
-            )
-    probes = corpus.sparkSession.createDataFrame(
-        probe_rows, "query_id long, list_id int, pv array<long>, pn long"
-    )
-
-    joined = lists.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sim = (
-        dot(F.col("qv"), F.col("pv"))
-        / (F.sqrt(F.col("qn").cast("double")) * F.sqrt(F.col("pn").cast("double")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        joined.withColumn("cos_sim", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos_sim", "rank")
-    )
-
-
 def ivf_topk_exact(
     corpus: DataFrame,
     queries: DataFrame,
@@ -413,16 +298,22 @@ def ivf_topk_exact(
     vec_col: str = "embedding",
     query_id: str = "query_id",
 ) -> DataFrame:
-    """Engine-portable IVF ANN: centroids are the ``n_centroids``
-    corpus vectors with the smallest md5-based hash of their id (a
-    deterministic sample any engine reproduces); nearest-centroid
+    """IVF-style ANN (the north star's 'IVF variant as the scale
+    path'): partition the corpus into inverted lists by
+    nearest-centroid assignment, probe only the ``n_probe`` lists
+    closest to each query, exact cosine re-rank inside them. Recall
+    grows with n_probe (n_probe = n_centroids ⇒ exact).
+
+    Engine-portable: centroids are the ``n_centroids`` corpus vectors
+    with the smallest md5-based hash of their id (a deterministic
+    sample any engine reproduces — a real deployment would k-means
+    them; the distributed shape is the same); nearest-centroid
     assignment and the probe ranking maximize cosine computed from
     quantized-integer dots (exact int64 → deterministic float64), with
-    centroid-id tiebreaks. Same distributed shape as :func:`ivf_topk`
-    — one narrow assignment pass (broadcast of 16 centroids), probe =
-    equi-join on the inverted-list id — but every step is
-    oracle-checkable. ``ivf_topk`` (vectorized mapInPandas) remains
-    the production fast path."""
+    centroid-id tiebreaks. One narrow assignment pass (broadcast
+    crossJoin of the centroids), probe = broadcast equi-join on the
+    inverted-list id; cost scales with corpus/n_centroids × n_probe
+    instead of the full corpus, and every step is oracle-checkable."""
     from pygr_spark.operators.dedup import md5_hash60
 
     v = corpus.select(
@@ -779,8 +670,7 @@ def multitable_buckets(
     Shape: an Arrow-batched ``mapInPandas`` matmul — ``signs(Q·Wᵀ)``
     per batch with int64 numpy (every product ≤ 1e6·1e6·64 « 2^63,
     so the arithmetic is EXACT and bit-identical to the SQL oracle's
-    per-term sums), then the k sign bits packed per table. This is
-    the same vectorized-assignment fast path ivf_topk uses: the
+    per-term sums), then the k sign bits packed per table. The
     L×k×64-term work per row is one BLAS-shaped batch product
     instead of either (a) a fused literal projection — overflows
     janino's 64KB method limit at adaptive plane counts and falls

@@ -487,85 +487,6 @@ def phrase_search(
     return out
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    k: int = 10,
-    id_col: str = "doc_id",
-    c: int = 60,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al. 2009) of several
-    per-query rankings — the standard way to combine lexical (BM25)
-    and dense (embedding) retrieval without score calibration, since
-    it uses only RANK positions: fused = Σ_r 1/(c + rank_r). Here the
-    term is the integer ``scale DIV (c + rank)`` so the fusion is
-    engine-exact; a doc absent from a ranking contributes 0.
-
-    Each input must carry (query_id, rank, id_col). Scale shape: the
-    union is rankings·k·queries rows — parameter-sized — so the
-    fusion aggregate and final top-k window cost nothing next to the
-    underlying retrievals.
-    """
-    from pyspark.sql import Window
-
-    parts = [
-        r.select(
-            "query_id",
-            id_col,
-            F.expr(f"{scale} DIV ({c} + rank)").cast("long").alias("_term"),
-        )
-        for r in rankings
-    ]
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
-    fused = allr.groupBy("query_id", id_col).agg(
-        F.sum("_term").cast("long").alias("rrf_score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col(id_col)
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "rrf_score")
-    )
-
-
-def tf_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text: str = "text",
-    tf: DataFrame | None = None,
-) -> DataFrame:
-    """Raw term-frequency ranking (no idf, no saturation): top-k docs
-    per query by summed tf over query terms — the 'dense-retrieval
-    stand-in' leg for rrf_fuse demonstrations and the baseline any
-    weighting must beat. One broadcast semi-filter + one keyed
-    aggregate, same shape as keyword_search_topk. ``tf`` accepts a
-    precomputed :func:`query_tf` table (summed per (query, doc) —
-    identical to counting the filtered token stream) so fusion legs
-    share one corpus explode."""
-    from pyspark.sql import Window
-
-    qterms = queries.select("query_id", F.lower(F.col("term")).alias("term"))
-    if tf is None:
-        tf = query_tf(df, queries, id_col, text)
-    scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .groupBy("query_id", id_col)
-        .agg(F.sum("tf").cast("long").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score")
-    )
-
-
 def champion_topk(
     df: DataFrame,
     queries: DataFrame,

@@ -108,33 +108,60 @@ def test_out_of_alphabet_pattern_is_zero(spark):
     assert [tuple(r) for r in fm_count(docs, "aNc").collect()] == [(0, 0)]
 
 
-def test_lcp_kernel_matches_distributed_climb(spark):
-    """The per-doc vectorized LCP kernel (r9 entry path) and the
-    prefix-doubling + binary-climb plan (the giant-single-sequence
-    path, lcp_via_ranks) produce IDENTICAL (doc, rank, pos, lcp)
-    tables — byte-string argsort == suffix string sort, vectorized
-    first-mismatch == the climb."""
-    import random
+def _py_suffix_lcp(rows):
+    """Pure-Python reference: {(doc, rank, pos, lcp)} from sorted
+    suffixes and the common-prefix length of rank neighbours."""
+    out = set()
+    for did, s in rows:
+        order = sorted(range(1, len(s) + 1), key=lambda p: s[p - 1:])
+        prev = None
+        for rank, pos in enumerate(order, start=1):
+            suf = s[pos - 1:]
+            lcp = 0
+            if prev is not None:
+                while lcp < min(len(prev), len(suf)) and prev[lcp] == suf[lcp]:
+                    lcp += 1
+            out.add((did, rank, pos, lcp))
+            prev = suf
+    return out
 
-    from pygr_spark.operators.fmindex import lcp_table_per_doc
-    from pygr_spark.queries import lcp_via_ranks
+
+def _lcp_docs():
+    import random
 
     random.seed(13)
     rows = [
         (d, "".join(random.choice("acgt") for _ in range(random.randint(4, 90))))
         for d in range(15)
     ]
-    # a deliberately repetitive doc (deep LCPs, the climb's hard case)
+    # a deliberately repetitive doc (deep LCPs)
     rows.append((99, "acgt" * 20 + "ac"))
-    # a run-doc whose adjacent LCPs reach 299: forces the r10
-    # segmented climb's escalation branch (phase-1 saturates at 32,
-    # the full climb's 256-step must fire) — every seam of the
-    # two-phase plan is crossed somewhere in 0..299
+    # a run-doc whose adjacent LCPs reach 299
     rows.append((98, "a" * 300))
+    # three random docs of 9..120 chars, period-3 and period-2
+    # repetition, unary runs and a short doc
+    random.seed(11)
+    rows += [
+        (200 + i, "".join(random.choices("acgt", k=random.randint(9, 120))))
+        for i in range(3)
+    ]
+    rows += [(203, "acg" * 30), (204, "t" * 26), (205, "acgtacg")]
+    rows += [(206, "ab" * 100 + "a"), (207, "a" * 17 + "b")]
+    return rows
+
+
+def test_lcp_kernel_matches_distributed_climb(spark):
+    """The per-doc vectorized LCP kernel returns exactly the
+    pure-Python (doc, rank, pos, lcp) table — byte-string argsort ==
+    suffix string sort, vectorized first-mismatch == the common-prefix
+    walk — on random, repetitive and unary-run docs."""
+    from pygr_spark.operators.fmindex import lcp_table_per_doc
+
+    rows = _lcp_docs()
     docs = spark.createDataFrame(rows, "doc_id long, seq string").repartition(4)
-    a = {tuple(r) for r in lcp_table_per_doc(docs).collect()}
-    b = {tuple(r) for r in lcp_via_ranks(docs).collect()}
-    assert a == b and len(a) == sum(len(s) for _, s in rows)
+    got = {tuple(r) for r in lcp_table_per_doc(docs).collect()}
+    assert got == _py_suffix_lcp(rows)
+    assert len(got) == sum(len(s) for _, s in rows)
 
 
 def test_lcp_kernel_prefix_suffix_order(spark):
@@ -147,82 +174,13 @@ def test_lcp_kernel_prefix_suffix_order(spark):
     assert got == [(0, 1, 2, 0), (0, 2, 1, 1)]
 
 
-def test_suffix_ranks_sharded_parity(spark):
-    """The sharded (no per-doc window) prefix-doubling path returns
-    IDENTICAL converged ranks to the window path — including on
-    repetitive docs whose deep LCPs force several doubling rounds —
-    and matches brute-force suffix order (judge r10 item #4: the
-    giant-single-sequence shard must be parity-pinned on small docs
-    before the 50M probe means anything)."""
-    import random
-
-    from pygr_spark.operators.fmindex import (
-        suffix_ranks,
-        suffix_ranks_sharded,
-    )
-
-    random.seed(7)
-    docs = [
-        (i, "".join(random.choices("acgt", k=random.randint(20, 300))))
-        for i in range(4)
-    ]
-    docs.append((4, "ab" * 100 + "a"))     # period-2 repetition
-    docs.append((5, "a" * 17 + "b"))       # unary run
-    df = spark.createDataFrame(docs, "doc_id long, seq string")
-    a = {(r.doc_id, r.pos): r.sa_rank for r in suffix_ranks(df).collect()}
-    b = {
-        (r.doc_id, r.pos): r.sa_rank
-        for r in suffix_ranks_sharded(df, n_parts=4).collect()
-    }
-    assert a == b and len(a) == sum(len(s) for _, s in docs)
-    did, s = docs[4]
-    order = sorted(range(1, len(s) + 1), key=lambda p: s[p - 1:])
-    truth = {p: r + 1 for r, p in enumerate(order)}
-    assert all(b[(did, p)] == truth[p] for p in truth)
-
-
-def test_suffix_ranks_sharded_multiblock(spark):
-    """blk=8 forces every fixture doc across MANY seed blocks, so the
-    multi-block stitch path actually runs (r11 advice: with the 1 MiB
-    constant no test doc spanned two blocks): the 3-char overlap that
-    completes trailing 4-byte seeds, the _b0+_o position arithmetic,
-    and the final-block out-of-range-reads-as-0 rule must all hold for
-    ranks to stay a permutation in suffix order."""
-    import random
-
-    from pygr_spark.operators.fmindex import (
-        suffix_ranks,
-        suffix_ranks_sharded,
-    )
-
-    random.seed(11)
-    docs = [
-        (i, "".join(random.choices("acgt", k=random.randint(9, 120))))
-        for i in range(3)
-    ]
-    docs.append((3, "acg" * 30))           # period-3 repetition across blocks
-    docs.append((4, "t" * 26))             # unary run, non-multiple of blk
-    docs.append((5, "acgtacg"))            # shorter than one block
-    df = spark.createDataFrame(docs, "doc_id long, seq string")
-    a = {(r.doc_id, r.pos): r.sa_rank for r in suffix_ranks(df).collect()}
-    b = {
-        (r.doc_id, r.pos): r.sa_rank
-        for r in suffix_ranks_sharded(df, n_parts=4, blk=8).collect()
-    }
-    assert a == b and len(a) == sum(len(s) for _, s in docs)
-
-
 def test_lcp_kernel_no_lcp_matches_suffix_ranks(spark):
-    """compute_lcp=False (the r12 suffix_array entry path) returns
-    exactly suffix_ranks' (doc, pos, sa_rank) permutation with the
-    lcp column omitted — the mismatch scan is skipped, nothing else
-    changes."""
+    """compute_lcp=False (the suffix_array entry path) returns exactly
+    the reference (doc, pos, sa_rank) permutation with the lcp column
+    omitted — the mismatch scan is skipped, nothing else changes."""
     import random
 
-    from pygr_spark.operators.fmindex import (
-        lcp_table_per_doc,
-        suffix_ranks,
-    )
+    from pygr_spark.operators.fmindex import lcp_table_per_doc
 
     random.seed(7)
     rows = [
@@ -233,6 +191,23 @@ def test_lcp_kernel_no_lcp_matches_suffix_ranks(spark):
     docs = spark.createDataFrame(rows, "doc_id long, seq string")
     out = lcp_table_per_doc(docs, compute_lcp=False)
     assert out.columns == ["doc_id", "sa_rank", "pos"]
-    a = {(r.doc_id, r.pos): r.sa_rank for r in out.collect()}
-    b = {(r.doc_id, r.pos): r.sa_rank for r in suffix_ranks(docs).collect()}
-    assert a == b and len(a) == sum(len(s) for _, s in rows)
+    got = {(r.doc_id, r.pos): r.sa_rank for r in out.collect()}
+    want = {(d, pos): rank for d, rank, pos, _ in _py_suffix_lcp(rows)}
+    assert got == want and len(got) == sum(len(s) for _, s in rows)
+
+
+def test_lcp_kernel_length_cap(spark):
+    """The kernel's n×n scratch is bounded: a doc of LCP_MAX_DOC_CHARS
+    chars runs, one char more raises, naming the doc id and the cap."""
+    from pygr_spark.operators.fmindex import LCP_MAX_DOC_CHARS, lcp_table_per_doc
+
+    cap = LCP_MAX_DOC_CHARS
+    ok = spark.createDataFrame([(1, "acgt" * (cap // 4))], "doc_id long, seq string")
+    assert lcp_table_per_doc(ok, compute_lcp=False).count() == cap
+    big = spark.createDataFrame(
+        [(1, "acg"), (7, "a" * (cap + 1))], "doc_id long, seq string"
+    )
+    with pytest.raises(
+        Exception, match=f"doc 7 has {cap + 1} chars, over LCP_MAX_DOC_CHARS = {cap}"
+    ):
+        lcp_table_per_doc(big).collect()

@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 from pygr_spark.operators.partitioning import (
     bucketed_table,
     salted_join,
-    slice_from_chunks,
+    slices_from_chunks,
     write_bucketed,
 )
 from pygr_spark.sources.fasta import chunked
@@ -82,21 +82,19 @@ def test_bucketed_join_has_no_shuffle(spark):
 def test_slice_from_chunks(spark):
     df = spark.createDataFrame([("s", "abcdefghijklmnop")], ["id", "seq"])
     ch = chunked(df, chunk=4)
-    out = slice_from_chunks(ch, "s", 2, 11, chunk=4).collect()
-    assert len(out) == 1
-    assert out[0].letters == "cdefghijk"
-    # slice inside one chunk
-    assert slice_from_chunks(ch, "s", 5, 7, chunk=4).collect()[0].letters == "fg"
-    # full-length
-    assert (
-        slice_from_chunks(ch, "s", 0, 16, chunk=4).collect()[0].letters
-        == "abcdefghijklmnop"
+    req = spark.createDataFrame(
+        [("s", 2, 11), ("s", 5, 7), ("s", 0, 16)],
+        "id string, start long, stop long",
     )
+    out = {(r.start, r.stop): r.letters for r in slices_from_chunks(ch, req).collect()}
+    assert out == {
+        (2, 11): "cdefghijk",
+        (5, 7): "fg",  # slice inside one chunk
+        (0, 16): "abcdefghijklmnop",  # full length
+    }
 
 
 def test_slices_from_chunks_batch(spark):
-    from pygr_spark.operators.partitioning import slices_from_chunks
-
     df = spark.createDataFrame(
         [("a", "abcdefghijklmnop"), ("b", "xyz")], ["id", "seq"]
     )

@@ -5,8 +5,8 @@
 - det_range_pids: pid is monotone in the key (bucket i sorts wholly
   before bucket i+1) and a pure function of the data (two calls on
   the same input agree row-by-row).
-- dist_global_rank: ranks are a bijection onto 1..N matching the
-  (key, id) sort order exactly.
+- dist_global_rank_multi (one key): ranks are a bijection onto 1..N
+  matching the (key, id) sort order exactly.
 - dist_prefix_sums: every cum column equals the single-machine
   cumulative sum over the total order (inclusive and exclusive), and
   the returned grand totals equal the plain column sums.
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from pygr_spark.operators.ranks import (
     det_range_pids,
-    dist_global_rank,
+    dist_global_rank_multi,
     dist_grouped_rank,
     dist_prefix_sums,
 )
@@ -75,9 +75,8 @@ def test_bucket_monotonicity_and_determinism(spark, data):
 @SET_HEAVY
 def test_global_rank_bijectivity(spark, data):
     df = _df(spark, data)
-    got = {
-        r.id: r.rank for r in dist_global_rank(df, "k", "id").collect()
-    }
+    ranks, _n = dist_global_rank_multi(df, [("k", "rank")], "id")
+    got = {r.id: r.rank for r in ranks.collect()}
     n = len(data)
     assert sorted(got.values()) == list(range(1, n + 1))
     want_order = sorted(range(n), key=lambda i: (data[i][0], i))

@@ -1,11 +1,11 @@
-"""Round-6 additions: suffix array (prefix doubling), RRF fusion,
-champion lists, largest-remainder mix allocation, exact OLS trend."""
+"""Round-6 additions: suffix array, champion lists, largest-remainder
+mix allocation, exact OLS trend."""
 
 from pyspark.sql import functions as F
 
 
 def test_suffix_ranks_match_python_sort(spark):
-    from pygr_spark.operators.fmindex import suffix_ranks
+    from pygr_spark.operators.fmindex import lcp_table_per_doc
 
     seqs = {
         1: "banana",
@@ -13,47 +13,18 @@ def test_suffix_ranks_match_python_sort(spark):
         3: "aaaa",
         4: "mississippi",
         5: "a",
-        6: "ab" * 40,      # repetitive: forces doubling past the q=8 seed
+        6: "ab" * 40,      # repetitive: every 8-gram repeats
         7: "a" * 100,      # worst case: every 8-gram identical
     }
     df = spark.createDataFrame(list(seqs.items()), ["doc_id", "seq"])
     got = {
         (r.doc_id, r.pos): r.sa_rank
-        for r in suffix_ranks(df, max_len=128).collect()
+        for r in lcp_table_per_doc(df, compute_lcp=False).collect()
     }
     for d, s in seqs.items():
         order = sorted(range(1, len(s) + 1), key=lambda i: s[i - 1:])
         for rank, pos in enumerate(order, start=1):
             assert got[(d, pos)] == rank, (d, pos, s)
-
-
-def test_suffix_ranks_without_checkpoint_same_result(spark):
-    from pygr_spark.operators.fmindex import suffix_ranks
-
-    df = spark.createDataFrame([(1, "abracadabra")], ["doc_id", "seq"])
-    a = sorted(map(tuple, suffix_ranks(df, max_len=16, checkpoint=True).collect()))
-    b = sorted(map(tuple, suffix_ranks(df, max_len=16, checkpoint=False).collect()))
-    assert a == b
-
-
-def test_rrf_fuse_combines_rank_positions(spark):
-    from pygr_spark.operators.textstats import rrf_fuse
-
-    # leg A ranks d1 > d2; leg B ranks d2 > d1 > d3 — d3 appears in
-    # one leg only and must still be fused (missing leg contributes 0)
-    a = spark.createDataFrame(
-        [(1, 1, 101), (1, 2, 102)], ["query_id", "rank", "doc_id"]
-    )
-    b = spark.createDataFrame(
-        [(1, 1, 102), (1, 2, 101), (1, 3, 103)], ["query_id", "rank", "doc_id"]
-    )
-    out = {r.doc_id: (r.rank, r.rrf_score) for r in rrf_fuse([a, b], k=10).collect()}
-    t = lambda r: 1_000_000 // (60 + r)
-    assert out[101][1] == t(1) + t(2)
-    assert out[102][1] == t(2) + t(1)
-    assert out[103][1] == t(3)
-    # ties (101 vs 102 have equal scores) break by doc_id
-    assert out[101][0] == 1 and out[102][0] == 2 and out[103][0] == 3
 
 
 def test_champion_topk_excludes_non_champions(spark):
@@ -451,19 +422,20 @@ def test_lcp_array_matches_bruteforce(spark, sf_dir):
 
 
 def test_lcp_climb_on_repetitive_strings(spark):
-    """The binary climb must be exact on adversarial inputs: long
-    runs (every LCP near maximal) and period-2 repeats (climb steps
-    land mid-period), including at non-power-of-two lengths."""
-    from pygr_spark.operators.fmindex import suffix_ranks
-    from pygr_spark.queries import _LCP_STEPS, q_lcp_array  # noqa: F401
+    """The oracle's binary climb (_LCP_STEPS) must be exact on
+    adversarial inputs: long runs (every LCP near maximal) and
+    period-2 repeats (climb steps land mid-period), including at
+    non-power-of-two lengths. Ranks come from the kernel."""
+    from pyspark.sql import Window
+
+    from pygr_spark.operators.fmindex import lcp_table_per_doc
+    from pygr_spark.queries import _LCP_STEPS
 
     cases = {1: "a" * 100, 2: "acacacacacac", 3: "aacaacaacaat", 4: "acgt" * 31}
     df = [(i, s) for i, s in cases.items()]
-    docs = __import__("pyspark").sql.SparkSession.getActiveSession().createDataFrame(
-        df, ["doc_id", "seq"]
-    )
-    ranks = suffix_ranks(docs, max_len=512)
-    w = __import__("pyspark").sql.Window.partitionBy("doc_id").orderBy("sa_rank")
+    docs = spark.createDataFrame(df, "doc_id long, seq string")
+    ranks = lcp_table_per_doc(docs, compute_lcp=False)
+    w = Window.partitionBy("doc_id").orderBy("sa_rank")
     steps = ", ".join(str(s) for s in _LCP_STEPS)
     climb = (
         f"aggregate(array({steps}), 0, (k, step) -> k + "

@@ -43,13 +43,13 @@ def test_lsh_ann_finds_planted_neighbor(spark):
 
 
 def test_ivf_topk(spark):
-    from pygr_spark.operators.similarity import ivf_topk
+    from pygr_spark.operators.similarity import ivf_topk_exact
 
     vecs = _vecs(spark)
     queries = vecs.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ivf_topk(vecs, queries, n_centroids=8, n_probe=8, k=3).collect()
+    out = ivf_topk_exact(vecs, queries, n_centroids=8, n_probe=8, k=3).collect()
     # full probe (n_probe == n_centroids) is exact: planted near-copy wins
     assert any(r.vec_id == 100 and r.rank == 1 for r in out)
     exact = cosine_topk(vecs, queries, k=3).collect()
@@ -57,7 +57,7 @@ def test_ivf_topk(spark):
         (r.vec_id, r.rank) for r in exact
     )
     # partial probe still finds the planted neighbor (same list w.h.p.)
-    part = ivf_topk(vecs, queries, n_centroids=8, n_probe=3, k=3).collect()
+    part = ivf_topk_exact(vecs, queries, n_centroids=8, n_probe=3, k=3).collect()
     assert any(r.vec_id == 100 and r.rank == 1 for r in part)
 
 
@@ -195,8 +195,8 @@ def test_ann_query_cap_enforced(spark, monkeypatch):
     ENFORCED before the collect (mirrors triplet_mining's anchor cap
     and rbh_exact's A-side cap — judge r9: a corpus-linear query set
     must fail loudly, not OOM the driver): past ANN_MAX_QUERY_ROWS
-    both cosine_topk_vectorized and ivf_topk raise with a pointer at
-    the never-collecting LSH/IVF bucket paths."""
+    cosine_topk_vectorized raises with a pointer at the
+    never-collecting LSH/IVF bucket paths."""
     import pytest
 
     import pygr_spark.operators.similarity as sim
@@ -212,12 +212,9 @@ def test_ann_query_cap_enforced(spark, monkeypatch):
     monkeypatch.setattr(sim, "ANN_MAX_QUERY_ROWS", 4)
     with pytest.raises(ValueError, match="query set exceeds 4 rows"):
         sim.cosine_topk_vectorized(corpus, queries, k=2)
-    with pytest.raises(ValueError, match="query set exceeds 4 rows"):
-        sim.ivf_topk(corpus, queries, n_centroids=4, n_probe=2, k=2)
-    # at or under the cap both paths are untouched
+    # at or under the cap the path is untouched
     small = queries.limit(4)
     assert sim.cosine_topk_vectorized(corpus, small, k=2).count() > 0
-    assert sim.ivf_topk(corpus, small, n_centroids=4, n_probe=4, k=2).count() > 0
 
 
 def test_triplet_mining_zero_norm_vectors(spark):

@@ -103,8 +103,8 @@ FM_INPUTS = {
     "one_row": ([(0, "acgtacgt")], "ac", {0: 2}),
     # a repeated doc_id is one document whose text is read twice
     "duplicated": ([(0, "acga"), (0, "acga"), (1, "gg")], "ga", None),
-    # a null doc_id never key-joins its own Occ rows (both paths)
-    "null_key": ([(None, "acgacg"), (1, "acg")], "ac", None),
+    # a null doc_id is one document, as in the oracle's PARTITION BY
+    "null_key": ([(None, "acgacg"), (1, "acg")], "ac", {None: 2, 1: 1}),
     "null_value": ([(0, None), (1, "acg")], "ac", _FM_ERROR),
     "zero_counts": ([(0, ""), (1, "tttt")], "ac", {0: 0, 1: 0}),
     "hot_key": ([(0, "acg" * 300), (1, "a")], "ac", {0: 300, 1: 0}),
