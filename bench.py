@@ -205,25 +205,33 @@ HEADLINE3 = [
 RUNS_PER_QUERY = 2
 
 
-def run_query(spark, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = QUERIES[name](spark, sf_dir)
-    # force full computation of every output column without collecting:
-    # xxhash64 over all columns -> single long aggregate
+def force(df) -> None:
+    """Compute every output column without collecting rows: xxhash64
+    over all columns, folded into one bit_xor long."""
     df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")).agg(
         F.expr("bit_xor(h)")
     ).collect()
-    dt = time.perf_counter() - t0
-    # release blocks the query pinned (localCheckpoints of iterative
-    # ops, caches): without this, block-manager memory ratchets up
-    # across the 50+ query session and late queries pay the GC bill —
-    # measured 4x inflation on the last headline entries
+
+
+def release(spark) -> None:
+    """Release the blocks a query pinned (localCheckpoints of iterative
+    ops, caches): without this, block-manager memory ratchets up
+    across the 50+ query session and late queries pay the GC bill —
+    measured 4x inflation on the last headline entries."""
     for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         try:
             rdd.unpersist(False)
         except Exception:
             pass
     spark.catalog.clearCache()
+
+
+def run_query(spark, name: str, sf_dir: str) -> float:
+    """Build and force one entry; returns the seconds that took."""
+    t0 = time.perf_counter()
+    force(QUERIES[name](spark, sf_dir))
+    dt = time.perf_counter() - t0
+    release(spark)
     return dt
 
 

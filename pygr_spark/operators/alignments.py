@@ -129,36 +129,28 @@ def two_hop_join(
 def edge_letters(
     edges: DataFrame,
     sequences: DataFrame,
-    src_id: str = "src_id",
-    src_start: str = "src_start",
-    src_stop: str = "src_stop",
-    dst_id: str = "dst_id",
-    dst_start: str = "dst_start",
-    dst_stop: str = "dst_stop",
     dst_ori: str | None = None,
-    id_col: str = "id",
-    seq: str = "seq",
 ) -> DataFrame:
     """Attach the aligned letter strings of both sides of each edge
     (J10 letter zip input). Sequences are broadcast; genome-scale
     callers pre-chunk instead (sources.fasta.chunked)."""
     seqs = F.broadcast(
-        sequences.select(F.col(id_col).alias("_sid"), F.col(seq).alias("_sseq"))
+        sequences.select(F.col("id").alias("_sid"), F.col("seq").alias("_sseq"))
     )
     out = (
-        edges.join(seqs, F.col(src_id) == F.col("_sid"))
+        edges.join(seqs, F.col("src_id") == F.col("_sid"))
         .withColumn(
             "src_letters",
             F.expr(
-                f"substring(_sseq, CAST({src_start}+1 AS INT), CAST({src_stop}-{src_start} AS INT))"
+                "substring(_sseq, CAST(src_start+1 AS INT), CAST(src_stop-src_start AS INT))"
             ),
         )
         .drop("_sid", "_sseq")
-        .join(seqs, F.col(dst_id) == F.col("_sid"))
+        .join(seqs, F.col("dst_id") == F.col("_sid"))
         .withColumn(
             "dst_letters",
             F.expr(
-                f"substring(_sseq, CAST({dst_start}+1 AS INT), CAST({dst_stop}-{dst_start} AS INT))"
+                "substring(_sseq, CAST(dst_start+1 AS INT), CAST(dst_stop-dst_start AS INT))"
             ),
         )
         .drop("_sid", "_sseq")
@@ -173,21 +165,19 @@ def edge_letters(
     return out
 
 
-def identity_stats(df: DataFrame,
-                   src_letters: str = "src_letters",
-                   dst_letters: str = "dst_letters") -> DataFrame:
+def identity_stats(df: DataFrame) -> DataFrame:
     """nidentity / pIdentity / pAligned per edge row (sequence.py:
     706-724, 789-799). Assumes 1:1 aligned letter strings (gap-free
     match intervals — the Seq2SeqEdge invariant). length(mode=max)
     per the reference default (sequence.py:702-704)."""
-    a = F.split(F.col(src_letters), "")
-    b = F.split(F.col(dst_letters), "")
+    a = F.split(F.col("src_letters"), "")
+    b = F.split(F.col("dst_letters"), "")
     matches = F.zip_with(
         a, b, lambda x, y: F.when(F.lower(x) == F.lower(y), 1).otherwise(0)
     )
     nident = F.aggregate(matches, F.lit(0).cast("long"), lambda acc, x: acc + x)
-    aligned = F.least(F.length(src_letters), F.length(dst_letters)).cast("long")
-    length_max = F.greatest(F.length(src_letters), F.length(dst_letters)).cast("long")
+    aligned = F.least(F.length("src_letters"), F.length("dst_letters")).cast("long")
+    length_max = F.greatest(F.length("src_letters"), F.length("dst_letters")).cast("long")
     return (
         df.withColumn("n_identity", nident)
         .withColumn("n_aligned", aligned)
@@ -200,7 +190,6 @@ def conservation_filter(
     df: DataFrame,
     p_identity_min: float | None = None,
     min_align_size: int | None = None,
-    max_align_size: int | None = None,
 ) -> DataFrame:
     """P9 (cnestedlist.pyx:841-897): drop edges failing conservation
     bounds. Run after identity_stats."""
@@ -209,23 +198,17 @@ def conservation_filter(
         out = out.filter(F.col("p_identity") >= p_identity_min)
     if min_align_size is not None:
         out = out.filter(F.col("n_aligned") >= min_align_size)
-    if max_align_size is not None:
-        out = out.filter(F.col("n_aligned") <= max_align_size)
     return out
 
 
-def longest_conserved_segment(
-    df: DataFrame,
-    src_letters: str = "src_letters",
-    dst_letters: str = "dst_letters",
-) -> DataFrame:
+def longest_conserved_segment(df: DataFrame) -> DataFrame:
     """A8 (sequence.py:726-787): the longest contiguous run of exact
     identity per edge — gaps-and-islands over exploded positions
     (relational form of the reference's quadratic segment scan).
     Adds seg_start/seg_stop/seg_len (NULL when no identical letter)."""
     keyed = df.withColumn("_edge_id", F.monotonically_increasing_id())
-    a = F.split(F.col(src_letters), "")
-    b = F.split(F.col(dst_letters), "")
+    a = F.split(F.col("src_letters"), "")
+    b = F.split(F.col("dst_letters"), "")
     eq = F.zip_with(a, b, lambda x, y: (F.lower(x) == F.lower(y)).cast("int"))
     pos = keyed.select("_edge_id", F.posexplode(eq).alias("pos", "is_match"))
     w = Window.partitionBy("_edge_id").orderBy("pos")
@@ -253,26 +236,20 @@ def longest_conserved_segment(
 # ---------------------------------------------------------------------------
 
 
-def letter_graph(
-    df: DataFrame,
-    id_col: str = "id",
-    seq: str = "seq",
-    start: int = 0,
-    stop: int | None = None,
-) -> DataFrame:
+def letter_graph(df: DataFrame, start: int = 0, stop: int | None = None) -> DataFrame:
     """A bounded sequence slice as a linear letter graph: rows
     (id, pos, letter, next_pos, next_letter) — lead() adjacency
     (sequence.py:362-374; keep slices bounded, SURVEY.md §7.3)."""
     sliced = df.select(
-        F.col(id_col),
+        F.col("id"),
         F.substring(
-            F.col(seq), start + 1, (stop - start) if stop is not None else F.length(seq)
+            F.col("seq"), start + 1, (stop - start) if stop is not None else F.length("seq")
         ).alias("_s"),
     )
     pos = sliced.select(
-        id_col, F.posexplode(F.split(F.col("_s"), "(?!^)")).alias("pos", "letter")
+        "id", F.posexplode(F.split(F.col("_s"), "(?!^)")).alias("pos", "letter")
     ).filter(F.length("letter") > 0)
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("id").orderBy("pos")
     return (
         pos.withColumn("pos", F.col("pos") + start)
         .withColumn("next_pos", F.lead("pos").over(w))

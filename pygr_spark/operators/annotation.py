@@ -51,9 +51,7 @@ def project_annotations(
     return j.filter(s < e).withColumn("letters", letters).drop("_seq_id", "_seq")
 
 
-def prefix_union(
-    dfs: dict[str, DataFrame], id_col: str = "id"
-) -> DataFrame:
+def prefix_union(dfs: dict[str, DataFrame]) -> DataFrame:
     """PrefixUnionDict (seqdb.py:676-878): union N keyed tables under
     namespaced ids "prefix.id". Columns are aligned by name with NULLs
     for missing (allowMissingColumns), matching the reference's
@@ -61,7 +59,7 @@ def prefix_union(
     out = None
     for prefix, df in dfs.items():
         d = df.withColumn(
-            id_col, F.concat(F.lit(prefix), F.lit("."), F.col(id_col).cast("string"))
+            "id", F.concat(F.lit(prefix), F.lit("."), F.col("id").cast("string"))
         ).withColumn("db_prefix", F.lit(prefix))
         out = d if out is None else out.unionByName(d, allowMissingColumns=True)
     if out is None:
@@ -79,31 +77,22 @@ def split_prefix(id_val: Column) -> tuple[Column, Column]:
     )
 
 
-def interval_mask(
-    df: DataFrame,
-    mask: DataFrame,
-    keys: list[str],
-    start: str = "start",
-    stop: str = "stop",
-    mask_start: str = "start",
-    mask_stop: str = "stop",
-    clip: bool = True,
-) -> DataFrame:
+def interval_mask(df: DataFrame, mask: DataFrame, keys: list[str]) -> DataFrame:
     """SeqFilterDict semijoin (P7, sequence.py:604-629): keep rows
-    overlapping the (broadcast) mask on the same key; optionally clip
-    to the mask (reference returns the intersection). Rows with no
+    overlapping the (broadcast) mask on the same key, clipped to the
+    mask (the reference returns the intersection). Rows with no
     overlapping mask disappear — the KeyError path."""
     m = mask.select(
         *[F.col(k).alias(f"_mk_{k}") for k in keys],
-        F.col(mask_start).alias("_m_start"),
-        F.col(mask_stop).alias("_m_stop"),
+        F.col("start").alias("_m_start"),
+        F.col("stop").alias("_m_stop"),
     )
-    cond = overlaps(F.col(start), F.col(stop), F.col("_m_start"), F.col("_m_stop"))
+    cond = overlaps(F.col("start"), F.col("stop"), F.col("_m_start"), F.col("_m_stop"))
     for k in keys:
         cond = (F.col(k) == F.col(f"_mk_{k}")) & cond
-    j = df.join(F.broadcast(m), cond)
-    if clip:
-        j = j.withColumn(start, F.greatest(F.col(start), F.col("_m_start"))).withColumn(
-            stop, F.least(F.col(stop), F.col("_m_stop"))
-        )
+    j = (
+        df.join(F.broadcast(m), cond)
+        .withColumn("start", F.greatest(F.col("start"), F.col("_m_start")))
+        .withColumn("stop", F.least(F.col("stop"), F.col("_m_stop")))
+    )
     return j.drop(*[f"_mk_{k}" for k in keys], "_m_start", "_m_stop")

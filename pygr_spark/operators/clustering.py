@@ -99,16 +99,10 @@ def _with_assignment(df: DataFrame, cents_col, keep: list[str]) -> DataFrame:
     )
 
 
-def kmeans_spherical(
-    corpus: DataFrame,
-    k: int = 8,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_spherical(corpus: DataFrame, k: int = 8, n_iter: int = 2) -> DataFrame:
     """Exact-integer spherical k-means: ``n_iter`` Lloyd rounds
     (assign → integer floor-mean recompute), then a final assignment.
-    Returns (id_col, cluster_id, cos_center, qv, qn) — qv/qn retained
+    Returns (vec_id, cluster_id, cos_center, qv, qn) — qv/qn retained
     so downstream stages (SemDeDup's pair verify) reuse the quantized
     vectors without recomputing them.
 
@@ -125,13 +119,13 @@ def kmeans_spherical(
     # serves every later reference; ContextCleaner reclaims it when
     # the plan is garbage-collected.
     v = (
-        corpus.select(F.col(id_col), quantized(F.col(vec_col)).alias("qv"))
+        corpus.select(F.col("vec_id"), quantized(F.col("embedding")).alias("qv"))
         .withColumn("qn", sqnorm(F.col("qv")))
         .localCheckpoint(eager=True)
     )
     init = (
-        v.withColumn("_h", md5_hash60(F.col(id_col).cast("string")))
-        .orderBy("_h", id_col)
+        v.withColumn("_h", md5_hash60(F.col("vec_id").cast("string")))
+        .orderBy("_h", "vec_id")
         .limit(k)
         .select("qv", "qn")
         .collect()  # k rows — small-by-contract (MLlib does the same)
@@ -204,8 +198,6 @@ def semdedup(
     k: int = 8,
     n_iter: int = 2,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup: cluster embeddings with spherical k-means, then inside
@@ -226,12 +218,12 @@ def semdedup(
     # once, not three times (it is also too large for janino when a
     # join stage fuses two copies of it into one method)
     assigned = (
-        kmeans_spherical(corpus, k, n_iter, id_col, vec_col)
-        .select(F.col(id_col).alias("_id"), "cluster_id", "qv", "qn")
+        kmeans_spherical(corpus, k, n_iter)
+        .select(F.col("vec_id").alias("_id"), "cluster_id", "qv", "qn")
         .localCheckpoint(eager=False)
     )
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(corpus.select("embedding").first()[0])
     a = assigned.select(
         F.col("_id").alias("a_id"),
         "cluster_id",
@@ -257,7 +249,7 @@ def semdedup(
     return assigned.join(
         removed, assigned["_id"] == removed["_rm"], "left"
     ).select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("vec_id"),
         "cluster_id",
         F.when(F.col("_rm").isNull(), F.lit(1)).otherwise(F.lit(0)).cast("long").alias("kept"),
     )

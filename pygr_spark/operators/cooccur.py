@@ -27,7 +27,6 @@ def copurchase_topn(
     basket_col: str,
     item_col: str,
     top_n: int = 3,
-    min_pair_count: int = 2,
     max_basket: int = 1000,
 ) -> DataFrame:
     """Top-``top_n`` co-items per item by shared-basket count.
@@ -49,7 +48,7 @@ def copurchase_topn(
         .filter(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("pair_count"))
-        .filter(F.col("pair_count") >= min_pair_count)
+        .filter(F.col("pair_count") >= 2)
     )
     both = pairs.select(
         F.col("p1").alias("item"),

@@ -31,7 +31,14 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pygr_spark.tuning import spread
+
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
+#: MinHash signature length, LSH band count and permutation seed; the
+#: catalog's SQL oracle builds the same scheme from these.
+MINHASH_PERMS = 32
+MINHASH_BANDS = 8
+MINHASH_SEED = 42
 
 
 def md5_hash60(col: Column) -> Column:
@@ -52,26 +59,8 @@ def md5_band_hash(b: int, parts: list[Column]) -> Column:
     )
 
 
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Repartition to cluster parallelism before heavy per-row array
-    work. A small parquet arrives as ONE partition and would pin all
-    shingling/hashing to a single core; at real scale the scan already
-    has many partitions and this is a cheap hash exchange on the id."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        # cheap probe: .rdd.getNumPartitions() costs ~0.8s of plan
-        # conversion per call; inputFiles() is metadata-only. Few
-        # files ⇒ few scan partitions (single-row-group driver files).
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if 0 < n_files < target:
-        return df.repartition(target, key)
-    return df
-
-
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Array of distinct n-word shingles from a MATERIALIZED token-array
+def shingles_from_tokens(toks: Column) -> Column:
+    """Array of distinct 3-word shingles from a MATERIALIZED token-array
     column. ``toks`` must be a bound column reference, not a compound
     expression: the transform lambda below evaluates its argument once
     per index element, so passing ``split(...)`` directly would
@@ -79,36 +68,34 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """
     # guard: Spark sequence(1, 0) DESCENDS — short docs must yield []
     idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
+        F.size(toks) >= 3, F.sequence(F.lit(1), F.size(toks) - 2)
     ).otherwise(F.array().cast("array<int>"))
     return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
+def word_shingles(text: Column) -> Column:
     """Shingles straight from a text column — convenience form for
     small inputs/tests; hot paths materialize tokens first (see
     shingles_from_tokens)."""
-    return shingles_from_tokens(F.split(F.trim(F.lower(text)), r"\s+"), n)
+    return shingles_from_tokens(F.split(F.trim(F.lower(text)), r"\s+"))
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str = "doc_id", text: str = "text", n: int = 3
-) -> DataFrame:
+def shingle_rows(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word-shingle rows (_id, _s) — the hot-path shingling.
 
     posexplode tokens + ``lead`` window instead of a higher-order
     ``transform``: identical output, but every stage stays inside
     whole-stage codegen (~4× faster at sf0.1 — Spark interprets HOF
-    lambdas per element). The window shuffle reuses the ``_spread``
+    lambdas per element). The window shuffle reuses the ``spread``
     hash partitioning on the id, and the distinct's clustering is
     satisfied by it too, so the whole thing costs ONE exchange."""
     from pyspark.sql import Window as W
 
-    toks = _spread(df, id_col).select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.trim(F.lower(F.col(text))), r"\s+")).alias(
+    toks = spread(df, "doc_id").select(
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
             "_p", "_t"
         ),
     )
@@ -123,12 +110,10 @@ def shingle_rows(
     ).dropDuplicates(["_id", "_s"])
 
 
-def exact_dedup(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """One canonical row per identical text: (doc_id=min, n_copies)."""
-    return df.groupBy(text).agg(
-        F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies")
+    return df.groupBy("text").agg(
+        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
     )
 
 
@@ -139,8 +124,6 @@ def exact_dedup(
 
 def jaccard_join(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
@@ -152,7 +135,7 @@ def jaccard_join(
     """
     # one shingling pass (lineage-truncating cache) feeds the self-join
     # sides AND the per-doc size table
-    sh = shingle_rows(df, id_col, text, n).localCheckpoint(eager=False)
+    sh = shingle_rows(df, n).localCheckpoint(eager=False)
     if max_shingle_freq is not None:
         freq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_f"))
         sh = sh.join(
@@ -214,22 +197,7 @@ def _perm_min_aggs(num_perm: int, seed: int) -> list:
     ]
 
 
-def _sig_select(id_col: str, num_perm: int) -> list:
-    """Projection from the _m0.._mN aggregate to (id, sig, n_shingles)."""
-    return [
-        F.col("_id").alias(id_col),
-        F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig"),
-        F.col("_n").alias("n_shingles"),
-    ]
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    num_bands: int = 8,
-    band_hash_fn=None,
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, band_hash_fn=None) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing at least one LSH band.
     Shuffle key is (band_idx, band_hash) — hot texts spread across
     bands; a group of m identical docs costs m²/2 pairs only within
@@ -239,7 +207,7 @@ def lsh_candidate_pairs(
     elements to the bucket hash; default is xxhash64 over the joined
     parts (fast path), ``md5_band_hash`` is the oracle-portable one.
     """
-    rows = num_perm // num_bands
+    rows = MINHASH_PERMS // MINHASH_BANDS
     if band_hash_fn is None:
 
         def band_hash_fn(b: int, parts: list[Column]) -> Column:
@@ -249,7 +217,7 @@ def lsh_candidate_pairs(
             )
 
     banded = sigs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.posexplode(
             F.array(
                 *[
@@ -260,7 +228,7 @@ def lsh_candidate_pairs(
                             for i in range(rows)
                         ],
                     )
-                    for b in range(num_bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("band", "bh"),
@@ -276,13 +244,8 @@ def lsh_candidate_pairs(
 
 def minhash_near_dups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
     n: int = 3,
-    num_perm: int = 32,
-    num_bands: int = 8,
     threshold: float | tuple[int, int] = 0.5,
-    seed: int = 42,
     hash_fn=F.xxhash64,
     band_hash_fn=None,
 ) -> DataFrame:
@@ -297,23 +260,26 @@ def minhash_near_dups(
     equal exact ``union/5`` at the boundary).
     """
     # ONE pass over the shingle rows: the shingle lists (verification)
-    # and the count + num_perm permuted minima (signatures) come out of
+    # and the count + MINHASH_PERMS permuted minima (signatures) come out of
     # a single hash aggregation, so the multi-million-row shingle
     # table shuffles on _id once, not twice. The per-doc aggregate
     # (one row per doc) is what gets the lineage cut — it feeds the
     # signature stage and both verification-join sides.
-    rows = shingle_rows(df, id_col, text, n)
+    rows = shingle_rows(df, n)
     hashed = rows.select(
         "_id", "_s", F.pmod(hash_fn(F.col("_s")), F.lit(MERSENNE_P)).alias("_h")
     )
     per_doc = hashed.groupBy("_id").agg(
         F.collect_list("_s").alias("_sh"),
         F.count(F.lit(1)).alias("_n"),
-        *_perm_min_aggs(num_perm, seed),
+        *_perm_min_aggs(MINHASH_PERMS, MINHASH_SEED),
     ).localCheckpoint(eager=False)
     sh = per_doc.select("_id", "_sh")
-    sigs = per_doc.select(*_sig_select(id_col, num_perm))
-    cand = lsh_candidate_pairs(sigs, id_col, num_perm, num_bands, band_hash_fn)
+    sigs = per_doc.select(
+        F.col("_id").alias("doc_id"),
+        F.array(*[F.col(f"_m{i}") for i in range(MINHASH_PERMS)]).alias("sig"),
+    )
+    cand = lsh_candidate_pairs(sigs, band_hash_fn)
     withsets = (
         cand.join(
             sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
@@ -347,14 +313,7 @@ def minhash_near_dups(
 # ---------------------------------------------------------------------------
 
 
-def cosine_near_dups_lsh(
-    corpus: DataFrame,
-    planes: list[list[int]],
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multi_probe: bool = True,
-) -> DataFrame:
+def cosine_near_dups_lsh(corpus: DataFrame, planes: list[list[int]]) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: hyperplane-LSH
     bucket → candidate equi-join → exact integer-cosine verify of the
     candidates only. Nothing is collected to the driver; the join is a
@@ -365,11 +324,11 @@ def cosine_near_dups_lsh(
     quantized vectors (:func:`similarity.hyperplane_signature_int`),
     so bucket ids are exact int64 arithmetic on every engine — the SQL
     oracle reproduces buckets, candidates, and cosines bit-for-bit.
-    ``multi_probe=True`` additionally probes every bucket at Hamming
-    distance 1 from one side's bucket, so a pair survives one sign
-    flip across the planes (near-dup pairs rarely differ on two);
-    each unordered pair still matches at most once because the other
-    side keeps its single exact bucket.
+    One side also probes every bucket at Hamming distance 1 from its
+    own, so a pair survives one sign flip across the planes (near-dup
+    pairs rarely differ on two); each unordered pair still matches at
+    most once because the other side keeps its single exact bucket.
+    Pairs with cosine >= 0.99 are kept.
 
     100 TB shape: b = len(planes) scales with corpus size (more planes
     → smaller buckets → fewer candidates per bucket); the verify stage
@@ -386,7 +345,9 @@ def cosine_near_dups_lsh(
 
     dim = len(planes[0])
     base = (
-        corpus.select(F.col(id_col).alias("_id"), quantized(F.col(vec_col)).alias("_q"))
+        corpus.select(
+            F.col("vec_id").alias("_id"), quantized(F.col("embedding")).alias("_q")
+        )
         .withColumn("_nn", sqnorm_unrolled("_q", dim))
         .withColumn("_bucket", hyperplane_signature_int("_q", planes))
     )
@@ -406,21 +367,16 @@ def cosine_near_dups_lsh(
         F.col("_id").alias("id_b"),
         F.col("_q").alias("_qb"),
         F.col("_nn").alias("_nb"),
-        F.col("_bucket").alias("_probe"),
+        F.explode(
+            F.array(
+                F.col("_bucket"),
+                *[
+                    F.col("_bucket").bitwiseXOR(F.lit(1 << i)).cast("long")
+                    for i in range(len(planes))
+                ],
+            )
+        ).alias("_probe"),
     )
-    if multi_probe:
-        b = b.withColumn(
-            "_probe",
-            F.explode(
-                F.array(
-                    F.col("_probe"),
-                    *[
-                        F.col("_probe").bitwiseXOR(F.lit(1 << i)).cast("long")
-                        for i in range(len(planes))
-                    ],
-                )
-            ),
-        )
     cand = a.join(
         b, (F.col("_bucket") == F.col("_probe")) & (F.col("id_a") < F.col("id_b"))
     )
@@ -429,20 +385,14 @@ def cosine_near_dups_lsh(
     )
     return (
         cand.withColumn("cos_sim", cos)
-        .filter(F.col("cos_sim") >= F.lit(threshold))
+        .filter(F.col("cos_sim") >= F.lit(0.99))
         .select("id_a", "id_b", "cos_sim")
     )
 
 
-def cosine_near_dups(
-    corpus: DataFrame,
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_collect_rows: int = 65536,
-) -> DataFrame:
+def cosine_near_dups(corpus: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos_sim >=
-    threshold) — the exact all-pairs verify stage of embedding dedup.
+    0.99) — the exact all-pairs verify stage of embedding dedup.
 
     Vectors are quantized to integer micro-units so dot products and
     squared norms are exact int64 on every engine; cosine is then a
@@ -451,7 +401,7 @@ def cosine_near_dups(
     in the closure — O(n²/P) flops, no per-pair interpreted lambdas.
 
     Small-by-contract is ENFORCED: a ``limit(cap+1)`` probe collects at
-    most one row over the cap, and overflow raises, pointing at
+    most one row over the 65536-row cap, and overflow raises, pointing at
     :func:`cosine_near_dups_lsh` — the scale path that buckets with
     integer hyperplanes and verifies candidates only, with no
     driver-side collect (the catalog's ``embed_near_dup`` entry uses
@@ -464,11 +414,11 @@ def cosine_near_dups(
     # one pass enforces the cap AND bounds driver memory during the
     # check itself: limit(cap+1) instead of count-then-collect, which
     # would evaluate an expensive upstream lineage twice
-    rows = corpus.select(id_col, vec_col).limit(max_collect_rows + 1).collect()
-    if len(rows) > max_collect_rows:
+    rows = corpus.select("vec_id", "embedding").limit(65536 + 1).collect()
+    if len(rows) > 65536:
         raise ValueError(
-            f"cosine_near_dups collects the corpus to the driver; got more than "
-            f"max_collect_rows={max_collect_rows} rows. Use cosine_near_dups_lsh "
+            "cosine_near_dups collects the corpus to the driver; got more than "
+            "65536 rows. Use cosine_near_dups_lsh "
             "for large corpora (LSH-bucketed candidates, no collect)."
         )
     all_ids = np.array([r[0] for r in rows], dtype=np.int64)
@@ -496,27 +446,21 @@ def cosine_near_dups(
             return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
 
         for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
             sims = (mat @ all_mat.T).astype(np.float64) / np.outer(norms, all_norm)
             # keep each unordered pair once: row id strictly below col id
-            keep = (ids[:, None] < all_ids[None, :]) & (sims >= threshold)
+            keep = (ids[:, None] < all_ids[None, :]) & (sims >= 0.99)
             r, c = np.nonzero(keep)
             yield pd.DataFrame(
                 {"id_a": ids[r], "id_b": all_ids[c], "cos_sim": sims[r, c]}
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(pairs, schema)
+    return corpus.select("vec_id", "embedding").mapInPandas(pairs, schema)
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    hash_fn=F.xxhash64,
-    width: int = 64,
-) -> DataFrame:
+def simhash(df: DataFrame, hash_fn=F.xxhash64, width: int = 64) -> DataFrame:
     """``width``-bit SimHash over whitespace tokens: bit b of the
     signature is the majority vote of bit b across hash(token) for all
     tokens (duplicates counted).
@@ -527,10 +471,10 @@ def simhash(
     majority test is ``2·count_set > n_tokens`` — identical to the
     ±1-vote sum. ``hash_fn=md5_hash60, width=60`` gives the
     engine-portable variant a SQL oracle can reproduce."""
-    df = _spread(df, id_col)
-    toks = df.filter(F.length(F.trim(F.col(text))) > 0).select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.trim(F.col(text)), r"\s+")).alias("_t"),
+    df = spread(df, "doc_id")
+    toks = df.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id").alias("_id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
     )
     ex = toks.select("_id", hash_fn(F.col("_t")).alias("_h"))
     per = ex.groupBy("_id").agg(
@@ -548,13 +492,11 @@ def simhash(
                 F.lit(2) * F.col(f"_c{b}") > F.col("_n"), F.lit(mask).cast("long")
             ).otherwise(F.lit(0).cast("long"))
         )
-    return per.select(F.col("_id").alias(id_col), sig.alias("simhash"))
+    return per.select(F.col("_id").alias("doc_id"), sig.alias("simhash"))
 
 
 def simhash_near_dups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
     max_hamming: int = 3,
     hash_fn=F.xxhash64,
     sig_bits: int = 64,
@@ -566,11 +508,11 @@ def simhash_near_dups(
     uncovered: ≤ max_hamming differences over nb > max_hamming chunks
     always leave one chunk clean) → equi-join per chunk, union, verify
     with bit_count(xor) over the full signature."""
-    s = simhash(df, id_col, text, hash_fn, sig_bits)
+    s = simhash(df, hash_fn, sig_bits)
     nb = max_hamming + 1
     width = sig_bits // nb
     banded = s.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.col("simhash"),
         F.posexplode(
             F.array(
@@ -605,7 +547,6 @@ def edit_distance_join(
     left: DataFrame,
     right: DataFrame,
     text_col: str,
-    id_col: str = "doc_id",
     max_dist: int = 2,
     block_prefix: int = 8,
 ) -> DataFrame:
@@ -624,12 +565,12 @@ def edit_distance_join(
     join); block sizes bound the quadratic verify the same way LSH
     bands bound MinHash (lsh_candidate_pairs above)."""
     lt = left.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         F.col(text_col).alias("t_a"),
         F.substring(F.col(text_col), 1, block_prefix).alias("_blk"),
     )
     rt = right.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col(text_col).alias("t_b"),
         F.substring(F.col(text_col), 1, block_prefix).alias("_blk"),
     )

@@ -54,42 +54,35 @@ ALPHABET = ["$", "a", "c", "g", "t"]
 LCP_MAX_DOC_CHARS = 512
 
 
-def bwt_table(docs: DataFrame, id_col: str = "doc_id", seq: str = "seq") -> DataFrame:
+def bwt_table(docs: DataFrame) -> DataFrame:
     """(id, i, ch): the BWT of ``seq + '$'`` with 1-based rank i in
     rotation-sorted order and ch = L[i] (the rotation's last char)."""
-    s = docs.select(
-        F.col(id_col), F.concat(F.col(seq), F.lit("$")).alias("s")
-    )
+    s = docs.select("doc_id", F.concat(F.col("seq"), F.lit("$")).alias("s"))
     # rotation order over s+'$' EQUALS suffix order: the sentinel is
     # unique and smallest, so two rotations always differ at or before
     # it — sorting by the suffix alone halves the shuffled key bytes
     # (avg n/2 vs n chars) and drops the wrap-around concat entirely.
     # The BWT char is the one BEFORE the suffix start ('$' for r=1).
     rots = s.select(
-        id_col,
+        "doc_id",
         F.explode(F.sequence(F.lit(1), F.length("s"))).alias("r"),
         "s",
     ).select(
-        id_col,
+        "doc_id",
         F.expr("substring(s, r)").alias("sfx"),
         F.expr(
             "CASE WHEN r = 1 THEN '$' ELSE substring(s, r - 1, 1) END"
         ).alias("ch"),
     )
-    w = Window.partitionBy(id_col).orderBy("sfx")
+    w = Window.partitionBy("doc_id").orderBy("sfx")
     return rots.select(
-        id_col,
+        "doc_id",
         F.row_number().over(w).cast("long").alias("i"),
         "ch",
     )
 
 
-def fm_count(
-    docs: DataFrame,
-    pattern: str,
-    id_col: str = "doc_id",
-    seq: str = "seq",
-) -> DataFrame:
+def fm_count(docs: DataFrame, pattern: str) -> DataFrame:
     """Count occurrences of ``pattern`` in every doc via backward
     search over the DataFrame FM-index. Returns (id, n_occ) for all
     input docs (zero-occurrence docs included).
@@ -123,36 +116,34 @@ def fm_count(
 
     if not set(pattern) <= set("acgt"):
         # no occurrences possible; skip the index build entirely
-        return docs.select(
-            F.col(id_col), F.lit(0).cast("long").alias("n_occ")
-        )
+        return docs.select("doc_id", F.lit(0).cast("long").alias("n_occ"))
     checked = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         # when(assert_true(...) is null, seq): forces the validation
         # into the projection so Catalyst cannot prune it away
         F.when(
             F.assert_true(
-                F.col(seq).rlike("^[acgt]*$"),
+                F.col("seq").rlike("^[acgt]*$"),
                 F.concat(
                     F.lit("fm_count: sequence outside [acgt] alphabet in "),
-                    F.col(id_col).cast("string"),
+                    F.col("doc_id").cast("string"),
                 ),
             ).isNull(),
-            F.col(seq),
-        ).alias(seq),
+            F.col("seq"),
+        ).alias("seq"),
     )
-    bwt = bwt_table(checked, id_col, seq).localCheckpoint(eager=True)
+    bwt = bwt_table(checked).localCheckpoint(eager=True)
     # WIDE Occ: one window pass, all four cumulative counts as
     # columns (id, i, _o_a.._o_t) — the search picks its char's
     # column, so each LF step joins a 1×-size table instead of
     # filtering the 4×-tall stacked form
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("i")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     occw = bwt.select(
-        id_col,
+        "doc_id",
         "i",
         *[
             F.sum((F.col("ch") == c).cast("long")).over(w).alias(f"_o_{c}")
@@ -163,7 +154,7 @@ def fm_count(
     # counts): zero joins, zero shuffles — C[c] = 1 + Σ counts of
     # smaller chars ('$' contributes the leading 1)
     cnt = {
-        c: F.length(seq) - F.length(F.regexp_replace(seq, c, ""))
+        c: F.length("seq") - F.length(F.regexp_replace("seq", c, ""))
         for c in ALPHABET[1:]
     }
     cl_cols = []
@@ -176,9 +167,9 @@ def fm_count(
     # probe build used to pay), so the probe-side size signal below is
     # exact, and every later consumer reads blocks
     state = checked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.lit(1).cast("long").alias("lo"),
-        (F.length(seq) + 1).cast("long").alias("hi"),
+        (F.length("seq") + 1).cast("long").alias("hi"),
         *cl_cols,
     ).localCheckpoint(eager=True)
     use_broadcast = small_path(
@@ -194,17 +185,17 @@ def fm_count(
         # state is already eagerly checkpointed above.)
         if step:
             state = state.localCheckpoint(eager=False)
-        state = _occ_step(state, occw, ch, id_col, use_broadcast)
+        state = _occ_step(state, occw, ch, "doc_id", use_broadcast)
         # a doc with no ch at all still has the true C[ch]; occ reads
         # 0 at both probes, so the range goes empty — correct
         state = state.select(
-            id_col,
+            "doc_id",
             (F.col(f"_cl_{ch}") + F.col("occ_lo") + 1).alias("lo"),
             (F.col(f"_cl_{ch}") + F.col("occ_hi")).alias("hi"),
             *cl_names,
         )
     return state.select(
-        id_col,
+        "doc_id",
         F.greatest(
             F.col("hi") - F.col("lo") + 1, F.lit(0)
         ).cast("long").alias("n_occ"),
@@ -268,12 +259,7 @@ def _occ_step(
     )
 
 
-def lcp_table_per_doc(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    seq: str = "seq",
-    compute_lcp: bool = True,
-) -> DataFrame:
+def lcp_table_per_doc(docs: DataFrame, compute_lcp: bool = True) -> DataFrame:
     """Suffix array + LCP array per document in ONE Arrow-batched
     numpy kernel — the package's only suffix-array builder (r9: it
     replaced a prefix-doubling + binary-climb plan whose per-step
@@ -310,7 +296,7 @@ def lcp_table_per_doc(
     from pyspark.sql import types as T
 
     fields = [
-        T.StructField(id_col, T.LongType()),
+        T.StructField("doc_id", T.LongType()),
         T.StructField("sa_rank", T.LongType()),
         T.StructField("pos", T.LongType()),
     ]
@@ -325,7 +311,7 @@ def lcp_table_per_doc(
 
         for pdf in batches:
             outs = []
-            for did, s in zip(pdf[id_col], pdf[seq]):
+            for did, s in zip(pdf["doc_id"], pdf["seq"]):
                 b = np.frombuffer(str(s).encode("ascii"), dtype=np.uint8)
                 n = len(b)
                 if n == 0:
@@ -343,7 +329,7 @@ def lcp_table_per_doc(
                     mat.view(f"S{n}").ravel(), kind="stable"
                 ).astype(np.int64)
                 cols = {
-                    id_col: np.full(n, int(did), dtype=np.int64),
+                    "doc_id": np.full(n, int(did), dtype=np.int64),
                     "sa_rank": np.arange(1, n + 1, dtype=np.int64),
                     "pos": order + 1,
                 }
@@ -357,5 +343,5 @@ def lcp_table_per_doc(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    return docs.select(id_col, seq).mapInPandas(kernel, schema)
+    return docs.select("doc_id", "seq").mapInPandas(kernel, schema)
 

@@ -55,11 +55,11 @@ def foreign_key_graph(
     return source.join(target, source[source_key] == target[target_fk], how)
 
 
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    out_deg = edges.groupBy(F.col(src).alias("node")).agg(
+def degrees(edges: DataFrame) -> DataFrame:
+    out_deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_degree")
     )
-    in_deg = edges.groupBy(F.col(dst).alias("node")).agg(
+    in_deg = edges.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).alias("in_degree")
     )
     return out_deg.join(in_deg, "node", "full").select(
@@ -69,26 +69,26 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     )
 
 
-def nodes_of(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def nodes_of(edges: DataFrame) -> DataFrame:
     return (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
 
 
+#: PageRank damping num/den and the unit of the exact integer ranks;
+#: the catalog's SQL oracle unrolls the same arithmetic from these.
+PAGERANK_DAMPING = (85, 100)
+PAGERANK_SCALE = 10**12
+
+
 def pagerank_exact(
-    edges: DataFrame,
-    n_iter: int = 6,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 10**12,
-    src: str = "src",
-    dst: str = "dst",
-    seed_expr: str | None = None,
+    edges: DataFrame, n_iter: int = 6, seed_expr: str | None = None
 ) -> DataFrame:
     """PageRank in exact scaled-integer arithmetic: ranks are bigints
-    in units of 1/scale, per-edge contributions use truncating integer
+    in units of 1/scale (scale = PAGERANK_SCALE, num/den =
+    PAGERANK_DAMPING), per-edge contributions use truncating integer
     division (``rank DIV deg``), and the damping mix is
     ``((den-num)*scale) DIV den + (num·Σcontrib) DIV den``. Every
     operation is order-independent integer math, so the result is
@@ -106,11 +106,12 @@ def pagerank_exact(
     seed flag is a projection on the node table (ppr_seeds:
     ``node % 37 = 0``), not a membership join.
     """
-    base = ((damping_den - damping_num) * scale) // damping_den
-    e = edges.select(src, dst).distinct()
-    out_deg = e.groupBy(src).agg(F.count(F.lit(1)).alias("_deg"))
-    e = e.join(out_deg, src).localCheckpoint(eager=False)
-    nodes = nodes_of(e, src, dst)
+    num, den = PAGERANK_DAMPING
+    base = ((den - num) * PAGERANK_SCALE) // den
+    e = edges.select("src", "dst").distinct()
+    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
+    e = e.join(out_deg, "src").localCheckpoint(eager=False)
+    nodes = nodes_of(e)
     seeded = seed_expr is not None
     # per-iteration zero rows for every node: unioned INTO the
     # contribution aggregate (below) instead of a nodes LEFT JOIN
@@ -123,17 +124,17 @@ def pagerank_exact(
             "node", F.expr(seed_expr).cast("int").alias("_is_seed")
         )
         ranks = nodes.select(
-            "node", (F.col("_is_seed") * scale).cast("long").alias("rank")
+            "node", (F.col("_is_seed") * PAGERANK_SCALE).cast("long").alias("rank")
         )
         zero_rows = nodes.select(
             "node", "_is_seed", F.lit(0).cast("long").alias("_c")
         )
     else:
-        ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
+        ranks = nodes.withColumn("rank", F.lit(PAGERANK_SCALE).cast("long"))
         zero_rows = nodes.select("node", F.lit(0).cast("long").alias("_c"))
     for i in range(n_iter):
-        edge_c = e.join(ranks, e[src] == ranks["node"]).select(
-            F.col(dst).alias("node"),
+        edge_c = e.join(ranks, e["src"] == ranks["node"]).select(
+            F.col("dst").alias("node"),
             F.expr("rank DIV _deg").alias("_c"),
         )
         if seeded:
@@ -161,7 +162,7 @@ def pagerank_exact(
             "node",
             (
                 base_col
-                + F.expr(f"({damping_num} * _sum) DIV {damping_den}")
+                + F.expr(f"({num} * _sum) DIV {den}")
             ).alias("rank"),
         )
         # sparse lineage cuts: a checkpoint materialization splits the
@@ -173,12 +174,7 @@ def pagerank_exact(
     return ranks
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 20,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Min-label propagation with path shortcutting (pointer jumping)
     to fixpoint: each round every node takes the min of its own label,
     its neighbors' labels, AND its label's label. The shortcut step
@@ -188,8 +184,8 @@ def connected_components(
     The fixpoint is identical (component = min reachable node id), so
     the recursive-CTE oracle is unchanged."""
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -255,11 +251,7 @@ def connected_components(
     return labels
 
 
-def splice_graph(
-    exons: DataFrame,
-    splices: DataFrame,
-    cluster: str = "cluster_id",
-) -> dict[str, DataFrame]:
+def splice_graph(exons: DataFrame, splices: DataFrame) -> dict[str, DataFrame]:
     """J11 (apps/splicegraph.py:6-48): exon→splice→exon coordinate
     equi-joins build the splice graph; alt5/alt3 = exon pairs sharing
     genomic_start (genomic_end) with distinct ids.
@@ -269,43 +261,45 @@ def splice_graph(
     """
     e1 = exons.select(
         F.col("exon_id").alias("from_exon"),
-        F.col(cluster),
+        F.col("cluster_id"),
         F.col("genomic_end").alias("_donor"),
     )
     e2 = exons.select(
         F.col("exon_id").alias("to_exon"),
-        F.col(cluster).alias("_c2"),
+        F.col("cluster_id").alias("_c2"),
         F.col("genomic_start").alias("_acceptor"),
     )
     sp = splices.select(
         "splice_id",
-        F.col(cluster).alias("_cs"),
+        F.col("cluster_id").alias("_cs"),
         F.col("ver_gen_start").alias("_ss"),
         F.col("ver_gen_end").alias("_se"),
     )
     splice_edges = (
-        e1.join(sp, (F.col(cluster) == F.col("_cs")) & (F.col("_donor") == F.col("_ss")))
+        e1.join(
+            sp, (F.col("cluster_id") == F.col("_cs")) & (F.col("_donor") == F.col("_ss"))
+        )
         .join(e2, (F.col("_c2") == F.col("_cs")) & (F.col("_acceptor") == F.col("_se")))
-        .select(cluster, "from_exon", "splice_id", "to_exon")
+        .select("cluster_id", "from_exon", "splice_id", "to_exon")
     )
 
     def _alt(col: str, out: str) -> DataFrame:
         a = exons.select(
-            F.col("exon_id").alias("exon_a"), F.col(cluster), F.col(col).alias("_p")
+            F.col("exon_id").alias("exon_a"), F.col("cluster_id"), F.col(col).alias("_p")
         )
         b = exons.select(
             F.col("exon_id").alias("exon_b"),
-            F.col(cluster).alias("_cb"),
+            F.col("cluster_id").alias("_cb"),
             F.col(col).alias("_pb"),
         )
         return (
             a.join(
                 b,
-                (F.col(cluster) == F.col("_cb"))
+                (F.col("cluster_id") == F.col("_cb"))
                 & (F.col("_p") == F.col("_pb"))
                 & (F.col("exon_a") < F.col("exon_b")),
             )
-            .select(cluster, "exon_a", "exon_b", F.col("_p").alias(out))
+            .select("cluster_id", "exon_a", "exon_b", F.col("_p").alias(out))
         )
 
     return {
@@ -441,13 +435,7 @@ def relax_k(
     return dist
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int = 2,
-    max_rounds: int = 8,
-    src: str = "u",
-    dst: str = "v",
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 2, max_rounds: int = 8) -> DataFrame:
     """Bounded synchronized k-core peel: repeatedly drop nodes with
     degree < ``k`` from an undirected graph given as a DIRECTED edge
     list containing both (u,v) and (v,u) rows. Returns the surviving
@@ -490,7 +478,7 @@ def kcore_peel(
     # plan, the filter splits the reused exchange of a self-union
     # input (q_kcore_decomp's both-directions edge list: +1 job)
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select("u", "v")
         .localCheckpoint(eager=True)
         .dropna()
     )
@@ -592,13 +580,7 @@ def _local_truss_support(edge_set: set) -> dict:
     return {(a, b): len(nbr[a] & nbr[b]) for a, b in edge_set}
 
 
-def ktruss_peel(
-    edges: DataFrame,
-    k: int = 3,
-    max_rounds: int = 4,
-    src: str = "u",
-    dst: str = "v",
-) -> DataFrame:
+def ktruss_peel(edges: DataFrame, k: int = 3, max_rounds: int = 4) -> DataFrame:
     """Bounded synchronized k-truss peel on a u<v ORIENTED edge list
     (duplicate rows count once, edges with a null endpoint are
     dropped): an edge survives iff it participates
@@ -649,7 +631,7 @@ def ktruss_peel(
     # endpoint never joins but does sit in a set: drop both once so
     # both paths peel the same edge set
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select("u", "v")
         .dropna()
         .distinct()
         .localCheckpoint(eager=False)

@@ -35,15 +35,14 @@ from pyspark.sql import functions as F
 EdgeFilter = Callable[[Column, Column, Column | None], Column]
 
 
-def graph_from_dict(spark, adjacency: Mapping, edge_values: bool = False) -> DataFrame:
+def graph_from_dict(spark, adjacency: Mapping) -> DataFrame:
     """Build an edge DataFrame from a pygr-style adjacency dict
     ``{src: {dst: edge, ...}, ...}`` (reference dictGraph,
     mapping.py:137-195). Nodes with no out-edges contribute no rows —
-    node existence is derivable from the union of endpoints (U8)."""
-    rows = []
-    for src, targets in adjacency.items():
-        for dst, edge in (targets or {}).items():
-            rows.append((src, dst, edge if edge_values else None))
+    node existence is derivable from the union of endpoints (U8). The
+    ``edge`` column is NULL: only the adjacency is kept, not the edge
+    values."""
+    rows = [(src, dst) for src, targets in adjacency.items() for dst in (targets or {})]
 
     def sqltype(values) -> str:
         for v in values:
@@ -59,10 +58,9 @@ def graph_from_dict(spark, adjacency: Mapping, edge_values: bool = False) -> Dat
 
     schema = (
         f"src {sqltype(r[0] for r in rows)}, "
-        f"dst {sqltype(r[1] for r in rows)}, "
-        f"edge {sqltype(r[2] for r in rows)}"
+        f"dst {sqltype(r[1] for r in rows)}, edge string"
     )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame([(s, d, None) for s, d in rows], schema)
 
 
 def _query_edges(query: Mapping) -> list[tuple[Hashable, Hashable]]:

@@ -126,8 +126,9 @@ def synth_bmp(seed: bytes, width: int | None = None, height: int | None = None) 
     return header + dib + bytes(pixels)
 
 
-def synth_wav(seed: bytes, rate: int = 8000, n_samples: int | None = None) -> bytes:
-    """Deterministic VALID 16-bit PCM mono WAV, pure struct packing."""
+def synth_wav(seed: bytes, n_samples: int | None = None) -> bytes:
+    """Deterministic VALID 16-bit PCM mono WAV at 8 kHz, pure struct
+    packing."""
     import struct
 
     h = hashlib.sha256(seed).digest()
@@ -139,7 +140,7 @@ def synth_wav(seed: bytes, rate: int = 8000, n_samples: int | None = None) -> by
     hdr = struct.pack(
         "<4sI4s4sIHHIIHH4sI",
         b"RIFF", 36 + len(data), b"WAVE", b"fmt ", 16, 1, 1,
-        rate, rate * 2, 2, 16, b"data", len(data),
+        8000, 8000 * 2, 2, 16, b"data", len(data),
     )
     return hdr + data
 
@@ -262,7 +263,7 @@ def default_decoders() -> dict[str, Callable[[bytes], dict]]:
     return {**FAKE_DECODERS, **real_decoders()}
 
 
-def synthesize_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_media(docs: DataFrame) -> DataFrame:
     """Turn a documents table into a mixed-modality media table with
     VALID containers: doc_id%3==0 → BMP image, %3==1 → WAV audio,
     %3==2 → opaque video bytes. mapInPandas so payload bytes are built
@@ -273,7 +274,7 @@ def synthesize_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     ship_to_workers(sys.modules[__name__])
     src = docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.col("text").cast("binary").alias("seed"),
     )
 
@@ -360,12 +361,7 @@ def _fake_image_resize(payload: bytes, width: int, height: int) -> bytes:
     return head + hashlib.sha256(payload).digest()
 
 
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    kernel: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """Binary→binary transform stage (resize): same MEDIA_SCHEMA out,
     payload re-encoded at (width, height), meta annotated. Non-image
     rows pass through untouched — the transform composes with decode /
@@ -376,14 +372,15 @@ def resize_images(
     from pygr_spark.sources import ship_to_workers
 
     ship_to_workers(sys.modules[__name__])
-    kernel = kernel or _fake_image_resize
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf.copy()
             mask = out["kind"] == "image"
             out.loc[mask, "payload"] = out.loc[mask, "payload"].map(
-                lambda p: kernel(bytes(p) if p is not None else b"", width, height)
+                lambda p: _fake_image_resize(
+                    bytes(p) if p is not None else b"", width, height
+                )
             )
             out.loc[mask, "meta"] = out.loc[mask, "meta"].map(
                 lambda m: {**(m or {}), "resized": f"{width}x{height}"}
@@ -393,17 +390,15 @@ def resize_images(
     return media.mapInPandas(run, MEDIA_SCHEMA)
 
 
-def frame_sample_plan(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
+def frame_sample_plan(media: DataFrame) -> DataFrame:
     """Video frame-sampling plumbing: one output row per planned frame
-    timestamp (decode stubbed). Explodes timestamps JVM-side so the
+    timestamp, one frame per second (decode stubbed). Explodes timestamps JVM-side so the
     expensive Python stage only sees (media_id, frame_ts) work items."""
     feats = extract_features(media.filter(F.col("kind") == "video"))
-    n_frames = F.floor(F.col("duration_ms") / every_ms).cast("int")
+    n_frames = F.floor(F.col("duration_ms") / 1000).cast("int")
     idx = F.when(n_frames > 0, F.sequence(F.lit(0), n_frames - 1)).otherwise(
         F.array().cast("array<int>")
     )
     return feats.select(
         "media_id", F.explode(idx).alias("frame_no")
-    ).withColumn("frame_ts_ms", F.col("frame_no").cast("long") * every_ms)
+    ).withColumn("frame_ts_ms", F.col("frame_no").cast("long") * 1000)

@@ -222,17 +222,13 @@ def overlap_join_signed(
 def closest_join(
     query: DataFrame,
     db: DataFrame,
-    query_key: str = "qid",
-    id_col: str = "id",
-    start: str = "start",
-    stop: str = "stop",
-    strategy: str = "binned",
     bin_width: int | str = "auto",
 ) -> DataFrame:
     """Nearest-feature join (bedtools-closest analog; the natural
     companion to J1 the reference answers by walking the NCList
-    outward, intervaldb.c:319-443): for every query interval, the db
-    interval on the same ``id_col`` with minimal gap distance —
+    outward, intervaldb.c:319-443): for every query interval
+    (qid, id, start, stop), the db interval (id, start, stop) on the
+    same ``id`` with minimal gap distance —
     0 when overlapping or touching, else the base gap. Deterministic
     tiebreak (distance, db start, db stop). Inner semantics: queries
     whose id has no db interval are dropped.
@@ -251,15 +247,15 @@ def closest_join(
     Every query therefore sees at most (overlaps + 2) candidates.
     """
     q = query.select(
-        F.col(query_key).alias("qid"),
-        F.col(id_col).alias("_qi"),
-        F.col(start).cast("long").alias("qs"),
-        F.col(stop).cast("long").alias("qe"),
+        "qid",
+        F.col("id").alias("_qi"),
+        F.col("start").cast("long").alias("qs"),
+        F.col("stop").cast("long").alias("qe"),
     )
     d = db.select(
-        F.col(id_col).alias("_di"),
-        F.col(start).cast("long").alias("ds"),
-        F.col(stop).cast("long").alias("de"),
+        F.col("id").alias("_di"),
+        F.col("start").cast("long").alias("ds"),
+        F.col("stop").cast("long").alias("de"),
     )
 
     ov = overlap_join(
@@ -271,7 +267,7 @@ def closest_join(
         right_id="_di",
         right_start="ds",
         right_stop="de",
-        strategy=strategy,
+        strategy="binned",
         bin_width=bin_width,
     ).select("qid", "_qi", "qs", "qe", "ds", "de", F.lit(0).cast("long").alias("dist"))
 
@@ -401,7 +397,7 @@ def closest_join(
         .filter(F.col("_rn") == 1)
         .select(
             "qid",
-            F.col("_qi").alias(id_col),
+            F.col("_qi").alias("id"),
             F.col("qs").alias("q_start"),
             F.col("qe").alias("q_stop"),
             F.col("ds").alias("db_start"),
@@ -414,18 +410,13 @@ def closest_join(
 def subtract_join(
     query: DataFrame,
     db: DataFrame,
-    query_key: str = "qid",
-    id_col: str = "id",
-    start: str = "start",
-    stop: str = "stop",
-    strategy: str = "binned",
     bin_width: int | str = "auto",
 ) -> DataFrame:
     """Interval subtraction (bedtools-subtract analog; the set
     complement U3 of pygr's interval algebra lifted to a join): each
-    query interval minus the union of all overlapping db intervals on
-    the same id, emitted as the surviving fragments
-    (qid, id, frag_start, frag_stop). Queries with no overlap pass
+    query interval (qid, id, start, stop) minus the union of all
+    overlapping db intervals (id, start, stop) on the same id, emitted
+    as the surviving fragments (qid, id, frag_start, frag_stop). Queries with no overlap pass
     through whole; fully-covered queries vanish.
 
     Scale shape: overlap candidates from the binned equi-join; per
@@ -435,15 +426,15 @@ def subtract_join(
     no-hit passthrough is a left_anti on the same join keys.
     """
     q = query.select(
-        F.col(query_key).alias("qid"),
-        F.col(id_col).alias("_qi"),
-        F.col(start).cast("long").alias("qs"),
-        F.col(stop).cast("long").alias("qe"),
+        "qid",
+        F.col("id").alias("_qi"),
+        F.col("start").cast("long").alias("qs"),
+        F.col("stop").cast("long").alias("qe"),
     )
     d = db.select(
-        F.col(id_col).alias("_di"),
-        F.col(start).cast("long").alias("ds"),
-        F.col(stop).cast("long").alias("de"),
+        F.col("id").alias("_di"),
+        F.col("start").cast("long").alias("ds"),
+        F.col("stop").cast("long").alias("de"),
     )
     ov = overlap_join(
         q,
@@ -454,7 +445,7 @@ def subtract_join(
         right_id="_di",
         right_start="ds",
         right_stop="de",
-        strategy=strategy,
+        strategy="binned",
         bin_width=bin_width,
     ).select(
         "qid",
@@ -506,7 +497,7 @@ def subtract_join(
         .filter(F.col("frag_start") < F.col("frag_stop"))
         .select(
             "qid",
-            F.col("_qi").alias(id_col),
+            F.col("_qi").alias("id"),
             "frag_start",
             "frag_stop",
         )

@@ -24,23 +24,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pygr_spark.operators.dedup import _spread, md5_hash60, shingle_rows
+from pygr_spark.operators.dedup import md5_hash60, shingle_rows
+from pygr_spark.tuning import spread
 
 # ---------------------------------------------------------------------------
 # decontamination
 # ---------------------------------------------------------------------------
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 8,
-    min_hits: int = 1,
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing at
-    least ``min_hits`` distinct word ``n``-grams with any benchmark
+    least one distinct word 8-gram with any benchmark
     document (the standard eval-set leak check run before training).
 
     Returns one row per contaminated corpus doc:
@@ -57,8 +51,8 @@ def decontaminate(
     Catalyst broadcasts it; at 100 TB the corpus side streams through
     map-side. No all-pairs, no collect.
     """
-    c = shingle_rows(corpus, id_col, text, n)
-    b = shingle_rows(benchmark, id_col, text, n).withColumnRenamed("_id", "_bid")
+    c = shingle_rows(corpus, 8)
+    b = shingle_rows(benchmark, 8).withColumnRenamed("_id", "_bid")
     hits = c.join(b, "_s")
     per_pair = hits.groupBy("_id", "_bid").agg(
         F.count(F.lit(1)).cast("long").alias("_shared")
@@ -68,9 +62,7 @@ def decontaminate(
         F.count(F.lit(1)).cast("long").alias("n_bench_docs"),
         F.max("_shared").cast("long").alias("max_bench_overlap"),
     )
-    return out.filter(F.col("n_hit_shingles") >= min_hits).withColumnRenamed(
-        "_id", id_col
-    )
+    return out.withColumnRenamed("_id", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -78,13 +70,7 @@ def decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def chunk_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    chunk_tokens: int = 8,
-    max_docs: int = 1,
-) -> DataFrame:
+def chunk_dedup(docs: DataFrame, chunk_tokens: int = 8, max_docs: int = 1) -> DataFrame:
     """Corpus-wide duplicated-chunk removal — the C4 "three-sentence
     span dedup" / line-dedup shape: split every document into
     fixed-size token chunks (the unit a crawl pipeline would take from
@@ -104,9 +90,9 @@ def chunk_dedup(
     not the pair count, so skew is bounded by the corpus's true
     duplication rate.
     """
-    toks = _spread(docs, id_col).select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.trim(F.lower(F.col(text))), r"\s+")).alias("_p", "_t"),
+    toks = spread(docs, "doc_id").select(
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("_p", "_t"),
     )
     chunks = toks.withColumn("_c", (F.col("_p") / F.lit(chunk_tokens)).cast("long"))
     # collect_list has no intra-group order guarantee under retries —
@@ -146,7 +132,7 @@ def chunk_dedup(
         F.count(F.lit(1)).cast("long").alias("n_chunks"),
         F.sum(F.col("_keep").cast("long")).cast("long").alias("n_kept"),
     )
-    return out.withColumnRenamed("_id", id_col)
+    return out.withColumnRenamed("_id", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -154,9 +140,7 @@ def chunk_dedup(
 # ---------------------------------------------------------------------------
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text: str = "text"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: the fraction of
     tokens accounted for by the most frequent token / bigram / trigram
     (repetitious machine text scores high; used as a quality filter
@@ -167,9 +151,9 @@ def repetition_stats(
     groupBys, all partitioned by doc — scales linearly, no cross-doc
     shuffle at all (the doc id is the only key).
     """
-    toks = _spread(docs, id_col).select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.trim(F.lower(F.col(text))), r"\s+")).alias("_p", "_t"),
+    toks = spread(docs, "doc_id").select(
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("_p", "_t"),
     )
     w = Window.partitionBy("_id").orderBy("_p")
     grams = toks.select(
@@ -196,7 +180,7 @@ def repetition_stats(
     t3 = top_count("_t3", "_has3")
     out = t1.join(t2, "_id", "left").join(t3, "_id", "left")
     return out.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("top_t").alias("top_token_n"),
         F.col("tot_t").alias("n_tokens"),
         (F.col("top_t") / F.col("tot_t")).alias("top_token_frac"),
@@ -212,26 +196,21 @@ def repetition_stats(
 # ---------------------------------------------------------------------------
 
 
-def hash_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    cuts: tuple[int, int] = (800, 900),
-    buckets: int = 1000,
-) -> DataFrame:
+def hash_split(df: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment: bucket =
-    md5-hash(id) mod ``buckets``; rows below ``cuts[0]`` → train,
-    below ``cuts[1]`` → val, rest → test. Engine-portable (the same
+    md5-hash(doc_id) mod 1000; buckets below 800 → train, below 900 →
+    val, rest → test. Engine-portable (the same
     md5 expression runs in any SQL engine), reproducible across runs
     and cluster sizes — the property a training pipeline needs so a
     document never migrates between splits when the corpus grows.
 
     Pure per-row projection: no shuffle at all.
     """
-    b = F.pmod(md5_hash60(F.col(id_col).cast("string")), F.lit(buckets))
+    b = F.pmod(md5_hash60(F.col("doc_id").cast("string")), F.lit(1000))
     return df.withColumn("bucket", b.cast("long")).withColumn(
         "split",
-        F.when(F.col("bucket") < cuts[0], F.lit("train"))
-        .when(F.col("bucket") < cuts[1], F.lit("val"))
+        F.when(F.col("bucket") < 800, F.lit("train"))
+        .when(F.col("bucket") < 900, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
@@ -239,13 +218,10 @@ def hash_split(
 def corpus_mix(
     docs: DataFrame,
     rates: dict[str, int] | Column,
-    source_col: str = "source",
-    id_col: str = "doc_id",
     default_rate: int = 0,
-    buckets: int = 1000,
 ) -> DataFrame:
     """Weighted corpus mixing: keep each document iff its md5 bucket
-    falls under its source's per-mille ``rates`` entry (e.g.
+    (md5-hash(doc_id) mod 1000) falls under its source's per-mille ``rates`` entry (e.g.
     ``{"wiki": 1000, "crawl": 150}`` oversamples wiki 6.7× relative
     to crawl). Deterministic — the mix is reproducible and stable
     under corpus growth, unlike ``df.sample``.
@@ -253,7 +229,7 @@ def corpus_mix(
     ``rates`` is either a literal dict (enters the plan as a
     broadcast literal map via ``F.create_map`` — per-row projection,
     no shuffle, no join) or a Column computing the per-mille rate
-    from the row itself (e.g. a formula over the source name), for
+    from the row itself (e.g. a formula over ``source``), for
     mixes defined by rule rather than enumeration.
     """
     if isinstance(rates, Column):
@@ -264,12 +240,12 @@ def corpus_mix(
             pairs += [F.lit(k), F.lit(int(v))]
         if pairs:
             rate = F.coalesce(
-                F.create_map(*pairs)[F.col(source_col)],
+                F.create_map(*pairs)[F.col("source")],
                 F.lit(int(default_rate)),
             )
         else:
             rate = F.lit(int(default_rate))
-    b = F.pmod(md5_hash60(F.col(id_col).cast("string")), F.lit(buckets))
+    b = F.pmod(md5_hash60(F.col("doc_id").cast("string")), F.lit(1000))
     return docs.withColumn("bucket", b.cast("long")).filter(F.col("bucket") < rate)
 
 
@@ -286,30 +262,22 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    patterns: dict[str, str] | None = None,
-    redact: bool = True,
-) -> DataFrame:
-    """Per-document PII hit counts for each pattern class plus (with
-    ``redact=True``) the text with every match replaced by
-    ``<CLASS>`` — the scrub step a pretraining pipeline runs before
-    tokenization. Pure JVM-side regexp projections (regexp_count /
+def pii_stats(df: DataFrame) -> DataFrame:
+    """Per-document PII hit counts for each PII_PATTERNS class plus
+    the text with every match replaced by ``<CLASS>`` — the scrub
+    step a pretraining pipeline runs before tokenization. Pure JVM-side regexp projections (regexp_count /
     regexp_replace): no shuffle, linear scan, codegen-friendly.
     """
-    pats = patterns or PII_PATTERNS
-    cols: list[Column] = [F.col(id_col)]
-    for name, pat in sorted(pats.items()):
+    pats = sorted(PII_PATTERNS.items())
+    cols: list[Column] = [F.col("doc_id")]
+    for name, pat in pats:
         cols.append(
-            F.regexp_count(F.col(text), F.lit(pat)).cast("long").alias(f"n_{name}")
+            F.regexp_count(F.col("text"), F.lit(pat)).cast("long").alias(f"n_{name}")
         )
-    if redact:
-        red = F.col(text)
-        for name, pat in sorted(pats.items()):
-            red = F.regexp_replace(red, pat, f"<{name.upper()}>")
-        cols.append(red.alias("redacted"))
+    red = F.col("text")
+    for name, pat in pats:
+        red = F.regexp_replace(red, pat, f"<{name.upper()}>")
+    cols.append(red.alias("redacted"))
     return df.select(*cols)
 
 
@@ -318,17 +286,7 @@ def pii_stats(
 # ---------------------------------------------------------------------------
 
 
-def snapshot_dedup(
-    ref: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    chunk_tokens: int = 8,
-    bloom_bits: int = 65536,
-    bloom_k: int = 3,
-    keep_num: int = 4,
-    keep_den: int = 5,
-) -> DataFrame:
+def snapshot_dedup(ref: DataFrame, new: DataFrame, bloom_bits: int = 65536) -> DataFrame:
     """Incremental fuzzy dedup of a NEW ingest batch against an
     already-ingested REFERENCE snapshot — the steady-state shape of a
     crawl pipeline, where every fresh dump is deduped against the
@@ -336,16 +294,16 @@ def snapshot_dedup(
     (reference parity: pygr's incremental resource updates,
     metabase.py; the chunk unit follows chunk_dedup above).
 
-    Every document is split into ``chunk_tokens``-token chunks; a new
-    document is KEPT iff strictly less than ``keep_num/keep_den`` of
-    its distinct chunks already occur anywhere in the snapshot.
-    Returns ``(id_col, n_chunks, n_seen, kept)`` — exact longs, one
+    Every document is split into 8-token chunks; a new document is
+    KEPT iff strictly less than 4/5 of its distinct chunks already
+    occur anywhere in the snapshot.
+    Returns ``(doc_id, n_chunks, n_seen, kept)`` — exact longs, one
     row per new-batch document.
 
     Scale shape (the whole point at 100 TB, where the snapshot dwarfs
     every batch): the snapshot's distinct-chunk set is touched by ONE
     distinct and ONE semi-join; the new batch is pre-pruned by a
-    broadcast Bloom filter (``bloom_k`` md5-portable bit positions in
+    broadcast Bloom filter (k=3 md5-portable bit positions in
     an m=``bloom_bits`` table built over snapshot chunks, the
     bloom_prune pattern) so only bloom-POSITIVE chunks — true
     duplicates plus the bounded false-positive mass of roughly
@@ -358,24 +316,23 @@ def snapshot_dedup(
     """
 
     # chunking is a pure MAP: slice the per-doc token array into
-    # chunk_tokens-sized windows with array higher-order functions —
+    # 8-token windows with array higher-order functions —
     # no posexplode/regroup shuffle anywhere in the chunk build (the
     # per-doc distinct chunk set is array_distinct, also map-side).
     # Documents must have non-empty text (callers filter; an empty
     # token array would yield one empty-string chunk here).
     chunk_arr = F.array_distinct(
         F.expr(
-            f"transform(sequence(0, (size(_t) - 1) DIV {chunk_tokens}),"
-            f" i -> array_join(slice(_t, i * {chunk_tokens} + 1,"
-            f" {chunk_tokens}), ' '))"
+            "transform(sequence(0, (size(_t) - 1) DIV 8),"
+            " i -> array_join(slice(_t, i * 8 + 1, 8), ' '))"
         )
     )
     tagged = ref.select(
-        F.col(id_col).alias("_id"), F.col(text).alias("_tx"), F.lit(0).alias("_side")
+        F.col("doc_id").alias("_id"), F.col("text").alias("_tx"), F.lit(0).alias("_side")
     ).unionByName(
         new.select(
-            F.col(id_col).alias("_id"),
-            F.col(text).alias("_tx"),
+            F.col("doc_id").alias("_id"),
+            F.col("text").alias("_tx"),
             F.lit(1).alias("_side"),
         )
     )
@@ -399,7 +356,7 @@ def snapshot_dedup(
         "_id", F.explode("_ca").alias("_chunk")
     )
 
-    ks = F.explode(F.array(*[F.lit(j) for j in range(bloom_k)])).alias("_j")
+    ks = F.explode(F.array(*[F.lit(j) for j in range(3)])).alias("_j")
     bit = F.pmod(
         md5_hash60(F.concat_ws(",", F.col("_j").cast("string"), F.col("_chunk"))),
         F.lit(bloom_bits),
@@ -410,7 +367,7 @@ def snapshot_dedup(
         probes.join(F.broadcast(bits), "_bit")
         .groupBy("_id", "_chunk")
         .agg(F.count(F.lit(1)).alias("_hits"))
-        .filter(F.col("_hits") == bloom_k)
+        .filter(F.col("_hits") == 3)
         .select("_id", "_chunk")
     )
     seen = candidates.join(ref_set, "_chunk", "left_semi")
@@ -422,12 +379,12 @@ def snapshot_dedup(
         F.count(F.lit(1)).cast("long").alias("n_seen")
     )
     return per_doc.join(seen_counts, "_id", "left").select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_chunks",
         F.coalesce(F.col("n_seen"), F.lit(0)).cast("long").alias("n_seen"),
         (
-            F.coalesce(F.col("n_seen"), F.lit(0)) * F.lit(keep_den)
-            < F.col("n_chunks") * F.lit(keep_num)
+            F.coalesce(F.col("n_seen"), F.lit(0)) * F.lit(5)
+            < F.col("n_chunks") * F.lit(4)
         )
         .cast("long")
         .alias("kept"),

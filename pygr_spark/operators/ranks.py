@@ -78,14 +78,12 @@ def dist_prefix_sums(
     order_cols: list[str],
     value_cols: list[str],
     inclusive: bool = False,
-    n_parts: int = 8,
-    prefix: str = "cum_",
 ) -> tuple[DataFrame, dict[str, int]]:
     """Global running sums of ``value_cols`` over the total order
     ``order_cols`` — the distributed two-pass prefix scan: range
     buckets on ``order_cols[0]`` (a pure function of the data, see
     :func:`det_range_pids`), per-bucket totals collected into
-    broadcast prefix offsets (≤ n_parts rows per value column), then
+    broadcast prefix offsets (≤ 8 rows per value column), then
     a within-bucket window KEYED by bucket id. ``inclusive`` picks
     rows-up-to-current vs rows-up-to-previous (exclusive) frames.
 
@@ -95,7 +93,7 @@ def dist_prefix_sums(
     the classic double-count trap.
 
     Returns ``(out, totals)`` where ``out`` is ``df`` plus one
-    ``{prefix}{v}`` column per value column (bucket machinery columns
+    ``cum_{v}`` column per value column (bucket machinery columns
     dropped) and ``totals`` maps each value column to its grand
     total — free by-products of the offset collect that callers like
     the KS statistic need anyway.
@@ -116,7 +114,7 @@ def dist_prefix_sums(
             "— pre-scale to integer units (cents/ppm)"
         )
     spark = df.sparkSession
-    parts = det_range_pids(df, order_cols[0], n_parts)
+    parts = det_range_pids(df, order_cols[0], 8)
     agg_exprs = [
         F.sum(v).cast("long").alias(f"_t_{v}") for v in value_cols
     ]
@@ -136,7 +134,7 @@ def dist_prefix_sums(
     if not offs:
         out = df
         for v in value_cols:
-            out = out.withColumn(f"{prefix}{v}", F.lit(0).cast("long"))
+            out = out.withColumn(f"cum_{v}", F.lit(0).cast("long"))
         return out, totals
     off_df = spark.createDataFrame(offs, off_schema)
     upper = 0 if inclusive else -1
@@ -148,13 +146,13 @@ def dist_prefix_sums(
     out = parts.join(F.broadcast(off_df), "pid")
     for v in value_cols:
         out = out.withColumn(
-            f"{prefix}{v}",
+            f"cum_{v}",
             (
                 F.col(f"_off_{v}")
                 + F.coalesce(F.sum(v).over(w_in), F.lit(0))
             ).cast("long"),
         )
-    keep = list(df.columns) + [f"{prefix}{v}" for v in value_cols]
+    keep = list(df.columns) + [f"cum_{v}" for v in value_cols]
     return out.select(*keep), totals
 
 
@@ -269,10 +267,7 @@ def dist_grouped_rank(
 
 
 def dist_global_rank_multi(
-    df: DataFrame,
-    keys: list[tuple[str, str]],
-    id_col: str,
-    n_parts: int = 8,
+    df: DataFrame, keys: list[tuple[str, str]], id_col: str
 ) -> tuple[DataFrame, int]:
     """Several independent dense global row_numbers over one frame in
     ONE stitch (judge r10 item #1: a separate stitch per key pays an
@@ -287,7 +282,7 @@ def dist_global_rank_multi(
     Shape: ONE approxQuantile job fetches every key's range
     boundaries together, the frame is melted (stack) to (which, key)
     rows, ONE grouped count-collect builds all per-(which, bucket)
-    prefix offsets (<= len(keys)*n_parts rows), one (which,
+    prefix offsets (<= len(keys)*8 rows), one (which,
     pid)-KEYED window ranks every key at once over k·n rows — same
     total comparisons as k separate windows, k-1 fewer shuffles —
     and a final hash agg pivots the ranks back to one row per id.
@@ -308,7 +303,7 @@ def dist_global_rank_multi(
             "via an exact integer rescale (cents/ppm) first"
         )
     spark = df.sparkSession
-    fracs = [i / n_parts for i in range(1, n_parts)]
+    fracs = [i / 8 for i in range(1, 8)]
     # one job: every key's boundaries together
     all_bounds = df.stat.approxQuantile(
         [k for k, _ in keys], fracs, 0.001

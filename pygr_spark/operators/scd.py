@@ -73,13 +73,12 @@ def cdc_compact(
     key: str,
     ts: str,
     op_col: str | None = None,
-    delete_op: str = "delete",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Compact a CDC change log to the latest row per ``key``.
 
     The newest row (by ``ts``, then ``tiebreak``) wins; if ``op_col``
-    is given and the newest row's op equals ``delete_op`` the key is
+    is given and the newest row's op equals ``"delete"`` the key is
     dropped entirely (tombstone). Returns the winning rows with their
     original columns.
     """
@@ -93,5 +92,5 @@ def cdc_compact(
         .drop("_rn")
     )
     if op_col is not None:
-        latest = latest.filter(F.col(op_col) != F.lit(delete_op))
+        latest = latest.filter(F.col(op_col) != F.lit("delete"))
     return latest

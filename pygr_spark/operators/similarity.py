@@ -56,12 +56,12 @@ TRIPLET_MAX_ANCHOR_ROWS = 200_000
 ANN_MAX_QUERY_ROWS = 200_000
 
 
-def plan_row_bound(df: DataFrame, max_depth: int = 8) -> int | None:
+def plan_row_bound(df: DataFrame) -> int | None:
     """Static upper bound on a frame's row count, read from its
     OPTIMIZED logical plan (driver-side only — no job): walks the
     plan's top single-child chain through row-NON-INCREASING
-    operators (Project/Filter/Sort/LocalLimit/Deduplicate) and
-    returns the first GlobalLimit's value, or None when no such bound
+    operators (Project/Filter/Sort/LocalLimit/Deduplicate), at most 8
+    plan lines deep, and returns the first GlobalLimit's value, or None when no such bound
     is visible. Judge r10 item #1a: the catalog's ANN query sets are
     md5-ranked ``.limit(N)`` batches, so their bound is visible in
     the plan and the ``limit(cap+1).count()`` guard probe — one fixed
@@ -76,7 +76,7 @@ def plan_row_bound(df: DataFrame, max_depth: int = 8) -> int | None:
         "Project", "Filter", "Sort", "LocalLimit", "Deduplicate",
         "GlobalLimit",
     }
-    for ln in plan.splitlines()[:max_depth]:
+    for ln in plan.splitlines()[:8]:
         m = re.match(r"^[ :+\-]*GlobalLimit (\d+)", ln)
         if m:
             return int(m.group(1))
@@ -163,23 +163,16 @@ def sqnorm_unrolled(a: str, dim: int) -> Column:
     return dot_unrolled(a, a, dim)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k: for each query vector the k nearest corpus
     vectors (excluding itself when ids collide). Returns
     (query_id, vec_id, cos_sim, rank) with deterministic
     (sim desc, vec_id) ranking."""
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), quantized(F.col(vec_col)).alias("cv")
+        "vec_id", quantized(F.col("embedding")).alias("cv")
     ).withColumn("cn", sqnorm(F.col("cv")))
     q = queries.select(
-        F.col(query_id).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
+        "query_id", quantized(F.col("embedding")).alias("qv")
     ).withColumn("qn", sqnorm(F.col("qv")))
     joined = c.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
     sim = (
@@ -201,9 +194,6 @@ def cosine_topk_vectorized(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
 ) -> DataFrame:
     """Same contract as cosine_topk, computed with one Arrow-batched
     NumPy matmul per partition instead of per-pair interpreted array
@@ -219,8 +209,8 @@ def cosine_topk_vectorized(
     import numpy as np
     import pandas as pd
 
-    _enforce_query_cap(queries, query_id, "cosine_topk_vectorized")
-    q_rows = queries.select(query_id, vec_col).collect()
+    _enforce_query_cap(queries, "query_id", "cosine_topk_vectorized")
+    q_rows = queries.select("query_id", "embedding").collect()
     if not q_rows:
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, vec_id long, cos_sim double, rank long"
@@ -249,12 +239,12 @@ def cosine_topk_vectorized(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             # id-sort so the stable in-batch argsort below breaks sim
             # ties by min vec_id — the global window's exact order
             order = np.argsort(ids, kind="stable")
             ids = ids[order]
-            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])[
+            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])[
                 order
             ]
             norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
@@ -277,7 +267,7 @@ def cosine_topk_vectorized(
             )
             yield out[out["query_id"] != out["vec_id"]]
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, schema)
+    scored = corpus.select("vec_id", "embedding").mapInPandas(score, schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id")
     )
@@ -294,9 +284,6 @@ def ivf_topk_exact(
     n_centroids: int = 16,
     n_probe: int = 4,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
 ) -> DataFrame:
     """IVF-style ANN (the north star's 'IVF variant as the scale
     path'): partition the corpus into inverted lists by
@@ -317,7 +304,7 @@ def ivf_topk_exact(
     from pygr_spark.operators.dedup import md5_hash60
 
     v = corpus.select(
-        F.col(id_col).alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
+        "vec_id", quantized(F.col("embedding")).alias("qv")
     ).withColumn("qn", sqnorm(F.col("qv")))
     cent = (
         v.withColumn("_h", md5_hash60(F.col("vec_id").cast("string")))
@@ -344,7 +331,7 @@ def ivf_topk_exact(
         .select("vec_id", F.col("cid").alias("list_id"), "qv", "qn")
     )
     q = queries.select(
-        F.col(query_id).alias("query_id"), quantized(F.col(vec_col)).alias("pv")
+        "query_id", quantized(F.col("embedding")).alias("pv")
     ).withColumn("pn", sqnorm(F.col("pv")))
     wp = Window.partitionBy("query_id").orderBy(F.col("_csim").desc(), F.col("cid"))
     probes = (
@@ -421,9 +408,6 @@ def lsh_ann_topk(
     queries: DataFrame,
     planes: list[list[float]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
     int_planes: bool = False,
     multi_probe: bool = False,
 ) -> DataFrame:
@@ -442,18 +426,18 @@ def lsh_ann_topk(
         return hyperplane_signature(raw, planes)
 
     c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        quantized(F.col(vec_col)).alias("cv"),
-        F.col(vec_col).alias("_raw"),
+        "vec_id",
+        quantized(F.col("embedding")).alias("cv"),
+        F.col("embedding").alias("_raw"),
     ).select(
         "vec_id",
         "cv",
         bucket_of("cv", F.col("_raw")).alias("bucket"),
     ).withColumn("cn", sqnorm(F.col("cv")))
     q = queries.select(
-        F.col(query_id).alias("query_id"),
-        quantized(F.col(vec_col)).alias("qv"),
-        F.col(vec_col).alias("_raw"),
+        "query_id",
+        quantized(F.col("embedding")).alias("qv"),
+        F.col("embedding").alias("_raw"),
     ).select(
         "query_id",
         "qv",
@@ -493,27 +477,21 @@ def lsh_ann_topk(
     )
 
 
-def quantize_embeddings(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    levels: int = 255,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Per-dimension min-max scalar quantization of an embedding
-    column to ``levels`` integer codes (int8 at 255) — the compression
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
+    """Per-dimension min-max scalar quantization of the ``embedding``
+    column to 255 integer codes (int8) — the compression
     step an at-scale ANN index (IVF-SQ/PQ family) applies before
     storing vectors; reports per-vector reconstruction error so a
     pipeline can gate on quantization quality.
 
     Everything is exact integer arithmetic over embedding mills
-    (``round(x*scale)``, the repo-wide convention), so results are
-    engine-deterministic: code ``q = (xi-mn)*levels DIV (mx-mn)``,
-    reconstruction ``mn + (q*(mx-mn) + levels DIV 2) DIV levels``.
+    (``round(x*1e6)``, the repo-wide convention), so results are
+    engine-deterministic: code ``q = (xi-mn)*255 DIV (mx-mn)``,
+    reconstruction ``mn + (q*(mx-mn) + 127) DIV 255``.
     All intermediates are non-negative, making Spark's truncating
     ``DIV`` and ANSI floor division agree.
 
-    Returns ``(id, n_dims, q_sum, sq_err)`` where ``sq_err`` is the
+    Returns ``(vec_id, n_dims, q_sum, sq_err)`` where ``sq_err`` is the
     summed squared reconstruction error in mills².
 
     Scale shape: one posexplode (linear), a 30-ish-row per-dimension
@@ -522,9 +500,9 @@ def quantize_embeddings(
     No driver-side collect; stats stay in the plan.
     """
     e = emb.select(
-        F.col(id_col).alias("_vid"), F.posexplode(vec).alias("_pos", "_x")
+        F.col("vec_id").alias("_vid"), F.posexplode("embedding").alias("_pos", "_x")
     ).withColumn(
-        "_xi", F.round(F.col("_x").cast("double") * scale).cast("long")
+        "_xi", F.round(F.col("_x").cast("double") * 1_000_000).cast("long")
     )
     stats = e.groupBy("_pos").agg(
         F.min("_xi").alias("_mn"), F.max("_xi").alias("_mx")
@@ -533,12 +511,12 @@ def quantize_embeddings(
         "_q",
         F.when(
             F.col("_mx") > F.col("_mn"),
-            F.expr(f"((_xi - _mn) * {levels}) DIV (_mx - _mn)"),
+            F.expr("((_xi - _mn) * 255) DIV (_mx - _mn)"),
         ).otherwise(F.lit(0)),
     )
     r = j.withColumn(
         "_recon",
-        F.expr(f"_mn + (_q * (_mx - _mn) + {levels // 2}) DIV {levels}"),
+        F.expr("_mn + (_q * (_mx - _mn) + 127) DIV 255"),
     )
     return r.groupBy("_vid").agg(
         F.count(F.lit(1)).cast("long").alias("n_dims"),
@@ -546,7 +524,7 @@ def quantize_embeddings(
         F.sum((F.col("_xi") - F.col("_recon")) * (F.col("_xi") - F.col("_recon")))
         .cast("long")
         .alias("sq_err"),
-    ).withColumnRenamed("_vid", id_col)
+    ).withColumnRenamed("_vid", "vec_id")
 
 
 def kmer_seed_join(
@@ -716,19 +694,12 @@ def multitable_buckets(
     )
 
 
-def rbh_lsh(
-    emb: DataFrame,
-    tables: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    split_mod: int = 10,
-) -> DataFrame:
+def rbh_lsh(emb: DataFrame, tables: list[list[list[int]]]) -> DataFrame:
     """Reciprocal best hits through a multi-table LSH candidate
     prefilter — the sublinear form of the exact RBH entry (pygr's
     BLAST orthology idiom, reference blast.py:158-351: the reference
     itself seeds with heuristic word hits, never all-pairs). Split:
-    A = ids with ``id % split_mod == 0``, B = the rest. Candidates =
+    A = ids with ``vec_id % 10 == 0``, B = the rest (64-dim vectors). Candidates =
     pairs sharing a bucket in ANY of the L tables; scoring and the
     mutual-argmax join are the SAME exact-integer cosine as the
     all-pairs entry, restricted to candidates.
@@ -747,8 +718,8 @@ def rbh_lsh(
     candidate set, cos_sim rounded to 6 places.
     """
     base = emb.select(
-        F.col(id_col).alias("vid"), quantized(F.col(vec_col)).alias("qv")
-    ).withColumn("nn", sqnorm_unrolled("qv", dim))
+        F.col("vec_id").alias("vid"), quantized(F.col("embedding")).alias("qv")
+    ).withColumn("nn", sqnorm_unrolled("qv", 64))
     # consumed three times (bucket melt + the two score-side joins):
     # EAGER checkpoint — a lazy one materializes once per
     # concurrently-scheduled consumer stage (measured: it ran twice)
@@ -758,7 +729,7 @@ def rbh_lsh(
     melt = multitable_buckets(sigs, tables, "vid", "qv").localCheckpoint(
         eager=True
     )
-    is_a = F.col("vid") % split_mod == 0
+    is_a = F.col("vid") % 10 == 0
     a_m = melt.filter(is_a).select(F.col("vid").alias("a_id"), "t", "bucket")
     b_m = melt.filter(~is_a).select(F.col("vid").alias("b_id"), "t", "bucket")
     cand = (
@@ -785,7 +756,7 @@ def rbh_lsh(
             "a_id",
             "b_id",
             (
-                dot_unrolled("qa", "qb", dim)
+                dot_unrolled("qa", "qb", 64)
                 / (
                     F.sqrt(F.col("na").cast("double"))
                     * F.sqrt(F.col("nb").cast("double"))
@@ -813,32 +784,27 @@ def rbh_lsh(
 
 def seed_extend_join(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    k: int = 20,
     min_seeds: int = 2,
     max_kmer_docs: int | None = 20,
     window: int = 40,
-    match: int = 1,
-    mismatch: int = -2,
 ) -> DataFrame:
     """BLAST-style seed-AND-EXTEND homology join — completes the
     seed step of ``kmer_seed_join`` with the ungapped extension the
     reference gets from shelling out to blastall (blast.py:158-351):
-    shared k-mer seeds are grouped by alignment diagonal
+    shared 20-mer seeds are grouped by alignment diagonal
     (``pos_a - pos_b``) and each diagonal's FIRST seed is extended
     left and right (BLAST's two-hit heuristic — later seeds on the
     same diagonal cover the same character columns), scoring
-    ``match``/``mismatch`` per aligned character; the extension
+    +1/-2 per matching/mismatching aligned character; the extension
     keeps the best-scoring prefix (X-drop with an infinite X — the
     max prefix sum), capped at ``window`` characters per direction.
 
     Returns ``(id_a, id_b, n_seeds, best_score)`` for pairs sharing
-    >= ``min_seeds`` distinct k-mers after the ubiquity mask
+    >= ``min_seeds`` distinct 20-mers after the ubiquity mask
     (``max_kmer_docs`` — BLAST's low-complexity filter, the skew
     guard that keeps one stop-word k-mer from going quadratic);
     ``best_score`` is the max over that pair's DIAGONALS of
-    ``k*match + left_ext + right_ext``.
+    ``20 + left_ext + right_ext``.
 
     Scale shape: the seed join is the same bucketed equi-join as
     ``kmer_seed_join``; extension is a per-row O(window) fold over
@@ -851,21 +817,21 @@ def seed_extend_join(
     same-diagonal seed would out-extend the first — outside the
     first seed's window cap).
     """
-    base = docs.filter(F.length(text) >= k)
+    base = docs.filter(F.length("text") >= 20)
     # explode(sequence) + substr stays inside whole-stage codegen; the
     # transform(...)->struct alternative evaluates an interpreted HOF
     # per position (measured ~2x slower on this, the widest stage)
     km = (
         base.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.explode(
-                F.sequence(F.lit(1), F.length(text) - (k - 1))
+                F.sequence(F.lit(1), F.length("text") - 19)
             ).alias("_pos"),
-            F.col(text),
+            F.col("text"),
         )
         .select(
             "_id",
-            F.col(text).substr(F.col("_pos"), F.lit(k)).alias("_km"),
+            F.col("text").substr(F.col("_pos"), F.lit(20)).alias("_km"),
             "_pos",
         )
         .groupBy("_id", "_km")
@@ -908,9 +874,9 @@ def seed_extend_join(
         .filter(F.col("_nseed") >= min_seeds)
     )
     slim = docs.select(
-        F.col(id_col).alias("_tid"),
-        F.col(text).alias("_t"),
-        F.length(text).alias("_tl"),
+        F.col("doc_id").alias("_tid"),
+        F.col("text").alias("_t"),
+        F.length("text").alias("_tl"),
     )
     px = (
         diag.join(slim, diag["_id"] == slim["_tid"])
@@ -928,21 +894,21 @@ def seed_extend_join(
     def _score_at(ia: Column, ib: Column) -> Column:
         return F.when(
             F.col("_ta").substr(ia, F.lit(1)) == F.col("_tb").substr(ib, F.lit(1)),
-            F.lit(match),
-        ).otherwise(F.lit(mismatch))
+            F.lit(1),
+        ).otherwise(F.lit(-2))
 
     empty = F.array().cast("array<int>")
     # right: chars after the seed — offsets 0..L-1 at (pa+k+i, pb+k+i)
     l_r = F.least(
-        F.col("_la") - (F.col("_pos") + k) + 1,
-        F.col("_lb") - (F.col("_pos_b") + k) + 1,
+        F.col("_la") - (F.col("_pos") + 20) + 1,
+        F.col("_lb") - (F.col("_pos_b") + 20) + 1,
         F.lit(window),
     )
     arr_r = F.when(
         l_r >= 1,
         F.transform(
             F.sequence(F.lit(0), l_r - 1),
-            lambda i: _score_at(F.col("_pos") + k + i, F.col("_pos_b") + k + i),
+            lambda i: _score_at(F.col("_pos") + 20 + i, F.col("_pos_b") + 20 + i),
         ),
     ).otherwise(empty)
     # left: chars before the seed — offsets 0..L-1 at (pa-1-i, pb-1-i)
@@ -959,7 +925,7 @@ def seed_extend_join(
         "_id_b",
         "_nseed",
         (
-            F.lit(k * match) + _best_prefix(arr_r) + _best_prefix(arr_l)
+            F.lit(20) + _best_prefix(arr_r) + _best_prefix(arr_l)
         ).alias("_total"),
     )
     return (
@@ -975,12 +941,7 @@ def seed_extend_join(
     )
 
 
-def rbh_exact(
-    a: DataFrame,
-    b: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def rbh_exact(a: DataFrame, b: DataFrame) -> DataFrame:
     """EXACT reciprocal best hits between a small side A and a large
     side B (pygr's bidirectional-best BLAST idiom, blast.py:158-351),
     computed in ONE streamed pass over B against the collected,
@@ -1022,7 +983,7 @@ def rbh_exact(
     probe = (
         bound
         if bound is not None and bound <= RBH_EXACT_MAX_A_ROWS
-        else a.select(id_col).limit(RBH_EXACT_MAX_A_ROWS + 1).count()
+        else a.select("vec_id").limit(RBH_EXACT_MAX_A_ROWS + 1).count()
     )
     if probe > RBH_EXACT_MAX_A_ROWS:
         raise ValueError(
@@ -1030,7 +991,7 @@ def rbh_exact(
             "(driver-collected dense matrix); use rbh_candidates "
             "(LSH-prefiltered sublinear RBH) for large A sides"
         )
-    a_rows = a.select(id_col, vec_col).orderBy(id_col).collect()
+    a_rows = a.select("vec_id", "embedding").orderBy("vec_id").collect()
     if not a_rows:
         return a.sparkSession.createDataFrame(
             [], "a_id long, b_id long, cos_sim double"
@@ -1060,11 +1021,11 @@ def rbh_exact(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             order = np.argsort(ids, kind="stable")
             ids = ids[order]
             mat = _q(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             ).astype(np.float64)[order]
             norms = np.sqrt((mat * mat).sum(axis=1))
             sims = (mat @ a_mat.T) / np.outer(norms, a_norm)
@@ -1088,7 +1049,7 @@ def rbh_exact(
             )
             yield pd.concat([rows_b, rows_a], ignore_index=True)
 
-    scored = b.select(id_col, vec_col).mapInPandas(kernel, schema)
+    scored = b.select("vec_id", "embedding").mapInPandas(kernel, schema)
     # EAGER: the two legs below are sibling inputs of one join, so a
     # lazy checkpoint would run the matmul pass once per sibling
     scored = scored.localCheckpoint(eager=True)
@@ -1107,13 +1068,7 @@ def rbh_exact(
     )
 
 
-def triplet_mining(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def triplet_mining(corpus: DataFrame, anchors: DataFrame) -> DataFrame:
     """Hard-triplet mining for metric-learning training data: for
     every anchor, the HARDEST POSITIVE (same-label vector with the
     LOWEST cosine similarity) and the HARDEST NEGATIVE (different-
@@ -1159,7 +1114,7 @@ def triplet_mining(
     probe = (
         bound
         if bound is not None and bound <= TRIPLET_MAX_ANCHOR_ROWS
-        else anchors.select(id_col).limit(TRIPLET_MAX_ANCHOR_ROWS + 1).count()
+        else anchors.select("vec_id").limit(TRIPLET_MAX_ANCHOR_ROWS + 1).count()
     )
     if probe > TRIPLET_MAX_ANCHOR_ROWS:
         raise ValueError(
@@ -1168,7 +1123,7 @@ def triplet_mining(
             "mine per-bucket via the LSH candidates path (rbh_candidates / "
             "lsh_ann) for anchor sets that scale with the corpus"
         )
-    a_rows = anchors.select(id_col, vec_col, label_col).collect()
+    a_rows = anchors.select("vec_id", "embedding", "label").collect()
     spark = corpus.sparkSession
     if not a_rows:
         return spark.createDataFrame(
@@ -1211,14 +1166,14 @@ def triplet_mining(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             # id-sort: np.argmin/argmax return the FIRST extremum, so
             # ascending ids make sim ties break to the smaller vec_id
             # (the oracle window's exact order)
             order = np.argsort(ids, kind="stable")
             ids = ids[order]
-            labs = pdf[label_col].to_numpy()[order]
-            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])[
+            labs = pdf["label"].to_numpy()[order]
+            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])[
                 order
             ]
             norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
@@ -1248,7 +1203,7 @@ def triplet_mining(
                     recs, columns=["anchor_id", "cand_id", "sim", "is_pos"]
                 )
 
-    cands = corpus.select(id_col, vec_col, label_col).mapInPandas(
+    cands = corpus.select("vec_id", "embedding", "label").mapInPandas(
         mine, schema=schema
     )
     # per-batch survivors only: one tiny window each side

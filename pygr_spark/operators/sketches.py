@@ -23,30 +23,23 @@ from pyspark.sql import functions as F
 from pygr_spark.operators.dedup import md5_hash60
 
 
-def countmin_build(
-    items: DataFrame,
-    item_col: str = "item",
-    weight_col: str | None = None,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Build a d×w Count-Min sketch from an item stream: cell (j, c)
-    holds the summed weight of items with ``md5(j || ',' || item) mod
-    width == c``. Returns (depth_j, cell, total) — at most d·w rows.
+def countmin_build(items: DataFrame, width: int = 256) -> DataFrame:
+    """Build a 4×w Count-Min sketch from an ``item`` stream: cell (j, c)
+    holds the count of items with ``md5(j || ',' || item) mod
+    width == c``. Returns (depth_j, cell, total) — at most 4·w rows.
     """
-    w = F.lit(1).cast("long") if weight_col is None else F.col(weight_col)
     rows = []
-    for j in range(depth):
+    for j in range(4):
         rows.append(
             items.select(
                 F.lit(j).alias("depth_j"),
                 F.pmod(
                     md5_hash60(
-                        F.concat_ws(",", F.lit(str(j)), F.col(item_col))
+                        F.concat_ws(",", F.lit(str(j)), F.col("item"))
                     ),
                     F.lit(width),
                 ).cast("long").alias("cell"),
-                w.alias("_w"),
+                F.lit(1).cast("long").alias("_w"),
             )
         )
     out = rows[0]
@@ -57,42 +50,29 @@ def countmin_build(
     )
 
 
-def countmin_estimate(
-    sketch: DataFrame,
-    probes: DataFrame,
-    item_col: str = "item",
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
+def countmin_estimate(sketch: DataFrame, probes: DataFrame, width: int = 256) -> DataFrame:
     """Point-query the sketch: the estimate for an item is the MIN
-    over its d cells — an overestimate of (never below) the true
-    count. The sketch side is ≤ d·w rows and broadcasts."""
+    over its 4 cells — an overestimate of (never below) the true
+    count. The sketch side is ≤ 4·w rows and broadcasts."""
     probe_cells = probes.select(
-        F.col(item_col),
-        F.explode(
-            F.array(*[F.lit(j) for j in range(depth)])
-        ).alias("depth_j"),
+        F.col("item"),
+        F.explode(F.array(*[F.lit(j) for j in range(4)])).alias("depth_j"),
     ).withColumn(
         "cell",
         F.pmod(
             md5_hash60(
-                F.concat_ws(",", F.col("depth_j").cast("string"), F.col(item_col))
+                F.concat_ws(",", F.col("depth_j").cast("string"), F.col("item"))
             ),
             F.lit(width),
         ).cast("long"),
     )
     joined = probe_cells.join(F.broadcast(sketch), ["depth_j", "cell"], "left")
-    return joined.groupBy(item_col).agg(
+    return joined.groupBy("item").agg(
         F.min(F.coalesce(F.col("total"), F.lit(0))).cast("long").alias("estimate")
     )
 
 
-def hll_registers(
-    items: DataFrame,
-    group_cols: list[str],
-    item_col: str = "item",
-    m: int = 64,
-) -> DataFrame:
+def hll_registers(items: DataFrame, group_cols: list[str], m: int = 64) -> DataFrame:
     """Per-group HyperLogLog register state (Flajolet et al. 2007)
     with the md5-portable hash, so — unlike Spark's opaque
     ``approx_count_distinct`` binary — the sketch itself sits under
@@ -117,7 +97,7 @@ def hll_registers(
     lg = m.bit_length() - 1
     assert 1 << lg == m, "m must be a power of two"
     wbits = 60 - lg
-    h = md5_hash60(F.col(item_col).cast("string"))
+    h = md5_hash60(F.col("item").cast("string"))
     # shiftright, not `/ m`: double division loses exactness past
     # 2^53 and h is 60 bits (oracle side is integer `// m`)
     w = F.shiftright(h, lg)
@@ -156,14 +136,11 @@ def hll_merge(registers: DataFrame, group_cols: list[str]) -> DataFrame:
 
 
 def hll_estimate_terms(
-    registers: DataFrame,
-    group_cols: list[str],
-    m: int = 64,
-    keep_n_regs: bool = False,
+    registers: DataFrame, group_cols: list[str], keep_n_regs: bool = False
 ) -> DataFrame:
-    """Reduce a register state to the exact-integer estimate pair
-    (hll_l, hll_num): L = max_j M_j and num = Σ_j 2^(L−M_j), with the
-    m − |hit registers| missing registers contributing 2^L each. The
+    """Reduce an m = 64 register state to the exact-integer estimate
+    pair (hll_l, hll_num): L = max_j M_j and num = Σ_j 2^(L−M_j), with
+    the m − |hit registers| missing registers contributing 2^L each. The
     raw HLL estimate is alpha_m·m²·2^L / num — a float; the pair is
     its integer-exact carrier, so it sits under a value-hash oracle
     gate (see the ``hll_distinct`` catalog entry for the SQL mirror).
@@ -193,7 +170,7 @@ def hll_estimate_terms(
         F.col("hll_l").cast("long").alias("hll_l"),
         (
             F.col("_hit_num")
-            + (F.lit(m) - F.col("_n_regs"))
+            + (F.lit(64) - F.col("_n_regs"))
             * F.expr("shiftleft(CAST(1 AS BIGINT), CAST(hll_l AS INT))")
         ).cast("long").alias("hll_num"),
     )

@@ -55,18 +55,15 @@ from pygr_spark.operators.groupmerge import gap_merge
 
 def dup_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     length: int = 40,
     sample_mod: int = 1,
     min_count: int = 2,
     by_hash: bool = False,
-    max_gram_count: int | None = None,
 ) -> DataFrame:
     """Merged character spans of corpus-duplicated length-``length``
     windows, per document.
 
-    Returns ``(id_col, span_start, span_end, n_grams)`` with 0-based
+    Returns ``(doc_id, span_start, span_end, n_grams)`` with 0-based
     half-open spans; ``n_grams`` is how many duplicated windows the
     merged span absorbed. ``sample_mod > 1`` keeps only windows with
     ``xxhash64(gram) % sample_mod == 0`` (content-defined sampling —
@@ -78,21 +75,19 @@ def dup_spans(
     # Windows: every position 0..len-L. Docs shorter than L
     # contribute nothing (sequence() needs start <= stop).
     grams = (
-        df.select(id_col, text_col)
-        .filter(F.length(text_col) >= length)
+        df.select("doc_id", "text")
+        .filter(F.length("text") >= length)
         .select(
-            id_col,
+            "doc_id",
             F.explode(
-                F.sequence(F.lit(0), F.length(text_col) - length)
+                F.sequence(F.lit(0), F.length("text") - length)
             ).alias("pos"),
-            F.col(text_col),
+            F.col("text"),
         )
         .select(
-            id_col,
+            "doc_id",
             "pos",
-            F.substring(F.col(text_col), F.col("pos") + 1, length).alias(
-                "gram"
-            ),
+            F.substring(F.col("text"), F.col("pos") + 1, length).alias("gram"),
         )
     )
     if sample_mod > 1:
@@ -106,32 +101,21 @@ def dup_spans(
         "n_occ", F.count(F.lit(1)).over(Window.partitionBy(key))
     )
     dup = counted.filter(F.col("n_occ") >= min_count)
-    if max_gram_count is not None:
-        # Frequency cap: a boilerplate window repeated millions of
-        # times contributes spans identically whether we keep all its
-        # occurrences or the cap — spans come from positions, which we
-        # keep; the cap only guards downstream per-gram consumers.
-        dup = dup.filter(F.col("n_occ") <= max_gram_count)
     spans = dup.select(
-        id_col,
+        "doc_id",
         F.col("pos").cast("long").alias("s"),
         (F.col("pos") + length).cast("long").alias("e"),
     )
-    merged = gap_merge(spans, keys=[id_col], start="s", stop="e", maxgap=0)
+    merged = gap_merge(spans, keys=["doc_id"], start="s", stop="e", maxgap=0)
     return merged.select(
-        id_col,
+        "doc_id",
         F.col("s").alias("span_start"),
         F.col("e").alias("span_end"),
         F.col("n_merged").alias("n_grams"),
     )
 
 
-def remove_dup_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_dup_spans(df: DataFrame, spans: DataFrame) -> DataFrame:
     """Cut ``spans`` (0-based half-open ``span_start``/``span_end``)
     out of each document's text; documents without spans pass through.
 
@@ -140,12 +124,12 @@ def remove_dup_spans(
     counts are bounded by len/length so the collected array is small
     by construction.
     """
-    per_doc = spans.groupBy(id_col).agg(
+    per_doc = spans.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(F.struct("span_start", "span_end"))
         ).alias("_spans")
     )
-    joined = df.join(per_doc, on=id_col, how="left")
+    joined = df.join(per_doc, on="doc_id", how="left")
     cut = F.aggregate(
         F.col("_spans"),
         F.struct(
@@ -157,7 +141,7 @@ def remove_dup_spans(
             F.concat(
                 acc["acc"],
                 F.substring(
-                    F.col(text_col),
+                    F.col("text"),
                     (acc["cur"] + 1).cast("int"),
                     (sp["span_start"] - acc["cur"]).cast("int"),
                 ),
@@ -166,13 +150,13 @@ def remove_dup_spans(
         lambda acc: F.concat(
             acc["acc"],
             F.substring(
-                F.col(text_col),
+                F.col("text"),
                 (acc["cur"] + 1).cast("int"),
-                (F.length(text_col) - acc["cur"]).cast("int"),
+                (F.length("text") - acc["cur"]).cast("int"),
             ),
         ),
     )
     return joined.withColumn(
         "clean_text",
-        F.when(F.col("_spans").isNull(), F.col(text_col)).otherwise(cut),
+        F.when(F.col("_spans").isNull(), F.col("text")).otherwise(cut),
     ).drop("_spans")

@@ -104,14 +104,14 @@ def poisson_bootstrap(
     (32 replicates: 6 md5s, 5.3× less hashing). The CDF cutoffs live
     in the raw 2^20 draw domain — no modulo, no modulo bias (r10
     advice)."""
-    from pygr_spark.operators.dedup import _spread
+    from pygr_spark.tuning import spread
 
     cases = " ".join(
         f"WHEN h < {p} THEN {k}" for k, p in enumerate(POISSON_CUT20)
     )
     # the md5 chain is the heavy per-row work: a single-row-group
     # parquet would otherwise pin all of it to ONE core
-    df = _spread(df, key_col)
+    df = spread(df, key_col)
     n_md5 = (b + 5) // 6
     digests = F.array(
         *[
@@ -145,12 +145,7 @@ def poisson_bootstrap(
     )
 
 
-def pava_isotonic(
-    bins: DataFrame,
-    bin_col: str = "bin",
-    tot_col: str = "tot",
-    cnt_col: str = "cnt",
-) -> DataFrame:
+def pava_isotonic(bins: DataFrame) -> DataFrame:
     """Isotonic (non-decreasing) weighted least-squares fit of
     tot/cnt on bin order via the closed-form minimax
     y*ᵢ = max_{j≤i} min_{k≥i} (T[j..k]/C[j..k]) — equivalent to
@@ -178,12 +173,12 @@ def pava_isotonic(
 
     spark = bins.sparkSession
     field = {f.name: f for f in bins.schema.fields}
-    cnt_type = field[cnt_col].dataType
+    cnt_type = field["cnt"].dataType
     # Spark's limit is an Int: fetch at most 2^31-2 (+1) rows, and a
     # full fetch past that counts as unmeasured (the join form)
     cap = min(small_path_bound(spark, "pavaRows"), (1 << 31) - 2)
     collected = (
-        bins.select(bin_col, cnt_col, tot_col).take(cap + 1) if cap > 0 else []
+        bins.select("bin", "cnt", "tot").take(cap + 1) if cap > 0 else []
     )
     size = len(collected) if len(collected) <= cap else None
     if small_path(spark, "pavaRows", size):
@@ -224,7 +219,7 @@ def pava_isotonic(
         out = [(rows[i][0], rows[i][1][0], best[i]) for i in range(n)]
         schema = StructType(
             [
-                StructField("bin", field[bin_col].dataType, True),
+                StructField("bin", field["bin"].dataType, True),
                 StructField("cnt", cnt_type, True),
                 StructField("y_star", DoubleType(), True),
             ]
@@ -232,11 +227,11 @@ def pava_isotonic(
         return spark.createDataFrame(out, schema=schema)
     w = Window.orderBy("bin")
     pooled = (
-        bins.filter(F.col(bin_col).isNotNull())
-        .groupBy(F.col(bin_col).alias("bin"))
+        bins.filter(F.col("bin").isNotNull())
+        .groupBy("bin")
         .agg(
-            F.coalesce(F.sum(cnt_col), F.lit(0)).cast(cnt_type).alias("cnt"),
-            F.coalesce(F.sum(tot_col), F.lit(0)).alias("tot"),
+            F.coalesce(F.sum("cnt"), F.lit(0)).cast(cnt_type).alias("cnt"),
+            F.coalesce(F.sum("tot"), F.lit(0)).alias("tot"),
         )
     )
     pre = pooled.select(
@@ -280,24 +275,18 @@ def pava_isotonic(
 
 
 def conformal_split(
-    calib: DataFrame,
-    group_col: str,
-    resid_col: str,
-    id_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 10,
+    calib: DataFrame, group_col: str, resid_col: str, id_col: str
 ) -> DataFrame:
     """Split-conformal radius per group: the exact
     ⌈(n+1)(1−α)⌉-th smallest calibration residual (order statistic
     via row_number with an id tie-break — no interpolation, so the
-    result is engine-exact). α = alpha_num/alpha_den as integers to
-    keep the rank computation in exact arithmetic. Returns
+    result is engine-exact). α = 1/10, kept as integers so the rank
+    computation stays in exact arithmetic. Returns
     (group, n_cal, qhat). r12 (guide §2.4): n_cal rides the rank
     window's own per-group exchange as an unordered partition count —
     the separate aggregate pass over the calibration rows and its
     broadcast join are gone."""
     w = Window.partitionBy(group_col).orderBy(resid_col, id_col)
-    keep = alpha_den - alpha_num
     return (
         calib.withColumn("rk", F.row_number().over(w))
         .withColumn(
@@ -309,7 +298,7 @@ def conformal_split(
         .filter(
             F.col("rk")
             == F.expr(
-                f"({keep} * (n_cal + 1) + {alpha_den} - 1) DIV {alpha_den}"
+                "(9 * (n_cal + 1) + 10 - 1) DIV 10"
             )
         )
         .select(group_col, "n_cal", F.col(resid_col).alias("qhat"))

@@ -27,16 +27,16 @@ def tokens(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def token_stats(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Counts a tokenizer-level pipeline needs: chars, tokens, distinct
     tokens, mean token length (exact ints + derived double)."""
-    t = tokens(F.col(text))
+    t = tokens(F.col("text"))
     total_len = F.aggregate(
         t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )
-    return df.filter(F.length(F.trim(F.col(text))) > 0).select(
-        F.col(id_col),
-        F.length(text).cast("long").alias("n_chars"),
+    return df.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(t).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(t)).cast("long").alias("n_types"),
         total_len.alias("sum_token_len"),
@@ -44,17 +44,15 @@ def token_stats(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> Da
     )
 
 
-def quality_score(
-    df: DataFrame, id_col: str = "doc_id", text: str = "text"
-) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality signals (Gopher/C4-style): length, type/token
     ratio, punctuation density, longest word, all as exact ints."""
-    t = tokens(F.col(text))
-    n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[.,!?;:]", ""))
+    t = tokens(F.col("text"))
+    n_punct = F.length("text") - F.length(F.regexp_replace("text", r"[.,!?;:]", ""))
     longest = F.array_max(F.transform(t, F.length))
-    return df.filter(F.length(F.trim(F.col(text))) > 0).select(
-        F.col(id_col),
-        F.length(text).cast("long").alias("n_chars"),
+    return df.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(t).cast("long").alias("n_tokens"),
         n_punct.cast("long").alias("n_punct"),
         longest.cast("long").alias("longest_token"),
@@ -65,15 +63,13 @@ def quality_score(
     )
 
 
-def language_scores(
-    df: DataFrame, id_col: str = "doc_id", text: str = "text"
-) -> DataFrame:
+def language_scores(df: DataFrame) -> DataFrame:
     """Stopword-hit counts per candidate language + argmax label.
     A real pipeline would use char n-gram profiles; the relational
     shape (per-language token-membership counts + argmax) is identical
     and that is what the oracle certifies."""
-    t = tokens(F.col(text))
-    out = df.filter(F.length(F.trim(F.col(text))) > 0).select(F.col(id_col), t.alias("_t"))
+    t = tokens(F.col("text"))
+    out = df.filter(F.length(F.trim(F.col("text"))) > 0).select("doc_id", t.alias("_t"))
     for lang, words in STOPWORDS.items():
         arr = F.array(*[F.lit(w) for w in words])
         out = out.withColumn(
@@ -89,7 +85,7 @@ def language_scores(
         *[F.when(F.col(f"hits_{la}") == best, F.lit(la)) for la in langs]
     )
     return out.select(
-        id_col,
+        "doc_id",
         *[f"hits_{la}" for la in langs],
         F.when(best > 0, label).otherwise(F.lit("und")).alias("lang_guess"),
     )
@@ -99,12 +95,7 @@ def language_scores(
 TFIDF_SCALE = 1_000_000
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF rank.
 
     The idf factor is the exact integer ``(N * TFIDF_SCALE) DIV df``
@@ -120,9 +111,9 @@ def tfidf_top_terms(
     Zipf-skewed but the DF side is one row per term — no hot-row
     blowup); top-k is a per-doc window over k·docs rows.
     """
-    base = df.filter(F.length(F.trim(F.col(text))) > 0)
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0)
     tok = base.select(
-        F.col(id_col), F.explode(tokens(F.col(text))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.length("term") > 0)
     # tf is dual-consumed (dfreq + scoring) and deliberately NOT
     # checkpointed: the tf⋈dfreq join shuffles on term (full-corpus
@@ -137,19 +128,19 @@ def tfidf_top_terms(
     # safe. (The keyword/bm25 paths DO lazily checkpoint their
     # query-filtered tf: their broadcast build serializes the
     # consumer stages, so the checkpoint materializes exactly once.)
-    tf = tok.groupBy(id_col, "term").agg(
+    tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     # corpus size as a broadcast 1-row side: keeps the whole op one
     # lazy plan (no driver action) — the scalar arrives at executors
     # as a broadcast, not a literal
-    n_docs = base.agg(F.count_distinct(F.col(id_col)).cast("long").alias("_n"))
+    n_docs = base.agg(F.count_distinct(F.col("doc_id")).cast("long").alias("_n"))
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             "tf",
             "df",
@@ -160,20 +151,15 @@ def tfidf_top_terms(
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tf", "df", "score")
+        .select("doc_id", "rank", "term", "tf", "df", "score")
     )
 
 
-def vocab_coverage(
-    df: DataFrame,
-    vocab_k: int = 1000,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
+def vocab_coverage(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
     """Per-document vocabulary coverage against the corpus top-k
     vocabulary: (n_tokens, n_in_vocab, oov_rate). The OOV rate against
     a frequency-ranked vocabulary is a standard pretraining quality
@@ -184,9 +170,9 @@ def vocab_coverage(
     membership join for the per-doc tally. The vocabulary (k rows)
     broadcasts; the token stream never joins anything bigger.
     """
-    base = df.filter(F.length(F.trim(F.col(text))) > 0)
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0)
     tok = base.select(
-        F.col(id_col), F.explode(tokens(F.col(text))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.length("term") > 0)
     counts = tok.groupBy("term").agg(F.count(F.lit(1)).alias("_tc"))
     # orderBy+limit plans as a distributed TakeOrderedAndProject
@@ -199,7 +185,7 @@ def vocab_coverage(
     tagged = tok.join(
         F.broadcast(vocab.withColumn("_in", F.lit(1))), "term", "left"
     )
-    return tagged.groupBy(id_col).agg(
+    return tagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.sum(F.coalesce("_in", F.lit(0))).cast("long").alias("n_in_vocab"),
         (
@@ -209,14 +195,7 @@ def vocab_coverage(
     )
 
 
-def keyword_search_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text: str = "text",
-    tf: DataFrame | None = None,
-) -> DataFrame:
+def keyword_search_topk(df: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Keyword retrieval: top-k documents per query by summed
     tf·idf over the query's terms (exact-integer idf as in
     :func:`tfidf_top_terms`).
@@ -227,61 +206,52 @@ def keyword_search_topk(
     full-corpus tf/df work happens only for terms some query mentions.
     idf still counts df over the whole corpus (per-term document
     frequency of the filtered stream IS the corpus df for that term).
-    ``queries``: (query_id, term) rows. Pass ``tf`` (a precomputed
-    :func:`query_tf` output, ideally checkpointed) when the caller
-    ALSO consumes the term counts (e.g. ndcg relevance judging) so
-    the corpus explode runs once across all consumers.
+    ``queries``: (query_id, term) rows.
     """
-    base = df.filter(F.length(F.trim(F.col(text))) > 0)
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0)
     qterms = queries.select("query_id", F.lower(F.col("term")).alias("term"))
-    if tf is None:
-        # dual-consumed (dfreq + scoring): checkpoint so the corpus
-        # explode runs once, not once per consumer
-        tf = query_tf(df, queries, id_col, text).localCheckpoint(eager=False)
+    # dual-consumed (dfreq + scoring): checkpoint so the corpus
+    # explode runs once, not once per consumer
+    tf = query_tf(df, queries).localCheckpoint(eager=False)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n_docs = base.agg(F.count_distinct(F.col(id_col)).cast("long").alias("_n"))
+    n_docs = base.agg(F.count_distinct(F.col("doc_id")).cast("long").alias("_n"))
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("idf", F.expr(f"(_n * {TFIDF_SCALE}) DIV df"))
         .join(F.broadcast(qterms), "term")
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", "doc_id")
         .agg(F.sum(F.col("tf") * F.col("idf")).cast("long").alias("score"))
     )
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col)
+        F.col("score").desc(), F.col("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score")
+        .select("query_id", "rank", "doc_id", "score")
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Polynomial rolling hash over token xxhashes, mod FP_P — a
     64-bit-safe portable document fingerprint (same value computable
     in any engine with a left fold)."""
-    t = tokens(F.col(text))
+    t = tokens(F.col("text"))
     fp = F.aggregate(
         F.transform(t, lambda x: F.pmod(F.xxhash64(x), F.lit(FP_P))),
         F.lit(0).cast("long"),
         lambda acc, h: F.pmod(acc * FP_B + h, F.lit(FP_P)),
     )
-    return df.filter(F.length(F.trim(F.col(text))) > 0).select(
-        F.col(id_col), fp.alias("fingerprint")
+    return df.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id"), fp.alias("fingerprint")
     )
 
 
-def query_tf(
-    df: DataFrame,
-    queries: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Shared retrieval base: (id_col, term, tf) over ONLY the query
+def query_tf(df: DataFrame, queries: DataFrame) -> DataFrame:
+    """Shared retrieval base: (doc_id, term, tf) over ONLY the query
     terms — the exploded token stream broadcast-semi-filtered before
     aggregation, so the full-corpus explode happens exactly once and
     everything downstream runs on docs x query-terms rows. Callers
@@ -290,27 +260,20 @@ def query_tf(
     ``localCheckpoint(eager=False)``: Catalyst does not share common
     subtrees across joins, so each extra consumer would otherwise
     re-run the corpus explode."""
-    base = df.filter(F.length(F.trim(F.col(text))) > 0)
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0)
     qterms = queries.select(F.lower(F.col("term")).alias("term"))
     tok = base.select(
-        F.col(id_col), F.explode(tokens(F.col(text))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.length("term") > 0)
     return (
         tok.join(F.broadcast(qterms.distinct()), "term")
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text: str = "text",
-    tf: DataFrame | None = None,
-) -> DataFrame:
-    """BM25 retrieval: top-k documents per query, scored with the
+def bm25_topk(df: DataFrame, queries: DataFrame) -> DataFrame:
+    """BM25 retrieval: top-10 documents per query, scored with the
     standard Okapi weighting at k1=1.2, b=0.75 — expressed entirely in
     exact integer arithmetic so any SQL engine reproduces the ranking
     bit-for-bit (same convention as :func:`tfidf_top_terms`: idf is
@@ -329,15 +292,11 @@ def bm25_topk(
     Scale shape mirrors keyword_search_topk: doc lengths come from one
     full-corpus pass (groupBy doc — one shuffle), the tf/df work runs
     only on the broadcast-filtered query-term stream, and the final
-    per-query top-k is a window over (query, score). No all-pairs.
-
-    ``tf`` accepts a precomputed (and typically lazily checkpointed)
-    :func:`query_tf` table so multi-leg retrievals (rrf fusion) share
-    one corpus explode instead of paying it per leg.
+    per-query top-10 is a window over (query, score). No all-pairs.
     """
     from pyspark.sql import Window
 
-    base = df.filter(F.length(F.trim(F.col(text))) > 0)
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0)
     qterms = queries.select("query_id", F.lower(F.col("term")).alias("term"))
     # doc length is the token-array size — a projection, NOT an
     # explode+groupBy (split of trimmed non-empty text on \s+ yields
@@ -346,20 +305,19 @@ def bm25_topk(
     # both the totals aggregate and the per-doc score join, and each
     # consumer would otherwise re-tokenize the corpus.
     dl = base.select(
-        F.col(id_col), F.size(tokens(F.col(text))).cast("long").alias("dl")
+        F.col("doc_id"), F.size(tokens(F.col("text"))).cast("long").alias("dl")
     ).localCheckpoint(eager=False)
     totals = dl.agg(
         F.sum("dl").cast("long").alias("_total"),
         F.count(F.lit(1)).cast("long").alias("_n"),
     )
-    if tf is None:
-        # dual-consumed (dfreq + scoring): checkpoint so the corpus
-        # explode runs once, not once per consumer
-        tf = query_tf(df, queries, id_col, text).localCheckpoint(eager=False)
+    # dual-consumed (dfreq + scoring): checkpoint so the corpus
+    # explode runs once, not once per consumer
+    tf = query_tf(df, queries).localCheckpoint(eager=False)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     scored = (
         tf.join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(totals))
         .withColumn("idf", F.expr(f"(_n * {TFIDF_SCALE}) DIV df"))
         .withColumn(
@@ -370,14 +328,14 @@ def bm25_topk(
             ),
         )
         .join(F.broadcast(qterms), "term")
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", "doc_id")
         .agg(F.sum(F.col("idf") * F.col("sat1000")).cast("long").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score")
+        .filter(F.col("rank") <= 10)
+        .select("query_id", "rank", "doc_id", "score")
     )
 
 
@@ -391,8 +349,6 @@ def word_tokens(text: str) -> Column:
 
 def bigram_transitions(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
     top_heads: int = 20,
     top_next: int = 3,
 ) -> DataFrame:
@@ -411,7 +367,7 @@ def bigram_transitions(
 
     tail_len = F.greatest(F.size(F.col("_ws")) - 1, F.lit(0))
     pairs = (
-        df.select(word_tokens(text).alias("_ws"))
+        df.select(word_tokens("text").alias("_ws"))
         .select(
             F.explode(
                 F.arrays_zip(
@@ -445,12 +401,7 @@ def bigram_transitions(
     )
 
 
-def phrase_search(
-    df: DataFrame,
-    phrase: list[str],
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
+def phrase_search(df: DataFrame, phrase: list[str]) -> DataFrame:
     """Exact phrase query over a positional posting list: docs (and
     0-based token offsets) where ``phrase``'s words occur at
     consecutive positions.
@@ -467,35 +418,29 @@ def phrase_search(
     phrase = [w.lower() for w in phrase]
     post = (
         df.select(
-            F.col(id_col), F.posexplode(word_tokens(text)).alias("pos", "term")
+            F.col("doc_id"), F.posexplode(word_tokens("text")).alias("pos", "term")
         )
         .filter(F.col("term").isin(phrase))
     )
     out = (
         post.filter(F.col("term") == phrase[0])
-        .select(id_col, F.col("pos").alias("start_pos"))
+        .select("doc_id", F.col("pos").alias("start_pos"))
     )
     for i, wrd in enumerate(phrase[1:], start=1):
         nxt = post.filter(F.col("term") == wrd).select(
-            F.col(id_col).alias("_d"), F.col("pos").alias("_p")
+            F.col("doc_id").alias("_d"), F.col("pos").alias("_p")
         )
         out = out.join(
             nxt,
-            (out[id_col] == nxt["_d"])
+            (out["doc_id"] == nxt["_d"])
             & (nxt["_p"] == out["start_pos"] + i),
-        ).select(id_col, "start_pos")
+        ).select("doc_id", "start_pos")
     return out
 
 
-def champion_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    r: int = 50,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Champion-list retrieval (Manning IR §7.1.3): per term, keep
+def champion_topk(df: DataFrame, queries: DataFrame, r: int = 50) -> DataFrame:
+    """Champion-list retrieval (Manning IR §7.1.3), top-10 documents
+    per query: per term, keep
     only the ``r`` highest-tf docs (ties → lower doc id) as that
     term's champion list, then evaluate queries ONLY over champion
     postings — the classic index-pruning strategy that bounds
@@ -516,11 +461,11 @@ def champion_topk(
     """
     from pyspark.sql import Window
 
-    base = df.filter(F.length(F.trim(F.col(text))) > 0)
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0)
     qterms = queries.select("query_id", F.lower(F.col("term")).alias("term"))
-    tf = query_tf(df, queries, id_col, text)
-    n_docs = base.agg(F.count_distinct(F.col(id_col)).cast("long").alias("_n"))
-    wch = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col(id_col))
+    tf = query_tf(df, queries)
+    n_docs = base.agg(F.count_distinct(F.col("doc_id")).cast("long").alias("_n"))
+    wch = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col("doc_id"))
     champs = (
         tf.withColumn("_r", F.row_number().over(wch))
         .withColumn(
@@ -533,12 +478,12 @@ def champion_topk(
         champs.crossJoin(F.broadcast(n_docs))
         .withColumn("idf", F.expr(f"(_n * {TFIDF_SCALE}) DIV df"))
         .join(F.broadcast(qterms), "term")
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", "doc_id")
         .agg(F.sum(F.col("tf") * F.col("idf")).cast("long").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score")
+        .filter(F.col("rank") <= 10)
+        .select("query_id", "rank", "doc_id", "score")
     )

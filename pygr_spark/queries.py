@@ -30,31 +30,12 @@ from pygr_spark.operators.overlap import overlap_join
 from pygr_spark.operators.sweep import coverage_segments
 from pygr_spark.tuning import (
     sort_scaled_partitions as _sort_scaled_partitions,
+    spread,
 )
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to cluster parallelism — used ONLY where
-    heavy work runs before any shuffle (e.g. the probe side of a
-    broadcast join): the driver's single-row-group parquet cannot be
-    split by the scanner, so such stages would otherwise run on one
-    core. Queries whose first operation is already a shuffle
-    (groupBy/sort-merge join) must NOT pay this extra exchange.
-    At production scale scans arrive multi-split and this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    # 0 files = in-memory/non-file source: already parallel, don't pay
-    # a useless full round-robin exchange (same guard as dedup._spread)
-    if 0 < n_files < target:
-        return df.repartition(target)
-    return df
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,8 +247,8 @@ def q_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: interval overlap join (binned strategy — the scale path)."""
     left = _order_ivals(spark, sf_dir)
     # lineitem is the probe side of a broadcast join — it never
-    # shuffles, so spread it for parallelism (see _spread)
-    right = _spread(_lineitem_ivals(spark, sf_dir))
+    # shuffles, so spread it for parallelism (see tuning.spread)
+    right = spread(_lineitem_ivals(spark, sf_dir))
     out = overlap_join(left, right, strategy="binned", bin_width=32)
     return out.select(
         F.col("id"),
@@ -740,7 +721,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is a TakeOrderedAndProject, never a global sort."""
     from pygr_spark.operators.similarity import cosine_topk_vectorized
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     queries = (
         emb.orderBy(
             F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("q"))),
@@ -864,7 +845,7 @@ def q_fingerprint_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = F.pmod(acc * factor, F.lit(P))
         return acc
 
-    docs = _spread(
+    docs = spread(
         _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     )
     ch = docs.select(
@@ -1407,7 +1388,7 @@ def q_six_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a DNA-ish column derived from documents (acgt letters only)."""
     from pygr_spark.functions.seqfns import six_frames
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("id"),
         F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
     ).filter(F.length("seq") >= 3)
@@ -1881,7 +1862,7 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id per identical text. The shape is the real training-data
     cleaning pipeline: narrow computed columns, one window for the
     canonical-copy choice, no extra shuffles."""
-    docs = _spread(
+    docs = spread(
         _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     )
     t = F.split(F.trim(F.lower("text")), r"\s+")
@@ -1934,7 +1915,7 @@ def q_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doc_id order, and chop into 2048-token windows — doc's bin =
     its start offset // budget. Window cumsum WITHIN the shard keeps
     the op embarrassingly parallel at 100 TB (no global order)."""
-    docs = _spread(
+    docs = spread(
         _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     )
     n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
@@ -2120,7 +2101,7 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     wordcount shape — explode is map-side, the count aggregates
     partially before the single shuffle on the token, top-k is a
     global window over the (tiny) aggregate."""
-    docs = _spread(
+    docs = spread(
         _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     )
     tok = docs.select(
@@ -2201,7 +2182,7 @@ def q_interval_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _order_ivals(spark, sf_dir).select(
         "id", "o_orderkey", F.col("start").alias("os"), F.col("stop").alias("oe")
     )
-    li = _spread(_lineitem_ivals(spark, sf_dir)).select(
+    li = spread(_lineitem_ivals(spark, sf_dir)).select(
         "id",
         "l_orderkey",
         "l_linenumber",
@@ -2253,7 +2234,7 @@ def q_chunked_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.partitioning import slices_from_chunks
     from pygr_spark.sources.fasta import chunked
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("id"), F.col("text")
     )
     n = F.length("text")
@@ -2303,22 +2284,20 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: PageRank rounds of pagerank and ppr_seeds and of their SQL unroll.
+PAGERANK_ITERS = 6
+
+
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative PageRank on the orders-derived graph, in exact
     scaled-integer arithmetic (pagerank_exact) so a fixed-iteration
     SQL unroll reproduces it bit-for-bit."""
     from pygr_spark.operators.graphs import pagerank_exact
 
-    return pagerank_exact(_pr_edges(spark, sf_dir), n_iter=6)
+    return pagerank_exact(_pr_edges(spark, sf_dir), n_iter=PAGERANK_ITERS)
 
 
-def _pagerank_oracle_sql(
-    n_iter: int = 6,
-    num: int = 85,
-    den: int = 100,
-    scale: int = 10**12,
-    seeded: bool = False,
-) -> str:
+def _pagerank_oracle_sql(seeded: bool = False) -> str:
     """Unrolled fixed-point CTE mirroring pagerank_exact: one CTE layer
     per iteration, truncating integer division throughout (positive
     operands, so DuckDB's floor-div == Spark's DIV). With ``seeded``,
@@ -2326,10 +2305,14 @@ def _pagerank_oracle_sql(
     pagerank_exact(seed_expr=...)) and zero-rank rows are dropped —
     ONE generator serves both entries so the arithmetic can never
     drift between them."""
+    from pygr_spark.operators.graphs import PAGERANK_DAMPING, PAGERANK_SCALE
+
+    num, den = PAGERANK_DAMPING
+    scale = PAGERANK_SCALE
     base = ((den - num) * scale) // den
     base_term = f"n.is_seed * {base}" if seeded else f"{base}"
     layers = []
-    for i in range(1, n_iter + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         layers.append(
             f"""r{i} AS (
   SELECT n.node,
@@ -2363,7 +2346,7 @@ WITH e AS (
 ), r0 AS (
   SELECT node, CAST({r0_rank} AS BIGINT) AS rank FROM nodes
 ), {", ".join(layers)}
-SELECT node, rank FROM r{n_iter}{tail}
+SELECT node, rank FROM r{PAGERANK_ITERS}{tail}
 """
 
 
@@ -2407,6 +2390,12 @@ SELECT node, CAST(min(comp) AS BIGINT) AS component FROM lbl GROUP BY node
 """
 
 
+#: Shingle length and exact Jaccard threshold (num, den) of the
+#: md5-portable MinHash entries and of their SQL oracle.
+MINHASH_N = 5
+MINHASH_THRESHOLD = (1, 5)
+
+
 def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup with the engine-portable md5-based 60-bit
     hash and an exact rational threshold, so the full pipeline —
@@ -2421,8 +2410,8 @@ def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = minhash_near_dups(
         _t(spark, sf_dir, "documents"),
-        n=5,
-        threshold=(1, 5),
+        n=MINHASH_N,
+        threshold=MINHASH_THRESHOLD,
         hash_fn=md5_hash60,
         band_hash_fn=md5_band_hash,
     )
@@ -2435,32 +2424,33 @@ def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle_sql(
-    n: int = 5,
-    num_perm: int = 32,
-    num_bands: int = 8,
-    t_num: int = 1,
-    t_den: int = 5,
-    seed: int = 42,
-) -> str:
+def _minhash_oracle_sql() -> str:
     """DuckDB mirror of q_minhash_near_dups: same shingles, same
     (a·h+b) mod p permutations (same seed), same md5-based band
     buckets, same integer-exact Jaccard verification."""
-    from pygr_spark.operators.dedup import MERSENNE_P, _perm_params
+    from pygr_spark.operators.dedup import (
+        MERSENNE_P,
+        MINHASH_BANDS,
+        MINHASH_PERMS,
+        MINHASH_SEED,
+        _perm_params,
+    )
 
-    perms = _perm_params(num_perm, seed)
+    n = MINHASH_N
+    t_num, t_den = MINHASH_THRESHOLD
+    perms = _perm_params(MINHASH_PERMS, MINHASH_SEED)
     mins = ",\n    ".join(
         f"CAST(min(({a}*_h + {b}) % {MERSENNE_P}) AS BIGINT) AS _m{i}"
         for i, (a, b) in enumerate(perms)
     )
-    rows = num_perm // num_bands
+    rows = MINHASH_PERMS // MINHASH_BANDS
     bands = "\n  UNION ALL\n".join(
         f"  SELECT _id, {b} AS band, ('0x'||substr(md5('{b},'||"
         + "||','||".join(
             f"CAST(_m{i} AS VARCHAR)" for i in range(b * rows, (b + 1) * rows)
         )
         + "),1,15))::BIGINT AS bh FROM sigs"
-        for b in range(num_bands)
+        for b in range(MINHASH_BANDS)
     )
     return rf"""
 WITH toks AS (
@@ -2517,8 +2507,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_near_dups(
         _t(spark, sf_dir, "documents"),
-        n=5,
-        threshold=(1, 5),
+        n=MINHASH_N,
+        threshold=MINHASH_THRESHOLD,
         hash_fn=md5_hash60,
         band_hash_fn=md5_band_hash,
     )
@@ -2561,6 +2551,12 @@ FROM comp c JOIN sz s ON s.component = c.component
 """
 
 
+#: Hamming radius and signature width of simhash_near_dups and its
+#: SQL oracle.
+SIMHASH_MAX_HAMMING = 8
+SIMHASH_BITS = 60
+
+
 def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup with the md5-based 60-bit signature — majority
     vote per bit, pigeonhole banding, exact Hamming verify — fully
@@ -2569,9 +2565,9 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = simhash_near_dups(
         _t(spark, sf_dir, "documents"),
-        max_hamming=8,
+        max_hamming=SIMHASH_MAX_HAMMING,
         hash_fn=md5_hash60,
-        sig_bits=60,
+        sig_bits=SIMHASH_BITS,
     )
     return out.select(
         F.col("id_a").cast("long").alias("id_a"),
@@ -2580,7 +2576,8 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_oracle_sql(max_hamming: int = 8, sig_bits: int = 60) -> str:
+def _simhash_oracle_sql() -> str:
+    max_hamming, sig_bits = SIMHASH_MAX_HAMMING, SIMHASH_BITS
     nb = max_hamming + 1
     width = sig_bits // nb
     mask = (1 << width) - 1
@@ -2620,7 +2617,15 @@ FROM cand WHERE bit_count(xor(sha, shb)) <= {max_hamming}
 Q_SIMHASH_SQL = _simhash_oracle_sql()
 
 
-def _sign_planes(n_planes: int = 8, dim: int = 64) -> list[list[int]]:
+#: Embedding width, and the LSH plane counts and k of the lsh_ann,
+#: lsh_ann_multiprobe and embed_near_dup entries and their SQL oracles.
+EMB_DIM = 64
+LSH_PLANES = 8
+LSH_K = 5
+EMBED_PLANES = 16
+
+
+def _sign_planes(n_planes: int) -> list[list[int]]:
     """Deterministic ±1 hyperplanes shared by the Spark query and the
     SQL oracle generator (seeded by md5 of the coordinate, so any
     process regenerates the same planes)."""
@@ -2629,7 +2634,7 @@ def _sign_planes(n_planes: int = 8, dim: int = 64) -> list[list[int]]:
     return [
         [
             1 if hashlib.md5(f"{i},{j}".encode()).digest()[0] & 1 else -1
-            for j in range(dim)
+            for j in range(EMB_DIM)
         ]
         for i in range(n_planes)
     ]
@@ -2642,12 +2647,12 @@ def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces buckets, candidates, and ranking bit-for-bit."""
     from pygr_spark.operators.similarity import lsh_ann_topk
 
-    planes = _sign_planes()
+    planes = _sign_planes(LSH_PLANES)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return lsh_ann_topk(emb, queries, planes, k=5, int_planes=True).select(
+    return lsh_ann_topk(emb, queries, planes, k=LSH_K, int_planes=True).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("vec_id").cast("long").alias("vec_id"),
         F.round("cos_sim", 6).alias("cos_sim"),
@@ -2655,8 +2660,8 @@ def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_ann_oracle_sql(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
-    planes = _sign_planes(n_planes, dim)
+def _lsh_ann_oracle_sql() -> str:
+    planes = _sign_planes(LSH_PLANES)
     bucket = " | ".join(
         "(CASE WHEN ("
         + " ".join(
@@ -2689,7 +2694,7 @@ WITH v AS (
 )
 SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS vec_id,
        round(sim, 6) AS cos_sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {LSH_K}
 """
 
 
@@ -2704,13 +2709,13 @@ def q_lsh_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion bit-for-bit."""
     from pygr_spark.operators.similarity import lsh_ann_topk
 
-    planes = _sign_planes()
+    planes = _sign_planes(LSH_PLANES)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return lsh_ann_topk(
-        emb, queries, planes, k=5, int_planes=True, multi_probe=True
+        emb, queries, planes, k=LSH_K, int_planes=True, multi_probe=True
     ).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -2719,8 +2724,8 @@ def q_lsh_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_multiprobe_oracle_sql(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
-    planes = _sign_planes(n_planes, dim)
+def _lsh_multiprobe_oracle_sql() -> str:
+    planes = _sign_planes(LSH_PLANES)
     bucket = " | ".join(
         "(CASE WHEN ("
         + " ".join(
@@ -2730,7 +2735,7 @@ def _lsh_multiprobe_oracle_sql(n_planes: int = 8, dim: int = 64, k: int = 5) -> 
         for i, p in enumerate(planes)
     )
     probe_list = "[bucket, " + ", ".join(
-        f"xor(bucket, {1 << i}::BIGINT)" for i in range(n_planes)
+        f"xor(bucket, {1 << i}::BIGINT)" for i in range(len(planes))
     ) + "]"
     return f"""
 WITH v AS (
@@ -2758,7 +2763,7 @@ WITH v AS (
 )
 SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS vec_id,
        round(sim, 6) AS cos_sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {LSH_K}
 """
 
 
@@ -2775,7 +2780,7 @@ def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     unsalted-md5 centroid sample) — never corpus-linear (judge r9)."""
     from pygr_spark.operators.similarity import ivf_topk_exact
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     queries = (
         emb.orderBy(
             F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("q"))),
@@ -2895,7 +2900,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, sf_dir)
-    out = run_stream_to_table(session_counts(stream, gap="30 minutes"), spark)
+    out = run_stream_to_table(session_counts(stream), spark)
     return out.select(
         F.unix_micros("session_start").alias("session_start_us"),
         F.unix_micros("session_end").alias("session_end_us"),
@@ -3045,16 +3050,14 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # should be nearly empty of random collisions — candidate volume
     # shrinks ~4x vs 8 planes while Hamming-1 multi-probe keeps full
     # recall on the planted pairs (verified at sf0.01 and sf0.1)
-    pairs = cosine_near_dups_lsh(
-        base.unionByName(planted), _sign_planes(16), threshold=0.99
-    )
+    pairs = cosine_near_dups_lsh(base.unionByName(planted), _sign_planes(EMBED_PLANES))
     return pairs.select(
         "id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim")
     )
 
 
-def _embed_near_dup_oracle_sql(n_planes: int = 16, dim: int = 64) -> str:
-    planes = _sign_planes(n_planes, dim)
+def _embed_near_dup_oracle_sql() -> str:
+    planes = _sign_planes(EMBED_PLANES)
     bucket = " | ".join(
         "(CASE WHEN ("
         + " ".join(
@@ -3064,7 +3067,7 @@ def _embed_near_dup_oracle_sql(n_planes: int = 16, dim: int = 64) -> str:
         for i, p in enumerate(planes)
     )
     probe_list = "[bucket, " + ", ".join(
-        f"xor(bucket, {1 << i}::BIGINT)" for i in range(n_planes)
+        f"xor(bucket, {1 << i}::BIGINT)" for i in range(len(planes))
     ) + "]"
     return f"""
 WITH base AS (
@@ -3563,7 +3566,7 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (score DESC, term)."""
     from pygr_spark.operators.textstats import tfidf_top_terms
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return tfidf_top_terms(docs, k=3)
 
 
@@ -3600,7 +3603,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers — engine-deterministic."""
     from pygr_spark.operators.textstats import vocab_coverage
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return vocab_coverage(docs, vocab_k=500)
 
 
@@ -3647,7 +3650,7 @@ def q_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qrows = [(qid, t) for qid, terms in _SEARCH_QUERIES for t in terms]
     queries = spark.createDataFrame(qrows, "query_id long, term string")
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return keyword_search_topk(docs, queries, k=10)
 
 
@@ -3748,7 +3751,7 @@ def q_overlap_reciprocal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.overlap import overlap_join
 
     left = _order_ivals(spark, sf_dir)
-    right = _spread(_lineitem_ivals(spark, sf_dir))
+    right = spread(_lineitem_ivals(spark, sf_dir))
     inter = F.least(F.col("stop"), F.col("stop_r")) - F.greatest(
         F.col("start"), F.col("start_r")
     )
@@ -3791,7 +3794,7 @@ def q_closest_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _order_ivals(spark, sf_dir).filter(F.col("o_orderkey") % 41 == 0).select(
         F.col("o_orderkey").alias("qid"), "id", "start", "stop"
     )
-    db = _spread(_lineitem_ivals(spark, sf_dir)).select("id", "start", "stop")
+    db = spread(_lineitem_ivals(spark, sf_dir)).select("id", "start", "stop")
     return closest_join(qv, db, bin_width=32)
 
 
@@ -3865,12 +3868,12 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     One equi-join on the shingle string, benchmark side broadcast."""
     from pygr_spark.operators.pipeline import decontaminate
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     corpus = docs.filter(F.col("doc_id") % 37 != 0)
     bench = docs.filter(F.col("doc_id") % 37 == 0)
-    return decontaminate(corpus, bench, n=8)
+    return decontaminate(corpus, bench)
 
 
 Q_DECONTAMINATE_SQL = r"""
@@ -3942,7 +3945,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints + one derived double."""
     from pygr_spark.operators.pipeline import repetition_stats
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     return repetition_stats(docs)
@@ -3990,7 +3993,7 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return (
-        hash_split(docs, cuts=(800, 900), buckets=1000)
+        hash_split(docs)
         .groupBy("source", "split")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -4137,8 +4140,8 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qrows = [(qid, t) for qid, terms in _SEARCH_QUERIES for t in terms]
     queries = spark.createDataFrame(qrows, "query_id long, term string")
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    return bm25_topk(docs, queries, k=10)
+    docs = spread(_t(spark, sf_dir, "documents"))
+    return bm25_topk(docs, queries)
 
 
 def _bm25_search_sql() -> str:
@@ -4191,8 +4194,8 @@ def q_quantize_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     step) — per-dim stats broadcast back, two shuffles, no collect."""
     from pygr_spark.operators.similarity import quantize_embeddings
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    return quantize_embeddings(emb, levels=255)
+    emb = spread(_t(spark, sf_dir, "embeddings"))
+    return quantize_embeddings(emb)
 
 
 Q_QUANTIZE_EMB_SQL = """
@@ -4286,7 +4289,7 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").cast("binary").alias("payload"),
         F.create_map(F.lit("source"), F.col("source")).alias("meta"),
     )
-    return frame_sample_plan(media, every_ms=1000).select(
+    return frame_sample_plan(media).select(
         "media_id",
         F.col("frame_no").cast("long").alias("frame_no"),
         "frame_ts_ms",
@@ -4404,7 +4407,7 @@ def q_seed_homology(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ONE k-mer equi-join."""
     from pygr_spark.operators.similarity import kmer_seed_join
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return kmer_seed_join(docs, k=20, min_seeds=3, max_kmer_docs=20)
 
 
@@ -4550,7 +4553,7 @@ def q_interval_subtract(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _order_ivals(spark, sf_dir).filter(F.col("o_orderkey") % 53 == 0).select(
         F.col("o_orderkey").alias("qid"), "id", "start", "stop"
     )
-    db = _spread(_lineitem_ivals(spark, sf_dir)).select("id", "start", "stop")
+    db = spread(_lineitem_ivals(spark, sf_dir)).select("id", "start", "stop")
     return subtract_join(qv, db, bin_width=32)
 
 
@@ -4609,13 +4612,13 @@ def q_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.sketches import countmin_build, countmin_estimate
     from pygr_spark.operators.textstats import tokens
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("item")).filter(
         F.length("item") > 0
     )
-    sketch = countmin_build(tok, depth=4, width=256)
+    sketch = countmin_build(tok, width=256)
     exact = tok.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("exact"))
     # distributed top-k (TakeOrderedAndProject) over the full vocabulary,
     # then rank only the 20 survivors — ranking the whole exact-count
@@ -4631,7 +4634,7 @@ def q_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sortWithinPartitions(F.col("exact").desc(), F.col("item"))
         .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("long"))
     )
-    est = countmin_estimate(sketch, top.select("item"), depth=4, width=256)
+    est = countmin_estimate(sketch, top.select("item"), width=256)
     return top.join(est, "item").select("item", "rank", "exact", "estimate")
 
 
@@ -4840,7 +4843,7 @@ def q_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered. surprise(bigram) = (total_bigrams · 1e6) DIV count;
     doc score = Σ surprise DIV n_bigrams. Wordcount-shaped: one
     explode + two groupBys + a broadcast count join."""
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     toks = docs.select(
@@ -4956,7 +4959,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration exact on both engines."""
     from pygr_spark.operators.clustering import kmeans_spherical
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     out = kmeans_spherical(emb, k=8, n_iter=2)
     return out.select(
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -5051,12 +5054,12 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a cluster (the paper's cost model: k bounds cluster size)."""
     from pygr_spark.operators.clustering import semdedup
 
-    # _spread: the heavy per-row work (assignment projection, pair
+    # spread: the heavy per-row work (assignment projection, pair
     # verify) runs before any shuffle, and the single-row-group
     # testdata parquet scans as 2 splits — without the round-robin
     # repartition the 64-term dot verify runs on 2 of 32 cores
     # (measured 9s -> 2.5s at sf0.1)
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda e: e.cast("double")).alias("embedding"),
@@ -5196,7 +5199,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     both = base.unionAll(planted)
     return edit_distance_join(
-        both, both, "title", id_col="doc_id", max_dist=2, block_prefix=8
+        both, both, "title", max_dist=2, block_prefix=8
     )
 
 
@@ -5304,6 +5307,12 @@ FROM s, LATERAL (
 """
 
 
+#: The classifier_filter model: deterministic stand-in weights
+#: w_i = ((i*7) % 9) - 4 ∈ [-4, 4], one per embedding dimension, shared
+#: by the entries that score with it and by their SQL oracles.
+_CLASSIFIER_W = [((i * 7) % 9) - 4 for i in range(EMB_DIM)]
+
+
 def q_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned-classifier corpus filtering (the fasttext-style quality
     gate every LLM pipeline runs): score = w·v + b with a FIXED
@@ -5317,12 +5326,9 @@ def q_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.similarity import quantized
 
     emb = _t(spark, sf_dir, "embeddings")
-    dim = 64
-    # deterministic stand-in weights: w_i = ((i*7) % 9) - 4  ∈ [-4, 4]
-    w = [((i * 7) % 9) - 4 for i in range(dim)]
     terms = " ".join(
         ("+" if c >= 0 else "-") + f" {abs(c)} * element_at(qv, {i + 1})"
-        for i, c in enumerate(w)
+        for i, c in enumerate(_CLASSIFIER_W)
     )
     v = emb.select("vec_id", "label", quantized(F.col("embedding")).alias("qv"))
     return v.select(
@@ -5334,11 +5340,10 @@ def q_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _classifier_sql(dim: int = 64) -> str:
-    w = [((i * 7) % 9) - 4 for i in range(dim)]
+def _classifier_sql() -> str:
     terms = " ".join(
         ("+" if c >= 0 else "-") + f" {abs(c)} * q[{i + 1}]"
-        for i, c in enumerate(w)
+        for i, c in enumerate(_CLASSIFIER_W)
     )
     return f"""
 WITH v AS (
@@ -5466,7 +5471,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.dedup import exact_dedup
     from pygr_spark.operators.pipeline import decontaminate
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     quality = docs.filter(F.col("n_chars").between(120, 5000))
@@ -5474,7 +5479,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = quality.join(canon, "doc_id")
     corpus = kept.filter(F.col("doc_id") % 41 != 0)
     bench = docs.filter(F.col("doc_id") % 41 == 0)
-    flagged = decontaminate(corpus, bench, n=8).select("doc_id")
+    flagged = decontaminate(corpus, bench).select("doc_id")
     clean = corpus.join(flagged, "doc_id", "left_anti")
     return clean.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -5672,10 +5677,9 @@ def q_seed_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch -2, best prefix kept, 40 chars per direction)."""
     from pygr_spark.operators.similarity import seed_extend_join
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return seed_extend_join(
-        docs, k=20, min_seeds=3, max_kmer_docs=20, window=40,
-        match=1, mismatch=-2,
+        docs, min_seeds=3, max_kmer_docs=20, window=40,
     )
 
 
@@ -5747,9 +5751,9 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + per-doc gaps-and-islands merge."""
     from pygr_spark.operators.spandedup import dup_spans
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     spans = dup_spans(
-        docs, id_col="doc_id", text_col="text", length=40, sample_mod=1
+        docs, length=40, sample_mod=1
     )
     return spans.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -5799,7 +5803,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical rows by construction."""
     from pygr_spark.operators.sampling import stratified_sample
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     samp = stratified_sample(
         docs, strata=["lang"], n_per_stratum=20, id_col="doc_id"
     )
@@ -5841,7 +5845,6 @@ def q_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         basket_col="l_orderkey",
         item_col="l_partkey",
         top_n=3,
-        min_pair_count=2,
         max_basket=50,
     )
     return out.select(
@@ -6016,7 +6019,7 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject; the continuation rank windows per head."""
     from pygr_spark.operators.textstats import bigram_transitions
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     out = bigram_transitions(docs, top_heads=20, top_next=3)
     return out.select(
         "head",
@@ -6059,7 +6062,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text."""
     from pygr_spark.operators.textstats import phrase_search
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     hits = phrase_search(docs, ["slow", "hash", "batch"])
     return hits.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -7257,7 +7260,7 @@ def q_kmer_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     times). Two stacked hash aggregates — kmer counts, then counts of
     counts; the explode is the same codegen substring fan-out as
     seed_extend's k-mer build."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id"),
         F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
     ).filter(F.length("seq") >= 8)
@@ -7296,7 +7299,7 @@ def q_gc_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (G−C, G+C) — chunking is the same arithmetic projection
     as chunked_slice, counts are length-difference expressions, no
     explode of characters."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id"),
         F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
     ).filter(F.length("seq") >= 1)
@@ -7353,7 +7356,7 @@ def q_palindrome_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
     reverse complement, found as a codegen projection —
     translate+reverse on the window, no UDF (functions/seqfns.py F1
     machinery; reference sequence.py reverse-complement slices)."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id"),
         F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
     ).filter(F.length("seq") >= 6)
@@ -7393,7 +7396,7 @@ def q_codon_usage(spark: SparkSession, sf_dir: str) -> DataFrame:
     codon-bias profile behind expression optimization): non-overlapping
     3-mers via a stride-3 sequence explode, one hash aggregate, usage
     share as exact (count, total) integers."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq")
     ).filter(F.length("seq") >= 3)
     codons = docs.select(
@@ -7501,7 +7504,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the returned frame computes from the input as of the build."""
     from pygr_spark.operators.similarity import cosine_topk_vectorized
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     # EAGER checkpoint of the 100-row holdout: it feeds THREE
     # consumers (the query collect inside cosine_topk_vectorized, the
     # broadcast anti-join corpus split, the truth join) and each would
@@ -7692,7 +7695,7 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one float op per doc per char-class, not per char). Char fan-out
     is the codegen explode(sequence)+substr shape; the (doc, char)
     hash agg partial-combines map-side before any shuffle."""
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length("text") >= 1
     )
     chars = docs.select(
@@ -7751,7 +7754,7 @@ def q_orf_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate, the per-doc winner being the longest (tie → leftmost).
     All windows are keyed by doc_id — no unpartitioned sort, no UDF."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -7856,7 +7859,7 @@ def q_restriction_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in codegen; the (frag_len) hash agg partial-combines map-side, so
     the only shuffle carries one row per distinct length."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq")
         )
@@ -7895,7 +7898,7 @@ def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape as the k-means centroid init); the pair fan-out is the
     codegen explode(sequence)+substr path with map-side combine, and
     the merge is one regexp_replace projection — no UDF anywhere."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.col("text")
     ).filter(F.length("text") >= 2)
 
@@ -7996,7 +7999,7 @@ def q_sparse_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     that regime is q_classifier_filter's literal-weight codegen."""
     from pygr_spark.operators.dedup import md5_hash60
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
+    docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ", -1)).alias("term")
     ).filter(F.col("term") != "")
@@ -8220,7 +8223,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.dedup import md5_hash60
 
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select("doc_id", F.lower("text").alias("s"))
         .filter(F.length("s") >= 23)
     )
@@ -8388,7 +8391,7 @@ def q_tandem_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, all windows doc-keyed. Linear row blowup
     (3 k-values × positions), the kmer_spectrum shape."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -8484,7 +8487,7 @@ def q_pwm_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax is one keyed aggregate via max(struct(score, -pos)).
     Linear fan-out (len−5 rows/doc), the kmer_spectrum shape."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -8560,7 +8563,7 @@ def q_debruijn_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, so every post-explode stage is tiny regardless of corpus
     size — the graph SUMMARY scales as O(4^(k-1)), not O(data)."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq")
         )
@@ -8707,7 +8710,7 @@ def q_bwt_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     string column (canon-safe), verified by the doc-length invariant
     and the oracle's ORDER-BY string_agg."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -8877,11 +8880,9 @@ def _margin_scored(spark: SparkSession, sf_dir: str):
     so the three metrics can never disagree about the model."""
     from pygr_spark.operators.similarity import quantized
 
-    dim = 64
-    w = [((i * 7) % 9) - 4 for i in range(dim)]
     terms = " ".join(
         ("+" if c >= 0 else "-") + f" {abs(c)} * element_at(qv, {i + 1})"
-        for i, c in enumerate(w)
+        for i, c in enumerate(_CLASSIFIER_W)
     )
     emb = _t(spark, sf_dir, "embeddings").select(
         "label", quantized(F.col("embedding")).alias("qv")
@@ -8916,11 +8917,10 @@ _MARGIN_SQL = """
 """
 
 
-def _margin_sql(dim: int = 64) -> str:
-    w = [((i * 7) % 9) - 4 for i in range(dim)]
+def _margin_sql() -> str:
     terms = " ".join(
         ("+" if c >= 0 else "-") + f" {abs(c)} * q[{i + 1}]"
-        for i, c in enumerate(w)
+        for i, c in enumerate(_CLASSIFIER_W)
     )
     return _MARGIN_SQL.format(terms=terms)
 
@@ -9173,7 +9173,7 @@ def q_target_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # targets feeds 3 consumers (island overlap, the stacked pass,
     # the final length join) and reads feeds 2 (geometry distinct,
     # stacked pass) — EAGER checkpoints so the orders/lineitem scans
-    # (and reads' _spread exchange) run once, not once per consumer.
+    # (and reads' spread exchange) run once, not once per consumer.
     # r11 controlled A/B at 16× (alternating min-of-4, same session):
     # fused n_reads sub-plan 6.8 → 5.7s; whole entry 17 → 15 jobs.
     targets = (
@@ -9188,7 +9188,7 @@ def q_target_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     reads = (
-        _spread(_lineitem_ivals(spark, sf_dir))
+        spread(_lineitem_ivals(spark, sf_dir))
         .select("id", "start", "stop")
         .localCheckpoint(eager=True)
     )
@@ -9440,7 +9440,7 @@ def q_fm_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.fmindex import fm_count
 
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -9486,7 +9486,7 @@ def q_interval_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-stage merge-then-intersect pipeline, measured 1.6x faster at
     sf0.1 with identical output)."""
     a = _order_ivals(spark, sf_dir).select("id", "start", "stop")
-    b = _spread(_lineitem_ivals(spark, sf_dir)).select("id", "start", "stop")
+    b = spread(_lineitem_ivals(spark, sf_dir)).select("id", "start", "stop")
     ev = a.select(
         "id",
         F.expr(
@@ -9994,7 +9994,7 @@ def q_overlap_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical survivors (16× local wall parity, 8.4 vs 8.5s —
     the win is network shuffle volume, which local[] can't see)."""
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -10130,7 +10130,7 @@ def q_suffix_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.fmindex import LCP_MAX_DOC_CHARS, lcp_table_per_doc
 
     docs = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
@@ -10176,7 +10176,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qrows = [(qid, t) for qid, terms in _SEARCH_QUERIES for t in terms]
     queries = spark.createDataFrame(qrows, "query_id long, term string")
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     tf = query_tf(docs, queries).localCheckpoint(eager=False)
     # r12 fusion (guide §2.4, the ndcg_eval discipline): the BM25 leg
     # and the raw-tf leg each aggregated the SAME tf⋈qterms rows by
@@ -10340,8 +10340,8 @@ def q_champion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qrows = [(qid, t) for qid, terms in _SEARCH_QUERIES for t in terms]
     queries = spark.createDataFrame(qrows, "query_id long, term string")
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    return champion_topk(docs, queries, k=10, r=50)
+    docs = spread(_t(spark, sf_dir, "documents"))
+    return champion_topk(docs, queries, r=50)
 
 
 def _champion_topk_sql() -> str:
@@ -10694,7 +10694,7 @@ def q_hll_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: n_regs is an internal term of the estimate aggregate
     # (keep_n_regs) — the separate per-week count pass over the
     # register state and its join are gone; one chain, one events scan
-    est = hll_estimate_terms(weekly_regs, ["week"], m=64, keep_n_regs=True)
+    est = hll_estimate_terms(weekly_regs, ["week"], keep_n_regs=True)
     return est.select(
         F.col("week").cast("long").alias("week"), "n_regs", "hll_l", "hll_num"
     )
@@ -10749,7 +10749,7 @@ def q_nb_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Heaps-small, eagerly checkpointed for its three consumers."""
     from pygr_spark.operators.textstats import tokens
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim("text")) > 0
     )
     tok = docs.select(
@@ -10831,7 +10831,7 @@ def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (beyond that the design note says promote to DECIMAL(38,0))."""
     from pygr_spark.operators.textstats import tokens
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim("text")) > 0
     )
     # full-key distinct, not dropDuplicates(["doc_id","term"]): lang is
@@ -11045,7 +11045,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     head side broadcast-sized by the support cut."""
     from pygr_spark.operators.textstats import word_tokens
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim("text")) > 0
     )
     # (r12 negative result: eagerly checkpointing _ws so the bigram
@@ -11135,7 +11135,7 @@ def q_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     read off the array map-side. The shingle_rows window form paid a
     corpus-token shuffle + per-doc sort + dedup agg before its
     checkpoint (the build was ~everything this entry cost at 16×)."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
         F.expr(r"split(trim(lower(text)), '\\s+')").alias("_t"),
@@ -11262,7 +11262,7 @@ def q_lcp_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch-scan bug hash-mismatches."""
     from pygr_spark.operators.fmindex import LCP_MAX_DOC_CHARS, lcp_table_per_doc
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.regexp_replace(F.lower("text"), "[^acgt]", "").alias("seq"),
     ).filter(F.length("seq").between(4, LCP_MAX_DOC_CHARS))
@@ -11321,14 +11321,14 @@ def q_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (in-task duplicate grams collapse before the shuffle;
     the r10/r11 form repartition()'d RAW gram rows, which blocks
     partial aggregation, then paid a full per-partition window sort).
-    Both legs share one scan via the reused _spread exchange, and the
+    Both legs share one scan via the reused spread exchange, and the
     stitch is a union-aggregate keyed doc_id (≤ n_docs rows per leg —
     no broadcast, so the shape holds when n_docs itself is huge).
     (r9 negative result superseded: the r9 attempt kept the distinct
     gram table materialized via checkpoint and re-aggregated it
     twice; this form never materializes the gram table and its only
     wide state is the spillable hash aggregate.)"""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.lower("text").alias("s")
     ).filter(F.length("s") >= 8)
     # leg 1 — per-doc distinct-gram count, zero shuffles: the HOF is
@@ -11407,7 +11407,7 @@ def q_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_prox_pairs)."""
     from pygr_spark.operators.textstats import tokens
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim("text")) > 0
     )
     # eager checkpoint: the positional index feeds the term-frequency
@@ -11489,7 +11489,7 @@ def q_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary."""
     from pygr_spark.operators.textstats import tokens
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim("text")) > 0
     )
     tok = docs.select(
@@ -11582,7 +11582,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         "register",
         "m_j",
     )
-    est = hll_estimate_terms(regs, ["win_start"], m=64)
+    est = hll_estimate_terms(regs, ["win_start"])
     n_regs = regs.groupBy("win_start").agg(
         F.count(F.lit(1)).cast("long").alias("n_regs")
     )
@@ -12139,7 +12139,7 @@ def q_reciprocal_best_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries are the sublinear path when both sides are large."""
     from pygr_spark.operators.similarity import rbh_exact
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     a = emb.orderBy(
         F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("a"))),
         F.col("vec_id"),
@@ -12211,7 +12211,7 @@ def q_rbh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_rbh_candidates.py for the pinned floor)."""
     from pygr_spark.operators.similarity import md5_plane_tables, rbh_lsh
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     n = emb.count()
     k = max(6, (n // 8).bit_length())
     tables = md5_plane_tables(16, k, 64)
@@ -12867,7 +12867,7 @@ def q_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pygr_spark.operators.stats import pava_isotonic
 
-    fit = pava_isotonic(bins, bin_col="bin", tot_col="tot", cnt_col="cnt")
+    fit = pava_isotonic(bins)
     return fit.select(
         F.col("bin").cast("long").alias("bin"),
         "cnt",
@@ -13125,7 +13125,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(qid, t) for qid, terms in _NDCG_QUERIES for t in terms],
         "query_id long, term string",
     )
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     base = docs.filter(F.length(F.trim("text")) > 0)
     # ONE corpus explode feeds both the ranking and the relevance
     # judge: tf > 0 iff the (doc, term) pair exists
@@ -13430,7 +13430,7 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygr_spark.operators.stats import conformal_split
 
     qhat = conformal_split(
-        calib, "event_type", "r", "event_id", alpha_num=1, alpha_den=10
+        calib, "event_type", "r", "event_id"
     )
     test = ev.filter(F.col("split") >= 8).join(F.broadcast(mu), "event_type")
     return (
@@ -13516,7 +13516,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs."""
     from pygr_spark.operators.similarity import cosine_topk_vectorized
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     # fixed-size query batch: 20 lowest md5(vec_id||'q') — never
     # corpus-linear (judge r9; the vectorized kernel collects queries)
     queries = (
@@ -14172,7 +14172,7 @@ def q_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node id, so it rides the operator's own node table as an
     # expression — the old seeds frame re-scanned the edge list,
     # ran a distinct, and joined back for the identical column
-    out = pagerank_exact(edges, n_iter=6, seed_expr="node % 37 = 0")
+    out = pagerank_exact(edges, n_iter=PAGERANK_ITERS, seed_expr="node % 37 = 0")
     # drop never-reached nodes (rank exactly 0) so the output carries
     # the personalized neighborhood, not the whole node set
     return out.filter(F.col("rank") > 0).select(
@@ -14286,7 +14286,7 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global sort."""
     from pygr_spark.operators.similarity import triplet_mining
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     anchors = emb.orderBy(
         F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
     ).limit(40)
@@ -15577,7 +15577,7 @@ def q_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB index without re-clustering it. Exact long outputs."""
     from pygr_spark.operators.pipeline import snapshot_dedup
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     # try_cast, not cast: a source value NOT matching srcN extracts ''
@@ -15636,7 +15636,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary."""
     from pygr_spark.operators.ranks import dist_grouped_rank
 
-    docs = _spread(_t(spark, sf_dir, "documents")).filter(
+    docs = spread(_t(spark, sf_dir, "documents")).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
     toks = docs.select(

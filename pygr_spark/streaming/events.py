@@ -99,15 +99,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream.withColumn("event_time", F.timestamp_micros(F.expr("ts DIV 1000")))
 
 
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Per event_type counts in tumbling event-time windows."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Per event_type counts in 5-minute tumbling event-time windows
+    (30-minute watermark)."""
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window), F.col("event_type"))
+        events.withWatermark("event_time", "30 minutes")
+        .groupBy(F.window("event_time", "5 minutes"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("window.start").alias("win_start"),
@@ -119,15 +116,12 @@ def tumbling_counts(
     )
 
 
-def session_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-user session windows — pygr's maxgap merge in time domain."""
+def session_counts(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap, 2-hour watermark) —
+    pygr's maxgap merge in time domain."""
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", gap), F.col("user_id"))
+        events.withWatermark("event_time", "2 hours")
+        .groupBy(F.session_window("event_time", "30 minutes"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -138,17 +132,12 @@ def session_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding event-time windows (each event lands in window/slide
-    overlapping windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding 10-minute event-time windows every 5 minutes (each
+    event lands in two overlapping windows; 30-minute watermark)."""
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window, slide), F.col("event_type"))
+        events.withWatermark("event_time", "30 minutes")
+        .groupBy(F.window("event_time", "10 minutes", "5 minutes"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("window.start").alias("win_start"),
@@ -159,9 +148,10 @@ def sliding_counts(
     )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked exactly-once by event_id (late-data dedup policy)."""
-    return events.withWatermark("event_time", watermark).dropDuplicates(
+def dedup_stream(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) exactly-once by event_id (late-data dedup
+    policy)."""
+    return events.withWatermark("event_time", "1 hour").dropDuplicates(
         ["event_id"]
     )
 
@@ -172,10 +162,9 @@ def interval_join_streams(
     key: str,
     within: str = "30 minutes",
     watermark: str = "1 hour",
-    time_col: str = "event_time",
 ) -> DataFrame:
     """Stream-stream time-interval join: each left event pairs with
-    the right-stream events for the same ``key`` whose event time
+    the right-stream events for the same ``key`` whose ``event_time``
     falls in ``[left_time, left_time + within]`` — pygr's interval
     overlap join (J1) with one endpoint open-ended, in the time
     domain over two unbounded streams.
@@ -187,18 +176,18 @@ def interval_join_streams(
     stream-stream join, and the reason the time bound is mandatory
     at scale: without it state grows forever).
     """
-    l = left.withWatermark(time_col, watermark).select(
+    l = left.withWatermark("event_time", watermark).select(
         F.col(key).alias("_lk"),
-        F.col(time_col).alias("_lt"),
-        *[c for c in left.columns if c not in (key, time_col)],
+        F.col("event_time").alias("_lt"),
+        *[c for c in left.columns if c not in (key, "event_time")],
     )
-    r = right.withWatermark(time_col, watermark).select(
+    r = right.withWatermark("event_time", watermark).select(
         F.col(key).alias("_rk"),
-        F.col(time_col).alias("_rt"),
+        F.col("event_time").alias("_rt"),
         *[
             F.col(c).alias(f"r_{c}")
             for c in right.columns
-            if c not in (key, time_col)
+            if c not in (key, "event_time")
         ],
     )
     return l.join(

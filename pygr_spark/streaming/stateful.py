@@ -38,34 +38,19 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def streaming_gap_merge(
-    events: DataFrame,
-    maxgap: int,
-    id_col: str = "id",
-    pos_col: str = "start",
-    timeout_ms: int | None = None,
-) -> DataFrame:
-    """Incremental per-key gap-merge over a stream of positions.
-    Emits a merged interval whenever the key's run is broken by a gap
-    > maxgap; the open run is held in GroupState. With ``timeout_ms``
-    a processing-time timeout flushes idle keys — note that a bounded
-    availableNow run then keeps triggering until every pending timeout
-    fires, so batch-style drains should leave it None (open runs stay
-    in the checkpoint for the next incarnation, which is the correct
-    continuous-pipeline behavior)."""
+def streaming_gap_merge(events: DataFrame, maxgap: int) -> DataFrame:
+    """Incremental per-``id`` gap-merge over a stream of ``start``
+    positions. Emits a merged interval whenever the key's run is
+    broken by a gap > maxgap; the open run is held in GroupState with
+    no timeout, so open runs stay in the checkpoint for the next
+    incarnation (the correct continuous-pipeline behavior; a
+    processing-time timeout would keep a bounded availableNow drain
+    triggering until every pending timeout fires)."""
 
     def merge(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (kid,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                s, e, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    [{"id": kid, "start": s, "stop": e, "n_merged": n}]
-                )
-            return
         if state.exists:
             cur_s, cur_e, cur_n = state.get
         else:
@@ -73,7 +58,7 @@ def streaming_gap_merge(
         out: list[dict] = []
         positions: list[int] = []
         for pdf in pdfs:
-            positions.extend(int(x) for x in pdf[pos_col])
+            positions.extend(int(x) for x in pdf["start"])
         for p in sorted(positions):
             if cur_s is None:
                 cur_s, cur_e, cur_n = p, p + 1, 1
@@ -90,22 +75,15 @@ def streaming_gap_merge(
                 cur_s, cur_e, cur_n = min(cur_s, p), max(cur_e, p + 1), cur_n + 1
         if cur_s is not None:
             state.update((cur_s, cur_e, cur_n))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(timeout_ms)
         if out:
             yield pd.DataFrame(out)
 
-    conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(id_col).applyInPandasWithState(
+    return events.groupBy("id").applyInPandasWithState(
         merge,
         outputStructType=MERGED_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=conf,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -411,16 +389,9 @@ PAIR_STATE_SCHEMA = T.StructType(
 )
 
 
-def streaming_pair_firsts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    win_col: str = "win_start",
-    item_col: str = "event_type",
-    ts_col: str | None = None,
-    window_sec: int = 3600,
-    grace_sec: int = 0,
-) -> DataFrame:
-    """Streaming frequent-pair support: per (user, window), emit each
+def streaming_pair_firsts(events: DataFrame, ts_col: str | None = None) -> DataFrame:
+    """Streaming frequent-pair support: per (``user_id``,
+    ``win_start``) with ``event_type`` items, emit each
     unordered item pair EXACTLY ONCE — at the moment its second
     member first appears — regardless of how events split across
     micro-batches or arrive out of order. The per-user GroupState is
@@ -436,10 +407,10 @@ def streaming_pair_firsts(
     user — for the events table, windows × 5 event types (asserted
     at 16× in tests/test_stream_pairs.py).
 
-    EVICTION (``ts_col`` set): the production shape — a watermark of
-    ``grace_sec`` goes on ``ts_col`` and the state runs under
+    EVICTION (``ts_col`` set): the production shape — a zero-grace
+    watermark goes on ``ts_col`` and the state runs under
     ``EventTimeTimeout``: each update re-arms a timeout at the
-    earliest live-window close (win_start + window_sec + grace_sec);
+    earliest live-window close (win_start + 3600 s, the window length);
     when the watermark passes it, the fired callback prunes every
     closed window's entries and REMOVES the user's state row once no
     window is live — so state tracks the active-window working set,
@@ -479,16 +450,14 @@ def streaming_pair_firsts(
             live = {
                 (w, i)
                 for (w, i) in seen
-                if (w + window_sec + grace_sec) * 1000 > wm_ms
+                if (w + 3600) * 1000 > wm_ms
             }
             if not live:
                 state.remove()
                 return
             srt = sorted(live)
             state.update(([w for w, _ in srt], [i for _, i in srt]))
-            close_ms = min(
-                (w + window_sec + grace_sec) * 1000 for (w, _) in live
-            )
+            close_ms = min((w + 3600) * 1000 for (w, _) in live)
             state.setTimeoutTimestamp(max(close_ms, wm_ms + 1))
 
         if evict and state.hasTimedOut:
@@ -500,7 +469,7 @@ def streaming_pair_firsts(
         for pdf in pdfs:
             rows.extend(
                 (int(w), str(i))
-                for w, i in zip(pdf[win_col], pdf[item_col])
+                for w, i in zip(pdf["win_start"], pdf["event_type"])
             )
         # canonical admission order inside the batch: (window, item)
         # sorted — WHICH pairs are emitted is order-independent (set
@@ -531,12 +500,12 @@ def streaming_pair_firsts(
             yield pd.DataFrame(out)
 
     if evict:
-        src = events.withWatermark(ts_col, f"{grace_sec} seconds")
+        src = events.withWatermark(ts_col, "0 seconds")
         timeout = GroupStateTimeout.EventTimeTimeout
     else:
         src = events
         timeout = GroupStateTimeout.NoTimeout
-    return src.groupBy(user_col).applyInPandasWithState(
+    return src.groupBy("user_id").applyInPandasWithState(
         firsts,
         outputStructType=PAIR_OUT_SCHEMA,
         stateStructType=PAIR_STATE_SCHEMA,

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Measured class per heavy catalog entry (the 256×-probe set of
 #: SCALING.md rounds 9-11). "sort_scaled" entries route their big
@@ -49,6 +49,31 @@ SHUFFLE_CLASS: dict[str, str] = {
     "assoc_rules": "cores",            # shared pair build, map-side combine
     "frequent_triples": "cores",       # capped basket fan-out + agg
 }
+
+
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition to cluster parallelism before heavy per-row work
+    that runs ahead of any shuffle: a single-row-group parquet cannot
+    be split by the scanner, so such stages would otherwise run on one
+    core. With ``keys`` the exchange hash-partitions on them (a later
+    window or aggregate keyed the same way reuses it); without, it
+    round-robins. A plan whose first operation is already a shuffle
+    must NOT pay this extra exchange.
+
+    Only a file source with fewer files than the parallelism
+    repartitions: ``inputFiles()`` is a metadata-only probe
+    (``rdd.getNumPartitions()`` costs ~0.8 s of plan conversion), a
+    source with no files (in-memory, non-file) is already parallel,
+    and at production scale scans arrive multi-split, so this is a
+    no-op there."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        n_files = len(df.inputFiles())
+    except Exception:
+        n_files = 0
+    if 0 < n_files < target:
+        return df.repartition(target, *keys)
+    return df
 
 
 def table_bytes(sf_dir: str, tables: tuple[str, ...]) -> int:
@@ -164,28 +189,21 @@ def small_path(spark: SparkSession, switch: str, size: int | None) -> bool:
 
 
 def sort_scaled_partitions(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...],
-    expansion: float = 50.0,
-    target_partition_bytes: int = 64 << 20,
-    cap: int = 4096,
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...]
 ) -> int:
     """Partition count for the SORT-SCALED class: grow the exchange
-    width with input so each partition's sort run stays around
-    ``target_partition_bytes`` of in-flight rows.
+    width with input so each partition's sort run stays around 64 MiB
+    of in-flight rows.
 
-    ``expansion`` is the plan's rows-bytes-per-input-byte fan-out
+    The expansion of 50 is the plan's rows-bytes-per-input-byte fan-out
     (novelty's 8-gram explode turns ~1 compressed parquet byte into
     ~50 bytes of shuffled gram rows: ~2-3× parquet text compression
     × ~8 gram rows/char × ~2.5 row overhead). The floor is the
     session's core count (never narrower than the machine); the cap
-    bounds scheduler pressure. Reproduces the r10 measurement:
+    of 4096 bounds scheduler pressure. Reproduces the r10 measurement:
     documents at 256× (~145 MB parquet) → ~113 partitions ≈ the
     measured-good 128, while ≤16× stays at the 32 floor (no change
     to the gated bench plans)."""
     floor = spark.sparkContext.defaultParallelism
-    want = int(table_bytes(sf_dir, tables) * expansion) // max(
-        target_partition_bytes, 1
-    )
-    return max(floor, min(cap, want))
+    want = int(table_bytes(sf_dir, tables) * 50.0) // (64 << 20)
+    return max(floor, min(4096, want))

@@ -6,9 +6,12 @@ For every catalog entry this script derives, by introspection (so the
 page can never drift from the code):
 
 - the one-line summary (first sentence of the entry's docstring),
-- the library operators it delegates to (parsed imports),
-- the tables it reads (parsed ``_t(spark, sf_dir, ...)`` calls,
-  transitively through module-level ``_``-helpers it calls),
+- the library operators it delegates to and the tables it reads, from
+  one ``ast`` walk of the entry's function and, transitively, of the
+  module-level ``_``-helpers and ``q_`` entries it calls: every
+  ``from pygr_spark.X import ...`` (whatever its line span), every
+  ``_t(spark, sf_dir, "x")`` call, and ``read_events`` /
+  ``read_events_stream`` as table ``events``,
 - the output schema (lazy ``df.schema`` of the built plan — plan
   analysis only for batch entries; streaming entries execute a real
   micro-batch, which is the point),
@@ -19,6 +22,7 @@ Usage: ``python scripts/gen_api.py`` (writes API.md at the repo root).
 
 from __future__ import annotations
 
+import ast
 import inspect
 import os
 import re
@@ -80,15 +84,6 @@ SECTION_ORDER = [
     "Sources & sinks",
 ]
 
-#: names stop at end-of-line: a greedy [\w,\s]+ would swallow the
-#: next source line's leading identifier (e.g. "import chunk_dedup\n
-#: docs = ..." rendered as "chunk_dedup      docs")
-IMPORT_RE = re.compile(
-    r"from pygr_spark\.(?:operators|streaming|sources|functions|plans)\."
-    r"(\w+) import ([\w, ]+)"
-)
-TABLE_RE = re.compile(r"_t\(spark,\s*sf_dir,\s*\"(\w+)\"\)")
-HELPER_RE = re.compile(r"\b(_[a-z][a-z0-9_]*)\(spark,\s*sf_dir")
 
 
 def first_sentence(doc: str | None) -> str:
@@ -100,31 +95,42 @@ def first_sentence(doc: str | None) -> str:
     return (text[: m.start() + 1] if m else text)[:240]
 
 
-def entry_row(qmod, name, fn, spark, sf_dir):
-    src = inspect.getsource(fn)
-    tables = set(TABLE_RE.findall(src))
+def static_refs(defs: dict[str, ast.FunctionDef], fname: str) -> tuple[set, list]:
+    """(tables, operators) of the module-level function ``fname``:
+    its ``_t``/``read_events`` tables and ``pygr_spark.*`` imports in
+    source order, then those of each ``_``-helper (e.g. _order_ivals,
+    _margin_scored) or ``q_`` entry it calls, transitively."""
+    tables: set[str] = set()
     ops: list[str] = []
-    for modname, names in IMPORT_RE.findall(src):
-        for n in names.replace("\n", " ").split(","):
-            n = n.strip()
-            if n:
-                ops.append(f"{modname}.{n}")
-    # one transitive hop through module-level helpers (e.g.
-    # _order_ivals, _margin_scored) for tables and operator imports
-    for helper in set(HELPER_RE.findall(src)):
-        h = getattr(qmod, helper, None)
-        if h is None or not callable(h):
+    seen: set[str] = set()
+    todo = [fname]
+    while todo:
+        name = todo.pop(0)
+        if name in seen or name not in defs:
             continue
-        try:
-            hsrc = inspect.getsource(h)
-        except (OSError, TypeError):
-            continue
-        tables |= set(TABLE_RE.findall(hsrc))
-        for modname, names in IMPORT_RE.findall(hsrc):
-            for n in names.replace("\n", " ").split(","):
-                n = n.strip()
-                if n:
-                    ops.append(f"{modname}.{n}")
+        seen.add(name)
+        nodes = sorted(
+            (n for n in ast.walk(defs[name]) if isinstance(n, (ast.ImportFrom, ast.Call))),
+            key=lambda n: (n.lineno, n.col_offset),
+        )
+        for n in nodes:
+            if isinstance(n, ast.ImportFrom):
+                if (n.module or "").startswith("pygr_spark."):
+                    mod = n.module.rsplit(".", 1)[-1]
+                    ops += [f"{mod}.{a.name}" for a in n.names]
+            elif isinstance(n.func, ast.Name):
+                f = n.func.id
+                if f == "_t" and len(n.args) > 2 and isinstance(n.args[2], ast.Constant):
+                    tables.add(n.args[2].value)
+                elif f in ("read_events", "read_events_stream"):
+                    tables.add("events")
+                elif f.startswith(("_", "q_")):
+                    todo.append(f)
+    return tables, ops
+
+
+def entry_row(defs, fn, spark, sf_dir):
+    tables, ops = static_refs(defs, fn.__name__)
     try:
         df = fn(spark, sf_dir)
         schema = ", ".join(
@@ -148,12 +154,14 @@ def main() -> None:
     from pygr_spark.queries import ORACLES, QUERIES
     from pygr_spark.session import get_spark
 
+    tree = ast.parse(inspect.getsource(qmod))
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
     sf_dir = os.environ.get("API_SF_DIR", "/root/testdata/sf0.001")
     spark = get_spark("gen_api", cpus=8)
     sections: dict[str, list[str]] = {s: [] for s in SECTION_ORDER}
     for name in sorted(QUERIES):
         fn = QUERIES[name]
-        tables, ops, schema = entry_row(qmod, name, fn, spark, sf_dir)
+        tables, ops, schema = entry_row(defs, fn, spark, sf_dir)
         summary = first_sentence(fn.__doc__)
         mode = "exact SQL oracle" if name in ORACLES else "rows-only"
         op_str = ", ".join(f"`{o}`" for o in dict.fromkeys(ops)) or "—"

@@ -20,8 +20,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
+import bench  # noqa: E402
 from pygr_spark.queries import QUERIES  # noqa: E402
 from pygr_spark.session import DRIVER_TABLES, get_spark  # noqa: E402
 
@@ -36,16 +35,10 @@ def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     if names == ["--tier3"]:
-        import bench
-
         names = bench.HEADLINE3
     elif names == ["--tier2"]:
-        import bench
-
         names = bench.HEADLINE2
     elif names == ["--tier1"]:
-        import bench
-
         names = bench.HEADLINE
     spark = get_spark("job_count")
     for t in DRIVER_TABLES:
@@ -57,17 +50,10 @@ def main() -> None:
         j0 = _job_ids(spark)
         df = QUERIES[name](spark, sf_dir)
         j1 = _job_ids(spark)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
-        ).agg(F.expr("bit_xor(h)")).collect()
+        bench.force(df)
         j2 = _job_ids(spark)
         out[name] = {"build": j1 - j0, "force": j2 - j1, "total": j2 - j0}
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-        spark.catalog.clearCache()
+        bench.release(spark)
     for name, d in sorted(out.items(), key=lambda kv: -kv[1]["total"]):
         print(f"{name}: total={d['total']} build={d['build']} force={d['force']}")
     tot = sum(d["total"] for d in out.values())

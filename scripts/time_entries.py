@@ -1,4 +1,4 @@
-"""Per-entry wall-clock probe mirroring bench.py's run_query protocol
+"""Per-entry wall-clock probe on bench.py's force/release protocol
 (fresh warmed session, xxhash64-forced evaluation, min over N passes).
 
 Usage: python scripts/time_entries.py SF_DIR [PASSES] entry [entry ...]
@@ -15,8 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
+from bench import force, release  # noqa: E402
 from pygr_spark.queries import QUERIES  # noqa: E402
 from pygr_spark.session import DRIVER_TABLES, get_spark  # noqa: E402
 
@@ -34,26 +33,10 @@ def main() -> None:
     for _ in range(passes):
         for name in names:
             t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.select(
-                F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
-            ).agg(F.expr("bit_xor(h)")).collect()
+            force(QUERIES[name](spark, sf_dir))
             dt = time.perf_counter() - t0
             best[name] = min(best.get(name, dt), dt)
-            for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                try:
-                    rdd.unpersist(False)
-                except Exception:
-                    pass
-            spark.catalog.clearCache()
-            if os.environ.get("TIME_ENTRIES_GC") == "1":
-                # ContextCleaner frees checkpoint/broadcast blocks only
-                # after a driver GC collects their weak refs; without
-                # one, a long catalog pass ratchets the block manager
-                # and late entries pay the bill
-                spark.sparkContext._jvm.System.gc()
+            release(spark)
     for name in names:
         print(f"{name}: {best[name]:.3f}s")
     print(f"TOTAL: {sum(best.values()):.3f}s")

@@ -53,6 +53,26 @@ def test_edge_letters_and_identity(spark):
     assert out.p_aligned == 1.0
 
 
+def test_edge_letters_reverse_complements_minus_strand_dst(spark):
+    # pygr's -seq: a dst interval on the minus strand reads as the
+    # reverse complement of its stored letters; a plus-strand edge
+    # keeps them as stored
+    seqs = spark.createDataFrame(
+        [("a", "ACGTTTGGCA"), ("b", "TGCCAAACGT")], ["id", "seq"]
+    )
+    edges = spark.createDataFrame(
+        [(1, "a", 6, 10, "b", 0, 4, -1), (2, "a", 0, 4, "b", 6, 10, 1)],
+        ["eid", "src_id", "src_start", "src_stop",
+         "dst_id", "dst_start", "dst_stop", "ori"],
+    )
+    out = {
+        r.eid: (r.src_letters, r.dst_letters)
+        for r in edge_letters(edges, seqs, dst_ori="ori").collect()
+    }
+    # b[0:4] = TGCC, whose reverse complement GGCA is a[6:10]
+    assert out == {1: ("GGCA", "GGCA"), 2: ("ACGT", "ACGT")}
+
+
 def test_conservation_filter(spark):
     df = identity_stats(_edges_with_letters(spark))
     assert conservation_filter(df, p_identity_min=0.95).count() == 0

@@ -16,7 +16,7 @@ class TestCopurchase:
         # baskets: {1,2,3}, {1,2}, {1,2}, {3,4}
         rows = [(10, 1), (10, 2), (10, 3), (11, 1), (11, 2), (12, 1), (12, 2), (13, 3), (13, 4)]
         out = copurchase_topn(
-            _baskets(spark, rows), "b", "i", top_n=2, min_pair_count=2
+            _baskets(spark, rows), "b", "i", top_n=2
         ).collect()
         got = {(r.item, r.co_item): (r.pair_count, r.rank) for r in out}
         # pair (1,2) count 3 — both directions, rank 1; nothing else >= 2
@@ -26,7 +26,7 @@ class TestCopurchase:
         # the same item twice in one basket is ONE membership
         rows = [(10, 1), (10, 1), (10, 2), (11, 1), (11, 2)]
         out = copurchase_topn(
-            _baskets(spark, rows), "b", "i", top_n=3, min_pair_count=2
+            _baskets(spark, rows), "b", "i", top_n=3
         ).collect()
         assert {(r.item, r.co_item, r.pair_count) for r in out} == {
             (1, 2, 2),
@@ -38,7 +38,7 @@ class TestCopurchase:
         rows = [(99, i) for i in range(5)] + [(1, 1), (1, 2), (2, 1), (2, 2)]
         out = copurchase_topn(
             _baskets(spark, rows), "b", "i", top_n=3,
-            min_pair_count=2, max_basket=4,
+            max_basket=4,
         ).collect()
         assert {(r.item, r.co_item) for r in out} == {(1, 2), (2, 1)}
 
@@ -46,7 +46,7 @@ class TestCopurchase:
         # item 1 pairs equally with 2 and 3 -> rank order by co_item
         rows = [(10, 1), (10, 2), (11, 1), (11, 2), (20, 1), (20, 3), (21, 1), (21, 3)]
         out = (
-            copurchase_topn(_baskets(spark, rows), "b", "i", top_n=2, min_pair_count=2)
+            copurchase_topn(_baskets(spark, rows), "b", "i", top_n=2)
             .filter(F.col("item") == 1)
             .orderBy("rank")
             .collect()

@@ -23,7 +23,7 @@ def test_word_shingles(spark):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
-    out = df.select(word_shingles(F.col("text"), 3).alias("sh")).collect()[0].sh
+    out = df.select(word_shingles(F.col("text")).alias("sh")).collect()[0].sh
     assert out == ["a b c", "b c d"]
 
 
@@ -90,7 +90,7 @@ def test_cosine_near_dups(spark):
     ]
     df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     out = {(r.id_a, r.id_b): r.cos_sim for r in
-           cosine_near_dups(df, threshold=0.99).collect()}
+           cosine_near_dups(df).collect()}
     assert set(out) == {(1, 2)}
     assert out[(1, 2)] > 0.999
 

@@ -54,7 +54,7 @@ def test_resize_images(spark):
 
 
 def test_frame_sample_plan(spark):
-    out = frame_sample_plan(_media(spark), every_ms=1000).collect()
+    out = frame_sample_plan(_media(spark)).collect()
     assert len(out) > 0
     assert all(r.frame_ts_ms % 1000 == 0 for r in out)
     assert {r.media_id for r in out} == {3}
@@ -109,7 +109,7 @@ def test_synth_containers_are_valid():
     w, h = struct.unpack_from("<ii", bmp, 18)
     assert (w, h) == (10, 6)
 
-    wav = synth_wav(b"seed", rate=8000, n_samples=1234)
+    wav = synth_wav(b"seed", n_samples=1234)
     with wave.open(io.BytesIO(wav)) as f:
         assert f.getframerate() == 8000
         assert f.getnframes() == 1234
@@ -121,7 +121,7 @@ def test_real_audio_decode_true_duration():
     TRUE duration of the generated WAV, not the fake's hash value."""
     from pygr_spark.operators.multimodal import _real_audio_decode, synth_wav
 
-    wav = synth_wav(b"hello", rate=8000, n_samples=4000)
+    wav = synth_wav(b"hello", n_samples=4000)
     out = _real_audio_decode(wav)
     assert out["duration_ms"] == 500  # 4000 samples @ 8 kHz
     assert out["width"] is None and out["height"] is None

@@ -32,6 +32,30 @@ def test_build_and_query_alignment(spark):
     assert [(r.dst_id,) for r in hits_b.collect()] == [("a",)]
 
 
+def test_build_alignment_direction_and_self_mappings(spark):
+    # a[0:8] -> b[0:8] plus a degenerate self-mapping a[0:8] -> a[0:8]
+    pairs = spark.createDataFrame(
+        [("a", 0, 8, "b", 0, 8), ("a", 0, 8, "a", 0, 8)],
+        ["src_id", "src_start", "src_stop", "dst_id", "dst_start", "dst_stop"],
+    )
+
+    def rows(df):
+        return sorted(
+            (r.src_id, r.src_start, r.src_stop, r.dst_id, r.dst_start, r.dst_stop)
+            for r in df.collect()
+        )
+
+    ab, ba, aa = ("a", 0, 8, "b", 0, 8), ("b", 0, 8, "a", 0, 8), ("a", 0, 8, "a", 0, 8)
+    # defaults: both directions stored, the self-mapping pruned
+    # (prune_self_mappings, nlmsa_utils.py:394-402)
+    assert rows(build_alignment(pairs)) == [ab, ba]
+    # one direction only: the inverse b -> a is not stored
+    assert rows(build_alignment(pairs, bidirectional=False)) == [ab]
+    # no pruning: the self-mapping stays, once per stored direction
+    assert rows(build_alignment(pairs, prune_self=False)) == [aa, aa, ab, ba]
+    assert rows(build_alignment(pairs, bidirectional=False, prune_self=False)) == [aa, ab]
+
+
 def test_invert_alignment_roundtrip(spark):
     pairs = spark.createDataFrame(
         [("a", 0, 8, "b", 10, 18)],

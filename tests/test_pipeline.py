@@ -28,7 +28,7 @@ def test_decontaminate_flags_shared_ngram(spark):
         ],
     )
     bench = _docs(spark, [(100, "x y a b c d e f g h z")])
-    out = decontaminate(corpus, bench, n=8).collect()
+    out = decontaminate(corpus, bench).collect()
     assert len(out) == 1
     r = out[0]
     # corpus doc 1 shares exactly 'a b c d e f g h' (one 8-gram)
@@ -43,7 +43,7 @@ def test_decontaminate_flags_shared_ngram(spark):
 def test_decontaminate_empty_when_clean(spark):
     corpus = _docs(spark, [(1, "a b c d e f g h")])
     bench = _docs(spark, [(100, "p q r s t u v w")])
-    assert decontaminate(corpus, bench, n=8).count() == 0
+    assert decontaminate(corpus, bench).count() == 0
 
 
 def test_chunk_dedup_removes_cross_doc_chunk(spark):
@@ -159,7 +159,7 @@ def test_bm25_prefers_higher_tf_and_shorter_docs(spark):
         ],
     )
     queries = spark.createDataFrame([(1, "spark")], "query_id long, term string")
-    out = bm25_topk(docs, queries, k=10).orderBy("rank").collect()
+    out = bm25_topk(docs, queries).orderBy("rank").collect()
     ids = [r.doc_id for r in out]
     assert ids[0] == 1  # highest tf wins
     assert 4 not in ids  # no hit, no row

@@ -90,7 +90,7 @@ def test_corpus_pipeline_megatest(spark, sf_dir):
 
     bench = survivors.filter(F.col("doc_id") % 41 == 0)
     corpus = survivors.filter(F.col("doc_id") % 41 != 0)
-    flagged = decontaminate(corpus, bench, n=8).select("doc_id")
+    flagged = decontaminate(corpus, bench).select("doc_id")
     clean = corpus.join(flagged, "doc_id", "left_anti")
     assert clean.count() == G_CLEAN
 

@@ -113,7 +113,7 @@ def test_edit_distance_join_matches_brute_force_within_blocks(spark, rows):
     got = {
         (r.id_a, r.id_b): r.dist
         for r in edit_distance_join(
-            df, df, "title", id_col="doc_id", max_dist=md, block_prefix=bp
+            df, df, "title", max_dist=md, block_prefix=bp
         ).collect()
     }
     want = {}

@@ -37,7 +37,7 @@ def test_champion_topk_excludes_non_champions(spark):
         ["doc_id", "text"],
     )
     queries = spark.createDataFrame([(1, "x")], ["query_id", "term"])
-    got = {r.doc_id for r in champion_topk(docs, queries, k=10, r=2).collect()}
+    got = {r.doc_id for r in champion_topk(docs, queries, r=2).collect()}
     assert got == {1, 2}
 
 
@@ -155,7 +155,7 @@ def test_hll_windows_merge_equals_direct_build(spark, sf_dir):
         F.expr("CAST(ts_sec DIV 86400 DIV 7 AS BIGINT)").alias("week"),
         F.col("user_id").cast("string").alias("item"),
     )
-    direct = hll_estimate_terms(hll_registers(ev, ["week"], m=64), ["week"], m=64)
+    direct = hll_estimate_terms(hll_registers(ev, ["week"], m=64), ["week"])
     want = sorted((r.week, r.hll_l, r.hll_num) for r in direct.collect())
     assert got == want
 
@@ -360,7 +360,7 @@ def test_containment_catches_subsumed_doc(spark):
     short = "alpha beta gamma delta epsilon zeta"
     long = short + " " + " ".join(f"w{i}" for i in range(100))
     docs = spark.createDataFrame([(1, short), (2, long)], ["doc_id", "text"])
-    sh = shingle_rows(docs, "doc_id", "text", 5)
+    sh = shingle_rows(docs, 5)
     a = {r._s for r in sh.filter("_id = 1").collect()}
     b = {r._s for r in sh.filter("_id = 2").collect()}
     inter = len(a & b)
@@ -566,7 +566,7 @@ def test_stream_hll_equals_batch_registers(spark, sf_dir):
         F.col("user_id").cast("string").alias("item"),
     )
     direct = hll_estimate_terms(
-        hll_registers(ev, ["win_start"], m=64), ["win_start"], m=64
+        hll_registers(ev, ["win_start"], m=64), ["win_start"]
     )
     want = sorted((r.win_start, r.hll_l, r.hll_num) for r in direct.collect())
     assert got == want

@@ -110,7 +110,7 @@ def test_seed_extend_scores_match_and_mismatch(spark):
         [(1, a), (2, b)], "doc_id long, text string"
     )
     out = seed_extend_join(
-        df, k=20, min_seeds=1, max_kmer_docs=None, window=40
+        df, min_seeds=1, max_kmer_docs=None, window=40
     )
     rows = out.collect()
     assert len(rows) == 1
@@ -133,7 +133,7 @@ def test_seed_extend_left_extension_counts(spark):
         [(1, a), (2, b)], "doc_id long, text string"
     )
     out = seed_extend_join(
-        df, k=20, min_seeds=1, max_kmer_docs=None, window=40
+        df, min_seeds=1, max_kmer_docs=None, window=40
     )
     r = out.collect()[0]
     # 3 shared 20-mers (positions 1,2,3 of the 22-char common prefix)
@@ -156,11 +156,11 @@ def test_seed_extend_window_caps_extension(spark):
         [(1, text), (2, text)], "doc_id long, text string"
     )
     capped = seed_extend_join(
-        df, k=20, min_seeds=1, max_kmer_docs=None, window=5
+        df, min_seeds=1, max_kmer_docs=None, window=5
     ).collect()[0]
     assert capped.n_seeds == 21
     assert capped.best_score == 25
     full = seed_extend_join(
-        df, k=20, min_seeds=1, max_kmer_docs=None, window=40
+        df, min_seeds=1, max_kmer_docs=None, window=40
     ).collect()[0]
     assert full.best_score == 50

@@ -68,7 +68,7 @@ def test_quantize_embeddings_golden(spark):
         [(1, [0.0, 1.0]), (2, [0.001, 0.0]), (3, [0.0005, 0.5])],
         "vec_id long, embedding array<float>",
     )
-    out = {r.vec_id: r for r in quantize_embeddings(emb, levels=255).collect()}
+    out = {r.vec_id: r for r in quantize_embeddings(emb).collect()}
     # dim0 mills: {0, 1000, 500} -> codes {0, 255, 127}
     # dim1 mills: {0, 1000000, 500000} -> codes {0, 255, 127}
     assert out[1].n_dims == 2 and out[2].n_dims == 2

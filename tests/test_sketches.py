@@ -9,9 +9,9 @@ def test_countmin_never_underestimates(spark):
     items = spark.createDataFrame(
         [(w,) for w in ["a"] * 50 + ["b"] * 20 + ["c"] * 5 + ["d"]], ["item"]
     )
-    sketch = countmin_build(items, depth=4, width=16)  # narrow -> collisions
+    sketch = countmin_build(items, width=16)  # narrow -> collisions
     probes = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], ["item"])
-    est = {r.item: r.estimate for r in countmin_estimate(sketch, probes, depth=4, width=16).collect()}
+    est = {r.item: r.estimate for r in countmin_estimate(sketch, probes, width=16).collect()}
     exact = {"a": 50, "b": 20, "c": 5, "d": 1}
     for k, v in exact.items():
         assert est[k] >= v  # CM guarantee
@@ -29,9 +29,9 @@ def test_countmin_deterministic_across_builds(spark):
 
 def test_countmin_unseen_item_estimates_low(spark):
     items = spark.createDataFrame([("x",)] * 10, ["item"])
-    sketch = countmin_build(items, depth=4, width=256)
+    sketch = countmin_build(items, width=256)
     probes = spark.createDataFrame([("never-seen",)], ["item"])
-    est = countmin_estimate(sketch, probes, depth=4, width=256).collect()[0]
+    est = countmin_estimate(sketch, probes, width=256).collect()[0]
     # with 1 distinct item in 4x256 cells, an unseen probe almost
     # surely misses every cell -> estimate 0 (min over empty cells)
     assert est.estimate in (0, 10)
@@ -120,7 +120,7 @@ def test_hll_estimate_terms_matches_catalog_entry(spark, sf_dir):
     regs = hll_registers(li, ["l_returnflag"], m=64)
     api = {
         r.l_returnflag: (r.hll_l, r.hll_num)
-        for r in hll_estimate_terms(regs, ["l_returnflag"], m=64).collect()
+        for r in hll_estimate_terms(regs, ["l_returnflag"]).collect()
     }
     entry = {
         r.l_returnflag: (r.hll_l, r.hll_num)

@@ -72,7 +72,7 @@ def test_tumbling_counts_match_batch(spark, sf_dir):
 
 def test_session_counts_run(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir)
-    got = run_stream_to_table(session_counts(stream, gap="30 minutes"), spark)
+    got = run_stream_to_table(session_counts(stream), spark)
     rows = got.collect()
     assert len(rows) > 0
     # session totals must preserve all events
@@ -113,7 +113,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .parquet(str(indir))
     )
     got = run_stream_to_table(
-        tumbling_counts(stream.withColumn("value", F.lit(0.0)), watermark="30 minutes"),
+        tumbling_counts(stream.withColumn("value", F.lit(0.0))),
         spark,
         mode="append",
     )

@@ -62,7 +62,7 @@ def test_edit_distance_join_finds_near_titles_within_block(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, title string")
     out = edit_distance_join(
-        df, df, "title", id_col="doc_id", max_dist=2, block_prefix=8
+        df, df, "title", max_dist=2, block_prefix=8
     )
     got = {(r.id_a, r.id_b): r.dist for r in out.collect()}
     assert got == {(1, 2): 1, (1, 3): 2}
@@ -74,7 +74,7 @@ def test_edit_distance_join_emits_each_pair_once(spark):
     df = spark.createDataFrame(
         [(i, "same title!") for i in range(4)], "doc_id long, title string"
     )
-    out = edit_distance_join(df, df, "title", id_col="doc_id", max_dist=0)
+    out = edit_distance_join(df, df, "title", max_dist=0)
     pairs = [(r.id_a, r.id_b) for r in out.collect()]
     assert sorted(pairs) == [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]
     assert all(a < b for a, b in pairs)
