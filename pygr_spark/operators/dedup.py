@@ -390,76 +390,6 @@ def cosine_near_dups_lsh(corpus: DataFrame, planes: list[list[int]]) -> DataFram
     )
 
 
-def cosine_near_dups(corpus: DataFrame) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos_sim >=
-    0.99) — the exact all-pairs verify stage of embedding dedup.
-
-    Vectors are quantized to integer micro-units so dot products and
-    squared norms are exact int64 on every engine; cosine is then a
-    deterministic float64. Compute is one Arrow-batched NumPy matmul
-    per partition against the (small-by-contract) corpus matrix shipped
-    in the closure — O(n²/P) flops, no per-pair interpreted lambdas.
-
-    Small-by-contract is ENFORCED: a ``limit(cap+1)`` probe collects at
-    most one row over the 65536-row cap, and overflow raises, pointing at
-    :func:`cosine_near_dups_lsh` — the scale path that buckets with
-    integer hyperplanes and verifies candidates only, with no
-    driver-side collect (the catalog's ``embed_near_dup`` entry uses
-    it). All-pairs is only for corpora that fit a broadcast (the
-    reference's BLAST all-vs-all has the same shape, blast.py:158-351).
-    """
-    import numpy as np
-    import pandas as pd
-
-    # one pass enforces the cap AND bounds driver memory during the
-    # check itself: limit(cap+1) instead of count-then-collect, which
-    # would evaluate an expensive upstream lineage twice
-    rows = corpus.select("vec_id", "embedding").limit(65536 + 1).collect()
-    if len(rows) > 65536:
-        raise ValueError(
-            "cosine_near_dups collects the corpus to the driver; got more than "
-            "65536 rows. Use cosine_near_dups_lsh "
-            "for large corpora (LSH-bucketed candidates, no collect)."
-        )
-    all_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    # halves away from zero (matches F.round HALF_UP / DuckDB round;
-    # np.round is half-to-even — judge r8 advice)
-    _am = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in rows], dtype=np.float64
-    ) * 1_000_000
-    all_mat = (np.floor(np.abs(_am) + 0.5) * np.sign(_am)).astype(np.int64)
-    all_norm = np.sqrt((all_mat * all_mat).sum(axis=1).astype(np.float64))
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def pairs(batches):
-        def _q(m):
-            mm = np.asarray(m, dtype=np.float64) * 1_000_000
-            return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
-
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
-            sims = (mat @ all_mat.T).astype(np.float64) / np.outer(norms, all_norm)
-            # keep each unordered pair once: row id strictly below col id
-            keep = (ids[:, None] < all_ids[None, :]) & (sims >= 0.99)
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id_a": ids[r], "id_b": all_ids[c], "cos_sim": sims[r, c]}
-            )
-
-    return corpus.select("vec_id", "embedding").mapInPandas(pairs, schema)
-
-
 def simhash(df: DataFrame, hash_fn=F.xxhash64, width: int = 64) -> DataFrame:
     """``width``-bit SimHash over whitespace tokens: bit b of the
     signature is the majority vote of bit b across hash(token) for all

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths (north star: ANN over 100 TB of embeddings):
+Three shapes (north star: ANN over 100 TB of embeddings):
 
 - **Brute-force cosine top-k** — the exactness baseline. The query
   side is small (broadcast); each partition of the corpus computes
@@ -8,21 +8,43 @@ Two paths (north star: ANN over 100 TB of embeddings):
   expressions, then a per-query top-k window. One broadcast, one
   shuffle (the top-k partial aggregation).
 
+- **Small-side Arrow matmul** (``cosine_topk_vectorized``,
+  ``rbh_exact``, ``triplet_mining``; pygr's all-vs-all BLAST idiom,
+  blast.py:158-351) — :func:`_collect_small` guards, collects,
+  id-sorts, quantizes and norms the small side on the driver; it
+  ships inside the task closure and every Arrow batch of the large
+  side goes through :func:`_batch_matrix` and one matmul against it.
+  This module is pickled by value, so the executor-side kernels call
+  :func:`np_quantize` and :func:`_batch_matrix` without pygr_spark
+  being importable on the workers.
+
 - **Random-hyperplane LSH bucketing** — the scale path: hash each
-  vector to a b-bit signature of hyperplane signs; candidates are
-  vectors sharing a bucket (optionally with multi-probe on nearby
-  buckets); exact cosine re-rank within candidates only.
+  vector to a b-bit signature of ±1 integer hyperplane signs;
+  candidates are vectors sharing a bucket (optionally with
+  multi-probe on nearby buckets); exact cosine re-rank within
+  candidates only.
 
 Determinism for the DuckDB oracle: vectors are quantized to integer
 micro-units per element, so dot products and squared norms are exact
 integers; cosine = dot / (sqrt(n1)·sqrt(n2)) is then a deterministic
 double on both engines (see pygr_spark/queries.py rules).
+
+Zero-norm rule (cosine is undefined for a vector that quantizes to
+all zeros): on the collected small side such a vector raises
+``ValueError`` naming its ids; on the streamed side its rows are
+skipped, so they never appear in the output.
 """
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pygr_spark.sources import ship_to_workers
+
+ship_to_workers(sys.modules[__name__])
 
 SCALE = 1_000_000  # micro-unit quantization for exact dot products
 
@@ -86,27 +108,6 @@ def plan_row_bound(df: DataFrame) -> int | None:
     return None
 
 
-def _enforce_query_cap(queries: DataFrame, id_col: str, fn_name: str) -> None:
-    """Guard the query set BEFORE the driver collect (counting
-    len(collect()) afterwards would OOM during the collect this is
-    meant to guard). Raises past ``ANN_MAX_QUERY_ROWS``. A
-    plan-visible ``limit(N <= cap)`` (the catalog's fixed md5-ranked
-    batches) satisfies the guard with NO job (:func:`plan_row_bound`);
-    anything else pays one tiny id-only probe job."""
-    bound = plan_row_bound(queries)
-    if bound is not None and bound <= ANN_MAX_QUERY_ROWS:
-        return
-    probe = queries.select(id_col).limit(ANN_MAX_QUERY_ROWS + 1).count()
-    if probe > ANN_MAX_QUERY_ROWS:
-        raise ValueError(
-            f"{fn_name}: query set exceeds {ANN_MAX_QUERY_ROWS} rows "
-            "(driver-collected query matrix ships in every task "
-            "closure); use the bucketed LSH/IVF join paths (lsh_ann / "
-            "ivf_topk_exact / rbh_candidates) for query sets that "
-            "scale with the corpus"
-        )
-
-
 def quantized(vec: Column) -> Column:
     """array<long> of round(v * 1e6) — exact integer embedding."""
     return F.transform(vec, lambda v: F.round(v.cast("double") * SCALE, 0).cast("long"))
@@ -118,17 +119,82 @@ def np_quantize(mat):
     ``round()``. ``np.round`` rounds half-to-even (banker's), so a
     value landing exactly on .5 at 1e6 scale would diverge between the
     numpy kernels and the SQL oracle (judge r7 advice). Accepts any
-    float array, returns int64 of the same shape.
-
-    NOTE for mapInPandas kernels: call this on the DRIVER only.
-    Executor-side closures must use a nested copy (see the kernels
-    below) — a module-level function pickles BY REFERENCE and the
-    executors of a vanilla session (the driver's contract) don't have
-    pygr_spark importable."""
+    float array, returns int64 of the same shape. A vector whose
+    elements all round to 0 has zero norm and no cosine (see the
+    module's zero-norm rule). Runs on the driver and, through the
+    by-value pickling of this module, inside executor kernels."""
     import numpy as np
 
     m = np.asarray(mat, dtype=np.float64) * SCALE
     return (np.floor(np.abs(m) + 0.5) * np.sign(m)).astype(np.int64)
+
+
+def _collect_small(
+    df: DataFrame, cols: tuple[str, ...], cap: int, what: str, hint: str
+):
+    """Driver side of the small-side matmul kernels. ``cols`` is (id,
+    embedding, *extra); ``what`` is ``"<function>: <noun>"``.
+
+    The size guard runs BEFORE the collect (counting len(collect())
+    afterwards would OOM during the collect it is meant to guard): a
+    plan-visible ``limit(N <= cap)`` (:func:`plan_row_bound`, the
+    catalog's fixed md5-ranked batches) passes with no job; anything
+    else pays one id-only ``limit(cap+1).count()`` probe, and more
+    than ``cap`` rows raise ``ValueError`` ending in ``hint``. Then
+    one collect, sorted by id (the kernels' first-max argmax is the
+    min-id tie-break), quantized with :func:`np_quantize`.
+
+    Returns None for an empty side, else ``(ids, mat, norms, *extra)``
+    as numpy arrays (``mat`` int64). A zero-norm vector raises
+    ``ValueError`` naming its ids."""
+    import numpy as np
+
+    fn, _, noun = what.partition(": ")
+    bound = plan_row_bound(df)
+    if bound is None or bound > cap:
+        if df.select(cols[0]).limit(cap + 1).count() > cap:
+            raise ValueError(
+                f"{fn}: {noun} set exceeds {cap} rows (driver-collected "
+                f"matrix ships in every task closure); {hint}"
+            )
+    rows = sorted(df.select(*cols).collect(), key=lambda r: r[0])
+    if not rows:
+        return None
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np_quantize([r[1] for r in rows])
+    norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
+    if not norms.all():
+        raise ValueError(
+            f"{fn}: zero-norm {noun} vector(s) {ids[norms == 0][:5].tolist()} "
+            "(cosine undefined); drop them first"
+        )
+    extra = (np.array([r[i] for r in rows]) for i in range(2, len(cols)))
+    return (ids, mat, norms, *extra)
+
+
+def _batch_matrix(pdf, *extra):
+    """Executor side of the small-side matmul kernels: one pandas batch
+    with ``vec_id`` and ``embedding`` columns -> ``(ids, mat, norms,
+    *extra)`` numpy arrays, rows stably sorted by id (so a first-max
+    argmax breaks ties by min id), ``mat`` quantized int64, zero-norm
+    rows dropped. Returns None when no row is left."""
+    import numpy as np
+
+    if len(pdf) == 0:
+        return None
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    mat = np_quantize(list(pdf["embedding"]))
+    norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
+    order = np.argsort(ids, kind="stable")
+    order = order[norms[order] > 0]
+    if len(order) == 0:
+        return None
+    return (
+        ids[order],
+        mat[order],
+        norms[order],
+        *(pdf[c].to_numpy()[order] for c in extra),
+    )
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -200,61 +266,46 @@ def cosine_topk_vectorized(
     expressions — the '10-100× via Pandas UDF' path for the hot loop.
 
     The query matrix collects to the driver (small by contract —
-    ENFORCED by ``ANN_MAX_QUERY_ROWS`` via a limit-probe before the
-    collect) and ships inside the closure; each corpus batch does
-    quantized-int64 matmul → float64 cosine, preserving the
+    ENFORCED by ``ANN_MAX_QUERY_ROWS`` before the collect, see
+    :func:`_collect_small`) and ships inside the closure; each corpus
+    batch does quantized-int64 matmul → float64 cosine, preserving the
     exact-integer determinism of the expression version (identical
-    results, including ranking).
+    results, including ranking). Zero-norm rule: a zero-norm query
+    raises ``ValueError``; a zero-norm corpus vector is skipped and
+    never appears in the output.
     """
     import numpy as np
     import pandas as pd
 
-    _enforce_query_cap(queries, "query_id", "cosine_topk_vectorized")
-    q_rows = queries.select("query_id", "embedding").collect()
-    if not q_rows:
+    small = _collect_small(
+        queries,
+        ("query_id", "embedding"),
+        ANN_MAX_QUERY_ROWS,
+        "cosine_topk_vectorized: query",
+        "use the bucketed LSH/IVF join paths (lsh_ann / ivf_topk_exact / "
+        "rbh_candidates) for query sets that scale with the corpus",
+    )
+    if small is None:
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, vec_id long, cos_sim double, rank long"
         )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np_quantize([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1).astype(np.float64))
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
+    q_ids, q_mat, q_norm = small
 
     def score(batches):
-        # nested twin of np_quantize: pickled by value into the task
-        # closure (module ref would need pygr_spark on the executors)
-        def _q(m):
-            mm = np.asarray(m, dtype=np.float64) * 1_000_000
-            return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
-
         for pdf in batches:
-            if len(pdf) == 0:
+            batch = _batch_matrix(pdf)
+            if batch is None:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # id-sort so the stable in-batch argsort below breaks sim
-            # ties by min vec_id — the global window's exact order
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])[
-                order
-            ]
-            norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
+            ids, mat, norms = batch
             sims = (mat @ q_mat.T).astype(np.float64) / np.outer(norms, q_norm)
             # exact per-batch pruning: the global top-k per query is a
             # subset of each batch's top-(k+1) (the +1 row absorbs a
             # self-match removed by the filter below), so only those
             # rows feed the window — batches x (k+1) x n_q rows
             # instead of n_c x n_q (the 16x win that makes this the
-            # candidate generator for mmr_diversify)
+            # candidate generator for mmr_diversify). The id-sorted
+            # rows make the stable argsort break sim ties by min
+            # vec_id — the global window's exact order.
             kk = min(k + 1, sims.shape[0])
             top = np.argsort(-sims, axis=0, kind="stable")[:kk, :]
             cols = np.repeat(np.arange(sims.shape[1])[None, :], kk, 0)
@@ -267,7 +318,9 @@ def cosine_topk_vectorized(
             )
             yield out[out["query_id"] != out["vec_id"]]
 
-    scored = corpus.select("vec_id", "embedding").mapInPandas(score, schema)
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
+        score, "query_id long, vec_id long, cos_sim double"
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id")
     )
@@ -356,37 +409,11 @@ def ivf_topk_exact(
     )
 
 
-def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """b-bit bucket id: bit i = sign(vec · plane_i). Planes are plain
-    Python lists (broadcast as literals into the plan)."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(x) for x in p]),
-                    lambda v, w_: v.cast("double") * w_,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        for i, p in enumerate(planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return out.cast("long")
-
-
 def hyperplane_signature_int(qvec: str, planes: list[list[int]]) -> Column:
     """Bucket id from ±1 integer hyperplanes over a QUANTIZED
     (array<long>) vector column named ``qvec``: bit i =
     sign(Σ_j s_ij·q_j). All-integer dots are exact, so any engine
-    computes the same bucket — the oracle-checkable form of
-    :func:`hyperplane_signature`. The whole n_planes × dim unroll is
+    computes the same bucket. The whole n_planes × dim unroll is
     assembled as ONE ``F.expr`` string (codegen'd; no interpreted
     higher-order lambdas, and no per-term py4j round-trips — the
     Column-API build cost ~5s of driver time per plan at 8×64)."""
@@ -406,42 +433,27 @@ def hyperplane_signature_int(qvec: str, planes: list[list[int]]) -> Column:
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    planes: list[list[float]],
+    planes: list[list[int]],
     k: int = 5,
-    int_planes: bool = False,
     multi_probe: bool = False,
 ) -> DataFrame:
     """Approximate top-k: bucket both sides by hyperplane signature,
     equi-join on the bucket, exact cosine re-rank within candidates.
 
-    With ``int_planes=True``, ``planes`` holds ±1 integers and buckets
-    are computed from the quantized vectors (exact, engine-portable).
-    ``multi_probe=True`` additionally probes every bucket at Hamming
-    distance 1 from the query's bucket — near-recall of a second
-    plane set at a fraction of the storage."""
-
-    def bucket_of(qname: str, raw: Column) -> Column:
-        if int_planes:
-            return hyperplane_signature_int(qname, planes)
-        return hyperplane_signature(raw, planes)
-
+    ``planes`` holds ±1 integers and buckets are computed from the
+    quantized vectors (:func:`hyperplane_signature_int` — exact,
+    engine-portable). ``multi_probe=True`` additionally probes every
+    bucket at Hamming distance 1 from the query's bucket — near-recall
+    of a second plane set at a fraction of the storage."""
     c = corpus.select(
-        "vec_id",
-        quantized(F.col("embedding")).alias("cv"),
-        F.col("embedding").alias("_raw"),
+        "vec_id", quantized(F.col("embedding")).alias("cv")
     ).select(
-        "vec_id",
-        "cv",
-        bucket_of("cv", F.col("_raw")).alias("bucket"),
+        "vec_id", "cv", hyperplane_signature_int("cv", planes).alias("bucket")
     ).withColumn("cn", sqnorm(F.col("cv")))
     q = queries.select(
-        "query_id",
-        quantized(F.col("embedding")).alias("qv"),
-        F.col("embedding").alias("_raw"),
+        "query_id", quantized(F.col("embedding")).alias("qv")
     ).select(
-        "query_id",
-        "qv",
-        bucket_of("qv", F.col("_raw")).alias("bucket"),
+        "query_id", "qv", hyperplane_signature_int("qv", planes).alias("bucket")
     ).withColumn("qn", sqnorm(F.col("qv")))
     if multi_probe:
         # probe the exact bucket plus every bucket at Hamming
@@ -957,6 +969,11 @@ def rbh_exact(a: DataFrame, b: DataFrame) -> DataFrame:
     inside BLAS, not as shuffled rows: at 16x this replaced a 98M-row
     broadcast-join + window plan (65.8s) with a ~4s pass.
 
+    A collects to the driver and ships in every task closure, so its
+    size is bounded by ``RBH_EXACT_MAX_A_ROWS`` before the collect
+    (:func:`_collect_small`): past ~2M 64-dim rows (~1 GiB dense
+    float64) the driver would OOM before the quadratic flops start.
+
     Determinism: vectors are quantized to int64 micro-units (SCALE)
     and the matmul runs in float64, which is EXACT here — entries are
     ≤ 1e6 so any 64-dim dot is ≤ 6.4e13 < 2^53, below the float64
@@ -966,69 +983,35 @@ def rbh_exact(a: DataFrame, b: DataFrame) -> DataFrame:
     batch rows id-sorted per batch, so numpy's first-max argmax IS
     the min-id tiebreak; the cross-batch A→B merge repeats it as a
     (sim DESC, b_id ASC) window.
+
+    Zero-norm rule: a zero-norm A vector raises ``ValueError``; a
+    zero-norm B vector is skipped on both legs, so the result does not
+    depend on how B is partitioned.
     """
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import types as T
-
-    # A collects to the driver and ships in every task closure — a
-    # LINEAR memory term that must stay bounded (judge r7 watch item):
-    # past ~2M 64-dim rows (~1 GiB dense float64) the entry would OOM
-    # the driver before the inherent quadratic flops even start. The
-    # bound is enforced BEFORE the collect (a limit(cap+1) probe, one
-    # tiny id-only job) — checking len(collect()) after the fact
-    # would OOM during the collect it is meant to guard.
-    bound = plan_row_bound(a)
-    probe = (
-        bound
-        if bound is not None and bound <= RBH_EXACT_MAX_A_ROWS
-        else a.select("vec_id").limit(RBH_EXACT_MAX_A_ROWS + 1).count()
+    small = _collect_small(
+        a,
+        ("vec_id", "embedding"),
+        RBH_EXACT_MAX_A_ROWS,
+        "rbh_exact: A",
+        "use rbh_candidates (LSH-prefiltered sublinear RBH) for large A sides",
     )
-    if probe > RBH_EXACT_MAX_A_ROWS:
-        raise ValueError(
-            f"rbh_exact: side A exceeds {RBH_EXACT_MAX_A_ROWS} rows "
-            "(driver-collected dense matrix); use rbh_candidates "
-            "(LSH-prefiltered sublinear RBH) for large A sides"
-        )
-    a_rows = a.select("vec_id", "embedding").orderBy("vec_id").collect()
-    if not a_rows:
+    if small is None:
         return a.sparkSession.createDataFrame(
             [], "a_id long, b_id long, cos_sim double"
         )
-    a_ids = np.array([r[0] for r in a_rows], dtype=np.int64)
-    a_mat = np_quantize(
-        [np.asarray(r[1], dtype=np.float64) for r in a_rows]
-    ).astype(np.float64)
-    a_norm = np.sqrt((a_mat * a_mat).sum(axis=1))
-    if not np.all(a_norm > 0):
-        raise ValueError("rbh_exact: zero-norm vector on side A (cosine undefined)")
-
-    schema = T.StructType(
-        [
-            T.StructField("_leg", T.IntegerType()),
-            T.StructField("a_id", T.LongType()),
-            T.StructField("b_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
+    a_ids, a_mat, a_norm = small
+    a_mat = a_mat.astype(np.float64)
 
     def kernel(batches):
-        def _q(m):
-            mm = np.asarray(m, dtype=np.float64) * 1_000_000
-            return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
-
         for pdf in batches:
-            if len(pdf) == 0:
+            batch = _batch_matrix(pdf)
+            if batch is None:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            mat = _q(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            ).astype(np.float64)[order]
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            sims = (mat @ a_mat.T) / np.outer(norms, a_norm)
+            ids, mat, norms = batch
+            sims = (mat.astype(np.float64) @ a_mat.T) / np.outer(norms, a_norm)
             jj = sims.argmax(axis=1)  # first max = min a_id (sorted)
             rows_b = pd.DataFrame(
                 {
@@ -1049,7 +1032,9 @@ def rbh_exact(a: DataFrame, b: DataFrame) -> DataFrame:
             )
             yield pd.concat([rows_b, rows_a], ignore_index=True)
 
-    scored = b.select("vec_id", "embedding").mapInPandas(kernel, schema)
+    scored = b.select("vec_id", "embedding").mapInPandas(
+        kernel, "_leg int, a_id long, b_id long, sim double"
+    )
     # EAGER: the two legs below are sibling inputs of one join, so a
     # lazy checkpoint would run the matmul pass once per sibling
     scored = scored.localCheckpoint(eager=True)
@@ -1087,105 +1072,47 @@ def triplet_mining(corpus: DataFrame, anchors: DataFrame) -> DataFrame:
 
     Scale shape — same family as cosine_topk_vectorized/rbh_exact:
     the anchor set is SMALL BY CONTRACT — ENFORCED by
-    ``TRIPLET_MAX_ANCHOR_ROWS`` via a limit-probe before the collect
-    (a training batch; it ships quantized inside the task closure) —
-    and zero-norm vectors fail loudly (anchors) or are excluded from
-    candidacy (corpus): cosine is undefined for them and NaN sims
-    would silently diverge from the SQL oracle. The corpus streams
-    through
-    ONE Arrow-batched int64 matmul pass, and per-batch pruning emits
-    at most 2 rows per (batch, anchor) — the shuffle is
-    batches x anchors, never corpus x anchors. The exact-integer
-    quantization (np_quantize, half-away-from-zero) keeps results
-    bit-identical across engines. For anchor sets too large for the
-    closure, mine per-bucket via the LSH candidates path
-    (rbh_candidates) instead.
+    ``TRIPLET_MAX_ANCHOR_ROWS`` before the collect
+    (:func:`_collect_small`; a training batch ships quantized inside
+    the task closure). Zero-norm rule: a zero-norm anchor raises
+    ``ValueError``; a zero-norm corpus vector is excluded from
+    candidacy (NaN sims would silently diverge from the SQL oracle).
+    The corpus streams through ONE Arrow-batched int64 matmul pass,
+    and per-batch pruning emits at most 2 rows per (batch, anchor) —
+    the shuffle is batches x anchors, never corpus x anchors. The
+    exact-integer quantization (np_quantize, half-away-from-zero)
+    keeps results bit-identical across engines. For anchor sets too
+    large for the closure, mine per-bucket via the LSH candidates
+    path (rbh_candidates) instead.
     """
     import numpy as np
     import pandas as pd
 
-    # Anchors collect to the driver and the quantized matrix ships in
-    # every task closure — a LINEAR memory term that must be enforced
-    # BEFORE the collect (a limit(cap+1) id-only probe; checking
-    # len(collect()) afterwards would OOM during the collect it is
-    # meant to guard). Mirrors rbh_exact's RBH_EXACT_MAX_A_ROWS
-    # (judge r8: unguarded anchor collect = scale-killer).
-    bound = plan_row_bound(anchors)
-    probe = (
-        bound
-        if bound is not None and bound <= TRIPLET_MAX_ANCHOR_ROWS
-        else anchors.select("vec_id").limit(TRIPLET_MAX_ANCHOR_ROWS + 1).count()
+    small = _collect_small(
+        anchors,
+        ("vec_id", "embedding", "label"),
+        TRIPLET_MAX_ANCHOR_ROWS,
+        "triplet_mining: anchor",
+        "mine per-bucket via the LSH candidates path (rbh_candidates / "
+        "lsh_ann) for anchor sets that scale with the corpus",
     )
-    if probe > TRIPLET_MAX_ANCHOR_ROWS:
-        raise ValueError(
-            f"triplet_mining: anchor set exceeds {TRIPLET_MAX_ANCHOR_ROWS} "
-            "rows (driver-collected matrix ships in every task closure); "
-            "mine per-bucket via the LSH candidates path (rbh_candidates / "
-            "lsh_ann) for anchor sets that scale with the corpus"
-        )
-    a_rows = anchors.select("vec_id", "embedding", "label").collect()
-    spark = corpus.sparkSession
-    if not a_rows:
-        return spark.createDataFrame(
+    if small is None:
+        return corpus.sparkSession.createDataFrame(
             [],
             "anchor_id long, pos_id long, pos_sim double, "
             "neg_id long, neg_sim double, margin double",
         )
-    a_rows.sort(key=lambda r: r[0])
-    a_ids = np.array([r[0] for r in a_rows], dtype=np.int64)
-    a_mat = np_quantize([np.asarray(r[1], dtype=np.float64) for r in a_rows])
-    a_lab = np.array([r[2] for r in a_rows])
-    a_norm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
-    # cosine is undefined for a zero vector; a zero a_norm would make
-    # np.outer zero and sims NaN, and argmin/argmax over NaN silently
-    # diverge from the SQL oracle's ordering (judge r8 advice) — fail
-    # loudly instead
-    if not np.all(a_norm > 0):
-        bad = a_ids[a_norm == 0][:5].tolist()
-        raise ValueError(
-            f"triplet_mining: zero-norm anchor vector(s) {bad} "
-            "(cosine undefined); drop them before mining"
-        )
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("anchor_id", T.LongType()),
-            T.StructField("cand_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-            T.StructField("is_pos", T.IntegerType()),
-        ]
-    )
+    a_ids, a_mat, a_norm, a_lab = small
 
     def mine(batches):
-        def _q(m):
-            mm = np.asarray(m, dtype=np.float64) * 1_000_000
-            return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
-
         for pdf in batches:
-            if len(pdf) == 0:
+            batch = _batch_matrix(pdf, "label")
+            if batch is None:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # id-sort: np.argmin/argmax return the FIRST extremum, so
-            # ascending ids make sim ties break to the smaller vec_id
-            # (the oracle window's exact order)
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            labs = pdf["label"].to_numpy()[order]
-            mat = _q([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])[
-                order
-            ]
-            norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
-            # a zero-norm corpus vector has no cosine direction: it can
-            # never be a meaningful hardest-pos/neg, and dividing by 0
-            # would seed NaN rows that argmin/argmax then pick (judge
-            # r8 advice). Exclude it from candidacy up front.
-            nz = norms > 0
-            if not nz.all():
-                ids, labs, mat, norms = ids[nz], labs[nz], mat[nz], norms[nz]
-                if len(ids) == 0:
-                    continue
+            # rows id-sorted: np.argmin/argmax return the FIRST
+            # extremum, so sim ties break to the smaller vec_id (the
+            # oracle window's exact order)
+            ids, mat, norms, labs = batch
             sims = (mat @ a_mat.T).astype(np.float64) / np.outer(norms, a_norm)
             recs = []
             for j in range(len(a_ids)):
@@ -1204,7 +1131,7 @@ def triplet_mining(corpus: DataFrame, anchors: DataFrame) -> DataFrame:
                 )
 
     cands = corpus.select("vec_id", "embedding", "label").mapInPandas(
-        mine, schema=schema
+        mine, "anchor_id long, cand_id long, sim double, is_pos int"
     )
     # per-batch survivors only: one tiny window each side
     w_pos = Window.partitionBy("anchor_id").orderBy(

@@ -2652,7 +2652,7 @@ def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return lsh_ann_topk(emb, queries, planes, k=LSH_K, int_planes=True).select(
+    return lsh_ann_topk(emb, queries, planes, k=LSH_K).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("vec_id").cast("long").alias("vec_id"),
         F.round("cos_sim", 6).alias("cos_sim"),
@@ -2715,7 +2715,7 @@ def q_lsh_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return lsh_ann_topk(
-        emb, queries, planes, k=LSH_K, int_planes=True, multi_probe=True
+        emb, queries, planes, k=LSH_K, multi_probe=True
     ).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -13514,7 +13514,10 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     selections and min-id tie-breaks agree bit-for-bit. Scores round
     to 6 on the Spark side. The oracle unrolls the same 5 rounds as
     CTEs."""
-    from pygr_spark.operators.similarity import cosine_topk_vectorized
+    from pygr_spark.operators.similarity import (
+        _batch_matrix,
+        cosine_topk_vectorized,
+    )
 
     emb = spread(_t(spark, sf_dir, "embeddings"))
     # fixed-size query batch: 20 lowest md5(vec_id||'q') — never
@@ -13538,17 +13541,10 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        def _q(m):
-            mm = np.asarray(m, dtype=np.float64) * 1_000_000
-            return (np.floor(np.abs(mm) + 0.5) * np.sign(mm)).astype(np.int64)
-
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        rel = pdf["rel"].to_numpy(dtype=np.float64)
-        mat = _q(
-            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        ).astype(np.float64)
-        nrm = np.sqrt((mat * mat).sum(axis=1))
+        # candidates are nonzero-norm (cosine_topk_vectorized skips
+        # zero-norm corpus rows), so no row is dropped here
+        ids, mat, nrm, rel = _batch_matrix(pdf, "rel")
+        mat = mat.astype(np.float64)
         sims = (mat @ mat.T) / np.outer(nrm, nrm)
         qid = int(pdf["query_id"].iloc[0])
         picked: list[int] = []

@@ -11,7 +11,6 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import re
 import subprocess
 import sys
@@ -54,8 +53,6 @@ def main() -> None:
     for n in names:
         a, b = min(hist[n]["A"]), min(hist[n]["B"])
         print(f"{n}: A={a:.3f}s B={b:.3f}s  B/A={b / a:.3f}")
-    with open("/tmp/ab_compare.json", "w") as fh:
-        json.dump(hist, fh)
 
 
 if __name__ == "__main__":

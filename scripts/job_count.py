@@ -14,7 +14,6 @@ Usage: python scripts/job_count.py SF_DIR entry [entry ...]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -59,8 +58,6 @@ def main() -> None:
     tot = sum(d["total"] for d in out.values())
     print(f"SUM: {tot} jobs over {len(out)} entries "
           f"(avg {tot / max(len(out), 1):.1f}/entry)")
-    with open("/tmp/job_count.json", "w") as fh:
-        json.dump(out, fh)
 
 
 if __name__ == "__main__":

@@ -79,22 +79,6 @@ def test_jaccard_max_shingle_freq(spark):
     assert (1, 2) in capped
 
 
-def test_cosine_near_dups(spark):
-    from pygr_spark.operators.dedup import cosine_near_dups
-
-    vecs = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.999, 0.01, 0.0, 0.0]),   # near-dup of 1
-        (3, [0.0, 1.0, 0.0, 0.0]),      # orthogonal
-        (4, [-1.0, 0.0, 0.0, 0.0]),     # opposite
-    ]
-    df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    out = {(r.id_a, r.id_b): r.cos_sim for r in
-           cosine_near_dups(df).collect()}
-    assert set(out) == {(1, 2)}
-    assert out[(1, 2)] > 0.999
-
-
 def test_md5_hash60_matches_python_and_duckdb(spark):
     import duckdb
     import hashlib

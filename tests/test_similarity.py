@@ -32,7 +32,7 @@ def test_cosine_topk_exact(spark):
 
 def test_lsh_ann_finds_planted_neighbor(spark):
     rng = random.Random(3)
-    planes = [[rng.gauss(0, 1) for _ in range(16)] for _ in range(6)]
+    planes = [[rng.choice((-1, 1)) for _ in range(16)] for _ in range(6)]
     vecs = _vecs(spark)
     queries = vecs.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"

@@ -58,3 +58,136 @@ def test_rbh_exact_guards(spark, sf_dir):
     )
     with pytest.raises(ValueError, match="zero-norm"):
         S.rbh_exact(zero, emb.limit(10))
+
+
+# Zero-norm rule: a zero-norm vector on the collected small side
+# raises; on the streamed side its rows are skipped.
+_A = [(1, [1.0, 0.0]), (4, [0.6, 0.8])]
+_B = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0]), (4, [0.6, 0.8])]
+_VEC = "vec_id long, embedding array<double>"
+
+
+def test_rbh_exact_zero_norm_b_independent_of_partitioning(spark):
+    from pygr_spark.operators.similarity import rbh_exact
+
+    a = spark.createDataFrame(_A, _VEC)
+    b = spark.createDataFrame(_B, _VEC)
+    for n in (1, 2, 4):
+        got = sorted(tuple(r) for r in rbh_exact(a, b.repartition(n)).collect())
+        assert got == [(1, 1, 1.0), (4, 4, 1.0)], n
+
+
+def test_cosine_topk_vectorized_zero_norm_query_raises(spark):
+    import pytest
+
+    corpus = spark.createDataFrame(_B, _VEC)
+    queries = spark.createDataFrame(
+        [(7, [0.0, 0.0]), (8, [1.0, 0.0])], "query_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match=r"zero-norm query vector\(s\) \[7\]"):
+        cosine_topk_vectorized(corpus, queries, k=3)
+
+
+def test_cosine_topk_vectorized_skips_zero_norm_corpus_row(spark):
+    corpus = spark.createDataFrame(_B, _VEC)
+    queries = spark.createDataFrame(
+        [(7, [1.0, 0.1]), (8, [0.0, 1.0])], "query_id long, embedding array<double>"
+    )
+    out = cosine_topk_vectorized(corpus, queries, k=4).collect()
+    assert {r.query_id for r in out} == {7, 8}
+    assert 3 not in {r.vec_id for r in out}
+    assert all(r.cos_sim is not None for r in out)
+    # three nonzero corpus rows -> ranks 1..3 per query
+    assert sorted(r.rank for r in out) == [1, 1, 2, 2, 3, 3]
+
+
+_ISOLATED = """
+import pickle, sys
+sys.modules["pygr_spark"] = None
+try:
+    import pygr_spark.operators.similarity  # noqa: F401
+except ImportError:
+    pass
+else:
+    raise SystemExit("pygr_spark importable")
+import pandas as pd
+fn, batch, grouped = pickle.load(open(sys.argv[1], "rb"))
+out = fn(batch) if grouped else pd.concat(list(fn(iter([batch]))), ignore_index=True)
+pickle.dump(out, open(sys.argv[2], "wb"))
+"""
+
+
+def test_kernels_run_on_workers_without_pygr_spark(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """Executor code of the small-side matmul kernels (and mmr's group
+    kernel) must not need pygr_spark on the workers: each function the
+    operators hand to Spark is cloudpickled, loaded in an isolated
+    interpreter where pygr_spark cannot be imported, and run on one
+    batch; its output must equal the in-process call."""
+    import pickle
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+    from pyspark.sql.group import GroupedData
+
+    from pygr_spark.operators import similarity as S
+    from pygr_spark.queries import q_mmr_diversify
+
+    lab = spark.createDataFrame(
+        [(i, v, "xy"[i % 2]) for i, v in _B], _VEC + ", label string"
+    )
+    frame = type(lab)  # the session's concrete DataFrame class
+    seen = []
+    map_in_pandas, apply_in_pandas = frame.mapInPandas, GroupedData.applyInPandas
+
+    def record_map(self, func, schema, *args, **kwargs):
+        seen.append((func, False))
+        return map_in_pandas(self, func, schema, *args, **kwargs)
+
+    def record_apply(self, func, schema):
+        seen.append((func, True))
+        return apply_in_pandas(self, func, schema)
+
+    monkeypatch.setattr(frame, "mapInPandas", record_map)
+    monkeypatch.setattr(GroupedData, "applyInPandas", record_apply)
+
+    b_batch = pd.DataFrame(_B, columns=["vec_id", "embedding"])
+    mmr_batch = pd.DataFrame(
+        {
+            "query_id": [9, 9, 9],
+            "vec_id": [5, 2, 3],
+            "rel": [0.5, 0.9, 0.7],
+            "embedding": [[0.1, 0.9], [1.0, 0.0], [0.6, 0.8]],
+        }
+    )
+    queries = spark.createDataFrame(_A, "query_id long, embedding array<double>")
+    builds = [
+        (lambda: S.cosine_topk_vectorized(lab, queries, k=2), b_batch),
+        (lambda: S.rbh_exact(spark.createDataFrame(_A, _VEC), lab), b_batch),
+        (lambda: S.triplet_mining(lab, lab.filter("vec_id < 3")), lab.toPandas()),
+        (lambda: q_mmr_diversify(spark, sf_dir), mmr_batch),
+    ]
+    cases = []
+    for build, batch in builds:
+        del seen[:]
+        build()
+        cases.append((*seen[-1], batch))
+    assert [grouped for _, grouped, _ in cases] == [False, False, False, True]
+
+    for i, (func, grouped, batch) in enumerate(cases):
+        if grouped:
+            want = func(batch)
+        else:
+            want = pd.concat(list(func(iter([batch]))), ignore_index=True)
+        assert len(want) > 0, i
+        src, dst = tmp_path / f"in{i}.pkl", tmp_path / f"out{i}.pkl"
+        src.write_bytes(cloudpickle.dumps((func, batch, grouped)))
+        subprocess.run(
+            [sys.executable, "-I", "-c", _ISOLATED, str(src), str(dst)],
+            check=True,
+            timeout=120,
+        )
+        pd.testing.assert_frame_equal(pickle.loads(dst.read_bytes()), want)
